@@ -7,13 +7,15 @@ import graft.graph.EdgeOps
 
 /** Faithful delta-form supergraph maintenance — the reference's
   * inc_aggregation (/root/reference/src/core/algorithm/hit_leiden.rs:
-  * 487-563) and def_update (hit_leiden.rs:565-599) as pure relational
-  * jobs.
+  * 487-563) as a pure relational job. The reference's def_update
+  * (hit_leiden.rs:565-599) has no separate form here: the maintained
+  * composition and its warm solve in [[Incremental.update]] play its
+  * part.
   *
-  * Note the reference never actually reaches these in its public run()
-  * (PartitionState::identity pins levels=1, so the level loop exits before
-  * aggregation); they are implemented here to complete the specified
-  * contract. Guard semantics follow the code exactly: a refined vertex v
+  * Note the reference never actually reaches inc_aggregation in its
+  * public run() (PartitionState::identity pins levels=1, so the level
+  * loop exits before aggregation); it is implemented here to complete
+  * the specified contract. Guard semantics follow the code exactly: a refined vertex v
   * emits (-w on the previous subcommunity pair, +w on the current pair)
   * for each neighbor n unless both are refined-and-changed and v > n
   * (dedup: `cur(n)==pre(n) || v < n`, hit_leiden.rs:509-511).
@@ -99,47 +101,5 @@ object IncAggregation {
       .select(col("v"),
         when(col("_r").isNotNull, col("scCur")).otherwise(col("sc")).as("sc"))
     (deltaH, nextPre)
-  }
-
-  /** def_update: top-down re-pointing f_p(v) = f_{p+1}(s_p(v)) for changed
-    * vertices, pushing the changed set down via the inverse mapping. The
-    * reference's O(n * |B|) inverse scan (hit_leiden.rs:586-596) becomes an
-    * indexed join. Levels are 0-based, level 0 = base graph.
-    *
-    * @param fLevels per-level (v, f) community mappings
-    * @param sLevels per-level (v, sc) subcommunity mappings
-    * @param bLevels per-level (v) changed sets
-    * @return updated (fLevels, bLevels)
-    */
-  def defUpdate(fLevels: Vector[DataFrame], sLevels: Vector[DataFrame],
-      bLevels: Vector[DataFrame]): (Vector[DataFrame], Vector[DataFrame]) = {
-    val pMax = fLevels.length
-    var fsOut = fLevels
-    var bsOut = bLevels
-    for (p <- (0 until pMax).reverse) {
-      if (p < pMax - 1) {
-        // f_p(v) <- f_{p+1}(s_p(v)) for v in B_p
-        val sp = sLevels(p).select(col("v"), col("sc"))
-        val fNext = fsOut(p + 1).select(col("v").as("sc"), col("f").as("fNew"))
-        val updated = fsOut(p)
-          .join(bsOut(p).withColumn("_b", lit(1)), Seq("v"), "left")
-          .join(sp, "v")
-          .join(fNext, Seq("sc"), "left")
-          .select(col("v"),
-            when(col("_b").isNotNull && col("fNew").isNotNull, col("fNew"))
-              .otherwise(col("f")).as("f"))
-          .ckpt
-        fsOut = fsOut.updated(p, updated)
-      }
-      if (p > 0) {
-        // B_{p-1} += s_{p-1}^{-1}(B_p): an indexed join, not an O(n) scan
-        val inv = sLevels(p - 1)
-          .join(bsOut(p).select(col("v").as("sc")), Seq("sc"), "left_semi")
-          .select("v")
-        bsOut = bsOut.updated(p - 1,
-          bsOut(p - 1).unionAll(inv).distinct().ckpt)
-      }
-    }
-    (fsOut, bsOut)
   }
 }

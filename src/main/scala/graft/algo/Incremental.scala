@@ -28,9 +28,11 @@ import scala.collection.mutable
   *    machinery: [[IncAggregation.apply]] (hit_leiden.rs:487-563) emits
   *    a signed supergraph delta from the batch + the refinement
   *    re-seatings, merged into the live supergraph;
-  *  - upper levels re-solve over that (orders-of-magnitude smaller)
-  *    supergraph, finishing locally once it fits
-  *    ([[Leiden.Config.localSolveEdges]]).
+  *  - upper levels are maintained over that (orders-of-magnitude
+  *    smaller) supergraph: a warm solve over its driver-side mirror once
+  *    it fits ([[Leiden.Config.localSolveEdges]]), the delta-scoped
+  *    distributed branch above that bound, and a full re-solve only
+  *    when no maintained state exists (after a cold run or a resume).
   *
   * The remaining per-batch O(V) work (assignment carry, the supernode
   * community seed aggregation) is over the VERTEX table, which at link-
@@ -113,16 +115,16 @@ object Incremental {
     * @param canon  live canonical edge table (level 0)
     * @param assign (v, community, subcomm) for every vertex
     * @param m2     cached 2 * total weight
-    * @param deg    (v, deg) weighted degrees (nullable: derived on demand)
+    * @param deg    (v, deg) weighted degrees (absent: derived on demand)
     * @param superCanon live level-1 supergraph = contract(canon, subcomm)
-    *   (nullable: derived on demand — e.g. after resume from checkpoint)
+    *   (absent: derived on demand — e.g. after resume from checkpoint)
     * @param maxId  id watermark for fresh subcommunity allocation
     *   (largest-component-keeps-id splits allocate above it)
     * @param durable when set, `canon` is backed by (and [[update]] merges
     *   into) the bucket-partitioned store at this path
     */
   final case class State(canon: DataFrame, assign: DataFrame, m2: Double,
-      deg: DataFrame = null, superCanon: DataFrame = null,
+      deg: Option[DataFrame] = None, superCanon: Option[DataFrame] = None,
       maxId: Long = Long.MinValue,
       /** batches applied since the last full flatten of the degree
         * overlay — the vertex-table analog of movement's lazy-overlay
@@ -136,11 +138,6 @@ object Incremental {
         * purely an optimization — absent after resume, rebuilt on the
         * next batch's collect */
       superCache: Option[SuperEdges] = None,
-      /** driver-side maintained upper hierarchy (levels >= 1, see
-        * [[LocalHier]]) — the reference-faithful fixed-level pipeline's
-        * state, used only when `cfg.hierRebuildUpper` is false. Absent
-        * after resume; rebuilt by the next batch's local re-solve. */
-      hierCache: Option[LocalHier.HState] = None,
       /** maintained composed (subcomm -> community) map for the DEFAULT
         * live path (see [[UpperComm]]); absent after resume — rebuilt by
         * the next batch's re-solve fallback. */
@@ -152,31 +149,36 @@ object Incremental {
         * hit_leiden.rs:104-136, 565-599). Each over-bound batch runs the
         * frontier-limited movement/refinement over the supergraph with
         * the supergraph DELTA as the activation, instead of a full
-        * re-solve whose cost is proportional to supergraph size. Absent
-        * after resume (or while the supergraph fits the driver bound) —
-        * the next over-bound batch initializes it with one full
-        * re-solve. */
-      upperAssign: DataFrame = null)
+        * re-solve whose cost is proportional to supergraph size. Pruned
+        * every batch to the supergraph's vertices plus the batch's
+        * delta endpoints. Persisted by the engine's
+        * checkpoint; absent while the supergraph fits the driver bound
+        * (or after a cold run) — the next over-bound batch initializes
+        * it with one full re-solve. */
+      upperAssign: Option[DataFrame] = None)
 
   /** Fill derivable fields absent after a resume or an old-format call:
     * degrees, the live supergraph (contract by subcomm — the invariant
     * superCanon == contract(canon, assign.subcomm) holds at every batch
-    * boundary) and the id watermark. */
+    * boundary) and the id watermark, which clears every label of the
+    * assignment and of the maintained upper assignment. */
   def hydrate(st: State, eps: Double = 1e-9): State = {
-    val deg =
-      if (st.deg != null) st.deg
-      else EdgeOps.degrees(EdgeOps.symmetrize(st.canon)).ckpt
-    val sup =
-      if (st.superCanon != null) st.superCanon
-      else contractBySubcomm(st.canon, st.assign, eps).ckpt
+    val deg = st.deg.getOrElse(
+      EdgeOps.degrees(EdgeOps.symmetrize(st.canon)).ckpt)
+    val sup = st.superCanon.getOrElse(
+      contractBySubcomm(st.canon, st.assign, eps).ckpt)
     val maxId =
       if (st.maxId != Long.MinValue) st.maxId
-      else {
-        val r = st.assign
-          .agg(greatest(max("v"), max("community"), max("subcomm"))).collect()
-        if (r.isEmpty || r(0).isNullAt(0)) 0L else r(0).getLong(0)
+      else st.upperAssign.foldLeft(
+          maxLabel(st.assign, "v", "community", "subcomm")) { (m, ua) =>
+        math.max(m, maxLabel(ua, "community", "subcomm"))
       }
-    st.copy(deg = deg, superCanon = sup, maxId = maxId)
+    st.copy(deg = Some(deg), superCanon = Some(sup), maxId = maxId)
+  }
+
+  private def maxLabel(df: DataFrame, cols: String*): Long = {
+    val r = df.agg(greatest(cols.map(c => max(c)): _*)).collect()
+    if (r.isEmpty || r(0).isNullAt(0)) 0L else r(0).getLong(0)
   }
 
   private def contractBySubcomm(canon: DataFrame, assign: DataFrame,
@@ -217,10 +219,45 @@ object Incremental {
     // different aggregation order and break the cache's exactness)
     val sc0 = contractBySubcomm(canon, ref.assign, cfg.eps).ckpt
     val so = resolveSuper(sc0, ref.assign, cfg, sink)
-    hydrate(State(canon, so.out, m2, deg = deg, superCanon = sc0,
-      durable = durable, superCache = so.cache, hierCache = so.hier,
-      upper = so.upper, upperAssign = so.upperAssign.orNull), cfg.eps)
+    hydrate(State(canon, so.out, m2, deg = Some(deg), superCanon = Some(sc0),
+      durable = durable, superCache = so.cache, upper = so.upper,
+      upperAssign = so.upperAssign), cfg.eps)
   }
+
+  /** resolveSuper result: the composed base assignment plus whichever
+    * maintained upper-state form the taken path produces, and the count
+    * of fresh ids it allocated above the caller's watermark. */
+  private final case class SuperOut(out: DataFrame,
+      cache: Option[SuperEdges], upper: Option[UpperComm],
+      upperAssign: Option[DataFrame], freshUsed: Long)
+
+  /** Collect a local-solve-sized supergraph into the driver-side mirror,
+    * sorted by (src, dst) so per-batch delta merges are a linear
+    * two-pointer pass. */
+  private def collectSuperEdges(superCanon: DataFrame): SuperEdges = {
+    val rows = superCanon.select("src", "dst", "weight").collect()
+    val sorted = Array.range(0, rows.length)
+      .sortBy(i => (rows(i).getLong(0), rows(i).getLong(1)))
+    SuperEdges(sorted.map(rows(_).getLong(0)), sorted.map(rows(_).getLong(1)),
+      sorted.map(rows(_).getDouble(2)))
+  }
+
+  /** Compose a (subcomm, newComm) upper-level result onto the base
+    * assignment. LEFT join with a carried-community fallback: every
+    * solver path derives its vertex set from supergraph EDGES, so a
+    * subcommunity a deletion batch left edge-free (an isolated supernode)
+    * never appears in `superRes` — an inner join would silently drop its
+    * vertices from the assignment. Isolated supernodes keep their carried
+    * community (they have no neighbors to merge with, so that IS the
+    * solve result). */
+  private def composeOnto(assign: DataFrame, superRes: DataFrame)
+      : DataFrame =
+    assign.select(col("v"), col("subcomm"), col("community").as("oldComm"))
+      .join(superRes, Seq("subcomm"), "left")
+      .select(col("v"),
+        coalesce(col("newComm"), col("oldComm")).as("community"),
+        col("subcomm"))
+      .ckpt
 
   /** Solve the (small) supergraph with the carried communities as the
     * seed and compose the result back onto the base assignment. A batch
@@ -230,13 +267,6 @@ object Incremental {
     * disconnected would never split on its own: enforce Leiden's
     * connectivity guarantee on the seed first by replacing each carried
     * community with its connected components on the supergraph. */
-  /** resolveSuper result: the composed base assignment plus whichever
-    * maintained upper-state form the taken path produces. */
-  private final case class SuperOut(out: DataFrame,
-      cache: Option[SuperEdges], hier: Option[LocalHier.HState],
-      upper: Option[UpperComm], upperAssign: Option[DataFrame],
-      freshUsed: Long)
-
   private def resolveSuper(superCanon: DataFrame, assign: DataFrame,
       cfg: Leiden.Config, sink: MetricsSink,
       cache: Option[SuperEdges] = None,
@@ -263,7 +293,6 @@ object Incremental {
       case None => superCanon.count()
     }
     var cacheOut: Option[SuperEdges] = None
-    var hierOut: Option[LocalHier.HState] = None
     var upperOut: Option[UpperComm] = None
     var upperAssignOut: Option[DataFrame] = None
     var freshUsed = 0L
@@ -273,25 +302,7 @@ object Incremental {
         // hierarchy solve run sequentially on PRIMITIVE arrays — one
         // collect (or none, when the driver-side cache is warm) instead
         // of a dozen fixed-cost distributed jobs per batch
-        val ce = cache.getOrElse {
-          val rows = superCanon.select("src", "dst", "weight").collect()
-          val order = Array.range(0, rows.length)
-          // keep the mirror sorted by (src, dst) so per-batch delta
-          // merges are a linear two-pointer pass
-          val sorted = order.sortBy(i => (rows(i).getLong(0),
-            rows(i).getLong(1)))
-          val eSrc = new Array[Long](rows.length)
-          val eDst = new Array[Long](rows.length)
-          val eW = new Array[Double](rows.length)
-          var i = 0
-          while (i < rows.length) {
-            val r = rows(sorted(i))
-            eSrc(i) = r.getLong(0); eDst(i) = r.getLong(1)
-            eW(i) = r.getDouble(2)
-            i += 1
-          }
-          SuperEdges(eSrc, eDst, eW)
-        }
+        val ce = cache.getOrElse(collectSuperEdges(superCanon))
         cacheOut = Some(ce)
         val cmM = carried0.collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -303,20 +314,11 @@ object Incremental {
           else Map.empty[Long, Long]
         val repaired = LocalLeiden.repairConnectivity(ce.src, ce.dst, cmM)
         mark("repair")
-        val solved =
-          if (cfg.incrementalHierarchy && !cfg.hierRebuildUpper) {
-            // reference-faithful fixed-level mode: build the maintained
-            // per-level hierarchy (LocalHier) — subsequent batches run
-            // its per-level delta pipeline instead of re-solving
-            val (h, composed) = LocalHier.init(ce.src, ce.dst, ce.w, repaired,
-              szM, cfg)
-            hierOut = Some(h)
-            composed
-          } else LocalLeiden.solve(ce.src, ce.dst, ce.w, szM, repaired,
-            cfg, canonicalSorted = true)
-        if (cfg.incrementalHierarchy && cfg.hierRebuildUpper) {
-          // DEFAULT live mode: stash the composed map — the next batch
-          // seeds its warm mirror solve from it (no carried collect)
+        val solved = LocalLeiden.solve(ce.src, ce.dst, ce.w, szM, repaired,
+          cfg, canonicalSorted = true)
+        if (cfg.incrementalHierarchy) {
+          // stash the composed map — the next batch seeds its warm
+          // mirror solve from it (no carried collect)
           val m = mutable.LongMap.empty[Long]
           solved.foreach { case (k, v) => m(k) = v }
           upperOut = Some(UpperComm(m))
@@ -342,19 +344,28 @@ object Incremental {
         val adj1 = EdgeOps.symmetrize(superM)
         val deg1 = EdgeOps.degrees(adj1).ckpt
         val dV1 = EdgeOps.vertices(deltaH.get).ckpt
+        // evict supernodes that left the supergraph: the maintained rows
+        // stay one per supergraph vertex (plus this delta's endpoints),
+        // and an id that disappears and later returns — naming a
+        // different vertex set — re-enters as a singleton below
+        val prev = upperPrev.get.join(
+          deg1.select("v").unionAll(dV1.select("v")), Seq("v"), "left_semi")
+          .ckpt
         // supernodes this batch introduced enter as singletons
-        val newSup = dV1.join(upperPrev.get.select("v"), Seq("v"),
-          "left_anti").ckpt
+        val newSup = dV1.join(prev.select("v"), Seq("v"), "left_anti").ckpt
         val up0 =
-          if (newSup.isEmpty) upperPrev.get
-          else upperPrev.get.unionAll(newSup.select(col("v"),
+          if (newSup.isEmpty) prev
+          else prev.unionAll(newSup.select(col("v"),
             col("v").as("community"), col("v").as("subcomm")))
         // scoped connectivity repair (the delta-bounded form of the
         // re-solve path's full pre-repair below): only communities the
         // delta touches can have been disconnected by a deletion —
-        // replace each with its connected components on the supergraph
-        // (labels = min member, disjoint across communities so no
-        // collisions). Untouched communities pass through.
+        // replace each with its connected components on the supergraph.
+        // Untouched communities pass through. As in refinement's splits,
+        // the largest fragment keeps the community label and the others
+        // take fresh ids above the watermark: a component's min member
+        // could equal the (drifted) label of an untouched community and
+        // silently merge the two.
         val affComms = broadcast(up0
           .join(broadcast(dV1), Seq("v"), "left_semi")
           .select("community").distinct()).ckpt
@@ -368,19 +379,30 @@ object Incremental {
             .withColumnRenamed("community", "cv"), "dst")
           .where(col("cu") === col("cv"))
           .select("src", "dst")
-        val repaired = ConnectedComponents
+        val frags = ConnectedComponents
           .run(intra, vertices = Some(members.select("v")),
             localSolveVerts = 100000)
           .components
-        val repChanged = members
-          .join(repaired.withColumnRenamed("component", "newComm"),
-            Seq("v"))
-          .where(col("newComm") =!= col("community"))
+          .join(memComm, "v")
+        import org.apache.spark.sql.expressions.Window
+        val fragSizes = frags.groupBy("community", "component")
+          .agg(count(lit(1)).as("n"))
+        val freshFrags = fragSizes
+          .withColumn("rn", row_number().over(Window
+            .partitionBy("community").orderBy(desc("n"), asc("component"))))
+          .where(col("rn") > 1)
+          .select(col("community"), col("component"),
+            (lit(freshIdBase) + row_number().over(
+              Window.orderBy("community", "component"))).as("newComm"))
+          .ckpt
+        val repairFresh = freshFrags.count()
+        val repChanged = frags
+          .join(broadcast(freshFrags), Seq("community", "component"))
+          .select(col("v"), col("newComm"))
           .ckpt
         val up1 =
           if (repChanged.isEmpty) up0
-          else up0.join(broadcast(repChanged.select(col("v"),
-            col("newComm"))), Seq("v"), "left")
+          else up0.join(broadcast(repChanged), Seq("v"), "left")
             .select(col("v"),
               coalesce(col("newComm"), col("community")).as("community"),
               col("subcomm"))
@@ -397,8 +419,8 @@ object Incremental {
         val aff1 = activated.unionAll(mv1.affected).distinct().ckpt
         val ref1 = Leiden.refinement(adj1, deg1, m2s, mv1.assign, aff1,
           cfg, sink, 1, isInitial = false, nodeSize = sizes1,
-          freshIdBase = freshIdBase)
-        freshUsed = ref1.freshUsed
+          freshIdBase = freshIdBase + repairFresh)
+        freshUsed = repairFresh + ref1.freshUsed
         val upNext = ref1.assign.ckpt
         upperAssignOut = Some(upNext)
         mark("upper-delta")
@@ -435,22 +457,10 @@ object Incremental {
         solved
       }
 
-    // LEFT join with a carried-community fallback: both solver paths
-    // derive their vertex set from supergraph EDGES, so a subcommunity a
-    // deletion batch left edge-free (an isolated supernode) never appears
-    // in superRes — an inner join would silently drop its vertices from
-    // the assignment. Isolated supernodes keep their carried community
-    // (they have no neighbors to merge with, so that IS the solve result).
-    val out = assign.select(col("v"), col("subcomm"),
-        col("community").as("oldComm"))
-      .join(superRes.select(col("v").as("subcomm"),
-        col("community").as("newComm")), Seq("subcomm"), "left")
-      .select(col("v"),
-        coalesce(col("newComm"), col("oldComm")).as("community"),
-        col("subcomm"))
-      .ckpt
+    val out = composeOnto(assign, superRes.select(col("v").as("subcomm"),
+      col("community").as("newComm")))
     mark("compose")
-    SuperOut(out, cacheOut, hierOut, upperOut, upperAssignOut, freshUsed)
+    SuperOut(out, cacheOut, upperOut, upperAssignOut, freshUsed)
   }
 
   /** Warm upper-level solve over the maintained mirror — the DEFAULT
@@ -564,7 +574,11 @@ object Incremental {
     * at level 0 + inc_aggregation/def_update for the hierarchy): delta
     * activation -> frontier movement -> refinement (largest-keeps-id
     * splits + singleton merges) -> IncAggregation supergraph delta ->
-    * upper-level re-solve over the maintained supergraph -> composition.
+    * upper levels -> composition. The upper levels take one of three
+    * paths: the warm solve over the maintained mirror (the live path),
+    * the delta-scoped distributed branch above `localSolveEdges`, or the
+    * re-solve over the maintained supergraph (the fallback, and the
+    * oracle when `incrementalHierarchy` is off).
     */
   def update(state0: State, delta: DataFrame,
       cfg: Leiden.Config = Leiden.Config(),
@@ -623,7 +637,7 @@ object Incremental {
         // deg/superCanon were not set by readState; hydrate re-derives
         // them from the reconstructed pre-delta canon
         hydrate(state0.copy(canon = preCanon, m2 = state0.m2 - 2.0 * dW,
-          deg = null, superCanon = null, superCache = None), cfg.eps)
+          deg = None, superCanon = None, superCache = None), cfg.eps)
       }
     mark("hydrate+delta")
 
@@ -693,7 +707,8 @@ object Incremental {
     // 4th batch: the last per-batch term that scaled with |V| not |delta|.
     val deltaDeg = EdgeOps.degrees(EdgeOps.symmetrize(deltaC))
       .withColumnRenamed("deg", "dd").ckpt
-    val degPatched = state.deg.join(broadcast(deltaDeg), Seq("v"), "left")
+    val degPatched = state.deg.get
+      .join(broadcast(deltaDeg), Seq("v"), "left")
       .select(col("v"),
         (col("deg") + coalesce(col("dd"), lit(0.0))).as("deg"))
     val degNew = deltaDeg
@@ -755,31 +770,26 @@ object Incremental {
       .join(sPre0.withColumnRenamed("sc", "scPre"), "v")
       .where(col("subcomm") =!= col("scPre"))
       .select("v").ckpt
-    // the warm mirror/hierarchy path collects the delta-sized deltaH
-    // anyway — evaluate the delta join pipeline ONCE via that collect
+    // the warm mirror path collects the delta-sized deltaH anyway —
+    // evaluate the delta join pipeline ONCE via that collect
     // (materialize=false) and hand downstream consumers a local relation;
     // the fallback path (nothing maintained) keeps the ckpt'd DataFrame
-    val willCollect = state.superCache.isDefined ||
-      state.hierCache.isDefined || state.upper.isDefined
+    val willCollect = state.superCache.isDefined || state.upper.isDefined
     val (deltaH0, _) = IncAggregation(adj, deltaC, sPre0, sCur, refR,
       cfg.eps, materialize = !willCollect)
-    val dRows: Array[(Long, Long, Double)] =
+    val dRows: Option[Array[(Long, Long, Double)]] =
       if (willCollect)
-        deltaH0.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      else null
-    val deltaH =
-      if (willCollect) {
-        val sp = adj.sparkSession
-        import sp.implicits._
-        dRows.toSeq.toDF("src", "dst", "weight")
-      } else deltaH0
+        Some(deltaH0.collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getDouble(2))))
+      else None
+    val deltaH = dRows.fold(deltaH0)(_.toSeq.toDF("src", "dst", "weight"))
     // the mirror path never SCANS superCanon (the sorted-array mirror is
     // the live level-1 graph), so the O(E_1) materialization runs on the
     // deg-overlay cadence instead of every batch; between flattens the
     // lazy mergeDelta overlay (broadcast anti/semi joins) stacks at most
     // 4 deep, and fallback/resume/checkpoint consumers evaluate it as-is
-    val newSuper0 = EdgeOps.mergeDelta(state.superCanon, deltaH, cfg.eps)
+    val superPrev = state.superCanon.get
+    val newSuper0 = EdgeOps.mergeDelta(superPrev, deltaH, cfg.eps)
     val newSuper = if (state.epoch % 4 == 3) newSuper0.ckpt else newSuper0
     // maintain the driver-side mirror with the SAME signed delta — a
     // fallback re-solve then skips its multi-million-row re-collect.
@@ -792,27 +802,12 @@ object Incremental {
     // order, exact for the integer-valued weights every ingest produces.
     val rebuiltCache: Option[SuperEdges] =
       if (state.superCache.isEmpty && state.upper.isDefined &&
-          dRows != null && cfg.localSolveEdges > 0 &&
-          state.superCanon.count() <= cfg.localSolveEdges) {
-        val rows = state.superCanon.select("src", "dst", "weight")
-          .collect()
-        val order = Array.range(0, rows.length)
-        val sorted = order.sortBy(i => (rows(i).getLong(0),
-          rows(i).getLong(1)))
-        val eSrc = new Array[Long](rows.length)
-        val eDst = new Array[Long](rows.length)
-        val eW = new Array[Double](rows.length)
-        var i = 0
-        while (i < rows.length) {
-          val r = rows(sorted(i))
-          eSrc(i) = r.getLong(0); eDst(i) = r.getLong(1)
-          eW(i) = r.getDouble(2)
-          i += 1
-        }
-        Some(SuperEdges(eSrc, eDst, eW))
-      } else None
-    val mergedCache = state.superCache.orElse(rebuiltCache)
-      .map(mergeSuperArrays(_, dRows, cfg.eps))
+          cfg.localSolveEdges > 0 &&
+          superPrev.count() <= cfg.localSolveEdges)
+        Some(collectSuperEdges(superPrev))
+      else None
+    val mergedCache = dRows.flatMap(d => state.superCache
+      .orElse(rebuiltCache).map(mergeSuperArrays(_, d, cfg.eps)))
     mark("aggregation")
 
     // --- upper levels. DEFAULT live path (reference hit_leiden.rs:85-151
@@ -820,30 +815,20 @@ object Incremental {
     // supergraph, the maintained composition seeds a warm in-memory
     // hierarchy solve (dense repair + pre-densified solve, all primitive
     // arrays) — no carried aggregation, no collect, no per-batch
-    // sort/pack. Fixed-level mode (hierRebuildUpper=false): LocalHier's
-    // reference-faithful per-level delta pipeline. Fallback (no
-    // maintained state after resume / supergraph outgrew the local
-    // bound / flag off): the re-solve, which REBUILDS the maintained
-    // state when it lands local.
-    val useMirror = cfg.incrementalHierarchy && cfg.hierRebuildUpper &&
-      dRows != null && mergedCache.isDefined && state.upper.isDefined &&
+    // sort/pack. Otherwise resolveSuper: the delta-scoped branch past the
+    // driver bound, or the re-solve (no maintained state after resume /
+    // flag off), which REBUILDS the maintained state when it lands local.
+    val useMirror = cfg.incrementalHierarchy && state.upper.isDefined &&
       cfg.localSolveEdges > 0 &&
-      mergedCache.get.src.length <= cfg.localSolveEdges
-    val useHier = cfg.incrementalHierarchy && !cfg.hierRebuildUpper &&
-      dRows != null &&
-      state.hierCache.exists(h => cfg.localSolveEdges > 0 &&
-        h.level1Edges + dRows.length <= cfg.localSolveEdges)
-    val (assign2, cacheOut, hierOut, upperOut, upperAssignOut,
-        consumedFresh): (DataFrame, Option[SuperEdges],
-        Option[LocalHier.HState], Option[UpperComm], Option[DataFrame],
-        Long) =
+      mergedCache.exists(_.src.length <= cfg.localSolveEdges)
+    val so =
       if (useMirror) {
         val mc = mergedCache.get
         val composedOld = state.upper.get.composed
         // community seeds for level-1 nodes this batch introduces (fresh
         // split seats / new singletons): their community in the
         // post-movement base assignment — one delta-sized lookup
-        val newIds = dRows.iterator.flatMap(e => Iterator(e._1, e._2))
+        val newIds = dRows.get.iterator.flatMap(e => Iterator(e._1, e._2))
           .filter(v => !composedOld.contains(v)).toSet
         val seed: Map[Long, Long] =
           if (newIds.isEmpty) Map.empty
@@ -858,54 +843,17 @@ object Incremental {
           else Map.empty[Long, Long]
         val (rows, upperNew) = warmSolveSuper(mc, composedOld, seed, szM,
           cfg)
-        val superRes = rows.toSeq.toDF("subcomm", "newComm")
-        val out = assign1
-          .select(col("v"), col("subcomm"), col("community").as("oldComm"))
-          .join(broadcast(superRes), Seq("subcomm"), "left")
-          .select(col("v"),
-            coalesce(col("newComm"), col("oldComm")).as("community"),
-            col("subcomm"))
-          .ckpt
-        (out, mergedCache, None, Some(upperNew), None, 0L)
-      } else if (useHier) {
-        // copy before mutating: State is value-semantic (a caller that
-        // kept the pre-batch State must be able to re-apply the batch —
-        // the crash-replay and branching-test contract)
-        val h = state.hierCache.get.deepCopy
-        val l1 = h.levels.head
-        // community seeds for level-1 nodes this batch introduces (fresh
-        // split seats / new singletons): their community in the
-        // post-movement base assignment — one delta-sized lookup
-        val newIds = dRows.iterator.flatMap(e => Iterator(e._1, e._2))
-          .filter(v => !l1.comm.contains(v)).toSet
-        val seed: Map[Long, Long] =
-          if (newIds.isEmpty) Map.empty
-          else assign1
-            .where(col("subcomm").isInCollection(newIds))
-            .groupBy("subcomm").agg(min("community"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val consumed = LocalHier.update(h, dRows, seed, cfg, maxId)
-        val composed = LocalHier.composedLevel1(h)
-        val superRes = composed.toSeq.toDF("subcomm", "newComm")
-        val out = assign1
-          .select(col("v"), col("subcomm"), col("community").as("oldComm"))
-          .join(broadcast(superRes), Seq("subcomm"), "left")
-          .select(col("v"),
-            coalesce(col("newComm"), col("oldComm")).as("community"),
-            col("subcomm"))
-          .ckpt
-        (out, mergedCache, Some(h), None, None, consumed)
-      } else {
-        val so = resolveSuper(newSuper, assign1, cfg, sink, mergedCache,
-          deltaH = Some(deltaH),
-          upperPrev = Option(state.upperAssign), freshIdBase = maxId)
-        (so.out, so.cache, so.hier, so.upper, so.upperAssign, so.freshUsed)
-      }
+        val out = composeOnto(assign1,
+          broadcast(rows.toSeq.toDF("subcomm", "newComm")))
+        SuperOut(out, mergedCache, Some(upperNew), None, 0L)
+      } else resolveSuper(newSuper, assign1, cfg, sink, mergedCache,
+        deltaH = Some(deltaH), upperPrev = state.upperAssign,
+        freshIdBase = maxId)
     mark("resolveSuper")
-    State(newCanon, assign2, m2, deg = deg, superCanon = newSuper,
-      maxId = maxId + consumedFresh, epoch = state.epoch + 1,
-      durable = state.durable, superCache = cacheOut, hierCache = hierOut,
-      upper = upperOut, upperAssign = upperAssignOut.orNull)
+    State(newCanon, so.out, m2, deg = Some(deg), superCanon = Some(newSuper),
+      maxId = maxId + so.freshUsed, epoch = state.epoch + 1,
+      durable = state.durable, superCache = so.cache, upper = so.upper,
+      upperAssign = so.upperAssign)
   }
 
   /** Deterministic cumulative delta batches replicating the reference's

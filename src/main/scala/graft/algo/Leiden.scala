@@ -118,32 +118,13 @@ object Leiden {
       /** warm batches maintain the upper levels (>= 1) driver-side: the
         * level-1 supergraph as the sorted-array mirror and the composed
         * (subcomm -> community) map from the last solve, so each batch
-        * runs a warm-seeded in-memory hierarchy pass with NO carried
-        * aggregation, no supergraph collect and no per-batch sort/pack
-        * (the live def_update, hit_leiden.rs:565-599). False restores
-        * the from-scratch re-solve path (used by equivalence tests as
-        * the oracle). */
-      incrementalHierarchy: Boolean = true,
-      /** maintained-hierarchy movement runs one full deterministic pass
-        * (all nodes seeded, not just the delta frontier) at levels whose
-        * edge count is at or below this — an O(E_p) in-memory sweep, tens
-        * of milliseconds at the localSolveEdges scale, that picks up the
-        * far-from-delta epsilon drift a frontier-only pass misses and
-        * keeps the live path inside the reference's 0.001 per-update
-        * band. Levels above the bound (possible only if localSolveEdges
-        * is raised) stay frontier-only. 0 = frontier-only everywhere. */
-      hierPolishEdges: Long = 4000000,
-      /** true (default): each warm batch re-forms seats and upper levels
-        * from the maintained mirror with the warm-seeded pre-densified
-        * CSR solve ([[LocalLeiden.solveDense]]) — fresh seats are
-        * measurably where a from-scratch solve earns its quality
-        * (~0.0016 modularity on a 600-vertex SBM), and on primitive
-        * arrays the full pass costs less than the fixed-level pipeline's
-        * hash-map bookkeeping at supergraph scale. False = the
-        * reference-faithful fixed per-level delta pipeline
-        * ([[LocalHier]], hit_leiden.rs:95-137: maintained per-level
-        * graphs, seats and upper grouping allowed to go stale). */
-      hierRebuildUpper: Boolean = true)
+        * runs a warm-seeded in-memory hierarchy pass
+        * ([[LocalLeiden.solveDense]]) with NO carried aggregation, no
+        * supergraph collect and no per-batch sort/pack (the live
+        * def_update, hit_leiden.rs:565-599). False restores the
+        * from-scratch re-solve path (used by equivalence tests as the
+        * oracle). */
+      incrementalHierarchy: Boolean = true)
 
   private[algo] def parts(df: DataFrame, cfg: Config): Int =
     if (cfg.numPartitions > 0) cfg.numPartitions
@@ -169,7 +150,7 @@ object Leiden {
       modularity: Double,
       communityCount: Long,
       sweepsPerLevel: Seq[Int],
-      canon: DataFrame = null,
+      canon: DataFrame,
       singletonQ: Option[Double] = None)
 
   // ---------------------------------------------------------------------

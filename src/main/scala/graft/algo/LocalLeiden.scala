@@ -99,19 +99,9 @@ object LocalLeiden {
     * lookups per edge endpoint made this a measured ~4.5 s/batch at 1M
     * superedges; this form is ~15x cheaper). Union keeps the smaller
     * dense index as root, and dense order IS id order, so every root is
-    * the component's min member id. */
-  def repairConnectivity(es: Array[(Long, Long, Double)],
-      carried: Map[Long, Long]): Map[Long, Long] = {
-    val src = new Array[Long](es.length)
-    val dst = new Array[Long](es.length)
-    var i = 0
-    while (i < es.length) { src(i) = es(i)._1; dst(i) = es(i)._2; i += 1 }
-    repairConnectivity(src, dst, carried)
-  }
-
-  /** Primitive-array form — the hot path for per-batch supergraph
-    * repair: no per-edge tuple boxing (a 2.6M-edge supergraph means
-    * millions of avoidable allocations per warm batch). */
+    * the component's min member id. Takes primitive arrays: no
+    * per-edge tuple boxing (a 2.6M-edge supergraph means millions of
+    * avoidable allocations per warm batch). */
   def repairConnectivity(eSrc: Array[Long], eDst: Array[Long],
       carried: Map[Long, Long]): Map[Long, Long] = {
     // densify: sorted distinct ids from edge endpoints + carried keys

@@ -235,14 +235,20 @@ object Engine {
           .write.mode("overwrite")
           .parquet(s"$root/${cfg.runId}/iter=${out.batch}/upper")
       }
+      // likewise the maintained distributed level-1 assignment (present
+      // only past the driver bound, O(supernodes) rows): with it the
+      // first post-resume batch takes the delta-scoped branch instead of
+      // a full supergraph re-solve
+      st.upperAssign.foreach(_.write.mode("overwrite")
+        .parquet(s"$root/${cfg.runId}/iter=${out.batch}/upperAssign"))
       val cp = new Checkpointer(root, cfg.runId)
       cp.write(out.batch, st.assign, out.metrics, frontier = 0,
         quality = out.quality, edgeRows = edgeRows,
         assignmentData = cfg.durableAssign.isEmpty)
     }
 
-  private def readState(spark: SparkSession, root: String, runId: String,
-      batch: Int,
+  private[graft] def readState(spark: SparkSession, root: String,
+      runId: String, batch: Int,
       durable: Option[Incremental.DurableCanon] = None,
       durableAssign: Option[Incremental.DurableAssign] = None)
       : Incremental.State = {
@@ -265,7 +271,9 @@ object Engine {
       rows.foreach(r => m(r.getLong(0)) = r.getLong(1))
       Incremental.UpperComm(m)
     }.toOption
+    val upperAssign = scala.util.Try(spark.read
+      .parquet(s"$root/$runId/iter=$batch/upperAssign")).toOption
     Incremental.State(canon, assign, 2.0 * EdgeOps.totalWeight(canon),
-      durable = durable, upper = upper)
+      durable = durable, upper = upper, upperAssign = upperAssign)
   }
 }

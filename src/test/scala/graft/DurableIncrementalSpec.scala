@@ -137,7 +137,7 @@ class DurableIncrementalSpec extends SparkSpecBase {
     val c = cached.superCache.get
     val mirror = (0 until c.src.length)
       .map(i => (c.src(i), c.dst(i)) -> c.w(i)).toMap
-    val table = cached.superCanon.collect()
+    val table = cached.superCanon.get.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(mirror == table,
       s"mirror ${mirror.size} edges vs table ${table.size}")

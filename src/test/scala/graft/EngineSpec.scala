@@ -75,6 +75,40 @@ class EngineSpec extends SparkSpecBase {
       s"resume-driven chain diverged from in-memory: $eng vs $mem")
   }
 
+  test("resume past the driver bound: the persisted upper assignment " +
+      "drives the delta-scoped branch and equals the in-memory chain") {
+    import graft.algo.Incremental
+    val root = Files.createTempDirectory("graft-upper-dist").toString
+    // localSolveEdges = 0 keeps every supergraph over the driver bound
+    val cfg = Engine.Config(leiden = Leiden.Config(localSolveEdges = 0),
+      checkpointRoot = Some(root), runId = "rd")
+    val g = edges(
+      (0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 0L, 1.0),
+      (3L, 4L, 1.0), (4L, 5L, 1.0), (5L, 3L, 1.0), (2L, 3L, 1.0),
+      (7L, 8L, 1.0), (8L, 9L, 1.0), (9L, 7L, 1.0), (5L, 7L, 1.0))
+    val b1 = edges((6L, 3L, 1.0), (6L, 4L, 1.0))
+    val b2 = edges((10L, 7L, 1.0), (10L, 8L, 1.0))
+    val _ = Engine.run(g, cfg)
+    val e1 = Engine.update(spark, b1, cfg)
+    // the first batch after this resume starts from the persisted
+    // upper assignment, so it takes the delta-scoped branch
+    val resumed = Engine.readState(spark, root, "rd", e1.batch)
+    assert(resumed.upperAssign.isDefined,
+      "over-bound update must persist the maintained upper assignment")
+    val e2 = Engine.update(spark, b2, cfg)
+    // in-memory chain from the same cold checkpoint, state kept in memory
+    var st = Engine.readState(spark, root, "rd", 0)
+    assert(st.upperAssign.isEmpty)
+    st = Incremental.update(st, b1, cfg.leiden)
+    assert(st.upperAssign.isDefined)
+    st = Incremental.update(st, b2, cfg.leiden)
+    val mem = canonicalPartition(
+      toMapLL(st.assign.select(col("v"), col("community"))))
+    val eng = canonicalPartition(toMapLL(e2.assignment))
+    assert(eng == mem,
+      s"resume-driven chain diverged from in-memory: $eng vs $mem")
+  }
+
   test("deterministic mode: exact replay identity + quality-equivalent " +
     "to throughput mode") {
     val g = edges(

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.algo.{Incremental, Leiden, Quality}
 import graft.graph.EdgeOps
+import graft.util.Ckpt.DFCkpt
 
-/** Round-5: the maintained upper hierarchy (LocalHier) — per-level delta
-  * movement/refinement/aggregation with top-level scoped connectivity
-  * repair — against the supergraph re-solve path it replaces.
+/** The maintained upper hierarchy — the warm mirror solve below the
+  * driver bound and the delta-scoped distributed branch above it —
+  * against the supergraph re-solve path it replaces.
   */
 class HierSpec extends SparkSpecBase {
 
@@ -84,16 +85,25 @@ class HierSpec extends SparkSpecBase {
     val (init, batches) = Incremental.paperSplit(g, 0.7, 50, 3)
     val cfg = Leiden.Config(localSolveEdges = 4)
     var delta = Incremental.initial(init, cfg)
-    assert(delta.upperAssign != null,
+    assert(delta.upperAssign.isDefined,
       "over-bound initial must seed the maintained upper assignment")
     var resolve = Incremental.initial(init, cfg)
     var k = 0
     for (b <- batches) {
       delta = Incremental.update(delta, b, cfg)
-      assert(delta.upperAssign != null,
+      assert(delta.upperAssign.isDefined,
         s"batch $k lost the maintained upper assignment")
-      resolve = Incremental.update(resolve.copy(upperAssign = null), b, cfg)
+      resolve = Incremental.update(resolve.copy(upperAssign = None), b, cfg)
       k += 1
+      // pruned every batch: exactly one row per supergraph vertex
+      val ua = delta.upperAssign.get.select("v").collect().map(_.getLong(0))
+      val superVerts = EdgeOps.vertices(delta.superCanon.get).collect()
+        .map(_.getLong(0)).toSet
+      assert(ua.length == ua.toSet.size,
+        s"batch $k: duplicate upper-assignment rows")
+      assert(ua.toSet == superVerts,
+        s"batch $k: upper assignment has ${ua.toSet.size} supernodes, " +
+          s"supergraph ${superVerts.size}")
       val qd = modularity(delta)
       val qr = modularity(resolve)
       assert(math.abs(qd - qr) <= 0.001 + 1e-9,
@@ -117,7 +127,7 @@ class HierSpec extends SparkSpecBase {
       (2L, 10L, 3.0))
     val cfg = Leiden.Config(localSolveEdges = 0)
     var st = Incremental.initial(g, cfg)
-    assert(st.upperAssign != null)
+    assert(st.upperAssign.isDefined)
     st = Incremental.update(st, edges((2L, 10L, -3.0)), cfg)
     assertConnected(st)
     val assign = toMapLL(st.assign.select(col("v"), col("community")))
@@ -125,6 +135,34 @@ class HierSpec extends SparkSpecBase {
     assert(assign(10L) == assign(11L) && assign(11L) == assign(12L))
     assert(assign(0L) != assign(10L),
       s"deleted bridge left both triangles in one community: $assign")
+  }
+
+  test("delta-scoped repair: a split fragment never takes the stale " +
+      "label of an untouched community") {
+    // community 0 = triangles {0,1,2} and {10,11,12} joined by a bridge;
+    // the untouched triangle {20,21,22} carries the drifted label 10 —
+    // the min member of the fragment the bridge deletion splits off
+    val g = EdgeOps.compress(edges(
+      (0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 0L, 1.0),
+      (10L, 11L, 1.0), (11L, 12L, 1.0), (12L, 10L, 1.0),
+      (2L, 10L, 3.0),
+      (20L, 21L, 1.0), (21L, 22L, 1.0), (22L, 20L, 1.0))).ckpt
+    val s = spark
+    import s.implicits._
+    val assign = Seq(0L, 1L, 2L, 10L, 11L, 12L, 20L, 21L, 22L)
+      .map(v => (v, if (v >= 20L) 10L else 0L, v))
+      .toDF("v", "community", "subcomm").ckpt
+    val cfg = Leiden.Config(localSolveEdges = 0)
+    var st = Incremental.State(g, assign,
+      m2 = 2.0 * EdgeOps.totalWeight(g), upperAssign = Some(assign))
+    st = Incremental.update(st, edges((2L, 10L, -3.0)), cfg)
+    assertConnected(st)
+    val comm = toMapLL(st.assign.select(col("v"), col("community")))
+    assert(comm(10L) != comm(20L),
+      s"split fragment merged with the untouched community: $comm")
+    assert(comm(0L) != comm(10L), s"bridge deletion did not split: $comm")
+    assert(comm.values.max <= st.maxId,
+      s"a community label is above the id watermark ${st.maxId}: $comm")
   }
 
   test("hier path: deletion batch that disconnects a community triggers " +
@@ -173,41 +211,13 @@ class HierSpec extends SparkSpecBase {
     assertConnected(hier)
   }
 
-  test("fixed-level delta pipeline (reference-faithful, rebuild off) " +
-      "stays within the cumulative per-update band") {
-    val g = sbm(600)
-    val (init, batches) = Incremental.paperSplit(g, 0.7, 60, 4)
-    val cfgDelta = Leiden.Config(incrementalHierarchy = true,
-      hierRebuildUpper = false)
-    val cfgSolve = Leiden.Config(incrementalHierarchy = false)
-    var hier = Incremental.initial(init, cfgDelta)
-    var solve = Incremental.initial(init, cfgSolve)
-    // the fixed-level pipeline (hit_leiden.rs:104-136) carries no
-    // re-solve-tracking guarantee — seats and upper grouping go stale by
-    // design (that is why hierRebuildUpper exists) — but its drift must
-    // stay small and must not compound: a flat 0.005 band over 4 batches
-    // (measured drift ~0.0016-0.0022)
-    var k = 0
-    for (b <- batches) {
-      hier = Incremental.update(hier, b, cfgDelta)
-      solve = Incremental.update(solve, b, cfgSolve)
-      k += 1
-      val qh = modularity(hier)
-      val qs = modularity(solve)
-      assert(math.abs(qh - qs) <= 0.005,
-        s"batch $k: fixed-level quality $qh vs re-solve $qs — drift " +
-          "beyond the 0.005 bound")
-    }
-    assertConnected(hier)
-  }
-
   test("hier cache absent (resume) falls back to re-solve and rebuilds") {
     val g = sbm(300, seed = 5)
     val (init, batches) = Incremental.paperSplit(g, 0.8, 30, 2)
     val cfg = Leiden.Config(incrementalHierarchy = true)
     var st = Incremental.initial(init, cfg)
     // simulate resume: hierarchy (and mirror) gone
-    st = st.copy(hierCache = None, superCache = None, upper = None)
+    st = st.copy(superCache = None, upper = None)
     st = Incremental.update(st, batches.head, cfg)
     assert(st.upper.isDefined,
       "re-solve must rebuild the maintained composition")

@@ -117,23 +117,4 @@ class IncAggregationSpec extends SparkSpecBase {
     }.filter(kv => math.abs(kv._2) > 1e-9).toMap
     assert(combined == after, s"combined=$combined after=$after dh=$dh")
   }
-
-  test("def_update re-points f through the hierarchy and pushes B down") {
-    val s = spark
-    import s.implicits._
-    // two levels: base vertices 0,1 with s_0: 0->10, 1->11;
-    // level-1 vertices 10,11 with f_1: 10->99, 11->11
-    val f0 = Seq((0L, 0L), (1L, 1L)).toDF("v", "f")
-    val f1 = Seq((10L, 99L), (11L, 11L)).toDF("v", "f")
-    val s0 = Seq((0L, 10L), (1L, 11L)).toDF("v", "sc")
-    val s1 = Seq((10L, 10L), (11L, 11L)).toDF("v", "sc")
-    val b0 = Seq.empty[Long].toDF("v")
-    val b1 = Seq(10L).toDF("v") // level-1 vertex 10 changed
-    val (fs, bs) = IncAggregation.defUpdate(
-      Vector(f0, f1), Vector(s0, s1), Vector(b0, b1))
-    // push-down: base vertex 0 (s_0(0)=10 in B_1) joins B_0
-    assert(bs(0).collect().map(_.getLong(0)).toSet == Set(0L))
-    // re-point: f_0(0) = f_1(s_0(0)) = f_1(10) = 99
-    assert(toMapLL(fs(0).select("v", "f")) == Map(0L -> 99L, 1L -> 1L))
-  }
 }

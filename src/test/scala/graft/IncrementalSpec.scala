@@ -119,7 +119,7 @@ class IncrementalSpec extends SparkSpecBase {
       .join(sc.select(col("v").as("src"), col("subcomm").as("su")), "src")
       .join(sc.select(col("v").as("dst"), col("subcomm").as("sv")), "dst")
       .select(col("su").as("src"), col("sv").as("dst"), col("weight"))))
-    val got = m(state.superCanon)
+    val got = m(state.superCanon.get)
     assert(got == expect, s"got=$got expect=$expect")
   }
 
