@@ -3,7 +3,7 @@ package graft.algo
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, LocalGraph}
 import graft.run.{IterMetric, MetricsSink}
 
 /** Connected components over an undirected edge table.
@@ -29,14 +29,11 @@ object ConnectedComponents {
   /** @param edges canonical or raw undirected edge table (src, dst[, weight])
     * @param vertices optional vertex universe; isolated vertices become
     *   their own singleton components.
-    * @param localSolveVerts when > 0, a graph with at most this many
-    *   vertices (and a bounded edge count) is collected and solved with a
-    *   driver-side union-find — identical min-member labels, one job
-    *   instead of O(log n) fixed-cost supersteps. Off by default so the
-    *   distributed path stays the tested default; tiny-graph callers
-    *   (driver queries) opt in. Any web-scale graph fails the bound and
-    *   stays distributed.
-    */
+    * @param localSolveVerts vertex cap of the driver-local path, 0 = off:
+    *   a graph that [[graft.graph.LocalGraph.collect]] admits (edges within
+    *   the driver byte budget; universe = the caller's vertex set, edges
+    *   leaving it dropped on both paths, else the edge endpoints) is
+    *   solved in one collect, with the distributed path's result. */
   def run(
       edges: DataFrame,
       vertices: Option[DataFrame] = None,
@@ -44,55 +41,17 @@ object ConnectedComponents {
       sink: MetricsSink = MetricsSink.discard,
       localSolveVerts: Long = 0): Result = {
 
-    val canon = edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .ckpt
+    val canon = EdgeOps.simple(edges).ckpt
 
-    if (localSolveVerts > 0) {
-      val nEdges = canon.count()
-      val spark = edges.sparkSession
-      import spark.implicits._
-      if (nEdges <= 10_000_000L) vertices match {
+    if (localSolveVerts > 0)
+      LocalGraph.collect(canon, localSolveVerts, vertices) match {
+        case Some(g) =>
+          val spark = edges.sparkSession
+          import spark.implicits._
+          return Result(LocalLeiden.localComponents(g.vs,
+            g.es.map(e => (e._1, e._2))).toSeq.toDF("v", "component"), 1)
         case None =>
-          // default universe = the canon's own endpoints: derive it from
-          // the (bounded) collect instead of a distinct+ckpt+count+collect
-          // chain; a LARGE edge table pre-checks the vertex bound
-          // distributively before committing the boxed collect
-          val preOk = nEdges <= 1_000_000L ||
-            EdgeOps.vertices(canon).count() <= localSolveVerts
-          if (preOk) {
-            val es = canon.collect().map(r => (r.getLong(0), r.getLong(1)))
-            val vSet = new java.util.TreeSet[java.lang.Long]()
-            es.foreach { e => vSet.add(e._1); vSet.add(e._2) }
-            if (vSet.size() <= localSolveVerts) {
-              val vs = new Array[Long](vSet.size())
-              var i = 0
-              val it = vSet.iterator()
-              while (it.hasNext) { vs(i) = it.next(); i += 1 }
-              return Result(LocalLeiden.localComponents(vs, es).toSeq
-                .toDF("v", "component"), 1)
-            }
-          }
-        case Some(vdf) =>
-          val verts0 = vdf.select(col("v")).distinct().ckpt
-          if (verts0.count() <= localSolveVerts) {
-            val vs = verts0.collect().map(_.getLong(0))
-            // restrict edges to the vertex universe: an endpoint outside
-            // `vs` crashed localComponents (negative binarySearch index)
-            // while the distributed path ignores such edges (no label
-            // row to gather) — filtering makes the two paths agree on
-            // degenerate inputs
-            val inVs = vs.toSet
-            val es = canon.collect().map(r => (r.getLong(0), r.getLong(1)))
-              .filter(e => inVs(e._1) && inVs(e._2))
-            return Result(LocalLeiden.localComponents(vs, es).toSeq
-              .toDF("v", "component"), 1)
-          }
       }
-    }
     val verts = vertices.map(_.select(col("v")).distinct())
       .getOrElse(EdgeOps.vertices(canon))
       .ckpt

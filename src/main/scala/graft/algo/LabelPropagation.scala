@@ -3,7 +3,7 @@ package graft.algo
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, LocalGraph}
 import graft.run.{IterMetric, MetricsSink}
 
 /** Synchronous weighted label propagation (community detection baseline).
@@ -27,16 +27,12 @@ object LabelPropagation {
 
   final case class Result(labels: DataFrame, iterations: Int)
 
-  /** @param localSolveVerts when > 0, a graph with at most this many
-    *   vertices (and a bounded edge count) is collected and solved with
-    *   the identical synchronous sweep on driver arrays — one job
-    *   instead of maxIter fixed-cost supersteps. Value-identical to the
-    *   distributed path: the per-(v,label) weight sums are exact for
-    *   the integer-valued multiplicities the canonical table carries
-    *   (order-independent), and the (w, -label) argmax tie policy is
-    *   the same — parity-pinned in FastPathEquivalenceSpec. Off by
-    *   default; tiny-graph callers (driver queries) opt in, any
-    *   web-scale graph fails the bound and stays distributed. */
+  /** @param localSolveVerts vertex cap of the driver-local path, 0 = off:
+    *   a graph that [[graft.graph.LocalGraph.collect]] admits (edges within
+    *   the driver byte budget; universe = the caller's vertex set, edges
+    *   leaving it dropped on both paths, else the edge endpoints) is
+    *   solved in one collect, with the distributed path's result.
+    *   Exact here: integer-valued weight sums, the same argmax tie policy. */
   def run(
       edges: DataFrame,
       vertices: Option[DataFrame] = None,
@@ -47,48 +43,15 @@ object LabelPropagation {
     val canon = EdgeOps.compress(edges).where(col("src") =!= col("dst"))
       .ckpt
 
-    if (localSolveVerts > 0) {
-      val nEdges = canon.count()
-      val spark = edges.sparkSession
-      import spark.implicits._
-      if (nEdges <= 10_000_000L) vertices match {
+    if (localSolveVerts > 0)
+      LocalGraph.collect(canon, localSolveVerts, vertices) match {
+        case Some(g) =>
+          val spark = edges.sparkSession
+          import spark.implicits._
+          val (local, its) = localLpa(g.vs, g.es, maxIter, sink)
+          return Result(local.toSeq.toDF("v", "label"), its)
         case None =>
-          // default universe = the canon's own endpoints: derive it from
-          // the (bounded) collect instead of a distinct+ckpt+count+collect
-          // chain; a LARGE edge table pre-checks the vertex bound
-          // distributively before committing the boxed collect
-          val preOk = nEdges <= 1_000_000L ||
-            EdgeOps.vertices(canon).count() <= localSolveVerts
-          if (preOk) {
-            val es = canon.select("src", "dst", "weight").collect()
-              .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-            val vSet = new java.util.TreeSet[java.lang.Long]()
-            es.foreach { e => vSet.add(e._1); vSet.add(e._2) }
-            if (vSet.size() <= localSolveVerts) {
-              val vs = new Array[Long](vSet.size())
-              var i = 0
-              val it = vSet.iterator()
-              while (it.hasNext) { vs(i) = it.next(); i += 1 }
-              val (local, its) = localLpa(vs, es, maxIter, sink)
-              return Result(local.toSeq.toDF("v", "label"), its)
-            }
-          }
-        case Some(vdf) =>
-          val verts0 = vdf.select(col("v")).distinct().ckpt
-          if (verts0.count() <= localSolveVerts) {
-            val vs = verts0.collect().map(_.getLong(0))
-            // edges with an endpoint outside the vertex universe
-            // contribute nothing distributed (no label row to gather) —
-            // filter for parity
-            val inVs = vs.toSet
-            val es = canon.select("src", "dst", "weight").collect()
-              .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-              .filter(e => inVs(e._1) && inVs(e._2))
-            val (local, its) = localLpa(vs, es, maxIter, sink)
-            return Result(local.toSeq.toDF("v", "label"), its)
-          }
       }
-    }
     val verts = vertices.map(_.select(col("v")).distinct())
       .getOrElse(EdgeOps.vertices(canon))
       .ckpt
@@ -153,11 +116,11 @@ object LabelPropagation {
       es: Array[(Long, Long, Double)],
       maxIter: Int,
       sink: MetricsSink): (Map[Long, Long], Int) = {
-    // densify to 0..n-1 and pack a symmetrized CSR once; the sweep then
-    // runs on primitive arrays (no per-edge boxing per iteration)
-    val sorted = vs.sorted
-    val n = sorted.length
-    def dense(v: Long): Int = java.util.Arrays.binarySearch(sorted, v)
+    // densify to 0..n-1 (`vs` is sorted, [[LocalGraph]]) and pack a
+    // symmetrized CSR once; the sweep then runs on primitive arrays (no
+    // per-edge boxing per iteration)
+    val n = vs.length
+    def dense(v: Long): Int = java.util.Arrays.binarySearch(vs, v)
     val degOut = new Array[Int](n)
     es.foreach { case (s, d, _) =>
       degOut(dense(s)) += 1; degOut(dense(d)) += 1
@@ -173,7 +136,7 @@ object LabelPropagation {
       nbr(fill(ds)) = dd; wgt(fill(ds)) = w; fill(ds) += 1
       nbr(fill(dd)) = ds; wgt(fill(dd)) = w; fill(dd) += 1
     }
-    // labels as dense indices (label id = sorted(idx)); init = self.
+    // labels as dense indices (label id = vs(idx)); init = self.
     // Min-label ties on original ids == min dense index (order-preserving
     // densification), so the tie policy survives the remap.
     var labels = Array.tabulate(n)(identity)
@@ -214,6 +177,6 @@ object LabelPropagation {
       it += 1
       done = changed == 0
     }
-    (Array.tabulate(n)(v => sorted(v) -> sorted(labels(v))).toMap, it)
+    (Array.tabulate(n)(v => vs(v) -> vs(labels(v))).toMap, it)
   }
 }

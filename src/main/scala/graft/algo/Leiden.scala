@@ -3,7 +3,7 @@ package graft.algo
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, LocalGraph}
 import graft.run.{IterMetric, MetricsSink}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -82,17 +82,18 @@ object Leiden {
         * ([[LocalLeiden]]) — after one or two contractions a 100 TB
         * graph's supergraph has a few thousand vertices, and driving
         * dozens of fixed-cost distributed jobs against it is pure
-        * overhead. 3M edges collect to ~100 MB — far below the driver
-        * heap — and the flat-buffer sequential solver clears them in
-        * seconds; a 100 TB graph's contractions stay distributed until
-        * they shrink under this. 0 disables. */
+        * overhead. The collect goes through [[graft.graph.LocalGraph]],
+        * so it must also fit the driver byte budget; a 100 TB graph's
+        * contractions stay distributed until they shrink under both.
+        * 0 disables. */
       localSolveEdges: Long = 3000000,
       /** never local-solve below this level (level 0 = the base graph
         * stays distributed regardless of size). */
       localSolveMinLevel: Int = 1,
       /** level-0 escape hatch below localSolveMinLevel: when > 0, a BASE
         * graph with at most this many VERTICES (and <= localSolveEdges
-        * edges) is collected and solved sequentially too — a graph this
+        * edges, through the same [[graft.graph.LocalGraph]] gate) is
+        * collected and solved sequentially too — a graph this
         * small pays dozens of fixed-cost distributed BSP sweeps for work
         * a single core clears in seconds, while level 0 of any real
         * web-scale graph stays distributed (it can't pass the bound).
@@ -189,58 +190,36 @@ object Leiden {
     var sweeps = Vector.empty[Int]
     var level = 0
     var done = false
-    // level-0 local-solve capture: the collected edges + the solved map
+    // level-0 local-solve capture: the collected graph + the solved map
     // make quality scoring and the community count pure driver
     // arithmetic (no extra Spark jobs) — see the tail of this method
-    var level0Es: Array[(Long, Long, Double)] = null
-    var level0Map: Map[Long, Long] = null
+    var level0: Option[(LocalGraph, Map[Long, Long])] = None
 
     while (!done && level < cfg.maxLevels) {
       // top-of-hierarchy local solve: once the (super)graph is small the
       // sequential deterministic solver finishes the hierarchy in one
       // driver-side call instead of dozens of fixed-cost Spark jobs.
-      // The level-0 vertex bound (explicit opt-in) is checked on the
-      // already-collected edges instead of a distinct-count job: the
-      // collect is bounded by the edge gate either way, and the common
-      // opted-in case (tiny graph) saves a fixed-cost Spark action —
-      // a failed vertex check just discards the bounded array and
-      // falls through to the distributed level.
-      val nCanonEdges =
-        if (cfg.localSolveEdges > 0) canon.count() else Long.MaxValue
-      val edgeGate = cfg.localSolveEdges > 0 &&
-        nCanonEdges <= cfg.localSolveEdges &&
-        (level >= cfg.localSolveMinLevel || cfg.localSolveLevel0Verts > 0)
-      // level-0 vertex-bound opt-in on a LARGE edge table: pre-check the
-      // vertex count with a cheap distributed distinct count instead of
-      // collecting millions of boxed tuples only to discard them when
-      // the vertex bound fails (a graph near localSolveEdges that fails
-      // level0Verts would otherwise pay the full driver allocation)
-      val preCheckOk = !edgeGate || level >= cfg.localSolveMinLevel ||
-        nCanonEdges <= math.max(cfg.localSolveLevel0Verts, 1_000_000L) ||
-        EdgeOps.vertices(canon).count() <= cfg.localSolveLevel0Verts
-      val esOpt: Option[Array[(Long, Long, Double)]] =
-        if (!edgeGate || !preCheckOk) None
-        else {
-          val es = canon.select("src", "dst", "weight").collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          if (level >= cfg.localSolveMinLevel) Some(es)
-          else {
-            val vs = new java.util.HashSet[Long]()
-            es.foreach { e => vs.add(e._1); vs.add(e._2) }
-            if (vs.size() <= cfg.localSolveLevel0Verts) Some(es) else None
-          }
-        }
-      if (esOpt.isDefined) {
-        val es = esOpt.get
+      // Below localSolveMinLevel only the explicit level-0 vertex cap
+      // opens the gate.
+      val maxVerts =
+        if (level >= cfg.localSolveMinLevel) Long.MaxValue
+        else cfg.localSolveLevel0Verts
+      val local =
+        if (cfg.localSolveEdges <= 0 || maxVerts <= 0) None
+        else LocalGraph.collect(canon, maxVerts,
+          maxEdges = cfg.localSolveEdges)
+      if (local.isDefined) {
+        val g = local.get
         val szM = carriedSize.map(_.collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap).getOrElse(Map.empty)
         val cmM = carriedComm.map(_.collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap).getOrElse(Map.empty)
-        val local = LocalLeiden.solve(es, szM, cmM, cfg)
+        val solved = LocalLeiden.solve(g.es.map(_._1), g.es.map(_._2),
+          g.es.map(_._3), szM, cmM, cfg)
         val spark = canon.sparkSession
         import spark.implicits._
-        topAssign = local.toSeq.toDF("v", "community")
-        if (level == 0) { level0Es = es; level0Map = local }
+        topAssign = solved.toSeq.toDF("v", "community")
+        if (level == 0) level0 = Some((g, solved))
         done = true
       } else {
       val adj = EdgeOps.partitionBySrc(EdgeOps.symmetrize(canon),
@@ -323,57 +302,29 @@ object Leiden {
           .ckpt
       }
 
-    if (level0Map != null) {
-      // level-0 local solve: the whole graph and partition are already on
-      // the driver — score quality (and the singleton baseline) with the
-      // exact sums Quality would compute, zero extra Spark jobs. All
-      // sums are exact for the integer-valued multiplicity weights these
-      // graphs carry (order-independent).
-      var wIn = 0.0
-      var wSelf = 0.0
-      val degOf = scala.collection.mutable.HashMap.empty[Long, Double]
-      level0Es.foreach { case (s, d, w) =>
-        if (level0Map(s) == level0Map(d)) wIn += w
-        if (s == d) wSelf += w
-        degOf(s) = degOf.getOrElse(s, 0.0) + w
-        degOf(d) = degOf.getOrElse(d, 0.0) + w
-      }
-      val q =
-        if (cfg.useCpm) {
-          val csize = scala.collection.mutable.HashMap.empty[Long, Long]
-          level0Map.valuesIterator.foreach(c =>
-            csize(c) = csize.getOrElse(c, 0L) + 1L)
-          var pairs = 0.0
-          csize.valuesIterator.foreach(s =>
-            pairs += (s * (s - 1) / 2).toDouble)
-          wIn - cfg.gamma * pairs
-        } else {
-          val cdeg = scala.collection.mutable.HashMap.empty[Long, Double]
-          degOf.foreach { case (v, dv) =>
-            val c = level0Map(v)
-            cdeg(c) = cdeg.getOrElse(c, 0.0) + dv
-          }
-          var sumSq = 0.0
-          cdeg.valuesIterator.foreach(d => sumSq += d * d)
-          wIn / m - cfg.gamma * sumSq / (4.0 * m * m)
-        }
-      val singletonQ =
-        if (cfg.useCpm) None
-        else {
-          var sq = 0.0
-          degOf.valuesIterator.foreach(d => sq += d * d)
-          Some(wSelf / m - cfg.gamma * sq / (4.0 * m * m))
-        }
-      val nComm = level0Map.valuesIterator.toSet.size.toLong
-      return Result(finalAssign, level + 1, q, nComm, sweeps, canon0,
-        singletonQ)
+    level0 match {
+      case Some((g, solved)) =>
+        // level-0 local solve: the whole graph and partition are already
+        // on the driver — score quality (and the singleton baseline, the
+        // modularity of v -> v) with the sums Quality would compute, zero
+        // extra Spark jobs. The sums are exact for the integer-valued
+        // multiplicity weights these graphs carry (order-independent).
+        val q =
+          if (cfg.useCpm) Quality.cpmFromArrays(g.es, solved, cfg.gamma)
+          else Quality.modularityFromArrays(g.es, solved, cfg.gamma)
+        val singletonQ =
+          if (cfg.useCpm) None
+          else Some(Quality.modularityFromArrays(g.es,
+            solved.transform((v, _) => v), cfg.gamma))
+        Result(finalAssign, level + 1, q, solved.valuesIterator.toSet.size,
+          sweeps, canon0, singletonQ)
+      case None =>
+        val q =
+          if (cfg.useCpm) Quality.cpm(canon0, finalAssign, cfg.gamma)
+          else Quality.modularity(canon0, finalAssign, cfg.gamma)
+        val nComm = finalAssign.select("community").distinct().count()
+        Result(finalAssign, level + 1, q, nComm, sweeps, canon0)
     }
-
-    val q =
-      if (cfg.useCpm) Quality.cpm(canon0, finalAssign, cfg.gamma)
-      else Quality.modularity(canon0, finalAssign, cfg.gamma)
-    val nComm = finalAssign.select("community").distinct().count()
-    Result(finalAssign, level + 1, q, nComm, sweeps, canon0)
   }
 
   // ---------------------------------------------------------------------

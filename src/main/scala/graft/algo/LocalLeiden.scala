@@ -224,32 +224,13 @@ object LocalLeiden {
     out.result()
   }
 
-  /** Full hierarchical solve.
+  /** Full hierarchical solve over primitive edge arrays.
     *
-    * @param edges    undirected edges (parallel/duplicate rows allowed;
-    *                 merged here); any row order — results are identical
+    * @param eSrc/eDst/eW undirected edges (parallel/duplicate rows
+    *   allowed; merged here); any row order — results are identical
     * @param nodeSize vertex -> size in base vertices (absent = 1)
     * @param initial  vertex -> starting community (absent = own id)
     * @return final (vertex -> community), community = min member id
-    */
-  def solve(edges: Array[(Long, Long, Double)],
-      nodeSize: Map[Long, Long],
-      initial: Map[Long, Long],
-      cfg: Leiden.Config): Map[Long, Long] = {
-    val eSrc = new Array[Long](edges.length)
-    val eDst = new Array[Long](edges.length)
-    val eW = new Array[Double](edges.length)
-    var i = 0
-    while (i < edges.length) {
-      eSrc(i) = edges(i)._1; eDst(i) = edges(i)._2; eW(i) = edges(i)._3
-      i += 1
-    }
-    solve(eSrc, eDst, eW, nodeSize, initial, cfg)
-  }
-
-  /** Primitive-array form — the hot path for the per-batch supergraph
-    * re-solve (no per-edge tuple boxing).
-    *
     * @param canonicalSorted the input is already canonical (src <= dst,
     *   unique keys) AND sorted by (src, dst): the level-0 dedup/sort map
     *   is skipped and the dense edge arrays are built by direct id

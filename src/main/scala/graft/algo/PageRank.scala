@@ -3,7 +3,7 @@ package graft.algo
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, LocalGraph}
 import graft.run.{IterMetric, MetricsSink}
 
 /** Weighted PageRank as a DataFrame power iteration.
@@ -36,16 +36,11 @@ object PageRank {
     *   vertices present in `edges`.
     * @param numIter fixed iteration count when tol <= 0, else a cap.
     * @param tol L1 convergence threshold (sum |r_t+1 - r_t| < tol stops).
-    * @param localSolveVerts when > 0, a graph with at most this many
-    *   vertices (and a bounded edge count) is collected and iterated on
-    *   driver CSR arrays — one collect instead of numIter fixed-cost
-    *   supersteps (same adaptive pattern as CC/LPA). Per-vertex sums run
-    *   in deterministic CSR order instead of shuffle-merge order, so
-    *   values can differ from the distributed path in the last float
-    *   ulps — exactly the nondeterminism the distributed path already
-    *   has between its own runs (parity pinned to 1e-12 in
-    *   FastPathEquivalenceSpec). Off by default; tiny-graph callers opt
-    *   in, web-scale graphs fail the bound and stay distributed. */
+    * @param localSolveVerts vertex cap of the driver-local path, 0 = off:
+    *   a graph that [[graft.graph.LocalGraph.collect]] admits (edges within
+    *   the driver byte budget; universe = the caller's vertex set, edges
+    *   leaving it dropped on both paths, else the edge endpoints) is
+    *   solved in one collect, with the distributed path's result. */
   def run(
       edges: DataFrame,
       vertices: Option[DataFrame] = None,
@@ -56,55 +51,21 @@ object PageRank {
       localSolveVerts: Long = 0): Result = {
 
     val canon = EdgeOps.compress(edges)
-
-    if (localSolveVerts > 0) {
-      val canonC = canon.ckpt
-      val nEdges = canonC.count()
-      val spark = edges.sparkSession
-      import spark.implicits._
-      if (nEdges <= 10_000_000L) vertices match {
-        case None =>
-          // default universe = the canon's own endpoints: derive it from
-          // the (bounded) collect instead of a distinct+ckpt+count+collect
-          // chain. A LARGE edge table still pre-checks the vertex bound
-          // distributively before committing the boxed collect.
-          val preOk = nEdges <= 1_000_000L ||
-            EdgeOps.vertices(canonC).count() <= localSolveVerts
-          if (preOk) {
-            val es = canonC.select("src", "dst", "weight").collect()
-              .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-            val vSet = new java.util.TreeSet[java.lang.Long]()
-            es.foreach { e => vSet.add(e._1); vSet.add(e._2) }
-            if (vSet.size() <= localSolveVerts) {
-              val vs = new Array[Long](vSet.size())
-              var i = 0
-              val it = vSet.iterator()
-              while (it.hasNext) { vs(i) = it.next(); i += 1 }
-              val (ranks, its) =
-                localPageRank(vs, es, damping, numIter, tol, sink)
-              return Result(
-                vs.indices.map(i => (vs(i), ranks(i))).toDF("v", "rank"),
-                its)
-            }
-          }
-        case Some(vdf) =>
-          val verts0 = vdf.select(col("v")).distinct().ckpt
-          if (verts0.count() <= localSolveVerts) {
-            val vs = verts0.collect().map(_.getLong(0))
-            val inVs = vs.toSet
-            val es = canonC.select("src", "dst", "weight").collect()
-              .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-              .filter(e => inVs(e._1) && inVs(e._2))
-            val (ranks, its) =
-              localPageRank(vs, es, damping, numIter, tol, sink)
-            return Result(
-              vs.indices.map(i => (vs(i), ranks(i))).toDF("v", "rank"), its)
-          }
-      }
-      // bound failed: reuse the materialized canon below
-      return runDistributed(canonC, vertices, damping, numIter, tol, sink)
+    if (localSolveVerts <= 0)
+      return runDistributed(canon, vertices, damping, numIter, tol, sink)
+    val canonC = canon.ckpt
+    LocalGraph.collect(canonC, localSolveVerts, vertices) match {
+      case Some(g) =>
+        val spark = edges.sparkSession
+        import spark.implicits._
+        val (ranks, its) =
+          localPageRank(g.vs, g.es, damping, numIter, tol, sink)
+        Result(g.vs.indices.map(i => (g.vs(i), ranks(i))).toDF("v", "rank"),
+          its)
+      // the gate refused: reuse the materialized canon
+      case None => runDistributed(canonC, vertices, damping, numIter, tol,
+        sink)
     }
-    runDistributed(canon, vertices, damping, numIter, tol, sink)
   }
 
   private def runDistributed(
@@ -115,9 +76,17 @@ object PageRank {
       tol: Double,
       sink: MetricsSink): Result = {
 
-    val adj = EdgeOps.symmetrize(canon)
+    val verts = vertices.map(_.select(col("v")).distinct())
+      .getOrElse(EdgeOps.vertices(canon))
       .ckpt
-    val verts = vertices.getOrElse(EdgeOps.vertices(canon)).select(col("v"))
+    // the LocalGraph vertex rule: an edge with an endpoint outside an
+    // explicit vertex set is dropped before degrees and shares, so no rank
+    // mass leaves the set
+    val inSet = vertices.fold(canon) { _ =>
+      canon.join(verts.select(col("v").as("src")), Seq("src"), "left_semi")
+        .join(verts.select(col("v").as("dst")), Seq("dst"), "left_semi")
+    }
+    val adj = EdgeOps.symmetrize(inSet)
       .ckpt
     val n = verts.count().toDouble
     if (n == 0) return Result(verts.withColumn("rank", lit(0.0)), 0)
@@ -179,8 +148,12 @@ object PageRank {
   /** Driver-side mirror of the distributed superstep: symmetrized CSR
     * with per-edge shares w/wdeg(src), dangling mass spread uniformly,
     * r' = (1-d)/n + d*(gathered + dMass/n). Same semantics as
-    * runDistributed (see run() scaladoc for the float-order caveat).
-    * Returns ranks indexed as `vs` plus the iteration count. */
+    * runDistributed, but per-vertex sums run in deterministic CSR order
+    * instead of shuffle-merge order, so values can differ from it in the
+    * last float ulps — the nondeterminism the distributed path already
+    * has between its own runs (parity pinned to 1e-12 in
+    * FastPathEquivalenceSpec). `vs` is sorted ([[LocalGraph]]); returns
+    * ranks indexed as `vs` plus the iteration count. */
   private[graft] def localPageRank(
       vs: Array[Long],
       es: Array[(Long, Long, Double)],
@@ -190,10 +163,7 @@ object PageRank {
       sink: MetricsSink): (Array[Double], Int) = {
     val n = vs.length
     if (n == 0) return (Array.empty, 0)
-    // dense index = position in the caller's vs order
-    val posOf = new java.util.HashMap[Long, Int](n * 2)
-    vs.indices.foreach(i => posOf.put(vs(i), i))
-    def idx(v: Long): Int = posOf.get(v)
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(vs, v)
     // directed adjacency = both directions of every canonical edge
     // (self-loops twice, exactly EdgeOps.symmetrize)
     val outDeg = new Array[Int](n)

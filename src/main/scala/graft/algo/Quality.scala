@@ -2,7 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, LocalGraph}
 
 /** Partition quality functions: modularity and CPM.
   *
@@ -25,9 +25,10 @@ object Quality {
 
   /** @param canonical canonical undirected edge table (src<=dst, merged)
     * @param assign (v, community)
-    * @param localSolveEdges when > 0 and the canonical table has at most
-    *   this many rows, both inputs are collected and the three sums run
-    *   on the driver — one collect instead of three join+agg jobs. The
+    * @param localSolveEdges when > 0 and [[LocalGraph.collect]] admits the
+    *   canonical table under this edge cap (and the driver byte budget),
+    *   both inputs are collected and the three sums run on the driver —
+    *   one collect instead of three join+agg jobs. The
     *   value is identical for integer-valued weights (exact sums in any
     *   order — the compressed-multiplicity graphs every caller scores);
     *   fractional weights could differ in the last ulp, same as the
@@ -142,21 +143,19 @@ object Quality {
     wIn - gamma * pairs
   }
 
-  /** Collect gate for the local paths: when the (already-materialized)
-    * canonical table fits, collects it plus the assignment. */
+  /** Collect gate for the local paths: [[LocalGraph.collect]] with the
+    * caller's edge cap and no vertex cap, then the assignment. */
   private def localParts(canonical: DataFrame, assign: DataFrame,
       localSolveEdges: Long): Option[(Array[(Long, Long, Double)],
       scala.collection.mutable.HashMap[Long, Long])] = {
     if (localSolveEdges <= 0) return None
-    // callers opting in pass an already-materialized (ckpt'd) canonical
-    // table, so the count gate and the collect below are both cheap reads
-    if (canonical.count() > localSolveEdges) return None
-    val commOf = scala.collection.mutable.HashMap.empty[Long, Long]
-    assign.select(col("v"), col("community")).collect()
-      .foreach(r => commOf.put(r.getLong(0), r.getLong(1)))
-    val es = canonical.select(col("src"), col("dst"), col("weight"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    Some((es, commOf))
+    LocalGraph.collect(canonical, Long.MaxValue, maxEdges = localSolveEdges)
+      .map { g =>
+        val commOf = scala.collection.mutable.HashMap.empty[Long, Long]
+        assign.select(col("v"), col("community")).collect()
+          .foreach(r => commOf.put(r.getLong(0), r.getLong(1)))
+        (g.es, commOf)
+      }
   }
 
   private def intraWeight(canonical: DataFrame, assign: DataFrame): Double = {

@@ -3,6 +3,7 @@ package graft.algo
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.graph.{EdgeOps, LocalGraph}
 
 /** Exact triangle counting over an undirected simple graph.
   *
@@ -25,11 +26,11 @@ import org.apache.spark.sql.functions._
 object TriangleCount {
 
   /** Total triangle count in the graph.
-    * @param localSolveVerts when > 0, a graph with at most this many
-    *   vertices (and a bounded simple-edge count) is collected and
-    *   counted on driver bitsets — exact integer arithmetic, identical
-    *   count, one collect instead of the multi-stage closing pipeline
-    *   (same adaptive pattern as CC/LPA/PageRank). Off by default. */
+    * @param localSolveVerts vertex cap of the driver-local path, 0 = off:
+    *   a graph that [[graft.graph.LocalGraph.collect]] admits (edges within
+    *   the driver byte budget; universe = the caller's vertex set, edges
+    *   leaving it dropped on both paths, else the edge endpoints) is
+    *   solved in one collect, with the distributed path's result. */
   def total(edges: DataFrame, localSolveVerts: Long = 0): Long = {
     // needUniverse=false: the total doesn't credit per-vertex rows, so
     // the simple graph's own endpoints suffice — no distinct-vertex job
@@ -57,7 +58,7 @@ object TriangleCount {
         return vs.indices.map(i => (vs(i), perV(i))).toDF("v", "triangles")
       case None =>
     }
-    val verts = graft.graph.EdgeOps.vertices(edges)
+    val verts = EdgeOps.vertices(edges)
     val cl = closing(edges)
     val credits = cl
       .select(col("u").as("v"), size(col("cs")).cast("long").as("n"))
@@ -74,45 +75,25 @@ object TriangleCount {
     * (u, w) closes |N+(u) /\ N+(w)| triangles — the identical counting
     * scheme as [[closing]], pure integer arithmetic, so total and
     * per-vertex credits are exactly equal to the distributed path's.
-    * Returns (total, vertex universe in EdgeOps.vertices order,
-    * per-vertex counts) when the gate admits the graph, else None. */
+    * Returns (total, sorted vertex universe, per-vertex counts) when
+    * [[LocalGraph.collect]] admits the graph, else None. */
   private def localCounts(edges: DataFrame, localSolveVerts: Long,
       needUniverse: Boolean = true)
       : Option[(Long, Array[Long], Array[Long])] = {
     if (localSolveVerts <= 0) return None
-    import graft.util.Ckpt._
-    val simple = edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .ckpt
-    if (simple.count() > math.min(10_000_000L, localSolveVerts * 64))
-      return None
-    val es = simple.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val vs =
-      if (needUniverse) {
-        // the full universe (incl. self-loop-only vertices) for perVertex
-        val verts = graft.graph.EdgeOps.vertices(edges).ckpt
-        if (verts.count() > localSolveVerts) return None
-        verts.collect().map(_.getLong(0))
-      } else {
-        val set = new java.util.TreeSet[java.lang.Long]()
-        es.foreach { case (u, w) => set.add(u); set.add(w) }
-        if (set.size() > localSolveVerts) return None
-        val a = new Array[Long](set.size())
-        var i = 0
-        val it = set.iterator()
-        while (it.hasNext) { a(i) = it.next(); i += 1 }
-        a
-      }
+    val simple = EdgeOps.simple(edges).ckpt
+    // perVertex credits the full universe, self-loop-only vertices too
+    val universe =
+      if (needUniverse) Some(EdgeOps.vertices(edges)) else None
+    LocalGraph.collect(simple, localSolveVerts, universe).map(bitsetCounts)
+  }
+
+  private def bitsetCounts(g: LocalGraph): (Long, Array[Long], Array[Long]) = {
+    val (vs, es) = (g.vs, g.es)
     val n = vs.length
-    val posOf = new java.util.HashMap[Long, Int](n * 2)
-    vs.indices.foreach(i => posOf.put(vs(i), i))
+    def pos(v: Long): Int = java.util.Arrays.binarySearch(vs, v)
     val deg = new Array[Int](n)
-    es.foreach { case (u, w) =>
-      deg(posOf.get(u)) += 1; deg(posOf.get(w)) += 1
-    }
+    es.foreach { case (u, w, _) => deg(pos(u)) += 1; deg(pos(w)) += 1 }
     // orient u -> w iff (deg(u), u) < (deg(w), w); out-bitsets bounded by
     // the orientation's O(sqrt(E)) out-degree cap
     val words = (n + 63) >> 6
@@ -123,15 +104,15 @@ object TriangleCount {
     }
     def lt(a: Int, b: Int): Boolean =
       deg(a) < deg(b) || (deg(a) == deg(b) && vs(a) < vs(b))
-    es.foreach { case (uu, ww) =>
-      val a = posOf.get(uu); val b = posOf.get(ww)
+    es.foreach { case (uu, ww, _) =>
+      val a = pos(uu); val b = pos(ww)
       val (u, w) = if (lt(a, b)) (a, b) else (b, a)
       bits(u)(w >> 6) |= 1L << (w & 63)
     }
     var total = 0L
     val perV = new Array[Long](n)
-    es.foreach { case (uu, ww) =>
-      val a = posOf.get(uu); val b = posOf.get(ww)
+    es.foreach { case (uu, ww, _) =>
+      val a = pos(uu); val b = pos(ww)
       val (u, w) = if (lt(a, b)) (a, b) else (b, a)
       val bu = out(u); val bw = out(w)
       if (bu != null && bw != null) {
@@ -153,18 +134,14 @@ object TriangleCount {
         if (cnt > 0) { total += cnt; perV(u) += cnt; perV(w) += cnt }
       }
     }
-    Some((total, vs, perV))
+    (total, vs, perV)
   }
 
   /** For each oriented edge (u, w): cs = N+(u) /\ N+(w), the vertices
     * closing a triangle over it. Edges whose w has no out-neighbors are
     * dropped (they close nothing — inner join). */
   private def closing(edges: DataFrame): DataFrame = {
-    val simple = edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
+    val simple = EdgeOps.simple(edges)
 
     // unweighted degree on the symmetrized view
     val deg = simple.select(col("src").as("v"))

@@ -65,6 +65,14 @@ object EdgeOps {
     untouched.unionAll(compress(touched.unionAll(deltaCanon), eps))
   }
 
+  /** The unweighted simple graph: each undirected pair once as
+    * (src < dst), self-loops dropped. */
+  def simple(edges: DataFrame): DataFrame =
+    edges.select(least(col(SRC), col(DST)).as(SRC),
+        greatest(col(SRC), col(DST)).as(DST))
+      .where(col(SRC) =!= col(DST))
+      .distinct()
+
   /** Both directions of every edge; self-loops are emitted twice, matching
     * the reference CSR builder which scatters (u,v) and (v,u)
     * unconditionally (/root/reference/src/core/graph/in_memory.rs:36-48).

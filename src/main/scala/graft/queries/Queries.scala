@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, LocalGraph}
 import graft.algo._
 
 /** Driver-harness queries: each is a DataFrame job over the read-only
@@ -114,53 +114,40 @@ object Queries {
     * quality scoring (two aggregations over exact-integer sums, so the
     * value is bit-reproducible against SQL). */
   def qModularity(spark: SparkSession, dir: String): DataFrame = {
-    val q = ccQuality(spark, dir, useCpm = false)
+    val q = ccQuality(lineitemGraph(spark, dir), useCpm = false)
     import spark.implicits._
     Seq(q).toDF("q").select(round(col("q"), 6).as("modularity"))
   }
 
   /** CPM quality of the connected-components partition (gamma = 1). */
   def qCpm(spark: SparkSession, dir: String): DataFrame = {
-    val q = ccQuality(spark, dir, useCpm = true)
+    val q = ccQuality(lineitemGraph(spark, dir), useCpm = true)
     import spark.implicits._
     Seq(q).toDF("q").select(round(col("q"), 6).as("cpm"))
   }
 
   /** Shared core of qModularity/qCpm: quality of the connected-components
-    * partition. The canonical table is materialized ONCE and — when it
-    * fits the driver bound — collected once: components come from the
-    * identical min-member union-find the CC local path runs
+    * partition of `g`. The canonical table is materialized ONCE and — when
+    * [[LocalGraph.collect]] admits it — collected once: components come
+    * from the identical min-member union-find the CC local path runs
     * ([[LocalLeiden.localComponents]]) and the quality sums from
     * [[Quality.modularityFromArrays]]/[[Quality.cpmFromArrays]], both
-    * parity-pinned to their distributed forms. 3 Spark actions total
-    * (materialize, gate count, collect) instead of ~9 (the previous CC
-    * distinct/ckpt/count/collect chain + three quality join+agg jobs).
-    * Over the bound: the distributed CC + Quality pipeline, unchanged. */
-  private def ccQuality(spark: SparkSession, dir: String,
-      useCpm: Boolean): Double = {
+    * parity-pinned to their distributed forms. Refused by the gate: the
+    * distributed CC + Quality pipeline. */
+  private[graft] def ccQuality(g: DataFrame, useCpm: Boolean): Double = {
     import graft.util.Ckpt._
-    val g = lineitemGraph(spark, dir)
     val canon = EdgeOps.compress(g).ckpt
-    if (canon.count() <= 10_000_000L) {
-      val es = canon.select("src", "dst", "weight").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val vSet = new java.util.TreeSet[java.lang.Long]()
-      es.foreach { case (s, d, _) => vSet.add(s); vSet.add(d) }
-      val vs = new Array[Long](vSet.size())
-      locally {
-        var i = 0; val it = vSet.iterator()
-        while (it.hasNext) { vs(i) = it.next(); i += 1 }
-      }
-      val comp = LocalLeiden.localComponents(vs,
-        es.map(e => (e._1, e._2)))
-      if (useCpm) Quality.cpmFromArrays(es, comp, 1.0)
-      else Quality.modularityFromArrays(es, comp, 1.0)
-    } else {
-      val assign = ConnectedComponents.run(canon, localSolveVerts = 100000)
-        .components
-        .select(col("v"), col("component").as("community"))
-      if (useCpm) Quality.cpm(canon, assign)
-      else Quality.modularity(canon, assign)
+    LocalGraph.collect(canon, maxVerts = 100000) match {
+      case Some(lg) =>
+        val comp = LocalLeiden.localComponents(lg.vs,
+          lg.es.map(e => (e._1, e._2)))
+        if (useCpm) Quality.cpmFromArrays(lg.es, comp, 1.0)
+        else Quality.modularityFromArrays(lg.es, comp, 1.0)
+      case None =>
+        val assign = ConnectedComponents.run(canon).components
+          .select(col("v"), col("component").as("community"))
+        if (useCpm) Quality.cpm(canon, assign)
+        else Quality.modularity(canon, assign)
     }
   }
 

@@ -3,8 +3,9 @@ package graft.run
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.algo.{Incremental, Leiden, Quality}
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, LocalGraph}
 import graft.state.Checkpointer
+import graft.util.Bcast
 
 /** The engine facade: the Spark-native equivalent of the reference's
   * `run(graph, config) -> RunOutcome` entry point
@@ -22,7 +23,8 @@ object Engine {
     * quality-delta equivalence (<= 0.001, equivalence.rs:21-27);
     * `deterministic` = sequential exact-identity semantics — the whole
     * solve runs in [[graft.algo.LocalLeiden]], so the graph must fit
-    * `leiden.localSolveEdges` (the reference's deterministic mode is
+    * `leiden.localSolveEdges` and the driver byte budget of
+    * [[graft.graph.LocalGraph]] (the reference's deterministic mode is
     * single-threaded and carries the same practical bound). */
   /** @param durableEdges when set, the level-0 canonical edge table lives
     *   in a [[graft.graph.BucketedEdges]] store at this (path, nBuckets)
@@ -72,11 +74,14 @@ object Engine {
     val leidenCfg =
       if (cfg.mode == "deterministic") {
         // sequential exact-identity solve from level 0 (LocalLeiden)
+        // must pass the level-0 LocalGraph gate, or Leiden.run would
+        // silently take the distributed path
         val n = EdgeOps.compress(edges, cfg.leiden.eps).count()
         require(cfg.leiden.localSolveEdges > 0 &&
-          n <= cfg.leiden.localSolveEdges,
+          LocalGraph.admits(n, cfg.leiden.localSolveEdges),
           s"deterministic mode requires <= ${cfg.leiden.localSolveEdges} " +
-            s"edges (got $n) — use throughput mode at scale")
+            s"edges within the driver byte budget of ${Bcast.budgetBytes} " +
+            s"bytes (got $n edges) — use throughput mode at scale")
         // exact-identity semantics (equivalence.rs:14-20): the reference's
         // sequential loop runs uncapped to a true fixpoint — disable the
         // epsilon-gain floor and lift the sweep cap so deterministic mode

@@ -127,6 +127,14 @@ class EngineSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       Engine.run(g, det.copy(leiden = det.leiden.copy(localSolveEdges = 3)))
     }
+    // ... and graphs over the driver byte budget, which the level-0 local
+    // solve cannot collect (64 bytes: not one edge fits)
+    val e =
+      try {
+        sys.props("graft.bcast.budgetBytes") = "64"
+        intercept[IllegalArgumentException](Engine.run(g, det))
+      } finally sys.props -= "graft.bcast.budgetBytes"
+    assert(e.getMessage.contains("byte budget"), e.getMessage)
   }
 
   test("config validation rejects bad settings") {

@@ -129,6 +129,40 @@ class FastPathEquivalenceSpec extends SparkSpecBase {
     assert(toMapLL(local.labels)(9L) == 9L)
   }
 
+  test("PageRank local path: subset universe == distributed (edges " +
+      "leaving the vertex set are dropped on both paths)") {
+    import graft.algo.PageRank
+    val s = spark
+    import s.implicits._
+    // universe 0..59 of a 120-vertex graph: most vertices have edges that
+    // leave it, plus the isolated (dangling) vertex 125
+    val g = randGraph(120, 500, seed = 3L)
+    val universe = ((0L until 60L) :+ 125L).toDF("v")
+    val local = toMapLD(PageRank.run(g, vertices = Some(universe),
+      numIter = 8, localSolveVerts = 100000).ranks)
+    val dist = toMapLD(PageRank.run(g, vertices = Some(universe),
+      numIter = 8).ranks)
+    assert(local.keySet == dist.keySet)
+    for ((v, r) <- local)
+      assert(math.abs(r - dist(v)) < 1e-12, s"v=$v $r vs ${dist(v)}")
+    // no rank mass leaves the vertex set on either path
+    assert(math.abs(local.values.sum - 1.0) < 1e-9)
+    assert(math.abs(dist.values.sum - 1.0) < 1e-9)
+  }
+
+  test("CC local path: subset universe == distributed") {
+    val s = spark
+    import s.implicits._
+    val g = randGraph(200, 300)
+    val universe = ((0L until 100L) :+ 250L).toDF("v")
+    val local = toMapLL(ConnectedComponents.run(g, vertices = Some(universe),
+      localSolveVerts = 100000).components)
+    val dist = toMapLL(ConnectedComponents.run(g,
+      vertices = Some(universe)).components)
+    assert(local == dist)
+    assert(local.keySet == ((0L until 100L).toSet + 250L))
+  }
+
   test("LPA local path: empty graph") {
     import graft.algo.LabelPropagation
     val g = edges()
@@ -217,6 +251,21 @@ class FastPathEquivalenceSpec extends SparkSpecBase {
     assert(r.singletonQ.get == distS, s"${r.singletonQ.get} vs $distS")
   }
 
+  test("Leiden level-0 local solve: fractional weights score within " +
+      "1e-12 of the distributed Quality aggregations") {
+    import graft.algo.{Leiden, Quality}
+    val g = randGraph(80, 320, seed = 23L)
+      .withColumn("weight", lit(0.1) + (col("src") + col("dst")) % 7 / 3.0)
+    val r = Leiden.run(g, Leiden.Config(localSolveLevel0Verts = 1000))
+    val distQ = Quality.modularity(r.canon,
+      r.assignment.select(col("v"), col("community")))
+    assert(math.abs(r.modularity - distQ) <= 1e-12,
+      s"${r.modularity} vs $distQ")
+    val distS = Quality.singletonModularity(r.canon)
+    assert(math.abs(r.singletonQ.get - distS) <= 1e-12,
+      s"${r.singletonQ.get} vs $distS")
+  }
+
   test("array-set jaccard == exploded set-intersection formulation") {
     import graft.dedup.Dedup
     val s = spark
@@ -276,5 +325,68 @@ class FastPathEquivalenceSpec extends SparkSpecBase {
       maxLevels = 2))
     assert(canonicalPartition(toMapLL(fallback.assignment)) ==
       canonicalPartition(toMapLL(dist.assignment)))
+  }
+
+  /** `f`'s value and the number of Spark jobs it started. The listener
+    * bus is asynchronous: a tagged sentinel job runs after `f`, and its
+    * start event marks the point where every job of `f` was counted. */
+  private def withJobs[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.sentinel") ==
+          "1")) seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.sentinel", null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("driver byte budget refuses every LocalGraph caller: each takes " +
+      "the distributed path with the default-budget result") {
+    import graft.algo.{LabelPropagation, Leiden, PageRank}
+    import graft.queries.Queries
+    // three disjoint 5-cliques: every solver's answer is unambiguous, so
+    // the distributed Leiden partition equals the local one too
+    val g = edges((for {
+      base <- Seq(0L, 10L, 20L); a <- 0L until 5L; b <- a + 1 until 5L
+    } yield (base + a, base + b, 1.0)): _*)
+    val callers: Seq[(String, () => Any)] = Seq(
+      "PageRank" -> (() => toMapLD(PageRank.run(g, numIter = 8,
+        localSolveVerts = 100000).ranks).map { case (v, r) =>
+          v -> math.round(r * 1e9) }),
+      "CC" -> (() => toMapLL(ConnectedComponents.run(g,
+        localSolveVerts = 100000).components)),
+      "LPA" -> (() => toMapLL(LabelPropagation.run(g, maxIter = 10,
+        localSolveVerts = 100000).labels)),
+      "triangles" -> (() => toMapLL(TriangleCount.perVertex(g,
+        localSolveVerts = 100000))),
+      "Leiden level 0" -> (() => canonicalPartition(toMapLL(Leiden.run(g,
+        Leiden.Config(localSolveLevel0Verts = 1000, maxLevels = 2))
+        .assignment))),
+      "ccQuality" -> (() => Queries.ccQuality(g, useCpm = false)))
+    for ((name, run) <- callers) {
+      val (local, localJobs) = withJobs(run())
+      val (dist, distJobs) =
+        try {
+          // 64 bytes: not even one edge fits, so LocalGraph refuses
+          sys.props("graft.bcast.budgetBytes") = "64"
+          withJobs(run())
+        } finally sys.props -= "graft.bcast.budgetBytes"
+      assert(dist == local, s"$name: budget-refused result differs")
+      assert(distJobs > localJobs,
+        s"$name: $distJobs jobs under the 64 B budget vs $localJobs " +
+          "local — the distributed path did not run")
+    }
   }
 }
