@@ -1,5 +1,6 @@
 package graft.algo
 
+import graft.util.Ckpt
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -66,7 +67,7 @@ object ConnectedComponents {
 
     var labels = verts.withColumn("component", col("v")).ckpt
     var it = 0
-    var done = verts.isEmpty
+    var done = verts.rows == 0
     while (!done && it < maxIter) {
       val t0 = System.nanoTime()
       // gather: min label over neighborhood. shuffle_hash hint: the static
@@ -85,16 +86,15 @@ object ConnectedComponents {
         .ckpt
       // pointer jump: component <- component(component); component ids are
       // always vertex ids of the same component, so the lookup total-joins.
-      // The previous label rides along so the convergence check is a
-      // filter-count on this checkpoint, not another join job.
-      val jumped = stepped.alias("a")
+      // The previous label rides along so the convergence count is
+      // observed by this checkpoint's own job.
+      val (jumped, jr) = Ckpt.observed(stepped.alias("a")
         .join(stepped.select(col("v").as("cv"), col("component").as("cc")),
           col("a.component") === col("cv"), "left")
         .select(col("a.v").as("v"), col("a.old").as("old"),
-          coalesce(col("cc"), col("a.component")).as("component"))
-        .ckpt
-
-      val changed = jumped.where(col("component") =!= col("old")).count()
+          coalesce(col("cc"), col("a.component")).as("component")),
+        "changed" -> count(when(col("component") =!= col("old"), 1)))
+      val changed = jr.getAs[Long]("changed")
       val next = jumped.drop("old")
       sink.add(IterMetric("cc", 0, it, messages = -1, movesAccepted = changed,
         frontier = -1, qualityDelta = 0.0,

@@ -1,5 +1,6 @@
 package graft.algo
 
+import graft.util.Ckpt
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -275,23 +276,18 @@ object Incremental {
       freshIdBase: Long = 0L): SuperOut = {
     val spark = superCanon.sparkSession
     import spark.implicits._
-    val debugT = sys.env.get("GRAFT_DEBUG_TIMING").contains("1")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debugT) {
-      val now = System.nanoTime()
-      System.err.println(f"[sup] $phase%-14s ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     // lazy: the local-solve path collects it in ONE action; only the
     // distributed path (which reads it several times) checkpoints it
     val carried0 = assign.groupBy(col("subcomm").as("v"))
       .agg(min(col("community")).as("community"))
-    mark("carried-agg")
 
-    val nSuper = cache match {
-      case Some(c) => c.src.length.toLong
-      case None => superCanon.count()
+    // without a mirror the supergraph overlay is evaluated ONCE: its
+    // checkpoint counts it, and the local path collects that table
+    lazy val (superM, superW) = {
+      val (m, r) = Ckpt.observed(superCanon, "w" -> sum("weight"))
+      (m, if (r.isNullAt(r.fieldIndex("w"))) 0.0 else r.getAs[Double]("w"))
     }
+    val nSuper = cache.fold(superM.rows)(_.src.length.toLong)
     var cacheOut: Option[SuperEdges] = None
     var upperOut: Option[UpperComm] = None
     var upperAssignOut: Option[DataFrame] = None
@@ -302,18 +298,16 @@ object Incremental {
         // hierarchy solve run sequentially on PRIMITIVE arrays — one
         // collect (or none, when the driver-side cache is warm) instead
         // of a dozen fixed-cost distributed jobs per batch
-        val ce = cache.getOrElse(collectSuperEdges(superCanon))
+        val ce = cache.getOrElse(collectSuperEdges(superM))
         cacheOut = Some(ce)
         val cmM = carried0.collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        mark("collect")
         val szM =
           if (cfg.useCpm) assign.groupBy(col("subcomm").as("v"))
             .agg(count(lit(1)).as("size")).collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap
           else Map.empty[Long, Long]
         val repaired = LocalLeiden.repairConnectivity(ce.src, ce.dst, cmM)
-        mark("repair")
         val solved = LocalLeiden.solve(ce.src, ce.dst, ce.w, szM, repaired,
           cfg, canonicalSorted = true)
         if (cfg.incrementalHierarchy) {
@@ -323,9 +317,7 @@ object Incremental {
           solved.foreach { case (k, v) => m(k) = v }
           upperOut = Some(UpperComm(m))
         }
-        mark("local-solve")
         val out = solved.toSeq.toDF("v", "community")
-        mark("toDF")
         out
       } else if (deltaH.isDefined && upperPrev.isDefined) {
         // DELTA-SCOPED distributed upper maintenance (r6, VERDICT r5 ask
@@ -339,8 +331,7 @@ object Incremental {
         // once (materialize, degree, total weight), every other step is
         // delta-bounded (and the movement sweeps go driver-local
         // whenever the delta frontier fits the byte budget).
-        val superM = superCanon.ckpt
-        val m2s = 2.0 * EdgeOps.totalWeight(superM)
+        val m2s = 2.0 * superW
         val adj1 = EdgeOps.symmetrize(superM)
         val deg1 = EdgeOps.degrees(adj1).ckpt
         val dV1 = EdgeOps.vertices(deltaH.get).ckpt
@@ -354,7 +345,7 @@ object Incremental {
         // supernodes this batch introduced enter as singletons
         val newSup = dV1.join(prev.select("v"), Seq("v"), "left_anti").ckpt
         val up0 =
-          if (newSup.isEmpty) prev
+          if (newSup.rows == 0) prev
           else prev.unionAll(newSup.select(col("v"),
             col("v").as("community"), col("v").as("subcomm")))
         // scoped connectivity repair (the delta-bounded form of the
@@ -395,18 +386,17 @@ object Incremental {
             (lit(freshIdBase) + row_number().over(
               Window.orderBy("community", "component"))).as("newComm"))
           .ckpt
-        val repairFresh = freshFrags.count()
+        val repairFresh = freshFrags.rows
         val repChanged = frags
           .join(broadcast(freshFrags), Seq("community", "component"))
           .select(col("v"), col("newComm"))
           .ckpt
         val up1 =
-          if (repChanged.isEmpty) up0
+          if (repChanged.rows == 0) up0
           else up0.join(broadcast(repChanged), Seq("v"), "left")
             .select(col("v"),
               coalesce(col("newComm"), col("community")).as("community"),
               col("subcomm"))
-        mark("upper-repair")
         // activation: delta endpoints + repair-moved supernodes
         val activated = dV1.select("v")
           .unionAll(repChanged.select("v")).distinct()
@@ -423,12 +413,11 @@ object Incremental {
         freshUsed = repairFresh + ref1.freshUsed
         val upNext = ref1.assign.ckpt
         upperAssignOut = Some(upNext)
-        mark("upper-delta")
         upNext.select(col("v"), col("community"))
       } else {
         val carriedCk = carried0.ckpt
         val superNodes = carriedCk.select("v")
-        val intraSuper = superCanon
+        val intraSuper = superM
           .join(carriedCk.select(col("v").as("src"),
             col("community").as("cu")), "src")
           .join(carriedCk.select(col("v").as("dst"),
@@ -449,7 +438,7 @@ object Incremental {
         // restart as singletons; the next batch's scoped refinement
         // re-derives them) so subsequent over-bound batches take the
         // delta-scoped branch above.
-        val solved = Leiden.run(superCanon,
+        val solved = Leiden.run(superM,
           cfg.copy(localSolveMinLevel = 0), sink,
           initial = Some(carried), initialSizes = sizes).assignment
         upperAssignOut = Some(solved.select(col("v"), col("community"),
@@ -459,7 +448,6 @@ object Incremental {
 
     val out = composeOnto(assign, superRes.select(col("v").as("subcomm"),
       col("community").as("newComm")))
-    mark("compose")
     SuperOut(out, cacheOut, upperOut, upperAssignOut, freshUsed)
   }
 
@@ -591,21 +579,11 @@ object Incremental {
         * commit) is skipped on replay instead of double-applied */
       batchId: Option[Long] = None): State = {
 
-    // phase timing to stderr when GRAFT_DEBUG_TIMING=1 (diagnostics only)
-    val debugT = sys.env.get("GRAFT_DEBUG_TIMING").contains("1")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debugT) {
-      val now = System.nanoTime()
-      System.err.println(f"[inc] $phase%-14s ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
-
-    val deltaC = EdgeOps.compress(delta, cfg.eps).ckpt
-    if (deltaC.isEmpty) return hydrate(state0, cfg.eps)
-    val dW = {
-      val r = deltaC.agg(sum("weight")).collect()(0)
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
+    // the delta's row count and total weight ride on its checkpoint
+    val (deltaC, dAgg) = Ckpt.observed(EdgeOps.compress(delta, cfg.eps),
+      "dW" -> sum("weight"))
+    if (deltaC.rows == 0) return hydrate(state0, cfg.eps)
+    val dW = dAgg.getAs[Double]("dW")
 
     // durable replay detection: if the store already recorded this batch
     // (crash AFTER the bucket merge but BEFORE the checkpoint commit),
@@ -639,7 +617,6 @@ object Incremental {
         hydrate(state0.copy(canon = preCanon, m2 = state0.m2 - 2.0 * dW,
           deg = None, superCanon = None, superCache = None), cfg.eps)
       }
-    mark("hydrate+delta")
 
     // --- graph-state maintenance: delta-bound, no full-table shuffles
     // in-memory default: broadcast merge onto the checkpointed table.
@@ -675,7 +652,7 @@ object Incremental {
     val spark = delta.sparkSession
     import spark.implicits._
     val dV = EdgeOps.vertices(deltaC).ckpt
-    val nDV = dV.count()
+    val nDV = dV.rows
     val (newVerts, dMax) =
       if (nDV <= bulkIdThreshold) {
         val dIds = dV.collect().map(_.getLong(0))
@@ -716,7 +693,6 @@ object Incremental {
       .select(col("v"), col("dd").as("deg"))
     val deg0 = degPatched.unionAll(degNew)
     val deg = if (state.epoch % 4 == 3) deg0.ckpt else deg0
-    mark("graph-state")
 
     // --- delta activation (hit_leiden.rs:166-186); the delta side is
     // broadcast-built so the assignment streams map-side, never shuffles
@@ -740,11 +716,9 @@ object Incremental {
         cfg.eps)
 
     val adj = EdgeOps.symmetrize(newCanon)
-    mark("activation")
 
     // --- frontier-limited movement + refinement at level 0
     val mv = Leiden.movement(adj, deg, m2, assign0, activated, cfg, sink, 0)
-    mark("movement")
     val affected = k0.unionAll(mv.affected).distinct().ckpt
     // the watermark must clear every vertex id seen so far INCLUDING the
     // ones this batch introduced (they arrive as their own singleton
@@ -754,7 +728,6 @@ object Incremental {
     val freshIdBase = dMax.fold(state.maxId)(math.max(state.maxId, _))
     val ref = Leiden.refinement(adj, deg, m2, mv.assign, affected, cfg, sink,
       0, isInitial = false, freshIdBase = freshIdBase)
-    mark("refinement")
     val maxId = freshIdBase + ref.freshUsed
     val assign1 = ref.assign
 
@@ -803,12 +776,11 @@ object Incremental {
     val rebuiltCache: Option[SuperEdges] =
       if (state.superCache.isEmpty && state.upper.isDefined &&
           cfg.localSolveEdges > 0 &&
-          superPrev.count() <= cfg.localSolveEdges)
+          superPrev.rows <= cfg.localSolveEdges)
         Some(collectSuperEdges(superPrev))
       else None
     val mergedCache = dRows.flatMap(d => state.superCache
       .orElse(rebuiltCache).map(mergeSuperArrays(_, d, cfg.eps)))
-    mark("aggregation")
 
     // --- upper levels. DEFAULT live path (reference hit_leiden.rs:85-151
     // + 565-599 def_update): the maintained MIRROR is the level-1
@@ -849,7 +821,6 @@ object Incremental {
       } else resolveSuper(newSuper, assign1, cfg, sink, mergedCache,
         deltaH = Some(deltaH), upperPrev = state.upperAssign,
         freshIdBase = maxId)
-    mark("resolveSuper")
     State(newCanon, so.out, m2, deg = Some(deg), superCanon = Some(newSuper),
       maxId = maxId + so.freshUsed, epoch = state.epoch + 1,
       durable = state.durable, superCache = so.cache, upper = so.upper,

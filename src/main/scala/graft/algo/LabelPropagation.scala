@@ -1,5 +1,6 @@
 package graft.algo
 
+import graft.util.Ckpt
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -60,7 +61,7 @@ object LabelPropagation {
     // either table. The ckpt drops stats, so this must be explicit; gated
     // on the (known) vertex count because at web scale the label table is
     // V-sized and must shuffle.
-    val nVerts = verts.count()
+    val nVerts = verts.rows
     // ~32 B per (v, label) row against the heap-derived budget
     val bcastLabels = graft.util.Bcast.fits(nVerts, bytesPerRow = 32)
     // static side partitioned by the per-round join key (see CC/PageRank)
@@ -88,14 +89,12 @@ object LabelPropagation {
         .agg(max_by(col("label"), struct(col("w"), negate(col("label"))))
           .as("newLabel"))
       // the previous label rides along through the checkpoint so the
-      // convergence check is a filter-count on the materialized table,
-      // not a second join job per round (same pattern as CC)
-      val stepped = labels.join(best, Seq("v"), "left")
+      // convergence count is observed by its own job (same as CC)
+      val (stepped, sr) = Ckpt.observed(labels.join(best, Seq("v"), "left")
         .select(col("v"), col("label").as("old"),
-          coalesce(col("newLabel"), col("label")).as("label"))
-        .ckpt
-
-      val changed = stepped.where(col("label") =!= col("old")).count()
+          coalesce(col("newLabel"), col("label")).as("label")),
+        "changed" -> count(when(col("label") =!= col("old"), 1)))
+      val changed = sr.getAs[Long]("changed")
       val next = stepped.drop("old")
       sink.add(IterMetric("lpa", 0, it, messages = -1, movesAccepted = changed,
         frontier = -1, qualityDelta = 0.0,

@@ -226,7 +226,7 @@ object Leiden {
         parts(canon, cfg)).ckpt
       val deg = EdgeOps.degrees(adj).ckpt
       val verts = EdgeOps.vertices(canon).ckpt
-      val nVerts = verts.count()
+      val nVerts = verts.rows
 
       // initial partition: carried communities (level>0) or singletons;
       // subcommunities always restart as singletons (state.rs:19-33)
@@ -319,10 +319,8 @@ object Leiden {
         Result(finalAssign, level + 1, q, solved.valuesIterator.toSet.size,
           sweeps, canon0, singletonQ)
       case None =>
-        val q =
-          if (cfg.useCpm) Quality.cpm(canon0, finalAssign, cfg.gamma)
-          else Quality.modularity(canon0, finalAssign, cfg.gamma)
-        val nComm = finalAssign.select("community").distinct().count()
+        val (q, nComm) = Quality.score(canon0, finalAssign, cfg.gamma,
+          cfg.useCpm)
         Result(finalAssign, level + 1, q, nComm, sweeps, canon0)
     }
   }
@@ -360,7 +358,7 @@ object Leiden {
     var affected = Seq.empty[Long].toDF("v")
     var sweep = 0
     var totalMoves = 0L
-    var frontierN = active.count()
+    var frontierN = active.rows
     // exact weighted-degree sum over the current frontier, or -1 when
     // unknown (lazy large-frontier path). Weighted degree >= adjacency
     // row count (weights >= 1 by construction), so it upper-bounds the
@@ -368,8 +366,8 @@ object Leiden {
     var frontierDegSum: Double = -1.0
     if (frontierN == 0) // empty delta activation: nothing to do
       return MovementOut(a, changed, affected, 0, 0L)
-    val nVerts = a.count()
-    val avgDeg = adj.count().toDouble / math.max(nVerts, 1L)
+    val nVerts = a.rows
+    val avgDeg = adj.rows.toDouble / math.max(nVerts, 1L)
 
     // stale snapshot of community degrees and sizes (throughput.rs:62-166),
     // computed from the CURRENT assignment once a distributed sweep needs
@@ -867,6 +865,17 @@ object Leiden {
       sink: MetricsSink, level: Int, sweep0: Int): LocalPhaseOut = {
     import spark.implicits._
 
+    // the phase-entry vertex table (community, subcomm, degree and size of
+    // every vertex with edges), materialized ONCE: the entry read, every
+    // gather and every stats fetch probe it instead of each re-joining the
+    // lazy assignment and degree overlays
+    val attrs = {
+      val base = a0.select("v", "community", "subcomm").join(deg, Seq("v"))
+      (if (unitSize) base.withColumn("size", lit(1L))
+        else base.join(sz, Seq("v")))
+        .select("v", "community", "subcomm", "deg", "size").ckpt
+    }
+
     // --- community stats, fetched PER NEED instead of an O(C) entry
     // collect (r5 ADVICE medium): the gain loop only ever reads stats of
     // communities holding a frontier vertex or one of its gathered
@@ -887,22 +896,14 @@ object Leiden {
       need.foreach(c => if (!statsKnown.contains(c)) missing(c) = ())
       if (missing.isEmpty) return
       val ids = missing.keysIterator.toArray
-      if (sys.env.get("GRAFT_DEBUG_TIMING").contains("1"))
-        System.err.println(s"[stats-fetch] n=${ids.length}")
       val idsDf = broadcast(ids.toSeq.toDF("community"))
-      val base = a0.join(idsDf, Seq("community"), "left_semi")
-        .join(deg, Seq("v"))
-      val grouped =
-        if (unitSize)
-          base.groupBy(col("community"))
-            .agg(sum("deg").as("cdeg"), count(lit(1)).as("csize"))
-        else
-          base.join(sz, Seq("v")).groupBy(col("community"))
-            .agg(sum("deg").as("cdeg"), sum("size").as("csize"))
-      grouped.collect().foreach { r =>
-        cdeg(r.getLong(0)) = r.getDouble(1)
-        csize(r.getLong(0)) = r.getAs[Number](2).doubleValue
-      }
+      attrs.join(idsDf, Seq("community"), "left_semi")
+        .groupBy(col("community"))
+        .agg(sum("deg").as("cdeg"), sum("size").as("csize"))
+        .collect().foreach { r =>
+          cdeg(r.getLong(0)) = r.getDouble(1)
+          csize(r.getLong(0)) = r.getAs[Number](2).doubleValue
+        }
       // memberless ids (can't occur for live comm values, but harmless):
       // default 0.0 via getOrElse — mark known either way
       ids.foreach(statsKnown(_) = ())
@@ -915,18 +916,14 @@ object Leiden {
     // pre-move community of the LAST sweep's movers (revert-gate ref)
     var movedLast = mutable.LongMap.empty[Long]
 
-    val entryBase = a0
+    val entryBase = attrs
       .join(broadcast(active0.select("v")), Seq("v"), "left_semi")
-      .join(deg, Seq("v"))
-    val entryP = aPrev0 match {
+    val entry = aPrev0 match {
       case None => entryBase.withColumn("prevComm", col("community"))
       case Some(p) => entryBase.join(
         p.select(col("v"), col("community").as("prevComm")), Seq("v"),
         "left")
     }
-    val entry =
-      if (unitSize) entryP.withColumn("size", lit(1L))
-      else entryP.join(sz, Seq("v"))
     val eRows = entry
       .select("v", "community", "subcomm", "deg", "prevComm", "size")
       .collect()
@@ -945,13 +942,9 @@ object Leiden {
 
     // adjacency of collected sources (self-loops excluded, dst-sorted)
     val adjL = mutable.LongMap.empty[Array[(Long, Double)]]
-    val aByDstFull = a0.select(col("v").as("dst"),
-      col("community").as("nbrComm"), col("subcomm").as("scv"))
-      .join(deg.select(col("v").as("dst"), col("deg").as("nbrDeg")), "dst")
-    val aByDst =
-      if (unitSize) aByDstFull.withColumn("nbrSize", lit(1L))
-      else aByDstFull.join(
-        sz.select(col("v").as("dst"), col("size").as("nbrSize")), "dst")
+    val aByDst = attrs.select(col("v").as("dst"),
+      col("community").as("nbrComm"), col("subcomm").as("scv"),
+      col("deg").as("nbrDeg"), col("size").as("nbrSize"))
 
     // vertices known to carry a self-loop: excluded from adjL (self-loops
     // cancel out of the move gain, as in the distributed gather) but a
@@ -961,10 +954,12 @@ object Leiden {
     val selfLoop = mutable.LongMap.empty[Unit]
     def gatherNew(ids: Array[Long]): Unit = {
       if (ids.isEmpty) return
+      // the gathered rows fit the byte budget (the frontier degree-sum
+      // gate and the prefetch cap): broadcast them, attrs streams
       val idsDf = ids.toSeq.toDF("src")
-      val rows = adj
-        .join(broadcast(idsDf), Seq("src"), "left_semi")
-        .join(aByDst, "dst")
+      val rows = aByDst
+        .join(broadcast(adj.join(broadcast(idsDf), Seq("src"), "left_semi")),
+          "dst")
         .select("src", "dst", "weight", "nbrComm", "scv", "nbrDeg",
           "nbrSize")
         .collect()
@@ -1237,14 +1232,6 @@ object Leiden {
     var a = assign
     var refined: DataFrame = null
     var freshUsed = 0L
-    // phase timing to stderr when GRAFT_DEBUG_TIMING=1 (diagnostics only)
-    val debugT = sys.env.get("GRAFT_DEBUG_TIMING").contains("1")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debugT) {
-      val now = System.nanoTime()
-      System.err.println(f"[ref] $phase%-14s ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
 
     if (isInitial) {
       // identity subcommunities are all singletons — no split possible;
@@ -1256,7 +1243,7 @@ object Leiden {
       // to intra-subcommunity edges). The affected set is delta-bound on
       // warm updates: broadcast it into the semi-joins so the V-sized
       // assignment streams map-side instead of being exchanged.
-      val nAffected = affected.count()
+      val nAffected = affected.rows
       val affScs = a.join(
           graft.util.Bcast.ifFits(affected.select("v"), nAffected, 16),
           Seq("v"), "left_semi")
@@ -1272,7 +1259,7 @@ object Leiden {
       val members = a.join(graft.util.Bcast.ifFits(affScs, nAffected, 16),
         Seq("subcomm"), "left_semi").ckpt
       val membersV = members.select("v")
-      val nMembers = members.count()
+      val nMembers = members.rows
       def mb(df: DataFrame): DataFrame =
         graft.util.Bcast.ifFits(df, nMembers, bytesPerRow = 32)
       val intra = adj
@@ -1297,11 +1284,10 @@ object Leiden {
       // what used to be ~6 fixed-cost jobs (ckpts, windows, counts)
       // becomes pure JVM work, and only the final V-sized relabel touches
       // the cluster. The distributed path keeps the window machinery.
-      mark("phase1-scope")
       var localSplit = false
       if (cfg.localSolveEdges > 0 && nMembers <= cfg.localSolveEdges) {
         val intraC = intra.ckpt
-        val nIntra = intraC.count()
+        val nIntra = intraC.rows
         if (nIntra <= cfg.localSolveEdges) {
           localSplit = true
           // a USING semi-join moves the key column first — resolve field
@@ -1312,7 +1298,6 @@ object Leiden {
           val vs = memRows.map(_.getLong(vIdx))
           val es = intraC.collect().map(r => (r.getLong(0), r.getLong(1)))
           val comp = LocalLeiden.localComponents(vs, es)
-          mark("phase1-collect")
           val scOf = memRows.iterator
             .map(r => r.getLong(vIdx) -> r.getLong(scIdx)).toMap
           // fragment sizes per (subcomm, component)
@@ -1356,7 +1341,6 @@ object Leiden {
           a = a.join(broadcast(relabDf), Seq("v"), "left")
             .select(col("v"), col("community"),
               coalesce(col("newSc"), col("subcomm")).as("subcomm")).ckpt
-          mark("phase1-relabel")
         }
       }
       if (!localSplit) {
@@ -1414,7 +1398,6 @@ object Leiden {
           .select("v").ckpt
         a = relabeled.select(col("v"), col("community"),
           col("newSc").as("subcomm")).ckpt
-        mark("phase1-relabel")
       }
     }
 
@@ -1430,7 +1413,7 @@ object Leiden {
       if (isInitial) null
       else a.join(refined, Seq("v"), "left_semi")
         .select("community").distinct().ckpt
-    val nAffComms = if (isInitial) -1L else affComms.count()
+    val nAffComms = if (isInitial) -1L else affComms.rows
     var round = 0
     var moved = 1L
 
@@ -1592,7 +1575,7 @@ object Leiden {
           graft.util.Bcast.ifFits(affComms, nAffComms, 16),
           Seq("community"), "left_semi").ckpt
       val scopeSmall = !isInitial && {
-        val n = scope.count()
+        val n = scope.rows
         graft.util.Bcast.fits(n, bytesPerRow = 48)
       }
       def sb(df: DataFrame): DataFrame =

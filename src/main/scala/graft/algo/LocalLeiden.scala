@@ -244,14 +244,6 @@ object LocalLeiden {
       canonicalSorted: Boolean = false): Map[Long, Long] = {
     if (eSrc.isEmpty)
       return (nodeSize.keySet ++ initial.keySet).map(v => v -> v).toMap
-    // phase timing to stderr when GRAFT_DEBUG_TIMING=1 (diagnostics only)
-    val debugT = sys.env.get("GRAFT_DEBUG_TIMING").contains("1")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debugT) {
-      val now = System.nanoTime()
-      System.err.println(f"[loc] $phase%-14s ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
 
     // densify external ids once (sorted -> binary search)
     val verts: Array[Long] = {
@@ -271,7 +263,6 @@ object LocalLeiden {
       java.util.Arrays.copyOf(all, m)
     }
     val nBase = verts.length
-    mark("densify")
     def idx(v: Long): Int = java.util.Arrays.binarySearch(verts, v)
 
     // level-0 merged canonical edges as packed keys (i <= j)
@@ -295,7 +286,6 @@ object LocalLeiden {
         }
         unpack(map)
       }
-    mark("pack-edges")
 
     val sizes0 = Array.tabulate(nBase)(i =>
       nodeSize.getOrElse(verts(i), 1L).toDouble)
@@ -328,13 +318,6 @@ object LocalLeiden {
       activeInit: Array[Boolean] = null): Map[Long, Long] = {
     val nBase = verts.length
     if (nBase == 0) return Map.empty
-    val debugT = sys.env.get("GRAFT_DEBUG_TIMING").contains("1")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debugT) {
-      val now = System.nanoTime()
-      System.err.println(f"[loc] $phase%-14s ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     var src = src0; var dst = dst0; var w = w0
     var m2 = 0.0
     w.foreach(m2 += 2.0 * _)
@@ -360,7 +343,6 @@ object LocalLeiden {
     while (!done && level < cfg.maxLevels) {
       val (comm, sub) = solveLevel(n, src, dst, w, sizes, commInit, m2, cfg,
         if (level == 0) activeInit else null)
-      mark(s"level-$level n=$n e=${src.length}")
       topComm = comm
       // remap subcommunities to dense next-level ids (first-occurrence
       // order — deterministic)

@@ -88,7 +88,7 @@ object PageRank {
     }
     val adj = EdgeOps.symmetrize(inSet)
       .ckpt
-    val n = verts.count().toDouble
+    val n = verts.rows.toDouble
     if (n == 0) return Result(verts.withColumn("rank", lit(0.0)), 0)
 
     // out-weight per vertex; isolated vertices have none -> dangling
@@ -105,7 +105,7 @@ object PageRank {
     val dangling = verts.join(wdeg, Seq("v"), "left_anti").ckpt
     // computing dangling mass costs one driver job per iteration; skip it
     // entirely for the (overwhelmingly common) no-dangling case
-    val hasDangling = !dangling.isEmpty
+    val hasDangling = dangling.rows > 0
 
     var ranks = verts.withColumn("rank", lit(1.0 / n)).ckpt
     var it = 0

@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.{EdgeOps, LocalGraph}
+import graft.util.{Bcast, Ckpt}
 
 /** Partition quality functions: modularity and CPM.
   *
@@ -12,7 +13,7 @@ import graft.graph.{EdgeOps, LocalGraph}
   * modularity (hit_leiden.rs:250-255), and the HIT-Leiden paper defines
   * both quality functions (Def. 1,
   * docs/papers/2601.08554/2601.08554-docling.md:143). We implement real
-  * scoring — two aggregations each, no iteration:
+  * scoring — one pass each, no iteration:
   *
   *   modularity: Q = W_in/m − γ · Σ_C (d_C / 2m)²
   *   CPM:        Q = W_in − γ · Σ_C n_C·(n_C−1)/2
@@ -28,7 +29,7 @@ object Quality {
     * @param localSolveEdges when > 0 and [[LocalGraph.collect]] admits the
     *   canonical table under this edge cap (and the driver byte budget),
     *   both inputs are collected and the three sums run on the driver —
-    *   one collect instead of three join+agg jobs. The
+    *   two collects instead of the distributed pass ([[score]]). The
     *   value is identical for integer-valued weights (exact sums in any
     *   order — the compressed-multiplicity graphs every caller scores);
     *   fractional weights could differ in the last ulp, same as the
@@ -38,19 +39,56 @@ object Quality {
   def modularity(canonical: DataFrame, assign: DataFrame,
       gamma: Double = 1.0, localSolveEdges: Long = 0): Double = {
     localParts(canonical, assign, localSolveEdges) match {
-      case Some((es, commOf)) => return modularityFromArrays(es, commOf, gamma)
-      case None =>
+      case Some((es, commOf)) => modularityFromArrays(es, commOf, gamma)
+      case None => score(canonical, assign, gamma)._1
     }
-    val m = EdgeOps.totalWeight(canonical)
-    if (m == 0.0) return 0.0
+  }
+
+  /** Distributed quality and community count in ONE action: m and W_in
+    * are observed on the edge ⟕ assignment scan that feeds one
+    * per-community aggregate (d_C, n_C), whose collected row holds
+    * Σ d_C², Σ n_C(n_C−1)/2 and the number of communities. Edges with an
+    * unassigned endpoint count in m only; assigned vertices without
+    * edges form communities of degree 0. The sums are exact for
+    * integer-valued weights, so the value equals
+    * [[modularityFromArrays]]/[[cpmFromArrays]] bit for bit there.
+    * @return (modularity, or CPM when `useCpm`; distinct communities of
+    *   `assign`) */
+  def score(canonical: DataFrame, assign: DataFrame, gamma: Double = 1.0,
+      useCpm: Boolean = false): (Double, Long) = {
     val a = assign.select(col("v"), col("community"))
-    val wIn = intraWeight(canonical, a)
-    val adj = EdgeOps.symmetrize(canonical)
-    val commDeg = EdgeOps.degrees(adj).join(a, "v")
-      .groupBy("community").agg(sum("deg").as("cdeg"))
-    val sumSqRow = commDeg.agg(sum(col("cdeg") * col("cdeg"))).collect()(0)
-    val sumSq = if (sumSqRow.isNullAt(0)) 0.0 else sumSqRow.getDouble(0)
-    wIn / m - gamma * sumSq / (4.0 * m * m)
+    // an assignment of known, small size is broadcast into both joins
+    val aJ = Ckpt.known(assign).fold(a)(n => Bcast.ifFits(a, n, 16))
+    val ends = canonical.select(col("src"), col("dst"), col("weight"))
+      .join(aJ.select(col("v").as("src"), col("community").as("cu")),
+        Seq("src"), "left")
+      .join(aJ.select(col("v").as("dst"), col("community").as("cv")),
+        Seq("dst"), "left")
+    val obs = ends.observe("graft_quality", sum("weight").as("m"),
+      sum(when(col("cu") === col("cv"), col("weight"))).as("wIn"))
+    // each edge adds w to the degree of both endpoint communities (a
+    // self-loop 2w); each assigned vertex adds one member
+    val perComm = obs.select(explode(array(
+        struct(col("cu").as("community"), col("weight").as("d")),
+        struct(col("cv").as("community"), col("weight").as("d")))).as("e"))
+      .select(col("e.community"), col("e.d"), lit(0L).as("n"))
+      .where(col("community").isNotNull)
+      .unionAll(a.select(col("community"), lit(0.0).as("d"),
+        lit(1L).as("n")))
+      .groupBy("community").agg(sum("d").as("d"), sum("n").as("n"))
+    val sums = perComm.agg(sum(col("d") * col("d")),
+      sum(col("n") * (col("n") - 1) / 2), count(lit(1)))
+    val r = sums.collect()(0)
+    // the action's own plan holds the observed accumulators
+    val o = sums.queryExecution.observedMetrics("graft_quality")
+    def dbl(row: org.apache.spark.sql.Row, i: Int) =
+      if (row.isNullAt(i)) 0.0 else row.getDouble(i)
+    val (m, wIn) = (dbl(o, 0), dbl(o, 1))
+    val q =
+      if (useCpm) wIn - gamma * dbl(r, 1)
+      else if (m == 0.0) 0.0
+      else wIn / m - gamma * dbl(r, 0) / (4.0 * m * m)
+    (q, r.getLong(2))
   }
 
   /** Modularity of the all-singletons partition in closed form: with
@@ -59,8 +97,8 @@ object Quality {
     *   Q = W_self/m − γ · Σ_v (d_v / 2m)²
     * — two aggregations over the canonical table, no assignment join.
     * Same value as `modularity(canonical, v→v)` (the generic path is
-    * equivalence-tested against this in QualitySpec); used where the
-    * singleton baseline is wanted without paying the join. */
+    * equivalence-tested against this in FastPathEquivalenceSpec); used
+    * where the singleton baseline is wanted without paying the join. */
   def singletonModularity(canonical: DataFrame, gamma: Double = 1.0): Double = {
     val mRow = canonical.agg(sum("weight"),
       sum(when(col("src") === col("dst"), col("weight")))).collect()(0)
@@ -79,20 +117,9 @@ object Quality {
   def cpm(canonical: DataFrame, assign: DataFrame,
       gamma: Double = 1.0, localSolveEdges: Long = 0): Double = {
     localParts(canonical, assign, localSolveEdges) match {
-      case Some((es, commOf)) => return cpmFromArrays(es, commOf, gamma)
-      case None =>
+      case Some((es, commOf)) => cpmFromArrays(es, commOf, gamma)
+      case None => score(canonical, assign, gamma, useCpm = true)._1
     }
-    val a = assign.select(col("v"), col("community"))
-    val wIn = intraWeight(canonical, a)
-    val sizesRow = a.groupBy("community").agg(count(lit(1)).as("n"))
-      .agg(sum(col("n") * (col("n") - 1) / 2)).collect()(0)
-    val pairs = if (sizesRow.isNullAt(0)) 0.0 else
-      sizesRow.get(0) match {
-        case d: java.lang.Double => d.doubleValue()
-        case b: java.math.BigDecimal => b.doubleValue()
-        case l: java.lang.Long => l.doubleValue()
-      }
-    wIn - gamma * pairs
   }
 
   /** Driver-side modularity over collected canonical edges + an
@@ -156,14 +183,5 @@ object Quality {
           .foreach(r => commOf.put(r.getLong(0), r.getLong(1)))
         (g.es, commOf)
       }
-  }
-
-  private def intraWeight(canonical: DataFrame, assign: DataFrame): Double = {
-    val r = canonical
-      .join(assign.select(col("v").as("src"), col("community").as("cu")), "src")
-      .join(assign.select(col("v").as("dst"), col("community").as("cv")), "dst")
-      .where(col("cu") === col("cv"))
-      .agg(sum("weight")).collect()(0)
-    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
 }

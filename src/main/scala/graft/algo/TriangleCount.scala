@@ -171,7 +171,7 @@ object TriangleCount {
     // side and BOTH projections are broadcast at once, so the byte
     // estimate is 2 x ~24 B per oriented edge against the heap-derived
     // budget (graft.util.Bcast). Above the budget both joins shuffle.
-    val nOriented = oriented.count()
+    val nOriented = oriented.rows
     def side(df: DataFrame): DataFrame =
       graft.util.Bcast.ifFits(df, nOriented, bytesPerRow = 48)
     // the probe side drives the whole closing pipeline (both joins chain

@@ -57,34 +57,14 @@ object IncBench {
       (r, (System.nanoTime() - t0) / 1e9)
     }
 
-    // VERDICT r5 #5 diagnosability: with GRAFT_DEBUG_TIMING the cold
-    // initial emits its per-phase iteration metrics too, so a swing in
-    // initial_sec can be attributed to a phase instead of guessed at
-    val debug0 = sys.env.get("GRAFT_DEBUG_TIMING").contains("1")
-    val initSink =
-      if (debug0) new graft.run.MetricsSink else graft.run.MetricsSink.discard
-    val (state0, tInit) = secs(Incremental.initial(init, cfg,
-      sink = initSink))
-    if (debug0) initSink.all.foreach { it =>
-      System.err.println(f"[init] ${it.algo}%-18s lvl=${it.level} " +
-        f"i=${it.iteration} moves=${it.movesAccepted} " +
-        f"frontier=${it.frontier} ${it.seconds}%.2fs")
-    }
+    val (state0, tInit) = secs(Incremental.initial(init, cfg))
     var state = state0
     var cumulative = init
     val rows = batches.zipWithIndex.map { case (b, i) =>
       cumulative = cumulative.unionAll(b).localCheckpoint(true)
-      val debugT = sys.env.get("GRAFT_DEBUG_TIMING").contains("1")
-      val sink =
-        if (debugT) new graft.run.MetricsSink else graft.run.MetricsSink.discard
       val (next, tWarm) = secs {
-        val s = Incremental.update(state, b, cfg, sink = sink)
+        val s = Incremental.update(state, b, cfg)
         s.assign.count(); s
-      }
-      if (debugT) sink.all.foreach { it =>
-        System.err.println(f"[it] ${it.algo}%-18s lvl=${it.level} " +
-          f"i=${it.iteration} moves=${it.movesAccepted} " +
-          f"frontier=${it.frontier} ${it.seconds}%.2fs")
       }
       state = next
       val (cold, tCold) =

@@ -51,7 +51,7 @@ object LocalGraph {
   def collect(canon: DataFrame, maxVerts: Long,
       vertices: Option[DataFrame] = None,
       maxEdges: Long = Long.MaxValue): Option[LocalGraph] = {
-    val nEdges = canon.count()
+    val nEdges = canon.rows
     if (!admits(nEdges, maxEdges)) return None
     vertices match {
       case None =>
@@ -65,7 +65,7 @@ object LocalGraph {
         if (capped && g.vs.length > maxVerts) None else Some(g)
       case Some(vdf) =>
         val verts = vdf.select(col("v")).distinct().ckpt
-        if (verts.count() > maxVerts) return None
+        if (verts.rows > maxVerts) return None
         val vs = sortedDistinct(verts.collect().map(_.getLong(0)))
         def in(v: Long) = java.util.Arrays.binarySearch(vs, v) >= 0
         Some(new LocalGraph(edges(canon).filter(e => in(e._1) && in(e._2)),

@@ -6,6 +6,7 @@ import graft.algo.{Incremental, Leiden, Quality}
 import graft.graph.{EdgeOps, LocalGraph}
 import graft.state.Checkpointer
 import graft.util.Bcast
+import graft.util.Ckpt.DFCkpt
 
 /** The engine facade: the Spark-native equivalent of the reference's
   * `run(graph, config) -> RunOutcome` entry point
@@ -124,14 +125,10 @@ object Engine {
         next.assign.select(col("v"), col("community")), next.maxId)
       require(v.ok, s"partition invariants violated: ${v.reason}")
     }
-    // score the objective actually being optimized (cfg may select CPM)
-    val q =
-      if (cfg.leiden.useCpm)
-        Quality.cpm(next.canon,
-          next.assign.select(col("v"), col("community")), cfg.leiden.gamma)
-      else Quality.modularity(next.canon,
-        next.assign.select(col("v"), col("community")), cfg.leiden.gamma)
-    val nComm = next.assign.select("community").distinct().count()
+    // score the objective actually being optimized (cfg may select CPM);
+    // the community count comes out of the same pass
+    val (q, nComm) = Quality.score(next.canon, next.assign,
+      cfg.leiden.gamma, cfg.leiden.useCpm)
     val out = Outcome(next.assign.select(col("v"), col("community")), q,
       nComm, sink.totalIterations("leiden.movement"), sink.all,
       batch = last + 1)
@@ -192,7 +189,7 @@ object Engine {
       // A crash before cp.write leaves an uncommitted batch (the stores'
       // applied markers + the assign undo log make its replay exact); a
       // crash after leaves a complete one.
-      val edgeRows = st.canon.count()
+      val edgeRows = st.canon.rows
       st.durable match {
         case Some(d) =>
           // the BucketedEdges store IS the durable edge copy — batch 0

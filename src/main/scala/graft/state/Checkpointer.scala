@@ -2,6 +2,7 @@ package graft.state
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Ckpt.DFCkpt
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.Try
 
@@ -39,7 +40,7 @@ final class Checkpointer(root: String, runId: String) {
     metrics.toDF().withColumn("run_id", lit(runId))
       .withColumn("iter", lit(iter))
       .write.mode("overwrite").parquet(s"$dir/metrics")
-    val rows = assignment.count()
+    val rows = assignment.rows
     val manifest =
       s"""{"run_id":"$runId","iter":$iter,"rows":$rows,""" +
         s""""edge_rows":$edgeRows,"frontier":$frontier,"quality":$quality}"""

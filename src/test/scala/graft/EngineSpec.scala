@@ -137,6 +137,28 @@ class EngineSpec extends SparkSpecBase {
     assert(e.getMessage.contains("byte budget"), e.getMessage)
   }
 
+  test("job budget: one warm Engine.update runs at most 75 % of the " +
+      "jobs it took before counted checkpoints and one-pass scoring") {
+    import graft.algo.Incremental
+    import graft.source.CodeTableSynth
+    // the warm batch's time is set by its job count (tens of ms of fixed
+    // cost each on small tables), so the count is the regression gate.
+    // Fixture: a 600-vertex SBM graph, 80 % cold, one 100-edge insert.
+    // Before: 151 jobs for this update (local[4], 4 shuffle partitions).
+    val ParentJobs = 151
+    val root = Files.createTempDirectory("graft-jobs").toString
+    val g = CodeTableSynth.sbmEdges(spark, 600, 12, seed = 42L)
+    val (init, batches) = Incremental.paperSplit(g, 0.8, 100, 1, 42L)
+    val cfg = Engine.Config(checkpointRoot = Some(root), runId = "jobs",
+      leiden = Leiden.Config(localSolveLevel0Verts = 600))
+    Engine.run(init, cfg)
+    val (o, jobs) = withJobs(Engine.update(spark, batches.head, cfg))
+    assert(o.batch == 1 && o.quality > 0.3)
+    info(s"$jobs jobs (before: $ParentJobs)")
+    assert(jobs <= ParentJobs * 3 / 4,
+      s"$jobs jobs for one warm update (before: $ParentJobs)")
+  }
+
   test("config validation rejects bad settings") {
     intercept[IllegalArgumentException] {
       Engine.Config(leiden = Leiden.Config(maxSweeps = 0)).validate()

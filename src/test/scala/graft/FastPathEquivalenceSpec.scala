@@ -186,6 +186,38 @@ class FastPathEquivalenceSpec extends SparkSpecBase {
     assert(math.abs(generic - closed) <= 1e-12, s"$generic vs $closed")
   }
 
+  test("one-pass distributed quality == driver sums exactly (integer " +
+      "weights), community count == distinct count") {
+    import graft.algo.Quality
+    import graft.graph.EdgeOps
+    import graft.util.Ckpt.DFCkpt
+    val s = spark
+    import s.implicits._
+    // parallel edges merge into weights > 1; a self-loop on 5; the edge
+    // (3, 999) has an unassigned endpoint; 777 is assigned but isolated
+    val canon = EdgeOps.compress(randGraph(60, 300)
+      .union(Seq((5L, 5L, 2.0), (3L, 999L, 3.0)).toDF("src", "dst",
+        "weight"))).ckpt
+    val es = canon.select("src", "dst", "weight").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val commOf = (0L until 60L).map(v => v -> v / 7).toMap + (777L -> 50L)
+    val counted = commOf.toSeq.toDF("v", "community").ckpt
+    // a lazy frame takes the shuffled joins, a counted one the broadcast
+    for (assign <- Seq(counted, commOf.toSeq.toDF("v", "community"))) {
+      val nComm = assign.select("community").distinct().count()
+      val (q, n) = Quality.score(canon, assign)
+      assert(q == Quality.modularityFromArrays(es, commOf, 1.0))
+      assert(Quality.modularity(canon, assign) == q)
+      assert(n == nComm && n == 10L)
+      for (g <- Seq(1.0, 0.05)) {
+        val (c, nc) = Quality.score(canon, assign, g, useCpm = true)
+        assert(c == Quality.cpmFromArrays(es, commOf, g))
+        assert(Quality.cpm(canon, assign, g) == c)
+        assert(nc == nComm)
+      }
+    }
+  }
+
   test("PageRank local CSR path == distributed path (1e-12, and exactly " +
       "equal after the callers' 4-dp rounding)") {
     import graft.algo.PageRank
@@ -325,31 +357,6 @@ class FastPathEquivalenceSpec extends SparkSpecBase {
       maxLevels = 2))
     assert(canonicalPartition(toMapLL(fallback.assignment)) ==
       canonicalPartition(toMapLL(dist.assignment)))
-  }
-
-  /** `f`'s value and the number of Spark jobs it started. The listener
-    * bus is asynchronous: a tagged sentinel job runs after `f`, and its
-    * start event marks the point where every job of `f` was counted. */
-  private def withJobs[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.sentinel") ==
-          "1")) seen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      sc.setLocalProperty("graft.sentinel", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.sentinel", null)
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("driver byte budget refuses every LocalGraph caller: each takes " +

@@ -36,6 +36,31 @@ abstract class SparkSpecBase extends AnyFunSuite {
     ts.toDF("src", "dst", "weight")
   }
 
+  /** `f`'s value and the number of Spark jobs it started. The listener
+    * bus is asynchronous: a tagged sentinel job runs after `f`, and its
+    * start event marks the point where every job of `f` was counted. */
+  def withJobs[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.sentinel") ==
+          "1")) seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.sentinel", null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** (v -> value) map from a two-column DataFrame. */
   def toMapLL(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
