@@ -57,8 +57,9 @@ object ConnectedComponents {
       .getOrElse(EdgeOps.vertices(canon))
       .ckpt
 
-    // partition the static adjacency by the per-round join key (dst) so
-    // each round shuffles only the labels table, not the edges
+    // the static adjacency, repartitioned by the per-round join key (dst);
+    // the checkpoint does not keep that partitioning (see PageRank), so
+    // each round exchanges the edges along with the labels table
     val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
     val adj = canon.select(col("src"), col("dst"))
       .unionAll(canon.select(col("dst").as("src"), col("src").as("dst")))

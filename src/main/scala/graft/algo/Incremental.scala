@@ -156,7 +156,13 @@ object Incremental {
         * checkpoint; absent while the supergraph fits the driver bound
         * (or after a cold run) — the next over-bound batch initializes
         * it with one full re-solve. */
-      upperAssign: Option[DataFrame] = None)
+      upperAssign: Option[DataFrame] = None,
+      /** `m2` is the value the last checkpoint committed rather than one
+        * derived from `canon`. The two differ only when a durable store
+        * ran one batch ahead of that checkpoint (crash between its merge
+        * and the commit); [[update]]'s replay then keeps this m2 as the
+        * pre-delta value instead of un-merging it. */
+      m2Committed: Boolean = false)
 
   /** Fill derivable fields absent after a resume or an old-format call:
     * degrees, the live supergraph (contract by subcomm — the invariant
@@ -332,7 +338,7 @@ object Incremental {
         // delta-bounded (and the movement sweeps go driver-local
         // whenever the delta frontier fits the byte budget).
         val m2s = 2.0 * superW
-        val adj1 = EdgeOps.symmetrize(superM)
+        val adj1 = Ckpt.withRows(EdgeOps.symmetrize(superM), 2 * superM.rows)
         val deg1 = EdgeOps.degrees(adj1).ckpt
         val dV1 = EdgeOps.vertices(deltaH.get).ckpt
         // evict supernodes that left the supergraph: the maintained rows
@@ -556,6 +562,145 @@ object Incremental {
     (rows, UpperComm(composedNew))
   }
 
+  /** Driver bytes per compressed delta row in [[driverPrologue]]: the
+    * collected row, the probe rows of its endpoints, their entries in the
+    * driver maps and the local relations. Measured (1M-vertex state,
+    * local[4], 50k-500k-row deltas): the driver thread allocates 2.8-4.4
+    * KB per row, an upper bound on what it holds at once. At the 512 MB
+    * budget cap 5 KB admits 104,857 rows, where the driver prologue stops
+    * being the faster one (warm runs, driver vs distributed): 10k rows
+    * 0.7 s vs 1.6 s, 100k rows 3.7 s vs 4.2 s, 150k rows 4.9 s vs 4.4 s,
+    * 200k rows 7.7 s vs 5.8 s, 500k rows 12.3 s vs 5.4 s; the driver's
+    * local relations also cost each plan that reads them. */
+  private[graft] val DeltaRowBytes = 5120L
+
+  /** What a delta batch brings before movement.
+    *
+    * @param newVerts (v) endpoint ids absent from the assignment
+    * @param dMax the largest endpoint id
+    * @param deltaDeg (v, dd) weighted-degree change of every endpoint
+    * @param degNew (v, deg) degrees of the new vertices
+    * @param activated (v) the movement frontier: endpoints of inserts
+    *   across communities and of deletes within one (hit_leiden.rs:166-186)
+    * @param activeDegSum the frontier's post-delta weighted-degree sum
+    * @param k0 (v) endpoints of delta edges inside one subcommunity
+    * @param k0Ids `k0` on the driver, when the prologue ran there
+    */
+  private[graft] final case class Prologue(newVerts: DataFrame, dMax: Long,
+      deltaDeg: DataFrame, degNew: DataFrame, activated: DataFrame,
+      activeDegSum: Option[Double], k0: DataFrame,
+      k0Ids: Option[Array[Long]])
+
+  /** The assignment plus the new ids as singletons (lazy union). Its row
+    * count is recorded when both parts' counts are known. */
+  private def withNewVerts(assign: DataFrame, newVerts: DataFrame)
+      : DataFrame = {
+    val nNew = newVerts.rows
+    if (nNew == 0) assign
+    else {
+      val u = assign.unionAll(newVerts.select(col("v"),
+        col("v").as("community"), col("v").as("subcomm")))
+      Ckpt.known(assign).fold(u)(n => Ckpt.withRows(u, n + nNew))
+    }
+  }
+
+  /** The prologue of a delta that fits the driver: one collect of the
+    * compressed delta and ONE probe (a broadcast semi join of its
+    * endpoint ids) of their assignment rows and degrees; the rest is
+    * driver arithmetic. */
+  private[graft] def driverPrologue(state: State, deltaC: DataFrame)
+      : Prologue = {
+    val spark = deltaC.sparkSession
+    import spark.implicits._
+    val rows = deltaC.select(EdgeOps.SRC, EdgeOps.DST, EdgeOps.W).collect()
+    val src = rows.map(_.getLong(0))
+    val dst = rows.map(_.getLong(1))
+    val w = rows.map(_.getDouble(2))
+    val ids = (src ++ dst).distinct.sorted
+    // a broadcast semi join, not a literal IN list: the id set ships once
+    // per executor, and planning stays flat in the delta's size (100k ids
+    // against 10k-row tables, local[4]: 1.2 s semi-joined, 11.9 s literal)
+    val idRel = broadcast(Ckpt.local(spark, ids))
+    val probe = state.assign.join(idRel, Seq("v"), "left_semi")
+      .select(col("v"), col("community"), col("subcomm"),
+        lit(null).cast("double").as("deg"))
+      .unionAll(state.deg.get.join(idRel, Seq("v"), "left_semi")
+        .select(col("v"), lit(null).cast("long"), lit(null).cast("long"),
+          col("deg")))
+      .collect()
+    val comm = mutable.LongMap.empty[Long]
+    val sc = mutable.LongMap.empty[Long]
+    val degOld = mutable.LongMap.empty[Double]
+    probe.foreach { r =>
+      val v = r.getLong(0)
+      if (r.isNullAt(3)) { comm(v) = r.getLong(1); sc(v) = r.getLong(2) }
+      else degOld(v) = r.getDouble(3)
+    }
+    // delta degrees (a self-loop counts twice, as in EdgeOps.degrees of
+    // the symmetrized delta); new endpoints are their own singletons
+    val dd = mutable.LongMap.empty[Double]
+    val act = mutable.LongMap.empty[Unit]
+    val k0 = mutable.LongMap.empty[Unit]
+    for (i <- rows.indices) {
+      val (u, v) = (src(i), dst(i))
+      dd(u) = dd.getOrElse(u, 0.0) + w(i)
+      dd(v) = dd.getOrElse(v, 0.0) + w(i)
+      val (cu, cv) = (comm.getOrElse(u, u), comm.getOrElse(v, v))
+      if ((w(i) > 0 && cu != cv) || (w(i) < 0 && cu == cv)) {
+        act(u) = (); act(v) = ()
+      }
+      if (sc.getOrElse(u, u) == sc.getOrElse(v, v)) { k0(u) = (); k0(v) = () }
+    }
+    val newIds = ids.filterNot(comm.contains)
+    val actIds = act.keysIterator.toArray.sorted
+    // the post-delta degree table has a row for a vertex with an old
+    // degree row or a new one — sum exactly the rows movement would probe
+    var degSum = 0.0
+    actIds.foreach { v =>
+      if (degOld.contains(v)) degSum += degOld(v) + dd(v)
+      else if (!comm.contains(v)) degSum += dd(v)
+    }
+    val k0Ids = k0.keysIterator.toArray.sorted
+    Prologue(Ckpt.local(spark, newIds), ids.last,
+      ids.toSeq.map(v => (v, dd(v))).toDF("v", "dd"),
+      newIds.toSeq.map(v => (v, dd(v))).toDF("v", "deg"),
+      Ckpt.local(spark, actIds), Some(degSum), Ckpt.local(spark, k0Ids),
+      Some(k0Ids))
+  }
+
+  /** The prologue of a bulk delta (backfill, re-ingest): a distributed
+    * anti join finds the new ids, and the delta's activation joins
+    * broadcast it so the assignment streams map-side, never shuffles. */
+  private[graft] def distPrologue(state: State, deltaC: DataFrame)
+      : Prologue = {
+    val (dV, dAgg) = Ckpt.observed(EdgeOps.vertices(deltaC),
+      "dMax" -> max("v"))
+    val newVerts = dV.join(state.assign.select("v"), Seq("v"), "left_anti")
+      .ckpt
+    val deltaDeg = EdgeOps.degrees(EdgeOps.symmetrize(deltaC))
+      .withColumnRenamed("deg", "dd").ckpt
+    val degNew = deltaDeg
+      .join(broadcast(newVerts), Seq("v"), "left_semi")
+      .select(col("v"), col("dd").as("deg"))
+    val assign0 = withNewVerts(state.assign, newVerts)
+    val d1 = broadcast(deltaC)
+      .join(assign0.select(col("v").as("src"), col("community").as("cu"),
+        col("subcomm").as("scu")), "src")
+    val d = broadcast(d1)
+      .join(assign0.select(col("v").as("dst"), col("community").as("cv"),
+        col("subcomm").as("scv")), "dst")
+      .ckpt
+    val activated = d.where(
+      (col("weight") > 0 && col("cu") =!= col("cv")) ||
+        (col("weight") < 0 && col("cu") === col("cv")))
+      .select(explode(array(col("src"), col("dst"))).as("v")).distinct()
+      .ckpt
+    val k0 = d.where(col("scu") === col("scv"))
+      .select(explode(array(col("src"), col("dst"))).as("v")).distinct()
+    Prologue(newVerts, dAgg.getAs[Long]("dMax"), deltaDeg, degNew,
+      activated, None, k0, None)
+  }
+
   /** Apply one signed delta batch, warm-starting from `state`.
     *
     * Faithful to the reference's per-batch pipeline (hit_leiden.rs:85-151
@@ -567,13 +712,21 @@ object Incremental {
     * the delta-scoped distributed branch above `localSolveEdges`, or the
     * re-solve over the maintained supergraph (the fallback, and the
     * oracle when `incrementalHierarchy` is off).
+    *
+    * The prologue (new ids, delta degrees, activation, K0) is gated on the
+    * compressed delta's driver bytes ([[DeltaRowBytes]] per row against
+    * [[graft.util.Bcast.budgetBytes]]). Below the budget the delta
+    * is collected once and everything comes from it plus ONE probe of
+    * the endpoints' assignment rows and degrees
+    * ([[driverPrologue]]); the results enter the plans as local relations
+    * with known row counts, and movement gets |assign|, |adj| and the
+    * frontier's degree sum without a job. A bulk delta (backfill,
+    * re-ingest) takes the distributed prologue ([[distPrologue]]). Both
+    * derive the same sets and the same integer-weight sums.
     */
   def update(state0: State, delta: DataFrame,
       cfg: Leiden.Config = Leiden.Config(),
       sink: MetricsSink = MetricsSink.discard,
-      /** distinct-delta-id count above which the new-vertex probe switches
-        * from a driver literal predicate to a distributed anti join */
-      bulkIdThreshold: Long = 100_000L,
       /** monotone batch id for durable-mode idempotency: a merge already
         * recorded in the store (crash between merge and checkpoint
         * commit) is skipped on replay instead of double-applied */
@@ -587,8 +740,9 @@ object Incremental {
 
     // durable replay detection: if the store already recorded this batch
     // (crash AFTER the bucket merge but BEFORE the checkpoint commit),
-    // state0's canon/m2 — read back from the store — are one batch AHEAD
-    // of the committed assignment. Rebuild the pre-delta view (a
+    // state0's canon — read back from the store — is one batch AHEAD of
+    // the committed assignment, and so is its m2 unless it is the
+    // committed one (`m2Committed`). Rebuild the pre-delta view (a
     // delta-sized signed un-merge overlay, no store write) so the batch
     // replays identically, and the store merge below no-ops.
     val replayed = state0.durable.exists(d => batchId.exists(b =>
@@ -614,7 +768,8 @@ object Incremental {
           .ckpt
         // deg/superCanon were not set by readState; hydrate re-derives
         // them from the reconstructed pre-delta canon
-        hydrate(state0.copy(canon = preCanon, m2 = state0.m2 - 2.0 * dW,
+        val preM2 = if (state0.m2Committed) state0.m2 else state0.m2 - 2.0 * dW
+        hydrate(state0.copy(canon = preCanon, m2 = preM2,
           deg = None, superCanon = None, superCache = None), cfg.eps)
       }
 
@@ -640,92 +795,49 @@ object Incremental {
     }
     val m2 = state.m2 + 2.0 * dW
 
-    // new endpoints enter as singletons. For ordinary (batch-bounded)
-    // deltas the "which delta ids are new" set is computed with a driver
-    // round-trip over the delta id list + one map-side scan of the
-    // assignment — a shuffled anti join would re-sort the whole vertex
-    // table per batch. A BULK delta (backfill, re-ingest) would turn
-    // isInCollection into a multi-million-element literal predicate
-    // (plan-size explosion, driver memory), so above 100k distinct ids
-    // the probe falls back to a distributed anti join — one key shuffle,
-    // the right cost when the delta is itself graph-sized.
+    // --- prologue: new endpoints, delta degrees, delta activation
+    // (hit_leiden.rs:166-186) and K0, on the driver or distributed
     val spark = delta.sparkSession
     import spark.implicits._
-    val dV = EdgeOps.vertices(deltaC).ckpt
-    val nDV = dV.rows
-    val (newVerts, dMax) =
-      if (nDV <= bulkIdThreshold) {
-        val dIds = dV.collect().map(_.getLong(0))
-        val existing = state.assign
-          .where(col("v").isInCollection(dIds)).select("v")
-          .collect().map(_.getLong(0)).toSet
-        val newIds = dIds.filterNot(existing)
-        (newIds.toSeq.toDF("v"),
-          if (dIds.isEmpty) None else Some(dIds.max))
-      } else {
-        val nv = dV.join(state.assign.select("v"), Seq("v"), "left_anti")
-          .ckpt
-        val m = dV.agg(max("v")).collect()(0)
-        (nv, if (m.isNullAt(0)) None else Some(m.getLong(0)))
-      }
-    val hasNew = !newVerts.isEmpty
+    val pro =
+      if (graft.util.Bcast.fits(deltaC.rows, DeltaRowBytes))
+        driverPrologue(state, deltaC)
+      else distPrologue(state, deltaC)
     // new-singleton rows are delta-sized; the union is applied lazily on
     // top of the (checkpointed) carried assignment — no O(V) rewrite here
-    val assign0 =
-      if (!hasNew) state.assign
-      else state.assign.unionAll(
-        newVerts.select(col("v"), col("v").as("community"),
-          col("v").as("subcomm")))
+    val assign0 = withNewVerts(state.assign, pro.newVerts)
 
     // degree patch: broadcast left-outer add for existing vertices plus
     // delta-only degrees for new ones — no vertex-table shuffle. Kept as
     // a LAZY overlay (each consumer replays a map-side broadcast join
     // over the last materialized table) and flattened O(V) only every
     // 4th batch: the last per-batch term that scaled with |V| not |delta|.
-    val deltaDeg = EdgeOps.degrees(EdgeOps.symmetrize(deltaC))
-      .withColumnRenamed("deg", "dd").ckpt
     val degPatched = state.deg.get
-      .join(broadcast(deltaDeg), Seq("v"), "left")
+      .join(broadcast(pro.deltaDeg), Seq("v"), "left")
       .select(col("v"),
         (col("deg") + coalesce(col("dd"), lit(0.0))).as("deg"))
-    val degNew = deltaDeg
-      .join(broadcast(newVerts), Seq("v"), "left_semi")
-      .select(col("v"), col("dd").as("deg"))
-    val deg0 = degPatched.unionAll(degNew)
+    val deg0 = degPatched.unionAll(pro.degNew)
     val deg = if (state.epoch % 4 == 3) deg0.ckpt else deg0
-
-    // --- delta activation (hit_leiden.rs:166-186); the delta side is
-    // broadcast-built so the assignment streams map-side, never shuffles
-    val d1 = broadcast(deltaC)
-      .join(assign0.select(col("v").as("src"), col("community").as("cu"),
-        col("subcomm").as("scu")), "src")
-    val d = broadcast(d1)
-      .join(assign0.select(col("v").as("dst"), col("community").as("cv"),
-        col("subcomm").as("scv")), "dst")
-      .ckpt
-    val activated = d.where(
-      (col("weight") > 0 && col("cu") =!= col("cv")) ||
-        (col("weight") < 0 && col("cu") === col("cv")))
-      .select(explode(array(col("src"), col("dst"))).as("v")).distinct()
-      .ckpt
-    val k0 = d.where(col("scu") === col("scv"))
-      .select(explode(array(col("src"), col("dst"))).as("v")).distinct()
 
     if (m2 == 0.0)
       return hydrate(State(newCanon, assign0, 0.0, durable = state.durable),
         cfg.eps)
 
-    val adj = EdgeOps.symmetrize(newCanon)
+    val adj = Ckpt.withRows(EdgeOps.symmetrize(newCanon), 2 * newCanon.rows)
 
     // --- frontier-limited movement + refinement at level 0
-    val mv = Leiden.movement(adj, deg, m2, assign0, activated, cfg, sink, 0)
-    val affected = k0.unionAll(mv.affected).distinct().ckpt
+    val mv = Leiden.movement(adj, deg, m2, assign0, pro.activated, cfg, sink,
+      0, activeDegSum = pro.activeDegSum)
+    val affected = (pro.k0Ids, mv.affectedIds) match {
+      case (Some(k0), Some(k)) => Ckpt.local(spark, (k0 ++ k).distinct)
+      case _ => pro.k0.unionAll(mv.affected).distinct().ckpt
+    }
     // the watermark must clear every vertex id seen so far INCLUDING the
     // ones this batch introduced (they arrive as their own singleton
     // subcomm/community ids): allocating fresh split ids from the stale
     // state.maxId could alias a new vertex's id and silently contract two
     // unrelated subcommunities together in the supergraph
-    val freshIdBase = dMax.fold(state.maxId)(math.max(state.maxId, _))
+    val freshIdBase = math.max(state.maxId, pro.dMax)
     val ref = Leiden.refinement(adj, deg, m2, mv.assign, affected, cfg, sink,
       0, isInitial = false, freshIdBase = freshIdBase)
     val maxId = freshIdBase + ref.freshUsed

@@ -64,7 +64,8 @@ object LabelPropagation {
     val nVerts = verts.rows
     // ~32 B per (v, label) row against the heap-derived budget
     val bcastLabels = graft.util.Bcast.fits(nVerts, bytesPerRow = 32)
-    // static side partitioned by the per-round join key (see CC/PageRank)
+    // static side repartitioned by the per-round join key; the checkpoint
+    // does not keep it, so a shuffled round exchanges it (see PageRank)
     // — only worth a shuffle when the per-round join itself shuffles
     val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
     val adj0 = EdgeOps.symmetrize(canon)

@@ -1,5 +1,6 @@
 package graft.algo
 
+import graft.util.Ckpt
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -144,6 +145,10 @@ object Leiden {
     *   when the level-0 local-solve path ran with modularity quality;
     *   None otherwise — callers fall back to
     *   Quality.singletonModularity(canon)
+    * @param m total edge weight of `canon`
+    * @param maxLabel the largest vertex or community id of `assignment`
+    *   when the driver holds the partition (the level-0 local solve);
+    *   None otherwise
     */
   final case class Result(
       assignment: DataFrame,
@@ -152,7 +157,9 @@ object Leiden {
       communityCount: Long,
       sweepsPerLevel: Seq[Int],
       canon: DataFrame,
-      singletonQ: Option[Double] = None)
+      m: Double,
+      singletonQ: Option[Double] = None,
+      maxLabel: Option[Long] = None)
 
   // ---------------------------------------------------------------------
   // cold start: full Leiden on an edge table
@@ -173,7 +180,8 @@ object Leiden {
     val m2 = 2.0 * m
     if (m2 == 0.0) {
       val empty = EdgeOps.vertices(canon0).withColumn("community", col("v"))
-      return Result(empty, 0, 0.0, empty.count(), Nil, canon0, Some(0.0))
+      return Result(empty, 0, 0.0, empty.count(), Nil, canon0, m,
+        Some(0.0))
     }
 
     var canon = canon0
@@ -316,12 +324,14 @@ object Leiden {
           if (cfg.useCpm) None
           else Some(Quality.modularityFromArrays(g.es,
             solved.transform((v, _) => v), cfg.gamma))
+        val maxLabel = solved.iterator
+          .map { case (v, c) => math.max(v, c) }.maxOption
         Result(finalAssign, level + 1, q, solved.valuesIterator.toSet.size,
-          sweeps, canon0, singletonQ)
+          sweeps, canon0, m, singletonQ, maxLabel)
       case None =>
         val (q, nComm) = Quality.score(canon0, finalAssign, cfg.gamma,
           cfg.useCpm)
-        Result(finalAssign, level + 1, q, nComm, sweeps, canon0)
+        Result(finalAssign, level + 1, q, nComm, sweeps, canon0, m)
     }
   }
 
@@ -329,16 +339,24 @@ object Leiden {
   // movement (reference inc_movement, throughput mode)
   // ---------------------------------------------------------------------
 
+  /** @param affectedIds K on the driver, when every sweep that added to
+    *   it ran driver-local */
   final case class MovementOut(assign: DataFrame, changed: DataFrame,
-      affected: DataFrame, sweeps: Int, moves: Long)
+      affected: DataFrame, sweeps: Int, moves: Long,
+      affectedIds: Option[Array[Long]] = None)
 
   /** BSP local-move phase. `assign` = (v, community, subcomm);
     * `active0` = (v) frontier. Returns updated assignment, the changed
     * set B, and the refinement-affected set K (both (v) DataFrames).
+    *
+    * Entry sizes come from known counts where the caller has them
+    * ([[Ckpt.known]]: |assign|, |adj|, |active0|) and `activeDegSum`, the
+    * frontier's weighted-degree sum; each missing one costs a job.
     */
   def movement(adj: DataFrame, deg: DataFrame, m2: Double, assign: DataFrame,
       active0: DataFrame, cfg: Config, sink: MetricsSink,
-      level: Int, nodeSize: Option[DataFrame] = None): MovementOut = {
+      level: Int, nodeSize: Option[DataFrame] = None,
+      activeDegSum: Option[Double] = None): MovementOut = {
 
     val spark = adj.sparkSession
     import spark.implicits._
@@ -353,19 +371,27 @@ object Leiden {
     // assignment before the last applied barrier — the revert-gating
     // reference point
     var aPrev: Option[DataFrame] = None
-    var active = active0.select(col("v")).ckpt
+    // a counted frontier (a checkpoint, or a driver-side local relation)
+    // is used as it stands; any other is materialized once
+    val knownN = Ckpt.known(active0)
+    var active =
+      if (knownN.isDefined) active0.select(col("v"))
+      else active0.select(col("v")).ckpt
     var changed = Seq.empty[Long].toDF("v")
     var affected = Seq.empty[Long].toDF("v")
+    // K kept on the driver too while only local sweeps add to it
+    var affectedL: Option[mutable.LongMap[Unit]] =
+      Some(mutable.LongMap.empty[Unit])
     var sweep = 0
     var totalMoves = 0L
-    var frontierN = active.rows
+    var frontierN = knownN.getOrElse(active.rows)
     // exact weighted-degree sum over the current frontier, or -1 when
     // unknown (lazy large-frontier path). Weighted degree >= adjacency
     // row count (weights >= 1 by construction), so it upper-bounds the
     // rows a frontier broadcast would ship — the hub-safe gate quantity.
-    var frontierDegSum: Double = -1.0
+    var frontierDegSum: Double = activeDegSum.getOrElse(-1.0)
     if (frontierN == 0) // empty delta activation: nothing to do
-      return MovementOut(a, changed, affected, 0, 0L)
+      return MovementOut(a, changed, affected, 0, 0L, Some(Array.empty))
     val nVerts = a.rows
     val avgDeg = adj.rows.toDouble / math.max(nVerts, 1L)
 
@@ -454,6 +480,7 @@ object Leiden {
           changed = changed.unionAll(lp.changed.toSeq.toDF("v"))
         if (lp.affected.nonEmpty)
           affected = affected.unionAll(lp.affected.toSeq.toDF("v"))
+        affectedL.foreach(k => lp.affected.foreach(k(_) = ()))
         // resumed distributed sweeps rebuild community stats from the
         // post-local-phase assignment (exact for integer weights)
         if (lp.bail) commDeg = null
@@ -716,6 +743,7 @@ object Leiden {
           // checkpointed, so the union lineage stays shallow)
           changed = changed.unionAll(moves.select("v"))
           affected = affected.unionAll(newAffected)
+          affectedL = None
           sink.add(IterMetric("leiden.movement", level, sweep, messages = -1,
             movesAccepted = nMoves, frontier = frontierN,
             qualityDelta = gainApplied,
@@ -797,7 +825,7 @@ object Leiden {
     }
     // flatten any remaining lazy overlay once on exit
     MovementOut(a.ckpt, changed.distinct(), affected.distinct(), sweep,
-      totalMoves)
+      totalMoves, affectedL.map(_.keysIterator.toArray))
   }
 
   /** xxHash64 of one long / one int — bit-identical to Spark's

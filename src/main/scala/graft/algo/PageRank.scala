@@ -20,10 +20,12 @@ import graft.run.{IterMetric, MetricsSink}
   * vertices (isolated vertices supplied via `vertices`) spread their mass
   * uniformly. Scores over all supplied vertices sum to 1 at every step.
   *
-  * Scale notes: the per-iteration plan is one hash join (ranks are
-  * re-shuffled to the adjacency's src partitioning) + one hash aggregation
-  * on dst. `ranks` is localCheckpoint'ed every iteration to keep the plan
-  * flat; the adjacency is cached once by the caller. Convergence is the
+  * Scale notes: the per-iteration plan is one hash join + one hash
+  * aggregation on dst. Both join sides are exchanged every iteration: a
+  * local checkpoint does not keep the `repartition` of the static shares
+  * table (with AQE on its plan reports `UnknownPartitioning(0)`). `ranks`
+  * is localCheckpoint'ed every iteration to keep the plan flat; the
+  * adjacency is cached once by the caller. Convergence is the
   * L1 delta, a single scalar agg piggybacked on the same pass.
   */
 object PageRank {
@@ -94,9 +96,9 @@ object PageRank {
     // out-weight per vertex; isolated vertices have none -> dangling
     val wdeg = EdgeOps.degrees(adj)
     // pre-join the per-edge share w/wdeg(src) once (static across
-    // iterations) and pre-partition it by the join key: the checkpointed
-    // partitioning is reused every superstep, so only the small ranks
-    // table is shuffled per iteration, never the edge table
+    // iterations). The repartition by the join key does NOT survive the
+    // checkpoint (see the scaladoc): every superstep re-exchanges shares
+    // along with the ranks table
     val parts = canon.sparkSession.sessionState.conf.numShufflePartitions
     val shares = adj.join(wdeg, adj("src") === wdeg("v"))
       .select(col("src"), col("dst"), (col("weight") / col("deg")).as("share"))

@@ -2,6 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 /** An undirected, optionally weighted edge. Mirrors the reference's
   * `GraphInput` edge tuples (/root/reference/src/core/types.rs:125-139):
@@ -31,6 +33,11 @@ object EdgeOps {
   val DST = "dst"
   val W = "weight"
 
+  /** Schema of a canonical edge table as the engine writes it: reading a
+    * checkpoint with it skips parquet's schema-inference job. */
+  val Schema: StructType = StructType(Seq(StructField(SRC, LongType),
+    StructField(DST, LongType), StructField(W, DoubleType)))
+
   /** Canonicalize to src <= dst and merge parallel edges by summing weights,
     * dropping near-zero results. This is exactly the reference's
     * `Compress` step (/root/reference/src/core/algorithm/hit_leiden.rs:533-546):
@@ -55,11 +62,12 @@ object EdgeOps {
     * O(|delta|), not O(|E|) — the durable petabyte-scale form (a
     * bucket-pruned merge into a hash-partitioned table, touching only
     * the delta's partitions) is [[BucketedEdges.mergeDelta]].
-    * Both inputs must be canonical (src <= dst, parallel edges merged).
+    * Both inputs must be canonical (src <= dst, parallel edges merged),
+    * so the delta's keys are distinct as they stand.
     */
   def mergeDelta(canon: DataFrame, deltaCanon: DataFrame,
       eps: Double = 1e-9): DataFrame = {
-    val keys = broadcast(deltaCanon.select(col(SRC), col(DST)).distinct())
+    val keys = broadcast(deltaCanon.select(col(SRC), col(DST)))
     val untouched = canon.join(keys, Seq(SRC, DST), "left_anti")
     val touched = canon.join(keys, Seq(SRC, DST), "left_semi")
     untouched.unionAll(compress(touched.unionAll(deltaCanon), eps))

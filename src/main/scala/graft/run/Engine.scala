@@ -2,10 +2,11 @@ package graft.run
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.algo.{Incremental, Leiden, Quality}
 import graft.graph.{EdgeOps, LocalGraph}
 import graft.state.Checkpointer
-import graft.util.Bcast
+import graft.util.{Bcast, Ckpt}
 import graft.util.Ckpt.DFCkpt
 
 /** The engine facade: the Spark-native equivalent of the reference's
@@ -97,7 +98,7 @@ object Engine {
     }
     val out = Outcome(r.assignment, r.modularity, r.communityCount,
       r.sweepsPerLevel.sum, sink.all, batch = 0)
-    checkpoint(cfg, out, edges)
+    checkpoint(cfg, out, r)
     out
   }
 
@@ -167,15 +168,18 @@ object Engine {
 
   // --- internal: durable state = assignment(+subcomm) and edge table ----
 
-  private def checkpoint(cfg: Config, out: Outcome, edges: DataFrame): Unit =
+  private def checkpoint(cfg: Config, out: Outcome, r: Leiden.Result)
+      : Unit =
     cfg.checkpointRoot.foreach { root =>
-      val canon = EdgeOps.compress(edges, cfg.leiden.eps)
       // cold-path Leiden result has no subcommunity column; re-derive a
       // valid state: subcomm = community (a coarser-but-consistent warm
-      // start; the first delta's refinement re-splits as needed)
-      val st = Incremental.State(canon,
+      // start; the first delta's refinement re-splits as needed). The
+      // run already holds m and, after a driver-local solve, the largest
+      // label — the watermark hydrate would otherwise scan for
+      val st = Incremental.State(r.canon,
         out.assignment.select(col("v"), col("community"),
-          col("community").as("subcomm")), 0.0,
+          col("community").as("subcomm")), 2.0 * r.m,
+        maxId = r.maxLabel.getOrElse(Long.MinValue),
         durable = cfg.durableEdges)
       writeState(cfg, st, out)
     }
@@ -246,7 +250,8 @@ object Engine {
       val cp = new Checkpointer(root, cfg.runId)
       cp.write(out.batch, st.assign, out.metrics, frontier = 0,
         quality = out.quality, edgeRows = edgeRows,
-        assignmentData = cfg.durableAssign.isEmpty)
+        assignmentData = cfg.durableAssign.isEmpty, m2 = Some(st.m2),
+        maxId = Some(st.maxId).filter(_ != Long.MinValue))
     }
 
   private[graft] def readState(spark: SparkSession, root: String,
@@ -255,27 +260,39 @@ object Engine {
       durableAssign: Option[Incremental.DurableAssign] = None)
       : Incremental.State = {
     val cp = new Checkpointer(root, runId)
-    val assign = readAssign(spark,
-      Config(durableAssign = durableAssign), cp, batch)
+    val man = cp.manifest(batch)
+    val assign = Ckpt.withRows(readAssign(spark,
+      Config(durableAssign = durableAssign), cp, batch), man.rows)
     val canon = durable match {
       case Some(d) =>
         // roll forward / roll back any merge a crash left half-swapped
         // before anything reads the store
         graft.graph.BucketedEdges.recover(spark, d.path)
         graft.graph.BucketedEdges.read(spark, d.path)
-      case None => spark.read.parquet(s"$root/$runId/iter=$batch/edges")
+      case None => spark.read.schema(EdgeOps.Schema)
+        .parquet(s"$root/$runId/iter=$batch/edges")
     }
+    // the committed m2; a manifest that predates it falls back to a scan
+    // of the canon (a durable store one batch ahead is Incremental.update's
+    // replay to detect, and it keeps a committed m2 as the pre-delta one)
+    val m2 = man.m2.getOrElse(2.0 * EdgeOps.totalWeight(canon))
     // maintained upper composition, if the committing batch persisted it
     val upper = scala.util.Try {
-      val rows = spark.read.parquet(s"$root/$runId/iter=$batch/upper")
-        .collect()
+      val rows = spark.read.schema(UpperSchema)
+        .parquet(s"$root/$runId/iter=$batch/upper").collect()
       val m = scala.collection.mutable.LongMap.empty[Long]
       rows.foreach(r => m(r.getLong(0)) = r.getLong(1))
       Incremental.UpperComm(m)
     }.toOption
     val upperAssign = scala.util.Try(spark.read
+      .schema(Checkpointer.AssignSchema)
       .parquet(s"$root/$runId/iter=$batch/upperAssign")).toOption
-    Incremental.State(canon, assign, 2.0 * EdgeOps.totalWeight(canon),
-      durable = durable, upper = upper, upperAssign = upperAssign)
+    Incremental.State(canon, assign, m2,
+      maxId = man.maxId.getOrElse(Long.MinValue), durable = durable,
+      upper = upper, upperAssign = upperAssign,
+      m2Committed = man.m2.isDefined)
   }
+
+  private val UpperSchema = StructType(Seq(
+    StructField("subcomm", LongType), StructField("community", LongType)))
 }

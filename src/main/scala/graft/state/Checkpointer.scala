@@ -2,6 +2,7 @@ package graft.state
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.util.Ckpt.DFCkpt
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.Try
@@ -18,7 +19,9 @@ import scala.util.Try
   * The manifest embeds the iteration number, row count, frontier size and
   * quality so a resume is reproducible (SURVEY.md section 7.4: atomic,
   * _SUCCESS-gated writes; Spark writes _SUCCESS, the manifest rename is the
-  * commit point).
+  * commit point). The engine adds 2m (`m2`) and the fresh-id watermark
+  * (`max_id`) when it holds them, so a resume reads them instead of
+  * re-deriving them with scans.
   */
 final class Checkpointer(root: String, runId: String) {
 
@@ -30,7 +33,8 @@ final class Checkpointer(root: String, runId: String) {
   def write(iter: Int, assignment: DataFrame,
       metrics: Seq[graft.run.IterMetric], frontier: Long,
       quality: Double, edgeRows: Long = -1L,
-      assignmentData: Boolean = true): Unit = {
+      assignmentData: Boolean = true, m2: Option[Double] = None,
+      maxId: Option[Long] = None): Unit = {
     val spark = assignment.sparkSession
     import spark.implicits._
     val dir = iterDir(iter)
@@ -43,7 +47,9 @@ final class Checkpointer(root: String, runId: String) {
     val rows = assignment.rows
     val manifest =
       s"""{"run_id":"$runId","iter":$iter,"rows":$rows,""" +
-        s""""edge_rows":$edgeRows,"frontier":$frontier,"quality":$quality}"""
+        s""""edge_rows":$edgeRows,"frontier":$frontier,"quality":$quality""" +
+        m2.fold("")(m => s""","m2":$m""") +
+        maxId.fold("")(m => s""","max_id":$m""") + "}"
     atomicWrite(s"$dir/MANIFEST.json", manifest)
     atomicWrite(s"$root/$runId/LATEST", iter.toString)
   }
@@ -55,10 +61,20 @@ final class Checkpointer(root: String, runId: String) {
       .filter(i => Files.exists(Paths.get(s"${iterDir(i)}/MANIFEST.json")))
 
   def readAssignment(spark: SparkSession, iter: Int): DataFrame =
-    spark.read.parquet(s"${iterDir(iter)}/assignment")
+    spark.read.schema(Checkpointer.AssignSchema)
+      .parquet(s"${iterDir(iter)}/assignment")
 
   def readManifest(iter: Int): String =
     Files.readString(Paths.get(s"${iterDir(iter)}/MANIFEST.json"))
+
+  /** The committed facts of iteration `iter` a resume needs. */
+  def manifest(iter: Int): Checkpointer.Manifest = {
+    val j = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(readManifest(iter))
+    Checkpointer.Manifest(j.get("rows").asLong,
+      Option(j.get("m2")).map(_.asDouble),
+      Option(j.get("max_id")).map(_.asLong))
+  }
 
   private def atomicWrite(path: String, content: String): Unit = {
     val p = Paths.get(path)
@@ -68,4 +84,18 @@ final class Checkpointer(root: String, runId: String) {
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
+}
+
+object Checkpointer {
+  /** Schema of an assignment table: reading a checkpoint with it skips
+    * parquet's schema-inference job. */
+  val AssignSchema: StructType = StructType(Seq(StructField("v", LongType),
+    StructField("community", LongType), StructField("subcomm", LongType)))
+
+  /** @param rows assignment row count
+    * @param m2 2 x total edge weight, absent in manifests that predate it
+    * @param maxId fresh-id watermark, absent when the committing run did
+    *   not hold it (or the manifest predates it) */
+  final case class Manifest(rows: Long, m2: Option[Double],
+      maxId: Option[Long])
 }

@@ -1,7 +1,7 @@
 package graft.util
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.GraftStatsReset
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -36,7 +36,8 @@ import org.apache.spark.sql.functions.{count, lit}
   * execution-end event, wall time on every checkpoint. The count is kept
   * for the returned frame only (a weak-keyed map, so it dies with the
   * frame); [[DFCkpt.rows]] of any other frame — a `select` or `where` on
-  * a checkpoint included — runs `count()`.
+  * a checkpoint included — runs `count()`, unless the caller recorded a
+  * count it already knows ([[withRows]], [[local]]).
   */
 object Ckpt {
   /** Suffix syntax: `df.ckpt` — reads like localCheckpoint at call sites. */
@@ -54,6 +55,19 @@ object Ckpt {
 
   private val counted = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, java.lang.Long]())
+
+  /** Records a row count the caller already knows for `df` (a committed
+    * manifest's count, a sum of known counts) and returns `df`. */
+  def withRows(df: DataFrame, n: Long): DataFrame = {
+    counted.put(df, n)
+    df
+  }
+
+  /** A driver-side id set as a counted local relation in column `v`. */
+  def local(spark: SparkSession, ids: Array[Long]): DataFrame = {
+    import spark.implicits._
+    withRows(ids.toSeq.toDF("v"), ids.length.toLong)
+  }
 
   /** Observation names are unique per call: two checkpoints of one source
     * never share one. */

@@ -144,5 +144,10 @@ class DurableAssignSpec extends SparkSpecBase {
     val a = canonicalPartition(toMapLL(Engine.resume(spark, cfgA).get))
     val b = canonicalPartition(toMapLL(Engine.resume(spark, cfgB).get))
     assert(a == b, "crash-window replay diverged from the clean chain")
+    // the replay kept batch 1's committed m2 as its pre-delta value
+    val m2Of = (root: String) =>
+      new graft.state.Checkpointer(root, "da").manifest(2).m2
+    assert(m2Of(rootB).isDefined && m2Of(rootB) == m2Of(rootA),
+      s"replayed m2 ${m2Of(rootB)} vs clean ${m2Of(rootA)}")
   }
 }

@@ -55,17 +55,23 @@ class DurableIncrementalSpec extends SparkSpecBase {
     val g = sbm(200)
     val (init, batches) = Incremental.paperSplit(g, 0.8, 60, 1)
     val s0 = Incremental.initial(init)
-    // same state+delta through both probe paths (threshold 0 forces the
-    // distributed anti join a genuine >100k-id backfill would take)
+    // same state+delta through both prologues: a 64-byte driver budget
+    // refuses the delta collect, forcing the distributed anti join a
+    // genuine bulk backfill takes
     val viaLiteral = Incremental.update(s0, batches.head)
-    val viaAntiJoin = Incremental.update(s0, batches.head,
-      bulkIdThreshold = 0L)
+    val viaAntiJoin = withByteBudget(64L)(
+      Incremental.update(s0, batches.head))
     val a = canonicalPartition(
       toMapLL(viaLiteral.assign.select(col("v"), col("community"))))
     val b = canonicalPartition(
       toMapLL(viaAntiJoin.assign.select(col("v"), col("community"))))
     assert(a == b, "bulk-delta probe path changed the result")
     assert(viaAntiJoin.assign.count() == viaLiteral.assign.count())
+    def canonMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(canonMap(viaAntiJoin.canon) == canonMap(viaLiteral.canon))
+    assert(viaAntiJoin.maxId == viaLiteral.maxId)
+    assert(viaAntiJoin.m2 == viaLiteral.m2)
   }
 
   test("refinement: dense affected subcommunity exceeding the edge bound " +

@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.algo.{Incremental, Leiden, Quality}
 import graft.graph.EdgeOps
+import graft.run.MetricsSink
+import graft.util.Bcast
+import graft.util.Ckpt.DFCkpt
 
 /** Incremental (HIT) contract: delta batches replayed against warm state
   * vs a cold full recompute (reference policy: quality delta <= 0.001,
@@ -157,5 +160,97 @@ class IncrementalSpec extends SparkSpecBase {
     assert(state.assign.count() == 6)
     val canon = state.canon
     assert(canon.count() == 7)
+  }
+
+  test("delta prologue: the driver path == the forced-distributed path " +
+      "on a hand-built delta") {
+    // two 6-cliques joined by a weight-2 bridge (5, 6); pendant 12 on 5
+    val cliques = for (b <- Seq(0L, 6L); i <- 0L until 6L; j <- i + 1 until 6L)
+      yield (b + i, b + j, 1.0)
+    val s0 = Incremental.initial(edges(cliques ++ Seq((5L, 6L, 2.0),
+      (12L, 5L, 1.0)): _*))
+    val delta = edges(
+      // deletions of existing edges: 5 and 12 sit in one community, so
+      // only the delete activation puts them on the frontier; the
+      // pendant cut leaves 12 to refinement's split
+      (5L, 0L, -1.0), (5L, 1L, -1.0), (5L, 2L, -1.0), (5L, 3L, -1.0),
+      (12L, 5L, -1.0),
+      (0L, 7L, -1.0),                 // deletion of an absent pair
+      (3L, 3L, 1.0),                  // self-loop
+      (100L, 101L, 1.0),              // edge between two brand-new ids
+      (2L, 9L, 1.0), (9L, 2L, -1.0),  // rows that net to zero
+      (4L, 8L, 1.0), (4L, 8L, 1.0),   // repeated rows
+      (102L, 10L, 1.0))               // new id onto an existing vertex
+    val next = edges((100L, 0L, 1.0), (101L, 1L, 1.0), (5L, 6L, -1.0),
+      (102L, 11L, 1.0))
+    def facts(st: Incremental.State) =
+      (st.assign.collect().map(r =>
+        r.getAs[Long]("v") -> (r.getAs[Long]("community"),
+          r.getAs[Long]("subcomm"))).toMap, st.maxId, st.m2)
+    // the first movement sweep's frontier is the delta activation
+    def frontier0(sink: MetricsSink) = sink.all
+      .find(m => m.algo == "leiden.movement" && m.iteration == 0)
+      .map(_.frontier)
+    val (sinkD, sinkF) = (new MetricsSink, new MetricsSink)
+    val driver = Incremental.update(s0, delta, sink = sinkD)
+    val driver2 = Incremental.update(driver, next)
+    // a 64-byte budget refuses the delta collect: distributed prologue
+    val (dist, dist2) = withByteBudget(64L) {
+      val d = Incremental.update(s0, delta, sink = sinkF)
+      (d, Incremental.update(d, next))
+    }
+    assert(frontier0(sinkD).isDefined && frontier0(sinkD) == frontier0(sinkF),
+      s"activation: ${frontier0(sinkD)} vs ${frontier0(sinkF)}")
+    assert(facts(driver) == facts(dist), "the prologues' next states differ")
+    assert(facts(driver2) == facts(dist2),
+      "the following batch diverged after the two prologues")
+    val comm = facts(driver)._1
+    assert(comm.size == 16, "three new ids join the thirteen")
+    assert(comm(12L)._2 != comm(0L)._2, s"12 split off: $comm")
+  }
+
+  test("delta prologue: a mid-size delta (150k distinct ids) takes the " +
+      "driver path and matches the distributed prologue") {
+    // a 100k-vertex ring; 100k delta rows with endpoints in [0, 400k)
+    // (each endpoint map is injective there), one row in five a deletion
+    val nV = 100000L
+    val canon = EdgeOps.compress(spark.range(0, nV).select(
+      col("id").as("src"), ((col("id") + 1) % nV).as("dst"),
+      lit(1.0).as("weight"))).ckpt
+    val assign = spark.range(0, nV).select(col("id").as("v"),
+      (col("id") / 50).cast("long").as("community"),
+      (col("id") / 10).cast("long").as("subcomm")).ckpt
+    val st = Incremental.hydrate(
+      Incremental.State(canon, assign, 2.0 * nV))
+    val deltaC = EdgeOps.compress(spark.range(0, 100000L).select(
+      ((col("id") * 7919L + 1L) % 400000L).as("src"),
+      ((col("id") * 104729L + 3L) % 400000L).as("dst"),
+      when(col("id") % 5 === 0, -1.0).otherwise(1.0).as("weight"))).ckpt
+    // within the driver prologue's byte gate at the budget's 512 MB cap
+    assert(withByteBudget(512L << 20)(
+      Bcast.fits(deltaC.rows, Incremental.DeltaRowBytes)), deltaC.rows)
+    val drv = Incremental.driverPrologue(st, deltaC)
+    val dist = Incremental.distPrologue(st, deltaC)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("v").collect().map(_.getLong(0)).sorted.toSeq
+    def byV(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(ids(drv.deltaDeg).size >= 150000, ids(drv.deltaDeg).size)
+    assert(ids(drv.newVerts) == ids(dist.newVerts))
+    assert(drv.dMax == dist.dMax)
+    assert(byV(drv.deltaDeg) == byV(dist.deltaDeg))
+    assert(byV(drv.degNew) == byV(dist.degNew))
+    assert(ids(drv.activated).nonEmpty &&
+      ids(drv.activated) == ids(dist.activated))
+    assert(ids(drv.k0) == ids(dist.k0) &&
+      drv.k0Ids.map(_.toSeq).contains(ids(dist.k0)))
+    // the frontier's post-delta degree sum, as movement would probe it
+    val deg0 = st.deg.get.join(dist.deltaDeg, Seq("v"), "left")
+      .select(col("v"), (col("deg") + coalesce(col("dd"), lit(0.0)))
+        .as("deg"))
+      .unionAll(dist.degNew)
+    val degSum = deg0.join(dist.activated, "v").agg(sum("deg")).head()
+      .getDouble(0)
+    assert(drv.activeDegSum.contains(degSum), (drv.activeDegSum, degSum))
   }
 }

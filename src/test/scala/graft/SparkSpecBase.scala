@@ -61,6 +61,15 @@ abstract class SparkSpecBase extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `f` under a driver byte budget of `bytes` (the
+    * `graft.bcast.budgetBytes` hook): every byte-gated driver path
+    * ([[graft.util.Bcast]]) refuses what does not fit it. */
+  def withByteBudget[T](bytes: Long)(f: => T): T =
+    try {
+      sys.props("graft.bcast.budgetBytes") = bytes.toString
+      f
+    } finally sys.props -= "graft.bcast.budgetBytes"
+
   /** (v -> value) map from a two-column DataFrame. */
   def toMapLL(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
