@@ -316,13 +316,11 @@ object Incremental {
         val repaired = LocalLeiden.repairConnectivity(ce.src, ce.dst, cmM)
         val solved = LocalLeiden.solve(ce.src, ce.dst, ce.w, szM, repaired,
           cfg, canonicalSorted = true)
-        if (cfg.incrementalHierarchy) {
-          // stash the composed map — the next batch seeds its warm
-          // mirror solve from it (no carried collect)
-          val m = mutable.LongMap.empty[Long]
-          solved.foreach { case (k, v) => m(k) = v }
-          upperOut = Some(UpperComm(m))
-        }
+        // stash the composed map — the next batch seeds its warm
+        // mirror solve from it (no carried collect)
+        val m = mutable.LongMap.empty[Long]
+        solved.foreach { case (k, v) => m(k) = v }
+        upperOut = Some(UpperComm(m))
         val out = solved.toSeq.toDF("v", "community")
         out
       } else if (deltaH.isDefined && upperPrev.isDefined) {
@@ -579,7 +577,8 @@ object Incremental {
     * @param newVerts (v) endpoint ids absent from the assignment
     * @param dMax the largest endpoint id
     * @param deltaDeg (v, dd) weighted-degree change of every endpoint
-    * @param degNew (v, deg) degrees of the new vertices
+    * @param degNew (v, deg) degrees of the endpoints that have no row in
+    *   the degree table
     * @param activated (v) the movement frontier: endpoints of inserts
     *   across communities and of deletes within one (hit_leiden.rs:166-186)
     * @param activeDegSum the frontier's post-delta weighted-degree sum
@@ -653,17 +652,16 @@ object Incremental {
     }
     val newIds = ids.filterNot(comm.contains)
     val actIds = act.keysIterator.toArray.sorted
-    // the post-delta degree table has a row for a vertex with an old
-    // degree row or a new one — sum exactly the rows movement would probe
+    // every endpoint without a degree row gets one: the new ids, and an
+    // assigned vertex whose edges were all deleted before a resume
+    // (hydrate derives degrees from the edges, so it has no row)
+    val degNewIds = ids.filterNot(degOld.contains)
     var degSum = 0.0
-    actIds.foreach { v =>
-      if (degOld.contains(v)) degSum += degOld(v) + dd(v)
-      else if (!comm.contains(v)) degSum += dd(v)
-    }
+    actIds.foreach(v => degSum += degOld.getOrElse(v, 0.0) + dd(v))
     val k0Ids = k0.keysIterator.toArray.sorted
     Prologue(Ckpt.local(spark, newIds), ids.last,
       ids.toSeq.map(v => (v, dd(v))).toDF("v", "dd"),
-      newIds.toSeq.map(v => (v, dd(v))).toDF("v", "deg"),
+      degNewIds.toSeq.map(v => (v, dd(v))).toDF("v", "deg"),
       Ckpt.local(spark, actIds), Some(degSum), Ckpt.local(spark, k0Ids),
       Some(k0Ids))
   }
@@ -679,9 +677,11 @@ object Incremental {
       .ckpt
     val deltaDeg = EdgeOps.degrees(EdgeOps.symmetrize(deltaC))
       .withColumnRenamed("deg", "dd").ckpt
+    // endpoints without a degree row: new ids, and assigned vertices
+    // whose edges were all deleted before a resume
     val degNew = deltaDeg
-      .join(broadcast(newVerts), Seq("v"), "left_semi")
-      .select(col("v"), col("dd").as("deg"))
+      .join(state.deg.get.select("v"), Seq("v"), "left_anti")
+      .select(col("v"), col("dd").as("deg")).ckpt
     val assign0 = withNewVerts(state.assign, newVerts)
     val d1 = broadcast(deltaC)
       .join(assign0.select(col("v").as("src"), col("community").as("cu"),
@@ -710,8 +710,9 @@ object Incremental {
     * upper levels -> composition. The upper levels take one of three
     * paths: the warm solve over the maintained mirror (the live path),
     * the delta-scoped distributed branch above `localSolveEdges`, or the
-    * re-solve over the maintained supergraph (the fallback, and the
-    * oracle when `incrementalHierarchy` is off).
+    * re-solve over the maintained supergraph (the fallback when no upper
+    * state is maintained, as after a resume; a caller that clears
+    * `upper` gets it as the oracle for the warm solve).
     *
     * The prologue (new ids, delta degrees, activation, K0) is gated on the
     * compressed delta's driver bytes ([[DeltaRowBytes]] per row against
@@ -900,9 +901,9 @@ object Incremental {
     // hierarchy solve (dense repair + pre-densified solve, all primitive
     // arrays) — no carried aggregation, no collect, no per-batch
     // sort/pack. Otherwise resolveSuper: the delta-scoped branch past the
-    // driver bound, or the re-solve (no maintained state after resume /
-    // flag off), which REBUILDS the maintained state when it lands local.
-    val useMirror = cfg.incrementalHierarchy && state.upper.isDefined &&
+    // driver bound, or the re-solve (no maintained state after resume),
+    // which REBUILDS the maintained state when it lands local.
+    val useMirror = state.upper.isDefined &&
       cfg.localSolveEdges > 0 &&
       mergedCache.exists(_.src.length <= cfg.localSolveEdges)
     val so =

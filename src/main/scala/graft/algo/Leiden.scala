@@ -107,26 +107,7 @@ object Leiden {
         * long tail of epsilon-gain churn costs a fixed-overhead Spark job
         * per sweep and contributes nothing against the reference's own
         * 0.001 quality-equivalence policy (equivalence.rs:21-27). */
-      minSweepGain: Double = 1e-4,
-      /** once a movement frontier's exact degree sum fits the broadcast
-        * byte budget, run the remaining sweeps DRIVER-LOCAL: one
-        * delta-sized gather job per sweep (adjacency of newly activated
-        * vertices only) against locally maintained community/stat maps,
-        * exact BSP-parity semantics (same snapshots, same gain argmax,
-        * same revert gating) — replacing the 6-9 broadcast sub-jobs and
-        * V-sized map scans a distributed warm sweep pays. False forces
-        * the distributed sweep path (the parity-test oracle). */
-      localMoveSweeps: Boolean = true,
-      /** warm batches maintain the upper levels (>= 1) driver-side: the
-        * level-1 supergraph as the sorted-array mirror and the composed
-        * (subcomm -> community) map from the last solve, so each batch
-        * runs a warm-seeded in-memory hierarchy pass
-        * ([[LocalLeiden.solveDense]]) with NO carried aggregation, no
-        * supergraph collect and no per-batch sort/pack (the live
-        * def_update, hit_leiden.rs:565-599). False restores the
-        * from-scratch re-solve path (used by equivalence tests as the
-        * oracle). */
-      incrementalHierarchy: Boolean = true)
+      minSweepGain: Double = 1e-4)
 
   private[algo] def parts(df: DataFrame, cfg: Config): Int =
     if (cfg.numPartitions > 0) cfg.numPartitions
@@ -178,11 +159,12 @@ object Leiden {
     val canon0 = EdgeOps.compress(edges, cfg.eps).ckpt
     val m = EdgeOps.totalWeight(canon0)
     val m2 = 2.0 * m
-    if (m2 == 0.0) {
-      val empty = EdgeOps.vertices(canon0).withColumn("community", col("v"))
-      return Result(empty, 0, 0.0, empty.count(), Nil, canon0, m,
+    // the all-singleton partition: the result of an edgeless graph, and
+    // the top assignment until a level solves one
+    val singletons = EdgeOps.vertices(canon0).withColumn("community", col("v"))
+    if (m2 == 0.0)
+      return Result(singletons, 0, 0.0, singletons.count(), Nil, canon0, m,
         Some(0.0))
-    }
 
     var canon = canon0
     // per-level subcommunity mapping (v_level -> subcomm = v_{level+1})
@@ -194,7 +176,7 @@ object Leiden {
     // (v, size) node sizes in base vertices, None = all ones (level 0)
     var carriedSize: Option[DataFrame] =
       initialSizes.map(_.select(col("v"), col("size")).ckpt)
-    var topAssign: DataFrame = null
+    var topAssign = singletons
     var sweeps = Vector.empty[Int]
     var level = 0
     var done = false
@@ -349,6 +331,14 @@ object Leiden {
     * `active0` = (v) frontier. Returns updated assignment, the changed
     * set B, and the refinement-affected set K (both (v) DataFrames).
     *
+    * A sweep takes one of two shapes. Once the frontier's exact
+    * weighted-degree sum fits the broadcast byte budget (and its size
+    * estimate is under a quarter of the vertices), the rest of the phase
+    * runs driver-local in [[localMovePhase]]. Every other frontier — the
+    * full one of a cold start or a dense re-activation, an estimated one,
+    * a hub frontier past the budget — runs the shuffled BSP sweep. A
+    * local phase that bails hands its state back to the shuffled sweep.
+    *
     * Entry sizes come from known counts where the caller has them
     * ([[Ckpt.known]]: |assign|, |adj|, |active0|) and `activeDegSum`, the
     * frontier's weighted-degree sum; each missing one costs a job.
@@ -408,56 +398,29 @@ object Leiden {
     // from the current `a` after a local-phase bail is exact: the
     // maintained value equals the membership sum for the integer-valued
     // weights every ingest path produces.
-    var commDeg: DataFrame = null
-    def commDegDf(): DataFrame = {
-      if (commDeg == null)
-        commDeg = {
-          val base = a.join(deg, "v")
-          if (unitSize)
-            base.groupBy(col("community"))
-              .agg(sum("deg").as("cdeg"), count(lit(1)).as("csize"))
-          else
-            base.join(sz, "v").groupBy(col("community"))
-              .agg(sum("deg").as("cdeg"), sum("size").as("csize"))
-        }.ckpt
-      commDeg
+    var commDeg: Option[DataFrame] = None
+    def commDegDf(): DataFrame = commDeg.getOrElse {
+      val base = a.join(deg, "v")
+      val built = (
+        if (unitSize)
+          base.groupBy(col("community"))
+            .agg(sum("deg").as("cdeg"), count(lit(1)).as("csize"))
+        else
+          base.join(sz, "v").groupBy(col("community"))
+            .agg(sum("deg").as("cdeg"), sum("size").as("csize"))
+      ).ckpt
+      commDeg = Some(built)
+      built
     }
 
     while (frontierN > 0 && sweep < cfg.maxSweeps) {
       val t0 = System.nanoTime()
-      // commDeg may carry un-aggregated per-sweep delta rows (see the
-      // union below): consumers read the aggregated view — ONE exchange
-      // regardless of overlay depth, where a join-chain form paid an
-      // exchange per stacked sweep
-      lazy val commDegA = commDegDf().groupBy("community")
-        .agg(sum("cdeg").as("cdeg"), sum("csize").as("csize"))
-
-      // gather: active vertices' neighbor weights by neighbor community;
-      // a full frontier (cold-start first sweep) skips the semi-join.
-      // Self-loops are excluded: a supernode's self-loop travels with it,
-      // so it cancels out of the move gain — counting it into wCur (as the
-      // reference's neighbor loop does, hit_leiden.rs:234-239) freezes
-      // movement on aggregated graphs, which the reference never reaches
-      // (its public run() is single-level). Self-loops still count in
-      // degrees and m, per the modularity convention.
-      // frontier semi-join: broadcast the (small) frontier so the big
-      // adjacency is filtered map-side, never shuffled
-      val act0 =
-        if (frontierN >= nVerts) adj
-        else if (graft.util.Bcast.fits(frontierN, bytesPerRow = 16))
-          adj.join(broadcast(active.withColumnRenamed("v", "src")),
-            Seq("src"), "left_semi")
-        else adj.join(active.withColumnRenamed("v", "src"), Seq("src"),
-          "left_semi")
-      val act = act0.where(col("src") =!= col("dst"))
-      val aByDst = a.select(col("v").as("dst"), col("community").as("nbrComm"))
-      // warm updates: a delta-sized frontier's gather rows are broadcast
-      // and probe the assignment in a map scan — zero shuffle of either
-      // big table per sweep. The `frontierN * avgDeg` ESTIMATE alone is
-      // hub-unsafe (one 10^6-degree hub in a 10^3-vertex frontier breaks
-      // it by orders of magnitude), so the broadcast is committed only
+      // a delta-sized frontier hands the rest of the phase to the
+      // driver-local sweep loop. The `frontierN * avgDeg` ESTIMATE alone
+      // is hub-unsafe (one 10^6-degree hub in a 10^3-vertex frontier
+      // breaks it by orders of magnitude), so the loop is entered only
       // after the EXACT frontier degree sum fits the byte budget —
-      // maintained for free on the collected path, probed with one
+      // maintained for free by the local loop, probed with one
       // frontier-filtered map scan of `deg` on a large→small transition.
       val estSmall = frontierN < nVerts / 4 &&
         frontierN * math.max(avgDeg, 1.0) < 2e6
@@ -467,9 +430,8 @@ object Leiden {
           .agg(coalesce(sum("deg"), lit(0)).cast("double")).head.getDouble(0)
       val smallGather = estSmall && graft.util.Bcast.fits(
         math.max(frontierDegSum, 0.0).toLong, bytesPerRow = 32)
-      if (smallGather && cfg.localMoveSweeps) {
-        // hand the rest of the phase to the driver-local sweep loop
-        // (exact BSP parity; one delta-sized gather action per sweep).
+      if (smallGather) {
+        // exact BSP parity; one delta-sized gather action per sweep.
         // Community stats are fetched per-need inside — no O(C) collect.
         val lp = localMovePhase(spark, adj, a, aPrev, active,
           deg, sz, unitSize, m2, nVerts, avgDeg, cfg, sink, level, sweep)
@@ -483,12 +445,39 @@ object Leiden {
         affectedL.foreach(k => lp.affected.foreach(k(_) = ()))
         // resumed distributed sweeps rebuild community stats from the
         // post-local-phase assignment (exact for integer weights)
-        if (lp.bail) commDeg = null
+        if (lp.bail) commDeg = None
         totalMoves += lp.movesApplied
         frontierN = lp.frontierN
         frontierDegSum = lp.frontierDegSum
         sweep = lp.sweep
       } else {
+        // commDeg may carry un-aggregated per-sweep delta rows (see the
+        // union below): consumers read the aggregated view — ONE exchange
+        // regardless of overlay depth, where a join-chain form paid an
+        // exchange per stacked sweep
+        lazy val commDegA = commDegDf().groupBy("community")
+          .agg(sum("cdeg").as("cdeg"), sum("csize").as("csize"))
+
+        // gather: active vertices' neighbor weights by neighbor community;
+        // a full frontier (cold-start first sweep) skips the semi-join.
+        // Self-loops are excluded: a supernode's self-loop travels with it,
+        // so it cancels out of the move gain — counting it into wCur (as the
+        // reference's neighbor loop does, hit_leiden.rs:234-239) freezes
+        // movement on aggregated graphs, which the reference never reaches
+        // (its public run() is single-level). Self-loops still count in
+        // degrees and m, per the modularity convention.
+        // frontier semi-join: broadcast the (small) frontier so the big
+        // adjacency is filtered map-side, never shuffled
+        val act0 =
+          if (frontierN >= nVerts) adj
+          else if (graft.util.Bcast.fits(frontierN, bytesPerRow = 16))
+            adj.join(broadcast(active.withColumnRenamed("v", "src")),
+              Seq("src"), "left_semi")
+          else adj.join(active.withColumnRenamed("v", "src"), Seq("src"),
+            "left_semi")
+        val act = act0.where(col("src") =!= col("dst"))
+        val aByDst =
+          a.select(col("v").as("dst"), col("community").as("nbrComm"))
         val byComm =
           if (cfg.saltFactor > 1) {
             // explicit skew split: hub destinations (degree > hotDegree) are
@@ -509,41 +498,15 @@ object Leiden {
               .select(col("src"), col("nbrComm"), col("weight"))
             coldJ.unionAll(hotJ).groupBy(col("src"), col("nbrComm"))
               .agg(sum("weight").as("wTo"))
-          } else if (smallGather) {
-            // one exchange for the whole gather->window->argmax chain: an
-            // explicit hash(src) repartition SATISFIES the clustering
-            // requirements of the (src, nbrComm) aggregation, the
-            // wCur window (partitionBy src) and the argmax groupBy(src)
-            // downstream, so none of them adds its own exchange. (Partial
-            // aggregation is lost, but the gather output is frontier-sized
-            // here; the cold path below keeps map-side combine.)
-            aByDst.join(broadcast(act), "dst")
-              .repartition(col("src"))
-              .groupBy(col("src"), col("nbrComm"))
-              .agg(sum("weight").as("wTo"))
           } else {
             act.join(aByDst.hint("shuffle_hash"), "dst")
               .groupBy(col("src"), col("nbrComm"))
               .agg(sum("weight").as("wTo"))
           }
 
-        // frontier-sized sweeps: the per-vertex lookup tables (community,
-        // degree, size) are frontier-filtered by a broadcast semi-join — a
-        // map-side scan of the V-sized chain, no exchange — and then
-        // broadcast into the candidate pipeline. The unfiltered form
-        // sort-merge-exchanged 2-3 V-sized tables per sweep, the dominant
-        // fixed cost of a warm-update sweep. Cold/full sweeps keep the
-        // unfiltered shuffled joins (a V-sized broadcast would not fit).
-        def flt(df: DataFrame): DataFrame =
-          if (!smallGather) df
-          else broadcast(df.join(
-            broadcast(active.withColumnRenamed("v", "src")),
-            Seq("src"), "left_semi"))
-
         // wCur (weight to own community) via a window over the same src
         // partitioning — no self-join, no duplicated subtree
-        val cur = flt(a.select(col("v").as("src"),
-          col("community").as("curComm")))
+        val cur = a.select(col("v").as("src"), col("community").as("curComm"))
         val wSrc = org.apache.spark.sql.expressions.Window.partitionBy("src")
         val j = byComm.join(cur, "src")
           .withColumn("wCur",
@@ -563,12 +526,11 @@ object Leiden {
               lit(cfg.gamma) * col("dv") *
               (col("cdegCur") - col("dv") - col("cdegCand")) / (m2 * m2)
         val candBase = j.where(col("nbrComm") =!= col("curComm"))
-          .join(flt(deg.select(col("v").as("src"), col("deg").as("dv"))),
-            "src")
+          .join(deg.select(col("v").as("src"), col("deg").as("dv")), "src")
         val candSz =
           if (unitSize) candBase.withColumn("szv", lit(1L))
           else candBase.join(
-            flt(sz.select(col("v").as("src"), col("size").as("szv"))), "src")
+            sz.select(col("v").as("src"), col("size").as("szv")), "src")
         val cand = candSz
           .join(commDegA.select(col("community").as("curComm"),
             col("cdeg").as("cdegCur"), col("csize").as("csizeCur")), "curComm")
@@ -597,47 +559,19 @@ object Leiden {
         // hash parity. Everyone else moves immediately. One V-sized join
         // folded into the same job as the gather — no extra action.
         val parity = pmod(xxhash64(col("v"), lit(sweep)), lit(2))
-        val wantMoves0 = aPrev match {
+        val wantMoves = (aPrev match {
           case None => want0.withColumn("gated", lit(false))
           case Some(p) =>
-            // same frontier-filter treatment as the lookup joins: the
-            // pre-barrier assignment is V-sized and want0 is frontier-sized
-            val prev0 = p.select(col("v"), col("community").as("prevComm"))
-            val prevJ =
-              if (!smallGather) prev0
-              else broadcast(prev0.join(broadcast(active), Seq("v"),
-                "left_semi"))
-            want0.join(prevJ, Seq("v"), "left")
+            want0.join(p.select(col("v"), col("community").as("prevComm")),
+              Seq("v"), "left")
             .withColumn("gated",
               col("prevComm") === col("newComm") && parity === 1)
             .drop("prevComm")
-        }
+        }).ckpt
 
-        // small-frontier sweeps run ONE Spark action: collect the
-        // frontier-sized move table to the driver. The moves/gated tables
-        // become LOCAL relations, so the lazy assignment overlay, the
-        // community-stat delta and the next-frontier seed all
-        // broadcast-join them at zero scan cost, and the count/gain stats
-        // come straight off the collected rows instead of a second job.
-        // Large frontiers (cold start) keep the checkpoint + agg path.
-        var wantRows: Array[org.apache.spark.sql.Row] = null
-        val wantMoves =
-          if (smallGather) {
-            wantRows = wantMoves0.collect()
-            spark.createDataFrame(java.util.Arrays.asList(wantRows: _*),
-              wantMoves0.schema)
-          } else wantMoves0.ckpt
-
-        val counts =
-          if (smallGather) {
-            val gi = wantMoves0.schema.fieldIndex("gated")
-            val gni = wantMoves0.schema.fieldIndex("gain")
-            wantRows.groupBy(_.getBoolean(gi)).map { case (k, rs) =>
-              k -> (rs.length.toLong, rs.iterator.map(_.getDouble(gni)).sum)
-            }
-          } else wantMoves.groupBy(col("gated"))
-            .agg(count(lit(1)).as("n"), sum("gain").as("g")).collect()
-            .map(r => r.getBoolean(0) -> (r.getLong(1), r.getDouble(2))).toMap
+        val counts = wantMoves.groupBy(col("gated"))
+          .agg(count(lit(1)).as("n"), sum("gain").as("g")).collect()
+          .map(r => r.getBoolean(0) -> (r.getLong(1), r.getDouble(2))).toMap
         val nWant = counts.values.map(_._1).sum
         val nMoves = counts.get(false).map(_._1).getOrElse(0L)
         // total gain the applied moves claim under the stale snapshot —
@@ -654,30 +588,20 @@ object Leiden {
             seconds = (System.nanoTime() - t0) / 1e9))
           frontierN = 0
         } else if (nMoves == 0) {
-          // everyone gated this sweep; retry them next sweep (already a
-          // local relation on the small-frontier path — no job needed)
-          active = if (smallGather) gated else gated.ckpt
-          if (smallGather) {
-            // exact next-frontier degree sum straight off the collected rows
-            val gi = wantMoves0.schema.fieldIndex("gated")
-            val dvi = wantMoves0.schema.fieldIndex("dv")
-            frontierDegSum = wantRows.iterator.filter(_.getBoolean(gi))
-              .map(_.getAs[Number](dvi).doubleValue).sum
-          }
-          // else: gated ⊆ current frontier, so a known sum stays an upper
-          // bound; an unknown (-1) one stays unknown and re-probes
+          // everyone gated this sweep; retry them next sweep. gated ⊆
+          // current frontier, so a known degree sum stays an upper bound;
+          // an unknown (-1) one stays unknown and re-probes
+          active = gated.ckpt
           frontierN = nWant
           sink.add(IterMetric("leiden.movement", level, sweep, messages = -1,
             movesAccepted = 0, frontier = frontierN, qualityDelta = 0.0,
             seconds = (System.nanoTime() - t0) / 1e9))
         } else {
           totalMoves += nMoves
-          // assignment update as a LAZY overlay: the moves table is tiny
-          // and already materialized, so consumers re-apply it as a
-          // broadcast join during their scans; a full O(V) checkpoint
-          // rewrite happens only every 4th sweep. Between flattens the
-          // overlay depth is bounded, and warm updates stop paying a
-          // vertex-table materialization per sweep.
+          // assignment update as a LAZY overlay: the moves table is
+          // already materialized, so consumers re-apply it as a join
+          // during their scans; a full O(V) checkpoint rewrite happens
+          // only every 4th sweep, which bounds the overlay depth.
           // The broadcast is gated on the APPLIED move count (known —
           // collected above): cold-start first sweeps move a large fraction
           // of all vertices, and an unconditional hint would bypass the
@@ -694,10 +618,9 @@ object Leiden {
           // incremental community-degree/size update: a pure projection of
           // the applied moves (old community, degree and size ride in the
           // argmax payload — zero joins here). Applied as a UNION of signed
-          // delta rows re-aggregated at the consumer (commDegA above) —
-          // on the small-frontier path the moves table is a local relation
-          // so the delta rows cost nothing, and the stacked form never
-          // deepens the exchange count. Materialized every 4th sweep.
+          // delta rows re-aggregated at the consumer (commDegA above), so
+          // the stacked form never deepens the exchange count.
+          // Materialized every 4th sweep.
           val cdegDelta = moves.select(explode(array(
             struct(col("oldComm").as("community"), negate(col("dv")).as("d"),
               negate(col("szv")).as("s")),
@@ -707,35 +630,23 @@ object Leiden {
               col("x.s").as("csize"))
           val cdUpd = commDegDf().select("community", "cdeg", "csize")
             .unionAll(cdegDelta)
-          commDeg =
+          commDeg = Some(
             if (sweep % 4 == 3)
               cdUpd.groupBy("community")
                 .agg(sum("cdeg").as("cdeg"), sum("csize").as("csize")).ckpt
-            else cdUpd
+            else cdUpd)
 
           val mvEdges = moves.select(col("v").as("src"), col("newComm"))
             .join(adj, "src")
 
           // K: mover and neighbor sharing a (pre-move) subcommunity
-          // (hit_leiden.rs:274-277). Small sweeps: the mover-side tables
-          // are (locally known to be) tiny — broadcast them so the V-sized
-          // assignment chain streams map-side in both lookups.
-          val srcSc = a.select(col("v").as("src"), col("subcomm").as("scu"))
-          val srcScJ =
-            if (!smallGather) srcSc
-            else broadcast(srcSc.join(
-              broadcast(moves.select(col("v").as("src"))), Seq("src"),
-              "left_semi"))
-          val withScu = mvEdges.join(srcScJ, "src")
-          val scPairs =
-            if (smallGather)
-              a.select(col("v").as("dst"), col("subcomm").as("scv"))
-                .join(broadcast(withScu), "dst")
-                .where(col("scu") === col("scv"))
-            else withScu
-              .join(a.select(col("v").as("dst"), col("subcomm").as("scv")),
-                "dst")
-              .where(col("scu") === col("scv"))
+          // (hit_leiden.rs:274-277)
+          val scPairs = mvEdges
+            .join(a.select(col("v").as("src"), col("subcomm").as("scu")),
+              "src")
+            .join(a.select(col("v").as("dst"), col("subcomm").as("scv")),
+              "dst")
+            .where(col("scu") === col("scv"))
           val newAffected = scPairs.select(explode(array(col("src"), col("dst")))
             .as("v"))
 
@@ -766,61 +677,37 @@ object Leiden {
             frontierDegSum = m2 // full frontier: Σdeg = 2m exactly
           } else {
             // next frontier: gated movers plus neighbors of applied movers
-            // now in a different community (hit_leiden.rs:270-273)
-            val nextActive = (
-              if (smallGather)
-                a.select(col("v").as("dst"), col("community").as("dcomm"))
-                  .join(broadcast(mvEdges), "dst")
-              else mvEdges.join(
-                a.select(col("v").as("dst"), col("community").as("dcomm")),
-                "dst"))
+            // now in a different community (hit_leiden.rs:270-273). Kept
+            // lazy (the gather's semi-join evaluates it in place); the
+            // loop runs on a conservative over-estimate and terminates via
+            // nWant == 0. The salt path reads `active` twice — only there
+            // is a ckpt worth its job.
+            val nextActive = mvEdges
+              .join(a.select(col("v").as("dst"), col("community").as("dcomm")),
+                "dst")
               .where(col("dcomm") =!= col("newComm"))
               .select(col("dst").as("v"))
               .unionAll(gated)
               .distinct()
-            if (smallGather) {
-              // small sweeps: COLLECT the (delta-sized) frontier — the next
-              // sweep's 3-4 broadcast builds of `active` then read a local
-              // relation instead of each re-running this subplan, and the
-              // loop gets an exact size AND exact degree sum for its gates
-              // and termination. Collecting (v, deg) instead of (v) costs a
-              // frontier-filtered map scan of `deg` inside the same action;
-              // every frontier member has a deg row by construction
-              // (movers/gated/neighbors all have edges).
-              val withDeg = deg.join(broadcast(nextActive), Seq("v"),
-                "left_semi")
-              val rows = withDeg.collect()
-              active = spark.createDataFrame(
-                java.util.Arrays.asList(rows: _*), withDeg.schema)
-              frontierN = rows.length.toLong
-              val dvi = withDeg.schema.fieldIndex("deg")
-              frontierDegSum = rows.iterator
-                .map(_.getAs[Number](dvi).doubleValue).sum
-            } else {
-              // large frontiers: keep it lazy (the gather's semi-join
-              // evaluates it in place); the loop runs on a conservative
-              // over-estimate and terminates via nWant == 0. The salt path
-              // reads `active` twice — only there is a ckpt worth its job.
-              active = if (cfg.saltFactor > 1) nextActive.ckpt else nextActive
-              val nGated = counts.get(true).map(_._1).getOrElse(0L)
-              // exact counts, no artificial floor: a provably-empty next
-              // frontier terminates NOW instead of paying one more full
-              // gather sweep that discovers nWant == 0 (nMoves > 0 in this
-              // branch, so floor the estimate at the movers themselves)
-              frontierN = math.max(nMoves, (nMoves * avgDeg).toLong + nGated)
-              frontierDegSum = -1.0 // lazy frontier: members unknown
-              if (frontierN >= nVerts) {
-                // estimate covers the graph: promote to the explicit full
-                // frontier so the gather skips its semi-join (same shape as
-                // the dense re-activation branch — uncapped on purpose)
-                active = a.select("v")
-                frontierN = nVerts
-                frontierDegSum = m2
-              }
+            active = if (cfg.saltFactor > 1) nextActive.ckpt else nextActive
+            val nGated = counts.get(true).map(_._1).getOrElse(0L)
+            // exact counts, no artificial floor: a provably-empty next
+            // frontier terminates NOW instead of paying one more full
+            // gather sweep that discovers nWant == 0 (nMoves > 0 in this
+            // branch, so floor the estimate at the movers themselves)
+            frontierN = math.max(nMoves, (nMoves * avgDeg).toLong + nGated)
+            frontierDegSum = -1.0 // lazy frontier: members unknown
+            if (frontierN >= nVerts) {
+              // estimate covers the graph: promote to the explicit full
+              // frontier so the gather skips its semi-join (same shape as
+              // the dense re-activation branch — uncapped on purpose)
+              active = a.select("v")
+              frontierN = nVerts
+              frontierDegSum = m2
             }
           }
         }
-      sweep += 1
+        sweep += 1
       }
     }
     // flatten any remaining lazy overlay once on exit
@@ -880,11 +767,12 @@ object Leiden {
     * argmax tie policy (max gain, ties to the smallest community id —
     * the distributed `max_by(struct(gain, -nbrComm))`) and the same
     * sweep-salted revert gating ([[Xx.gateParity]]). Spark work per
-    * sweep: ONE delta-sized gather action — the adjacency + neighbor
-    * attributes of vertices newly activated since the last sweep —
-    * instead of the 6-9 broadcast sub-jobs and V-sized map scans of a
-    * distributed sweep. Bails back to the distributed loop on dense
-    * re-activation or a frontier outgrowing the byte budget.
+    * sweep: at most ONE delta-sized gather action — the adjacency +
+    * neighbor attributes of vertices newly activated since the last
+    * sweep — instead of the shuffled sweep's joins over the V-sized
+    * tables. This is the only sweep shape for frontiers that fit the
+    * budget. Bails back to the shuffled sweep on dense re-activation or
+    * a frontier outgrowing the byte budget.
     */
   private def localMovePhase(spark: SparkSession, adj: DataFrame,
       a0: DataFrame, aPrev0: Option[DataFrame], active0: DataFrame,
@@ -1258,176 +1146,175 @@ object Leiden {
     val sz = nodeSize.getOrElse(
       assign.select(col("v"), lit(1L).as("size"))).select("v", "size")
     var a = assign
-    var refined: DataFrame = null
     var freshUsed = 0L
 
-    if (isInitial) {
-      // identity subcommunities are all singletons — no split possible;
-      // everyone is refined (hit_leiden.rs:373-379)
-      refined = a.select("v")
-    } else {
-      // --- phase 1: connected-component split of affected subcommunities
-      // (hit_leiden.rs:296-371, BFS -> distributed hash-min CC restricted
-      // to intra-subcommunity edges). The affected set is delta-bound on
-      // warm updates: broadcast it into the semi-joins so the V-sized
-      // assignment streams map-side instead of being exchanged.
-      val nAffected = affected.rows
-      val affScs = a.join(
-          graft.util.Bcast.ifFits(affected.select("v"), nAffected, 16),
-          Seq("v"), "left_semi")
-        .select(col("subcomm")).distinct().ckpt
-      // members of affected subcommunities: delta-bound on warm updates.
-      // When the set is small, its label projections broadcast into the
-      // intra-edge extraction so the big adjacency streams map-side —
-      // the unconditional form sort-merge-joined the full adjacency
-      // against the full assignment twice per batch.
-      // |affScs| <= |affected| (one subcomm per affected vertex at most),
-      // so the already-known nAffected bounds the broadcast gate — no
-      // extra count action
-      val members = a.join(graft.util.Bcast.ifFits(affScs, nAffected, 16),
-        Seq("subcomm"), "left_semi").ckpt
-      val membersV = members.select("v")
-      val nMembers = members.rows
-      def mb(df: DataFrame): DataFrame =
-        graft.util.Bcast.ifFits(df, nMembers, bytesPerRow = 32)
-      val intra = adj
-        .join(mb(members.select(col("v").as("src"),
-          col("subcomm").as("scu"))), "src")
-        .join(mb(members.select(col("v").as("dst"),
-          col("subcomm").as("scv"))), "dst")
-        .where(col("scu") === col("scv"))
-        .where(col("src") < col("dst")) // canonical, drop self-loops
-        .select("src", "dst")
-      // batch-sized affected subgraphs resolve their components in a
-      // driver-side union-find — distributed hash-min CC on a few
-      // thousand rows is several fixed-cost jobs for nothing. The local
-      // path is gated on BOTH members and intra-EDGES (a dense affected
-      // subcommunity can carry orders of magnitude more edges than
-      // members; collecting those would land on the driver heap) —
-      // mirrors ConnectedComponents.run's two-sided guard.
-      //
-      // On the local path the ENTIRE largest-keeps-id bookkeeping
-      // (fragment sizes, keeper choice, fresh-id ranks — hit_leiden.rs:
-      // 352-370) runs on the driver over the already-collected members:
-      // what used to be ~6 fixed-cost jobs (ckpts, windows, counts)
-      // becomes pure JVM work, and only the final V-sized relabel touches
-      // the cluster. The distributed path keeps the window machinery.
-      var localSplit = false
-      if (cfg.localSolveEdges > 0 && nMembers <= cfg.localSolveEdges) {
-        val intraC = intra.ckpt
-        val nIntra = intraC.rows
-        if (nIntra <= cfg.localSolveEdges) {
-          localSplit = true
-          // a USING semi-join moves the key column first — resolve field
-          // positions by name, never by ordinal
-          val vIdx = members.schema.fieldIndex("v")
-          val scIdx = members.schema.fieldIndex("subcomm")
-          val memRows = members.collect()
-          val vs = memRows.map(_.getLong(vIdx))
-          val es = intraC.collect().map(r => (r.getLong(0), r.getLong(1)))
-          val comp = LocalLeiden.localComponents(vs, es)
-          val scOf = memRows.iterator
-            .map(r => r.getLong(vIdx) -> r.getLong(scIdx)).toMap
-          // fragment sizes per (subcomm, component)
-          val fragN = mutable.HashMap.empty[(Long, Long), Long]
-          vs.foreach { v =>
-            val k = (scOf(v), comp(v))
-            fragN(k) = fragN.getOrElse(k, 0L) + 1L
-          }
-          // keeper per subcomm: largest fragment, ties to the smallest
-          // component id (same order as the distributed wKeep window)
-          val keeperOf = fragN.toSeq.groupBy(_._1._1).map { case (sc, fs) =>
-            sc -> fs.maxBy { case ((_, c), n) => (n, -c) }._1._2
-          }
-          // fresh ids in ascending (subcomm, component) order — identical
-          // to the distributed wFresh global window
-          val freshFrags = fragN.keysIterator
-            .filter { case (sc, c) => keeperOf(sc) != c }.toSeq.sorted
-          freshUsed = freshFrags.length.toLong
-          val newScOf: Map[(Long, Long), Long] =
-            keeperOf.map { case (sc, c) => (sc, c) -> sc } ++
-              freshFrags.zipWithIndex.map { case (k, i) =>
-                k -> (freshIdBase + i + 1)
-              }
-          // per-vertex relabel map, applied to the V-sized assignment as
-          // one broadcast overlay join
-          val relabRows = memRows.iterator.map { r =>
-            val v = r.getLong(vIdx)
-            org.apache.spark.sql.Row(v, newScOf((scOf(v), comp(v))))
-          }.toSeq
-          import org.apache.spark.sql.types._
-          val relabDf = spark.createDataFrame(
-            new java.util.ArrayList(relabRows.asJava),
-            StructType(Seq(StructField("v", LongType, nullable = false),
-              StructField("newSc", LongType, nullable = false))))
-          refined = spark.createDataFrame(
-            new java.util.ArrayList(relabRows.collect {
-              case r if r.getLong(1) != scOf(r.getLong(0)) =>
-                org.apache.spark.sql.Row(r.getLong(0))
-            }.asJava),
-            StructType(Seq(StructField("v", LongType, nullable = false))))
-          a = a.join(broadcast(relabDf), Seq("v"), "left")
-            .select(col("v"), col("community"),
-              coalesce(col("newSc"), col("subcomm")).as("subcomm")).ckpt
+    val refined: DataFrame =
+      if (isInitial) {
+        // identity subcommunities are all singletons — no split possible;
+        // everyone is refined (hit_leiden.rs:373-379)
+        a.select("v")
+      } else {
+        // --- phase 1: connected-component split of affected subcommunities
+        // (hit_leiden.rs:296-371, BFS -> distributed hash-min CC restricted
+        // to intra-subcommunity edges). The affected set is delta-bound on
+        // warm updates: broadcast it into the semi-joins so the V-sized
+        // assignment streams map-side instead of being exchanged.
+        val nAffected = affected.rows
+        val affScs = a.join(
+            graft.util.Bcast.ifFits(affected.select("v"), nAffected, 16),
+            Seq("v"), "left_semi")
+          .select(col("subcomm")).distinct().ckpt
+        // members of affected subcommunities: delta-bound on warm updates.
+        // When the set is small, its label projections broadcast into the
+        // intra-edge extraction so the big adjacency streams map-side —
+        // the unconditional form sort-merge-joined the full adjacency
+        // against the full assignment twice per batch.
+        // |affScs| <= |affected| (one subcomm per affected vertex at most),
+        // so the already-known nAffected bounds the broadcast gate — no
+        // extra count action
+        val members = a.join(graft.util.Bcast.ifFits(affScs, nAffected, 16),
+          Seq("subcomm"), "left_semi").ckpt
+        val membersV = members.select("v")
+        val nMembers = members.rows
+        def mb(df: DataFrame): DataFrame =
+          graft.util.Bcast.ifFits(df, nMembers, bytesPerRow = 32)
+        val intra = adj
+          .join(mb(members.select(col("v").as("src"),
+            col("subcomm").as("scu"))), "src")
+          .join(mb(members.select(col("v").as("dst"),
+            col("subcomm").as("scv"))), "dst")
+          .where(col("scu") === col("scv"))
+          .where(col("src") < col("dst")) // canonical, drop self-loops
+          .select("src", "dst")
+        // batch-sized affected subgraphs resolve their components in a
+        // driver-side union-find — distributed hash-min CC on a few
+        // thousand rows is several fixed-cost jobs for nothing. The local
+        // path is gated on BOTH members and intra-EDGES (a dense affected
+        // subcommunity can carry orders of magnitude more edges than
+        // members; collecting those would land on the driver heap) —
+        // mirrors ConnectedComponents.run's two-sided guard.
+        //
+        // On the local path the ENTIRE largest-keeps-id bookkeeping
+        // (fragment sizes, keeper choice, fresh-id ranks — hit_leiden.rs:
+        // 352-370) runs on the driver over the already-collected members:
+        // what used to be ~6 fixed-cost jobs (ckpts, windows, counts)
+        // becomes pure JVM work, and only the final V-sized relabel touches
+        // the cluster. The distributed path keeps the window machinery.
+        val localIntra =
+          if (cfg.localSolveEdges > 0 && nMembers <= cfg.localSolveEdges)
+            Some(intra.ckpt).filter(_.rows <= cfg.localSolveEdges)
+          else None
+        localIntra match {
+          case Some(intraC) =>
+            // a USING semi-join moves the key column first — resolve field
+            // positions by name, never by ordinal
+            val vIdx = members.schema.fieldIndex("v")
+            val scIdx = members.schema.fieldIndex("subcomm")
+            val memRows = members.collect()
+            val vs = memRows.map(_.getLong(vIdx))
+            val es = intraC.collect().map(r => (r.getLong(0), r.getLong(1)))
+            val comp = LocalLeiden.localComponents(vs, es)
+            val scOf = memRows.iterator
+              .map(r => r.getLong(vIdx) -> r.getLong(scIdx)).toMap
+            // fragment sizes per (subcomm, component)
+            val fragN = mutable.HashMap.empty[(Long, Long), Long]
+            vs.foreach { v =>
+              val k = (scOf(v), comp(v))
+              fragN(k) = fragN.getOrElse(k, 0L) + 1L
+            }
+            // keeper per subcomm: largest fragment, ties to the smallest
+            // component id (same order as the distributed wKeep window)
+            val keeperOf = fragN.toSeq.groupBy(_._1._1).map { case (sc, fs) =>
+              sc -> fs.maxBy { case ((_, c), n) => (n, -c) }._1._2
+            }
+            // fresh ids in ascending (subcomm, component) order — identical
+            // to the distributed wFresh global window
+            val freshFrags = fragN.keysIterator
+              .filter { case (sc, c) => keeperOf(sc) != c }.toSeq.sorted
+            freshUsed = freshFrags.length.toLong
+            val newScOf: Map[(Long, Long), Long] =
+              keeperOf.map { case (sc, c) => (sc, c) -> sc } ++
+                freshFrags.zipWithIndex.map { case (k, i) =>
+                  k -> (freshIdBase + i + 1)
+                }
+            // per-vertex relabel map, applied to the V-sized assignment as
+            // one broadcast overlay join
+            val relabRows = memRows.iterator.map { r =>
+              val v = r.getLong(vIdx)
+              org.apache.spark.sql.Row(v, newScOf((scOf(v), comp(v))))
+            }.toSeq
+            import org.apache.spark.sql.types._
+            val relabDf = spark.createDataFrame(
+              new java.util.ArrayList(relabRows.asJava),
+              StructType(Seq(StructField("v", LongType, nullable = false),
+                StructField("newSc", LongType, nullable = false))))
+            a = a.join(broadcast(relabDf), Seq("v"), "left")
+              .select(col("v"), col("community"),
+                coalesce(col("newSc"), col("subcomm")).as("subcomm")).ckpt
+            spark.createDataFrame(
+              new java.util.ArrayList(relabRows.collect {
+                case r if r.getLong(1) != scOf(r.getLong(0)) =>
+                  org.apache.spark.sql.Row(r.getLong(0))
+              }.asJava),
+              StructType(Seq(StructField("v", LongType, nullable = false))))
+          case None =>
+            val comps = ConnectedComponents.run(intra,
+              vertices = Some(membersV), sink = MetricsSink.discard).components
+
+            // largest-component-keeps-id (hit_leiden.rs:352-370, paper
+            // section 5.1): the biggest fragment of a split keeps the old
+            // subcommunity id — community-id stability a GraphRAG user
+            // diffing batch N vs N+1 observes — and the rest get fresh
+            // counter ids above the caller's watermark. The fresh-rank
+            // window is global but bounded by the SPLIT fragments this batch.
+            import org.apache.spark.sql.expressions.Window
+            // comps vertices are exactly the members set — join the small one
+            val withSc = comps.join(members.select(col("v"), col("subcomm")),
+              "v")
+            val compSizes = withSc.groupBy("subcomm", "component")
+              .agg(count(lit(1)).as("n")).ckpt
+            val wKeep = Window.partitionBy("subcomm")
+              .orderBy(desc("n"), asc("component"))
+            val ranked = compSizes.withColumn("rn", row_number().over(wKeep))
+            val keepers = ranked.where(col("rn") === 1)
+              .select(col("subcomm"), col("component"),
+                col("subcomm").as("newSc"))
+            // Enforce (not just document) the delta-bound of the global
+            // fresh-id window: it is a single-partition sort over the batch's
+            // SPLIT fragments only. One cheap agg over the checkpointed
+            // compSizes turns the assumption into a guard that fails loudly
+            // before a pathological batch funnels millions of rows through
+            // one task.
+            val Array(nFragRow) = compSizes
+              .agg(count(lit(1)).as("frags"),
+                count_distinct(col("subcomm")).as("scs")).collect()
+            val nSplitFrags = nFragRow.getLong(0) - nFragRow.getLong(1)
+            require(nSplitFrags <= 50_000_000L,
+              s"refinement split produced $nSplitFrags fresh fragments — " +
+                "exceeds the single-partition fresh-id window bound; " +
+                "batch is not delta-sized")
+            val wFresh = Window.orderBy("subcomm", "component")
+            val freshComps = ranked.where(col("rn") > 1)
+              .select(col("subcomm"), col("component"),
+                (lit(freshIdBase) + row_number().over(wFresh)).as("newSc"))
+              .ckpt
+            // rn > 1 rows are exactly the non-keeper fragments counted above
+            freshUsed = nSplitFrags
+            val scMap = keepers.unionAll(freshComps)
+            val relabeled = a
+              .join(mb(withSc.select(col("v"), col("component"))), Seq("v"),
+                "left")
+              .join(mb(scMap), Seq("subcomm", "component"), "left")
+              .select(col("v"), col("community"),
+                coalesce(col("newSc"), col("subcomm")).as("newSc"),
+                col("subcomm"))
+            val refinedD = relabeled.where(col("newSc") =!= col("subcomm"))
+              .select("v").ckpt
+            a = relabeled.select(col("v"), col("community"),
+              col("newSc").as("subcomm")).ckpt
+            refinedD
         }
       }
-      if (!localSplit) {
-        val comps = ConnectedComponents.run(intra,
-          vertices = Some(membersV), sink = MetricsSink.discard).components
-
-        // largest-component-keeps-id (hit_leiden.rs:352-370, paper
-        // section 5.1): the biggest fragment of a split keeps the old
-        // subcommunity id — community-id stability a GraphRAG user
-        // diffing batch N vs N+1 observes — and the rest get fresh
-        // counter ids above the caller's watermark. The fresh-rank
-        // window is global but bounded by the SPLIT fragments this batch.
-        import org.apache.spark.sql.expressions.Window
-        // comps vertices are exactly the members set — join the small one
-        val withSc = comps.join(members.select(col("v"), col("subcomm")),
-          "v")
-        val compSizes = withSc.groupBy("subcomm", "component")
-          .agg(count(lit(1)).as("n")).ckpt
-        val wKeep = Window.partitionBy("subcomm")
-          .orderBy(desc("n"), asc("component"))
-        val ranked = compSizes.withColumn("rn", row_number().over(wKeep))
-        val keepers = ranked.where(col("rn") === 1)
-          .select(col("subcomm"), col("component"),
-            col("subcomm").as("newSc"))
-        // Enforce (not just document) the delta-bound of the global
-        // fresh-id window: it is a single-partition sort over the batch's
-        // SPLIT fragments only. One cheap agg over the checkpointed
-        // compSizes turns the assumption into a guard that fails loudly
-        // before a pathological batch funnels millions of rows through
-        // one task.
-        val Array(nFragRow) = compSizes
-          .agg(count(lit(1)).as("frags"),
-            count_distinct(col("subcomm")).as("scs")).collect()
-        val nSplitFrags = nFragRow.getLong(0) - nFragRow.getLong(1)
-        require(nSplitFrags <= 50_000_000L,
-          s"refinement split produced $nSplitFrags fresh fragments — " +
-            "exceeds the single-partition fresh-id window bound; " +
-            "batch is not delta-sized")
-        val wFresh = Window.orderBy("subcomm", "component")
-        val freshComps = ranked.where(col("rn") > 1)
-          .select(col("subcomm"), col("component"),
-            (lit(freshIdBase) + row_number().over(wFresh)).as("newSc"))
-          .ckpt
-        // rn > 1 rows are exactly the non-keeper fragments counted above
-        freshUsed = nSplitFrags
-        val scMap = keepers.unionAll(freshComps)
-        val relabeled = a
-          .join(mb(withSc.select(col("v"), col("component"))), Seq("v"),
-            "left")
-          .join(mb(scMap), Seq("subcomm", "component"), "left")
-          .select(col("v"), col("community"),
-            coalesce(col("newSc"), col("subcomm")).as("newSc"),
-            col("subcomm"))
-        refined = relabeled.where(col("newSc") =!= col("subcomm"))
-          .select("v").ckpt
-        a = relabeled.select(col("v"), col("community"),
-          col("newSc").as("subcomm")).ckpt
-      }
-    }
 
     // --- phase 2: merge singleton subcommunities within their community
     // (hit_leiden.rs:417-482; BSP rounds, see scaladoc for the anti-swap
@@ -1438,10 +1325,9 @@ object Leiden {
     // stats outside those communities are dead weight (delta-bound, not
     // O(V), per batch).
     val affComms =
-      if (isInitial) null
-      else a.join(refined, Seq("v"), "left_semi")
-        .select("community").distinct().ckpt
-    val nAffComms = if (isInitial) -1L else affComms.rows
+      if (isInitial) None
+      else Some(a.join(refined, Seq("v"), "left_semi")
+        .select("community").distinct().ckpt)
     var round = 0
     var moved = 1L
 
@@ -1454,11 +1340,11 @@ object Leiden {
     // push replace 4-6 jobs PER ROUND. Gated on the scope row count and
     // the exact refined degree sum fitting the broadcast budget.
     var localRounds = false
-    if (!isInitial && cfg.localMoveSweeps && nAffComms > 0 &&
-        graft.util.Bcast.fits(nAffComms, bytesPerRow = 16)) {
+    for (ac <- affComms if ac.rows > 0 &&
+        graft.util.Bcast.fits(ac.rows, bytesPerRow = 16)) {
       import spark.implicits._
       val scopeAttrs0 = a
-        .join(broadcast(affComms), Seq("community"), "left_semi")
+        .join(broadcast(ac), Seq("community"), "left_semi")
         .join(deg, Seq("v"))
       val scopeAttrs =
         if (unitSize) scopeAttrs0.withColumn("size", lit(1L))
@@ -1597,11 +1483,9 @@ object Leiden {
       // a V/E-sized table (adjacency, degrees) — those tables then stream
       // map-side and nothing bigger than the scope is exchanged. Initial
       // (V-sized) rounds keep the shuffled joins.
-      val scope =
-        if (isInitial) a
-        else a.join(
-          graft.util.Bcast.ifFits(affComms, nAffComms, 16),
-          Seq("community"), "left_semi").ckpt
+      val scope = affComms.fold(a)(ac => a.join(
+        graft.util.Bcast.ifFits(ac, ac.rows, 16),
+        Seq("community"), "left_semi").ckpt)
       val scopeSmall = !isInitial && {
         val n = scope.rows
         graft.util.Bcast.fits(n, bytesPerRow = 48)
@@ -1697,22 +1581,19 @@ object Leiden {
       // delta-bound rounds: ONE action — collect the merge table and turn
       // it into a local relation (stats come off the rows, the overlay
       // join broadcasts it for free); V-sized rounds keep ckpt + agg
-      var mRows: Array[org.apache.spark.sql.Row] = null
-      val moves =
+      val (moves, nMoved, gSum) =
         if (scopeSmall) {
-          mRows = moves0.collect()
-          spark.createDataFrame(java.util.Arrays.asList(mRows: _*),
-            moves0.schema)
-        } else moves0.ckpt
-      val gSum =
-        if (scopeSmall) {
-          moved = mRows.length.toLong
-          mRows.iterator.map(_.getDouble(2)).sum
+          val mRows = moves0.collect()
+          (spark.createDataFrame(java.util.Arrays.asList(mRows: _*),
+            moves0.schema), mRows.length.toLong,
+            mRows.iterator.map(_.getDouble(2)).sum)
         } else {
-          val mstats = moves.agg(count(lit(1)), sum("gain")).collect()(0)
-          moved = mstats.getLong(0)
-          if (mstats.isNullAt(1)) 0.0 else mstats.getDouble(1)
+          val ck = moves0.ckpt
+          val mstats = ck.agg(count(lit(1)), sum("gain")).collect()(0)
+          (ck, mstats.getLong(0),
+            if (mstats.isNullAt(1)) 0.0 else mstats.getDouble(1))
         }
+      moved = nMoved
       if (moved > 0) {
         // lazy overlay, flattened every other round (see movement);
         // broadcast gated on the applied merge count like movement's

@@ -308,14 +308,11 @@ object LocalLeiden {
     *                 modularity
     * @param labels0  per-vertex seed community LABEL (external id space);
     *                 distinct labels = distinct seed communities
-    * @param activeInit per-vertex level-0 movement activation (delta
-    *                 frontier); null = all active (cold / full polish)
     * @return final (vertex -> community), community = min member id
     */
   def solveDense(verts: Array[Long], src0: Array[Int], dst0: Array[Int],
       w0: Array[Double], sizes0: Array[Double], labels0: Array[Long],
-      cfg: Leiden.Config,
-      activeInit: Array[Boolean] = null): Map[Long, Long] = {
+      cfg: Leiden.Config): Map[Long, Long] = {
     val nBase = verts.length
     if (nBase == 0) return Map.empty
     var src = src0; var dst = dst0; var w = w0
@@ -341,8 +338,7 @@ object LocalLeiden {
     var level = 0
     var done = false
     while (!done && level < cfg.maxLevels) {
-      val (comm, sub) = solveLevel(n, src, dst, w, sizes, commInit, m2, cfg,
-        if (level == 0) activeInit else null)
+      val (comm, sub) = solveLevel(n, src, dst, w, sizes, commInit, m2, cfg)
       topComm = comm
       // remap subcommunities to dense next-level ids (first-occurrence
       // order — deterministic)
@@ -427,8 +423,7 @@ object LocalLeiden {
     * Returns (community, subcomm) as dense indices. */
   private def solveLevel(n: Int, src: Array[Int], dst: Array[Int],
       w: Array[Double], sz: Array[Double], commInit: Array[Int],
-      m2: Double, cfg: Leiden.Config,
-      activeInit: Array[Boolean] = null): (Array[Int], Array[Int]) = {
+      m2: Double, cfg: Leiden.Config): (Array[Int], Array[Int]) = {
 
     // CSR (degree count -> prefix sum -> scatter), both directions,
     // self-loops excluded from gathers but counted twice in degrees
@@ -480,10 +475,8 @@ object LocalLeiden {
     // (parallel_frontier.rs:117-174), epsilon-gain round floor (the
     // quadratic term makes arbitrarily small positive gains real; the
     // forfeited tail is far inside the 0.001 equivalence band)
-    val active =
-      if (activeInit == null) Array.fill(n)(true)
-      else java.util.Arrays.copyOf(activeInit, n)
-    var anyActive = activeInit == null || active.exists(identity)
+    val active = Array.fill(n)(true)
+    var anyActive = true
     var rounds = 0
     val wBuf = new Array[Double](n)
     val dirty = new Array[Int](n)

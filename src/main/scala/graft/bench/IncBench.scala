@@ -48,33 +48,31 @@ object IncBench {
       degIntra = 6, degInter = 1).localCheckpoint(true)
     val (init, batches) = Incremental.paperSplit(edges, 0.8, batchSize,
       rounds)
-    // A/B diagnostics: SPARK_GRAFT_INC_HIER=0 pins the re-solve path
-    val cfg = graft.algo.Leiden.Config(incrementalHierarchy =
-      !sys.env.get("SPARK_GRAFT_INC_HIER").contains("0"))
 
     def secs[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f
       (r, (System.nanoTime() - t0) / 1e9)
     }
 
-    val (state0, tInit) = secs(Incremental.initial(init, cfg))
+    val (state0, tInit) = secs(Incremental.initial(init))
     var state = state0
     var cumulative = init
     val rows = batches.zipWithIndex.map { case (b, i) =>
       cumulative = cumulative.unionAll(b).localCheckpoint(true)
       val (next, tWarm) = secs {
-        val s = Incremental.update(state, b, cfg)
+        val s = Incremental.update(state, b)
         s.assign.count(); s
       }
       state = next
-      val (cold, tCold) =
-        if (doCold) secs {
-          val s = Incremental.initial(cumulative, cfg); s.assign.count(); s
-        } else (null, 0.0)
+      val cold =
+        if (doCold) Some(secs {
+          val s = Incremental.initial(cumulative); s.assign.count(); s
+        }) else None
+      val tCold = cold.fold(0.0)(_._2)
       val qWarm = Quality.modularity(state.canon,
         state.assign.select(col("v"), col("community")))
-      val qCold = if (doCold) Quality.modularity(cold.canon,
-        cold.assign.select(col("v"), col("community"))) else 0.0
+      val qCold = cold.fold(0.0) { case (s, _) => Quality.modularity(s.canon,
+        s.assign.select(col("v"), col("community"))) }
       BatchRow(i, tWarm, tCold, if (doCold) tCold / tWarm else 0.0,
         qWarm, qCold)
     }

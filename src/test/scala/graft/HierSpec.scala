@@ -15,6 +15,12 @@ class HierSpec extends SparkSpecBase {
     graft.source.CodeTableSynth.sbmEdges(spark, n, nBlocks = 4,
       degIntra = 4, degInter = 1, seed = seed)
 
+  /** The re-solve oracle: an update from a state with no maintained
+    * composition takes the supergraph re-solve, as after a resume. */
+  private def resolveUpdate(st: Incremental.State,
+      b: org.apache.spark.sql.DataFrame): Incremental.State =
+    Incremental.update(st.copy(upper = None), b)
+
   private def modularity(st: Incremental.State): Double =
     Quality.modularity(st.canon,
       st.assign.select(col("v"), col("community")), 1.0)
@@ -42,22 +48,19 @@ class HierSpec extends SparkSpecBase {
       "0.001 quality band, deterministic across runs") {
     val g = sbm(600)
     val (init, batches) = Incremental.paperSplit(g, 0.7, 60, 4)
-    val cfgHier = Leiden.Config(incrementalHierarchy = true)
-    val cfgSolve = Leiden.Config(incrementalHierarchy = false)
-
-    var hier = Incremental.initial(init, cfgHier)
+    var hier = Incremental.initial(init)
     assert(hier.upper.isDefined,
       "local path must build the maintained composition")
-    var solve = Incremental.initial(init, cfgSolve)
-    var hier2 = Incremental.initial(init, cfgHier)
+    var solve = hier
+    var hier2 = Incremental.initial(init)
     // the reference's equivalence band (quality delta <= 0.001,
     // equivalence.rs:21-27), held EVERY batch — fresh-seat rebuild keeps
     // the live path at re-solve quality, not merely drifting within it
     var k = 0
     for (b <- batches) {
-      hier = Incremental.update(hier, b, cfgHier)
-      solve = Incremental.update(solve, b, cfgSolve)
-      hier2 = Incremental.update(hier2, b, cfgHier)
+      hier = Incremental.update(hier, b)
+      solve = resolveUpdate(solve, b)
+      hier2 = Incremental.update(hier2, b)
       k += 1
       val qh = modularity(hier)
       val qs = modularity(solve)
@@ -173,9 +176,8 @@ class HierSpec extends SparkSpecBase {
       (0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 0L, 1.0),
       (10L, 11L, 1.0), (11L, 12L, 1.0), (12L, 10L, 1.0),
       (2L, 10L, 3.0))
-    val cfg = Leiden.Config(incrementalHierarchy = true)
-    var st = Incremental.initial(g, cfg)
-    st = Incremental.update(st, edges((2L, 10L, -3.0)), cfg)
+    var st = Incremental.initial(g)
+    st = Incremental.update(st, edges((2L, 10L, -3.0)))
     assertConnected(st)
     val assign = toMapLL(st.assign.select(col("v"), col("community")))
     assert(assign(0L) == assign(1L) && assign(1L) == assign(2L))
@@ -188,21 +190,19 @@ class HierSpec extends SparkSpecBase {
       "the id watermark monotone") {
     val g = sbm(400, seed = 13)
     val (init, batches) = Incremental.paperSplit(g, 0.75, 40, 2)
-    val cfgHier = Leiden.Config(incrementalHierarchy = true)
-    val cfgSolve = Leiden.Config(incrementalHierarchy = false)
-    var hier = Incremental.initial(init, cfgHier)
-    var solve = Incremental.initial(init, cfgSolve)
+    var hier = Incremental.initial(init)
+    var solve = hier
     var lastMax = hier.maxId
     for (b <- batches) {
       // insertions plus a deletion echo of half the previous edges
-      hier = Incremental.update(hier, b, cfgHier)
-      solve = Incremental.update(solve, b, cfgSolve)
+      hier = Incremental.update(hier, b)
+      solve = resolveUpdate(solve, b)
       assert(hier.maxId >= lastMax, "id watermark went backwards")
       lastMax = hier.maxId
       val del = b.limit(10).select(col("src"), col("dst"),
         negate(col("weight")).as("weight"))
-      hier = Incremental.update(hier, del, cfgHier)
-      solve = Incremental.update(solve, del, cfgSolve)
+      hier = Incremental.update(hier, del)
+      solve = resolveUpdate(solve, del)
     }
     val qh = modularity(hier)
     val qs = modularity(solve)
@@ -214,14 +214,13 @@ class HierSpec extends SparkSpecBase {
   test("hier cache absent (resume) falls back to re-solve and rebuilds") {
     val g = sbm(300, seed = 5)
     val (init, batches) = Incremental.paperSplit(g, 0.8, 30, 2)
-    val cfg = Leiden.Config(incrementalHierarchy = true)
-    var st = Incremental.initial(init, cfg)
+    var st = Incremental.initial(init)
     // simulate resume: hierarchy (and mirror) gone
     st = st.copy(superCache = None, upper = None)
-    st = Incremental.update(st, batches.head, cfg)
+    st = Incremental.update(st, batches.head)
     assert(st.upper.isDefined,
       "re-solve must rebuild the maintained composition")
-    st = Incremental.update(st, batches(1), cfg)
+    st = Incremental.update(st, batches(1))
     assert(st.assign.count() > 0)
     assertConnected(st)
   }

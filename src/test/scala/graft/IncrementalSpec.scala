@@ -253,4 +253,36 @@ class IncrementalSpec extends SparkSpecBase {
       .getDouble(0)
     assert(drv.activeDegSum.contains(degSum), (drv.activeDegSum, degSum))
   }
+
+  test("resume: a vertex whose edges were all deleted gets its degree row " +
+      "back when a later batch re-attaches it, on both prologues") {
+    // triangles 0-1-2 and 3-4-5, pendant 6 on 0
+    val g = edges((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 0L, 1.0),
+      (3L, 4L, 1.0), (4L, 5L, 1.0), (5L, 3L, 1.0), (6L, 0L, 1.0))
+    val cut = edges((6L, 0L, -1.0))
+    val reattach = edges((6L, 3L, 1.0), (6L, 4L, 1.0), (6L, 5L, 1.0))
+    def facts(st: Incremental.State) =
+      (st.assign.collect().map(r =>
+        r.getAs[Long]("v") -> (r.getAs[Long]("community"),
+          r.getAs[Long]("subcomm"))).toMap,
+        toMapLD(st.deg.get), st.maxId, st.m2)
+    // the driver prologue, then a 64-byte budget that refuses the delta
+    // collect: the distributed prologue
+    for ((name, budget) <- Seq("driver" -> None, "distributed" -> Some(64L))) {
+      def run[T](f: => T): T = budget.fold(f)(withByteBudget(_)(f))
+      val (mem, resumed) = run {
+        val st1 = Incremental.update(Incremental.initial(g), cut)
+        // a resume derives degrees and the supergraph from the edges, so
+        // vertex 6, now edgeless, has no degree row
+        val r1 = Incremental.hydrate(st1.copy(deg = None, superCanon = None))
+        assert(!toMapLD(r1.deg.get).contains(6L))
+        (Incremental.update(st1, reattach), Incremental.update(r1, reattach))
+      }
+      assert(toMapLD(resumed.deg.get).get(6L).contains(3.0),
+        s"$name prologue: post-delta degree of 6 is " +
+          toMapLD(resumed.deg.get).get(6L))
+      assert(facts(resumed) == facts(mem),
+        s"$name prologue: the resumed state differs from the in-memory one")
+    }
+  }
 }

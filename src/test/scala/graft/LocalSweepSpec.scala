@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.algo.{Incremental, Leiden, Quality}
 
-/** Round-5: driver-local movement sweeps (Leiden.localMovePhase) — the
-  * warm-update hot path — against the distributed BSP sweep loop they
-  * replace. The local loop claims EXACT parity (same snapshots, gain
-  * argmax, revert gating), so these tests compare assignments exactly,
-  * not just quality bands.
+/** Driver-local movement sweeps (Leiden.localMovePhase) and refinement
+  * rounds — the warm-update hot path — against the shuffled BSP sweep
+  * and distributed rounds a frontier past the byte budget takes. The
+  * local loops claim EXACT parity (same snapshots, gain argmax, revert
+  * gating), so these tests compare assignments exactly, not just
+  * quality bands.
   */
 class LocalSweepSpec extends SparkSpecBase {
 
@@ -27,50 +28,53 @@ class LocalSweepSpec extends SparkSpecBase {
     }
   }
 
+  /** A byte budget below every per-row width: each broadcast gate
+    * refuses every non-empty table, so movement runs only the shuffled
+    * BSP sweep and refinement only its distributed rounds. */
+  private def shuffled[T](f: => T): T = withByteBudget(8L)(f)
+
   test("warm updates: local sweeps == forced-distributed sweeps exactly") {
     val g = graft.source.CodeTableSynth.sbmEdges(spark, 500, nBlocks = 4,
       degIntra = 4, degInter = 1, seed = 11)
     val (init, batches) = Incremental.paperSplit(g, 0.7, 50, 3)
-    val cfgL = Leiden.Config(localMoveSweeps = true)
-    val cfgD = Leiden.Config(localMoveSweeps = false)
-    var stL = Incremental.initial(init, cfgL)
-    var stD = Incremental.initial(init, cfgD)
-    var k = 0
-    for (b <- batches) {
-      stL = Incremental.update(stL, b, cfgL)
-      stD = Incremental.update(stD, b, cfgD)
-      k += 1
-      val aL = toMapLL(stL.assign.select(col("v"), col("community")))
-      val aD = toMapLL(stD.assign.select(col("v"), col("community")))
-      assert(aL == aD, s"batch $k: local-sweep assignment diverges from " +
-        s"the distributed path (${aL.count { case (v, c) => aD(v) != c }}" +
-        " vertices differ)")
-      val sL = toMapLL(stL.assign.select(col("v"), col("subcomm")))
-      val sD = toMapLL(stD.assign.select(col("v"), col("subcomm")))
-      assert(sL == sD, s"batch $k: subcomm divergence")
+    for (cfg <- Seq(Leiden.Config(), Leiden.Config(useCpm = true))) {
+      val tag = if (cfg.useCpm) "cpm" else "modularity"
+      var stL = Incremental.initial(init, cfg)
+      var stD = stL
+      var k = 0
+      for (b <- batches) {
+        stL = Incremental.update(stL, b, cfg)
+        stD = shuffled(Incremental.update(stD, b, cfg))
+        k += 1
+        val aL = toMapLL(stL.assign.select(col("v"), col("community")))
+        val aD = toMapLL(stD.assign.select(col("v"), col("community")))
+        val nDiff = aL.count { case (v, c) => !aD.get(v).contains(c) }
+        assert(aL == aD, s"$tag batch $k: local-sweep assignment diverges " +
+          s"from the distributed path ($nDiff vertices differ)")
+        val sL = toMapLL(stL.assign.select(col("v"), col("subcomm")))
+        val sD = toMapLL(stD.assign.select(col("v"), col("subcomm")))
+        assert(sL == sD, s"$tag batch $k: subcomm divergence")
+      }
+      val (qL, _) = Quality.score(stL.canon,
+        stL.assign.select(col("v"), col("community")), cfg.gamma, cfg.useCpm)
+      val (qD, _) = Quality.score(stD.canon,
+        stD.assign.select(col("v"), col("community")), cfg.gamma, cfg.useCpm)
+      assert(math.abs(qL - qD) < 1e-12, s"$tag quality diverges: $qL vs $qD")
     }
-    val qL = Quality.modularity(stL.canon,
-      stL.assign.select(col("v"), col("community")), 1.0)
-    val qD = Quality.modularity(stD.canon,
-      stD.assign.select(col("v"), col("community")), 1.0)
-    assert(math.abs(qL - qD) < 1e-12, s"quality diverges: $qL vs $qD")
   }
 
   test("deletion batch through the local path stays exact vs distributed") {
     val g = graft.source.CodeTableSynth.sbmEdges(spark, 300, nBlocks = 4,
       degIntra = 4, degInter = 1, seed = 3)
     val (init, batches) = Incremental.paperSplit(g, 0.8, 30, 1)
-    val cfgL = Leiden.Config(localMoveSweeps = true)
-    val cfgD = Leiden.Config(localMoveSweeps = false)
-    var stL = Incremental.initial(init, cfgL)
-    var stD = Incremental.initial(init, cfgD)
+    val st0 = Incremental.initial(init)
     val ins = batches.head
-    stL = Incremental.update(stL, ins, cfgL)
-    stD = Incremental.update(stD, ins, cfgD)
+    var stL = Incremental.update(st0, ins)
+    var stD = shuffled(Incremental.update(st0, ins))
     val del = ins.limit(12).select(col("src"), col("dst"),
       negate(col("weight")).as("weight"))
-    stL = Incremental.update(stL, del, cfgL)
-    stD = Incremental.update(stD, del, cfgD)
+    stL = Incremental.update(stL, del)
+    stD = shuffled(Incremental.update(stD, del))
     val aL = toMapLL(stL.assign.select(col("v"), col("community")))
     val aD = toMapLL(stD.assign.select(col("v"), col("community")))
     assert(aL == aD, "deletion batch diverges between sweep paths")
