@@ -18,13 +18,17 @@ import scala.collection.mutable
   * hit_leiden.rs:167-180). Delta activation seeds the movement frontier
   * exactly as inc_movement's first loop (hit_leiden.rs:166-186).
   *
-  * Per-batch cost is bound by the DELTA, not the graph:
+  * Within [[update]], per-batch cost is bound by the DELTA, not the
+  * graph:
   *
-  *  - graph state (canonical edges, degrees, total weight, the level-1
-  *    supergraph) is maintained by [[EdgeOps.mergeDelta]]-style broadcast
-  *    merges and arithmetic patches — no full-table shuffle anywhere;
+  *  - graph state carried in a [[State]] (canonical edges, degrees,
+  *    total weight, the level-1 supergraph) is maintained by
+  *    [[EdgeOps.mergeDelta]]-style broadcast merges and arithmetic
+  *    patches, with no full-table shuffle;
   *  - movement/refinement are frontier-limited (and their per-sweep
-  *    gathers broadcast the frontier, [[Leiden.movement]]);
+  *    gathers broadcast the frontier, [[Leiden.movement]]); a batch
+  *    that moves and splits nothing runs no relabel, merge round or
+  *    re-seat ([[level0]]);
   *  - the supergraph is maintained through the reference's own delta
   *    machinery: [[IncAggregation.apply]] (hit_leiden.rs:487-563) emits
   *    a signed supergraph delta from the batch + the refinement
@@ -41,6 +45,14 @@ import scala.collection.mutable
   * both canon and assignment live as bucketed tables and these become
   * bucket-pruned merges too — the durable edge-side form exists as
   * [[graft.graph.BucketedEdges]].
+  *
+  * Across batches the bound does not hold yet. [[graft.run.Engine.update]]
+  * starts every batch from the checkpoint, which holds neither degrees
+  * nor the supergraph, so [[hydrate]] rebuilds both from the whole edge
+  * table on every resume: two O(E) passes per batch. Without the
+  * durable-edge option the checkpoint also rewrites the whole edge table
+  * every batch. Carrying both with the checkpointed state is direction 1
+  * of ROADMAP.md.
   */
 object Incremental {
 
@@ -581,14 +593,28 @@ object Incremental {
     *   the degree table
     * @param activated (v) the movement frontier: endpoints of inserts
     *   across communities and of deletes within one (hit_leiden.rs:166-186)
-    * @param activeDegSum the frontier's post-delta weighted-degree sum
     * @param k0 (v) endpoints of delta edges inside one subcommunity
-    * @param k0Ids `k0` on the driver, when the prologue ran there
+    * @param held what the prologue holds on the driver, when it ran there
     */
   private[graft] final case class Prologue(newVerts: DataFrame, dMax: Long,
       deltaDeg: DataFrame, degNew: DataFrame, activated: DataFrame,
-      activeDegSum: Option[Double], k0: DataFrame,
-      k0Ids: Option[Array[Long]])
+      k0: DataFrame, held: Option[Held])
+
+  /** The driver prologue's results as driver values, for the level-0
+    * phases: movement enters from `frontier`, refinement takes its
+    * affected subcommunities from `k0Scs`, and a batch that re-seats
+    * nothing builds its supergraph delta from `delta` and `subcomm`.
+    *
+    * @param frontier the rows of `activated`, degrees post-delta
+    * @param k0 `k0`'s ids, ascending
+    * @param k0Scs the distinct subcommunities of `k0`
+    * @param delta the compressed delta's (src, dst, weight) rows
+    * @param subcomm an endpoint's subcommunity before the batch (a new id
+    *   is its own)
+    */
+  private[graft] final case class Held(frontier: Leiden.FrontierRows,
+      k0: Array[Long], k0Scs: Array[Long],
+      delta: Array[(Long, Long, Double)], subcomm: Long => Long)
 
   /** The assignment plus the new ids as singletons (lazy union). Its row
     * count is recorded when both parts' counts are known. */
@@ -656,14 +682,17 @@ object Incremental {
     // assigned vertex whose edges were all deleted before a resume
     // (hydrate derives degrees from the edges, so it has no row)
     val degNewIds = ids.filterNot(degOld.contains)
-    var degSum = 0.0
-    actIds.foreach(v => degSum += degOld.getOrElse(v, 0.0) + dd(v))
     val k0Ids = k0.keysIterator.toArray.sorted
+    val subcomm = (v: Long) => sc.getOrElse(v, v)
+    val frontier = Leiden.FrontierRows(actIds,
+      actIds.map(v => comm.getOrElse(v, v)), actIds.map(subcomm),
+      actIds.map(v => degOld.getOrElse(v, 0.0) + dd(v)))
     Prologue(Ckpt.local(spark, newIds), ids.last,
       ids.toSeq.map(v => (v, dd(v))).toDF("v", "dd"),
       degNewIds.toSeq.map(v => (v, dd(v))).toDF("v", "deg"),
-      Ckpt.local(spark, actIds), Some(degSum), Ckpt.local(spark, k0Ids),
-      Some(k0Ids))
+      Ckpt.local(spark, actIds), Ckpt.local(spark, k0Ids),
+      Some(Held(frontier, k0Ids, k0Ids.map(subcomm).distinct,
+        rows.indices.map(i => (src(i), dst(i), w(i))).toArray, subcomm)))
   }
 
   /** The prologue of a bulk delta (backfill, re-ingest): a distributed
@@ -698,7 +727,74 @@ object Incremental {
     val k0 = d.where(col("scu") === col("scv"))
       .select(explode(array(col("src"), col("dst"))).as("v")).distinct()
     Prologue(newVerts, dAgg.getAs[Long]("dMax"), deltaDeg, degNew,
-      activated, None, k0, None)
+      activated, k0, None)
+  }
+
+  /** The prologue that fits: [[driverPrologue]] for a delta within the
+    * driver byte budget, else [[distPrologue]]. */
+  private def prologue(state: State, deltaC: DataFrame): Prologue =
+    if (graft.util.Bcast.fits(deltaC.rows, DeltaRowBytes))
+      driverPrologue(state, deltaC)
+    else distPrologue(state, deltaC)
+
+  /** A warm batch's level 0 up to aggregation (see [[level0]]).
+    *
+    * @param assign0 the pre-batch assignment plus the new ids
+    * @param deg post-delta weighted degrees
+    * @param freshIdBase the watermark refinement allocated split ids above
+    */
+  private[graft] final case class Level0(pro: Prologue, assign0: DataFrame,
+      deg: DataFrame, adj: DataFrame, mv: Leiden.MovementOut,
+      ref: Leiden.RefinementOut, freshIdBase: Long)
+
+  /** Prologue, frontier-limited movement and refinement of one batch at
+    * level 0, against the hydrated pre-batch `state`, the batch's
+    * compressed delta, the merged edge table and the post-delta 2m
+    * (non-zero). With the driver prologue, movement enters from the
+    * frontier's rows and refinement from K's subcommunities, both held
+    * on the driver. */
+  private[graft] def level0(state: State, deltaC: DataFrame,
+      newCanon: DataFrame, m2: Double, cfg: Leiden.Config,
+      sink: MetricsSink): Level0 = {
+    val spark = deltaC.sparkSession
+    val pro = prologue(state, deltaC)
+    // new-singleton rows are delta-sized; the union is applied lazily on
+    // top of the (checkpointed) carried assignment — no O(V) rewrite here
+    val assign0 = withNewVerts(state.assign, pro.newVerts)
+
+    // degree patch: broadcast left-outer add for existing vertices plus
+    // delta-only degrees for new ones — no vertex-table shuffle. Kept as
+    // a LAZY overlay (each consumer replays a map-side broadcast join
+    // over the last materialized table) and flattened O(V) only every
+    // 4th batch: the last per-batch term that scaled with |V| not |delta|.
+    val degPatched = state.deg.get
+      .join(broadcast(pro.deltaDeg), Seq("v"), "left")
+      .select(col("v"),
+        (col("deg") + coalesce(col("dd"), lit(0.0))).as("deg"))
+    val deg0 = degPatched.unionAll(pro.degNew)
+    val deg = if (state.epoch % 4 == 3) deg0.ckpt else deg0
+
+    val adj = Ckpt.withRows(EdgeOps.symmetrize(newCanon), 2 * newCanon.rows)
+
+    val mv = Leiden.movement(adj, deg, m2, assign0, pro.activated, cfg, sink,
+      0, entry = pro.held.map(_.frontier))
+    // K = K0 + movement's K; on the driver when both are
+    val (affected, affectedScs) = (pro.held, mv.affectedIds) match {
+      case (Some(h), Some(k)) =>
+        (Ckpt.local(spark, (h.k0 ++ k).distinct),
+          Some((h.k0Scs ++ mv.affectedScs.get).distinct))
+      case _ => (pro.k0.unionAll(mv.affected).distinct().ckpt, None)
+    }
+    // the watermark must clear every vertex id seen so far INCLUDING the
+    // ones this batch introduced (they arrive as their own singleton
+    // subcomm/community ids): allocating fresh split ids from the stale
+    // state.maxId could alias a new vertex's id and silently contract two
+    // unrelated subcommunities together in the supergraph
+    val freshIdBase = math.max(state.maxId, pro.dMax)
+    val ref = Leiden.refinement(adj, deg, m2, mv.assign, affected, cfg, sink,
+      0, isInitial = false, freshIdBase = freshIdBase,
+      affectedScs = affectedScs)
+    Level0(pro, assign0, deg, adj, mv, ref, freshIdBase)
   }
 
   /** Apply one signed delta batch, warm-starting from `state`.
@@ -720,10 +816,13 @@ object Incremental {
     * is collected once and everything comes from it plus ONE probe of
     * the endpoints' assignment rows and degrees
     * ([[driverPrologue]]); the results enter the plans as local relations
-    * with known row counts, and movement gets |assign|, |adj| and the
-    * frontier's degree sum without a job. A bulk delta (backfill,
-    * re-ingest) takes the distributed prologue ([[distPrologue]]). Both
-    * derive the same sets and the same integer-weight sums.
+    * with known row counts, movement gets |assign|, |adj| and the
+    * frontier's rows without a job, refinement gets K's subcommunities,
+    * and a batch whose refinement re-seats no vertex builds its
+    * supergraph delta on the driver ([[IncAggregation.deltaOnly]]). A
+    * bulk delta (backfill, re-ingest) takes the distributed prologue
+    * ([[distPrologue]]). Both derive the same sets and the same
+    * integer-weight sums.
     */
   def update(state0: State, delta: DataFrame,
       cfg: Leiden.Config = Leiden.Config(),
@@ -795,80 +894,56 @@ object Incremental {
         EdgeOps.mergeDelta(state.canon, deltaC, cfg.eps).ckpt
     }
     val m2 = state.m2 + 2.0 * dW
-
-    // --- prologue: new endpoints, delta degrees, delta activation
-    // (hit_leiden.rs:166-186) and K0, on the driver or distributed
     val spark = delta.sparkSession
     import spark.implicits._
-    val pro =
-      if (graft.util.Bcast.fits(deltaC.rows, DeltaRowBytes))
-        driverPrologue(state, deltaC)
-      else distPrologue(state, deltaC)
-    // new-singleton rows are delta-sized; the union is applied lazily on
-    // top of the (checkpointed) carried assignment — no O(V) rewrite here
-    val assign0 = withNewVerts(state.assign, pro.newVerts)
-
-    // degree patch: broadcast left-outer add for existing vertices plus
-    // delta-only degrees for new ones — no vertex-table shuffle. Kept as
-    // a LAZY overlay (each consumer replays a map-side broadcast join
-    // over the last materialized table) and flattened O(V) only every
-    // 4th batch: the last per-batch term that scaled with |V| not |delta|.
-    val degPatched = state.deg.get
-      .join(broadcast(pro.deltaDeg), Seq("v"), "left")
-      .select(col("v"),
-        (col("deg") + coalesce(col("dd"), lit(0.0))).as("deg"))
-    val deg0 = degPatched.unionAll(pro.degNew)
-    val deg = if (state.epoch % 4 == 3) deg0.ckpt else deg0
-
     if (m2 == 0.0)
-      return hydrate(State(newCanon, assign0, 0.0, durable = state.durable),
-        cfg.eps)
+      return hydrate(State(newCanon,
+        withNewVerts(state.assign, prologue(state, deltaC).newVerts), 0.0,
+        durable = state.durable), cfg.eps)
 
-    val adj = Ckpt.withRows(EdgeOps.symmetrize(newCanon), 2 * newCanon.rows)
-
-    // --- frontier-limited movement + refinement at level 0
-    val mv = Leiden.movement(adj, deg, m2, assign0, pro.activated, cfg, sink,
-      0, activeDegSum = pro.activeDegSum)
-    val affected = (pro.k0Ids, mv.affectedIds) match {
-      case (Some(k0), Some(k)) => Ckpt.local(spark, (k0 ++ k).distinct)
-      case _ => pro.k0.unionAll(mv.affected).distinct().ckpt
-    }
-    // the watermark must clear every vertex id seen so far INCLUDING the
-    // ones this batch introduced (they arrive as their own singleton
-    // subcomm/community ids): allocating fresh split ids from the stale
-    // state.maxId could alias a new vertex's id and silently contract two
-    // unrelated subcommunities together in the supergraph
-    val freshIdBase = math.max(state.maxId, pro.dMax)
-    val ref = Leiden.refinement(adj, deg, m2, mv.assign, affected, cfg, sink,
-      0, isInitial = false, freshIdBase = freshIdBase)
+    // --- prologue (new endpoints, delta degrees, delta activation
+    // hit_leiden.rs:166-186, K0) and frontier-limited movement +
+    // refinement at level 0
+    val Level0(pro, assign0, deg, adj, _, ref, freshIdBase) =
+      level0(state, deltaC, newCanon, m2, cfg, sink)
     val maxId = freshIdBase + ref.freshUsed
     val assign1 = ref.assign
 
     // --- supergraph maintenance via the reference's delta machinery.
     // R must contain EXACTLY the changed vertices (hit_leiden.rs:509-511
     // dedup guard assumes it); refinement's refined set is a superset
-    // when a phase-2 merge lands a vertex back on its old id.
-    val sPre0 = assign0.select(col("v"), col("subcomm").as("sc"))
-    val sCur = assign1.select(col("v"), col("subcomm").as("sc"))
-    val refR = broadcast(assign1
-      .join(broadcast(ref.refined.select("v").distinct()), Seq("v"),
-        "left_semi"))
-      .join(sPre0.withColumnRenamed("sc", "scPre"), "v")
-      .where(col("subcomm") =!= col("scPre"))
-      .select("v").ckpt
-    // the warm mirror path collects the delta-sized deltaH anyway —
-    // evaluate the delta join pipeline ONCE via that collect
-    // (materialize=false) and hand downstream consumers a local relation;
-    // the fallback path (nothing maintained) keeps the ckpt'd DataFrame
-    val willCollect = state.superCache.isDefined || state.upper.isDefined
-    val (deltaH0, _) = IncAggregation(adj, deltaC, sPre0, sCur, refR,
-      cfg.eps, materialize = !willCollect)
-    val dRows: Option[Array[(Long, Long, Double)]] =
-      if (willCollect)
-        Some(deltaH0.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2))))
-      else None
-    val deltaH = dRows.fold(deltaH0)(_.toSeq.toDF("src", "dst", "weight"))
+    // when a phase-2 merge lands a vertex back on its old id. A counted
+    // empty refined set re-seats nothing: deltaH is the mapped delta,
+    // built on the driver when the prologue holds it there.
+    val noReseat = Ckpt.known(ref.refined).contains(0L)
+    val (deltaH, dRows) = pro.held.filter(_ => noReseat) match {
+      case Some(h) =>
+        val rows = IncAggregation.deltaOnly(h.delta, h.subcomm, cfg.eps)
+        (rows.toSeq.toDF("src", "dst", "weight"), Some(rows))
+      case None =>
+        val sPre0 = assign0.select(col("v"), col("subcomm").as("sc"))
+        val sCur = assign1.select(col("v"), col("subcomm").as("sc"))
+        val refR = broadcast(assign1
+          .join(broadcast(ref.refined.select("v").distinct()), Seq("v"),
+            "left_semi"))
+          .join(sPre0.withColumnRenamed("sc", "scPre"), "v")
+          .where(col("subcomm") =!= col("scPre"))
+          .select("v").ckpt
+        // the warm mirror path collects the delta-sized deltaH anyway —
+        // evaluate the delta join pipeline ONCE via that collect
+        // (materialize=false) and hand downstream consumers a local
+        // relation; the fallback path (nothing maintained) keeps the
+        // ckpt'd DataFrame
+        val willCollect = state.superCache.isDefined || state.upper.isDefined
+        val (deltaH0, _) = IncAggregation(adj, deltaC, sPre0, sCur, refR,
+          cfg.eps, materialize = !willCollect)
+        val rows =
+          if (willCollect)
+            Some(deltaH0.collect().map(r =>
+              (r.getLong(0), r.getLong(1), r.getDouble(2))))
+          else None
+        (rows.fold(deltaH0)(_.toSeq.toDF("src", "dst", "weight")), rows)
+    }
     // the mirror path never SCANS superCanon (the sorted-array mirror is
     // the live level-1 graph), so the O(E_1) materialization runs on the
     // deg-overlay cadence instead of every batch; between flattens the

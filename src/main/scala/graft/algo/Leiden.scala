@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import graft.graph.{EdgeOps, LocalGraph}
 import graft.run.{IterMetric, MetricsSink}
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** Leiden community detection, Spark-native.
   *
@@ -321,11 +320,23 @@ object Leiden {
   // movement (reference inc_movement, throughput mode)
   // ---------------------------------------------------------------------
 
-  /** @param affectedIds K on the driver, when every sweep that added to
-    *   it ran driver-local */
+  /** @param assign the input assignment itself when nothing moved
+    * @param affectedIds K on the driver, when every sweep that added to
+    *   it ran driver-local
+    * @param affectedScs the distinct subcommunities of `affectedIds`
+    * @param prefetchHops adjacency hops the driver-local phase prefetched
+    *   (0 when no local sweep applied a move)
+    */
   final case class MovementOut(assign: DataFrame, changed: DataFrame,
       affected: DataFrame, sweeps: Int, moves: Long,
-      affectedIds: Option[Array[Long]] = None)
+      affectedIds: Option[Array[Long]] = None,
+      affectedScs: Option[Array[Long]] = None, prefetchHops: Int = 0)
+
+  /** A level-0 frontier's rows as a caller already holds them on the
+    * driver: id (ascending), community, subcommunity and weighted degree
+    * (node sizes are all one at level 0). */
+  final case class FrontierRows(ids: Array[Long], comm: Array[Long],
+      subcomm: Array[Long], deg: Array[Double])
 
   /** BSP local-move phase. `assign` = (v, community, subcomm);
     * `active0` = (v) frontier. Returns updated assignment, the changed
@@ -333,20 +344,24 @@ object Leiden {
     *
     * A sweep takes one of two shapes. Once the frontier's exact
     * weighted-degree sum fits the broadcast byte budget (and its size
-    * estimate is under a quarter of the vertices), the rest of the phase
-    * runs driver-local in [[localMovePhase]]. Every other frontier — the
+    * estimate is under a quarter of the vertices, unless `entry` gives
+    * its rows), the rest of the phase runs driver-local in
+    * [[localMovePhase]]. Every other frontier — the
     * full one of a cold start or a dense re-activation, an estimated one,
     * a hub frontier past the budget — runs the shuffled BSP sweep. A
     * local phase that bails hands its state back to the shuffled sweep.
     *
     * Entry sizes come from known counts where the caller has them
-    * ([[Ckpt.known]]: |assign|, |adj|, |active0|) and `activeDegSum`, the
-    * frontier's weighted-degree sum; each missing one costs a job.
+    * ([[Ckpt.known]]: |assign|, |adj|, |active0|); each missing one costs
+    * a job. `entry`, the frontier's rows when the caller holds them (the
+    * warm batch's driver prologue), gives the frontier's size and degree
+    * sum and replaces the local phase's entry collect. A phase that moves
+    * nothing returns `assign` itself, not a checkpoint of it.
     */
   def movement(adj: DataFrame, deg: DataFrame, m2: Double, assign: DataFrame,
       active0: DataFrame, cfg: Config, sink: MetricsSink,
       level: Int, nodeSize: Option[DataFrame] = None,
-      activeDegSum: Option[Double] = None): MovementOut = {
+      entry: Option[FrontierRows] = None): MovementOut = {
 
     val spark = adj.sparkSession
     import spark.implicits._
@@ -355,6 +370,7 @@ object Leiden {
     // computed as literals/counts instead of joining a V-sized unit table
     // into every sweep's candidate pipeline
     val unitSize = nodeSize.isEmpty
+    require(entry.isEmpty || unitSize, "frontier rows carry unit sizes")
     val sz = nodeSize.getOrElse(
       assign.select(col("v"), lit(1L).as("size"))).select("v", "size")
     var a = assign
@@ -363,7 +379,7 @@ object Leiden {
     var aPrev: Option[DataFrame] = None
     // a counted frontier (a checkpoint, or a driver-side local relation)
     // is used as it stands; any other is materialized once
-    val knownN = Ckpt.known(active0)
+    val knownN = entry.map(_.ids.length.toLong).orElse(Ckpt.known(active0))
     var active =
       if (knownN.isDefined) active0.select(col("v"))
       else active0.select(col("v")).ckpt
@@ -372,16 +388,22 @@ object Leiden {
     // K kept on the driver too while only local sweeps add to it
     var affectedL: Option[mutable.LongMap[Unit]] =
       Some(mutable.LongMap.empty[Unit])
+    val affectedScL = mutable.LongMap.empty[Unit]
     var sweep = 0
     var totalMoves = 0L
+    var prefetchHops = 0
     var frontierN = knownN.getOrElse(active.rows)
     // exact weighted-degree sum over the current frontier, or -1 when
     // unknown (lazy large-frontier path). Weighted degree >= adjacency
     // row count (weights >= 1 by construction), so it upper-bounds the
     // rows a frontier broadcast would ship — the hub-safe gate quantity.
-    var frontierDegSum: Double = activeDegSum.getOrElse(-1.0)
+    var frontierDegSum: Double = entry.fold(-1.0)(_.deg.sum)
+    // the caller's rows describe `active0` against `assign`: only the
+    // first sweep may enter the local phase from them
+    var entryRows = entry
     if (frontierN == 0) // empty delta activation: nothing to do
-      return MovementOut(a, changed, affected, 0, 0L, Some(Array.empty))
+      return MovementOut(a, changed, affected, 0, 0L, Some(Array.empty),
+        Some(Array.empty))
     val nVerts = a.rows
     val avgDeg = adj.rows.toDouble / math.max(nVerts, 1L)
 
@@ -422,8 +444,10 @@ object Leiden {
       // after the EXACT frontier degree sum fits the byte budget —
       // maintained for free by the local loop, probed with one
       // frontier-filtered map scan of `deg` on a large→small transition.
-      val estSmall = frontierN < nVerts / 4 &&
-        frontierN * math.max(avgDeg, 1.0) < 2e6
+      // A frontier whose rows the caller holds needs no estimate: its
+      // exact sum is known and its rows are already on the driver.
+      val estSmall = entryRows.isDefined || (frontierN < nVerts / 4 &&
+        frontierN * math.max(avgDeg, 1.0) < 2e6)
       if (estSmall && frontierDegSum < 0)
         frontierDegSum = deg
           .join(broadcast(active), Seq("v"), "left_semi")
@@ -433,8 +457,9 @@ object Leiden {
       if (smallGather) {
         // exact BSP parity; one delta-sized gather action per sweep.
         // Community stats are fetched per-need inside — no O(C) collect.
-        val lp = localMovePhase(spark, adj, a, aPrev, active,
+        val lp = localMovePhase(spark, adj, a, aPrev, active, entryRows,
           deg, sz, unitSize, m2, nVerts, avgDeg, cfg, sink, level, sweep)
+        entryRows = None
         a = lp.a
         aPrev = lp.aPrev
         active = lp.active
@@ -443,6 +468,8 @@ object Leiden {
         if (lp.affected.nonEmpty)
           affected = affected.unionAll(lp.affected.toSeq.toDF("v"))
         affectedL.foreach(k => lp.affected.foreach(k(_) = ()))
+        lp.affectedScs.foreach(affectedScL(_) = ())
+        prefetchHops += lp.prefetchHops
         // resumed distributed sweeps rebuild community stats from the
         // post-local-phase assignment (exact for integer weights)
         if (lp.bail) commDeg = None
@@ -451,6 +478,7 @@ object Leiden {
         frontierDegSum = lp.frontierDegSum
         sweep = lp.sweep
       } else {
+        entryRows = None
         // commDeg may carry un-aggregated per-sweep delta rows (see the
         // union below): consumers read the aggregated view — ONE exchange
         // regardless of overlay depth, where a join-chain form paid an
@@ -710,9 +738,12 @@ object Leiden {
         sweep += 1
       }
     }
-    // flatten any remaining lazy overlay once on exit
-    MovementOut(a.ckpt, changed.distinct(), affected.distinct(), sweep,
-      totalMoves, affectedL.map(_.keysIterator.toArray))
+    // flatten any remaining lazy overlay once on exit; an assignment no
+    // sweep changed is handed back as it came
+    MovementOut(if (totalMoves == 0) assign else a.ckpt, changed.distinct(),
+      affected.distinct(), sweep, totalMoves,
+      affectedL.map(_.keysIterator.toArray),
+      affectedL.map(_ => affectedScL.keysIterator.toArray), prefetchHops)
   }
 
   /** xxHash64 of one long / one int — bit-identical to Spark's
@@ -753,9 +784,9 @@ object Leiden {
 
   private final case class LocalPhaseOut(a: DataFrame,
       aPrev: Option[DataFrame], active: DataFrame,
-      changed: Array[Long], affected: Array[Long],
+      changed: Array[Long], affected: Array[Long], affectedScs: Array[Long],
       frontierN: Long, frontierDegSum: Double, sweep: Int,
-      movesApplied: Long, bail: Boolean)
+      movesApplied: Long, bail: Boolean, prefetchHops: Int)
 
   /** Driver-local movement sweeps — the warm-update hot path.
     *
@@ -773,9 +804,17 @@ object Leiden {
     * tables. This is the only sweep shape for frontiers that fit the
     * budget. Bails back to the shuffled sweep on dense re-activation or
     * a frontier outgrowing the byte budget.
+    *
+    * Spark work of a phase whose first sweep moves nothing: the `attrs`
+    * checkpoint, one gather of the frontier's adjacency and one stats
+    * fetch for the frontier and its neighbours. The frontier's own rows
+    * come from `entry` when the caller holds them, else from one collect.
+    * The multi-hop adjacency prefetch runs only after a sweep that
+    * applied moves, from the frontier that sweep produced.
     */
   private def localMovePhase(spark: SparkSession, adj: DataFrame,
       a0: DataFrame, aPrev0: Option[DataFrame], active0: DataFrame,
+      entry: Option[FrontierRows],
       deg: DataFrame, sz: DataFrame, unitSize: Boolean,
       m2: Double, nVerts: Long, avgDeg: Double, cfg: Config,
       sink: MetricsSink, level: Int, sweep0: Int): LocalPhaseOut = {
@@ -796,7 +835,8 @@ object Leiden {
     // collect (r5 ADVICE medium): the gain loop only ever reads stats of
     // communities holding a frontier vertex or one of its gathered
     // neighbors, so each sweep tops up the missing ids with one
-    // frontier-neighborhood-bounded job (usually only sweep 1 fetches).
+    // frontier-neighborhood-bounded job (usually only the first sweep and
+    // the one after the prefetch fetch).
     // Exactness: every community a local move touches is a gain
     // candidate at move time, hence fetched BEFORE it is touched — so a
     // late fetch always reads an untouched community, whose phase-entry
@@ -832,27 +872,36 @@ object Leiden {
     // pre-move community of the LAST sweep's movers (revert-gate ref)
     var movedLast = mutable.LongMap.empty[Long]
 
-    val entryBase = attrs
-      .join(broadcast(active0.select("v")), Seq("v"), "left_semi")
-    val entry = aPrev0 match {
-      case None => entryBase.withColumn("prevComm", col("community"))
-      case Some(p) => entryBase.join(
-        p.select(col("v"), col("community").as("prevComm")), Seq("v"),
-        "left")
-    }
-    val eRows = entry
-      .select("v", "community", "subcomm", "deg", "prevComm", "size")
-      .collect()
-    var frontier: Array[Long] = new Array[Long](eRows.length)
-    var ei = 0
-    eRows.foreach { r =>
-      val v = r.getLong(0)
-      frontier(ei) = v; ei += 1
-      comm(v) = r.getLong(1); sc(v) = r.getLong(2)
-      degM(v) = r.getDouble(3)
-      val pc = if (r.isNullAt(4)) r.getLong(1) else r.getLong(4)
-      if (pc != r.getLong(1)) movedLast(v) = pc
-      szM(v) = r.getAs[Number](5).doubleValue
+    var frontier: Array[Long] = entry match {
+      case Some(e) =>
+        // rows the caller holds: a phase entered on the first sweep, so
+        // no vertex has a pre-barrier community to revert to
+        require(aPrev0.isEmpty, "frontier rows enter the first sweep only")
+        for (i <- e.ids.indices) {
+          val v = e.ids(i)
+          comm(v) = e.comm(i); sc(v) = e.subcomm(i)
+          degM(v) = e.deg(i); szM(v) = 1.0
+        }
+        e.ids.clone()
+      case None =>
+        val entryBase = attrs
+          .join(broadcast(active0.select("v")), Seq("v"), "left_semi")
+        val entryDf = aPrev0 match {
+          case None => entryBase.withColumn("prevComm", col("community"))
+          case Some(p) => entryBase.join(
+            p.select(col("v"), col("community").as("prevComm")), Seq("v"),
+            "left")
+        }
+        entryDf.select("v", "community", "subcomm", "deg", "prevComm",
+            "size").collect().map { r =>
+          val v = r.getLong(0)
+          comm(v) = r.getLong(1); sc(v) = r.getLong(2)
+          degM(v) = r.getDouble(3)
+          val pc = if (r.isNullAt(4)) r.getLong(1) else r.getLong(4)
+          if (pc != r.getLong(1)) movedLast(v) = pc
+          szM(v) = r.getAs[Number](5).doubleValue
+          v
+        }
     }
     java.util.Arrays.sort(frontier)
 
@@ -898,6 +947,41 @@ object Leiden {
       }
     }
 
+    // multi-hop prefetch, from the frontier a moving sweep produced: each
+    // sweep's frontier is neighbors of the previous one, and every gather
+    // costs one fixed-latency Spark action no matter how few rows it
+    // returns. After each gather every loaded vertex's EXACT degree is
+    // known driver-side, so keep expanding hop by hop while the spend cap
+    // holds (up to 4 hops): later sweeps then find adjL populated and pay
+    // zero Spark jobs. A frontier that still escapes gathers lazily in
+    // the sweep loop — purely an optimization, adjacency loads carry no
+    // state. Spend cap: the byte budget AND a 32x multiple of the start
+    // frontier's degree sum — hop growth in a well-connected graph would
+    // otherwise balloon to the whole graph within the absolute budget
+    // (~64 B per gathered adjacency row: ids + weight + attrs).
+    def prefetch(from: Array[Long], fromDegSum: Double): Int = {
+      val capRows = math.min(graft.util.Bcast.budgetBytes / 64,
+        (32.0 * math.max(fromDegSum, 1.0)).toLong)
+      var spentRows = 0L
+      var hops = 0
+      var cand = from.filterNot(adjL.contains)
+      var pSum = 0.0
+      cand.foreach(pSum += degM(_))
+      while (hops < 4 && cand.nonEmpty && spentRows + pSum.toLong <= capRows) {
+        gatherNew(cand)
+        spentRows += pSum.toLong
+        hops += 1
+        val next = mutable.LongMap.empty[Unit]
+        cand.foreach(v => adjL(v).foreach { case (n, _) =>
+          if (!adjL.contains(n)) next(n) = ()
+        })
+        cand = next.keysIterator.toArray
+        pSum = 0.0
+        cand.foreach(pSum += degM(_))
+      }
+      hops
+    }
+
     // --- the sweep loop (exact mirror of the distributed body)
     val changedSet = mutable.LongMap.empty[Unit]
     val affectedSet = mutable.LongMap.empty[Unit]
@@ -910,7 +994,12 @@ object Leiden {
     var frontierN = frontier.length.toLong
     var bail = false
     var bailFull = false
+    var prefetchHops = 0
     var prefetched = false
+    // the next sweep fetches stats for every loaded vertex's community:
+    // the first sweep (frontier + 1-hop neighbors), and the one after the
+    // prefetch
+    var fetchAll = true
     val gainFloor =
       if (cfg.useCpm) cfg.minSweepGain * (m2 / 2.0) else cfg.minSweepGain
     val wBy = mutable.LongMap.empty[Double]
@@ -918,46 +1007,16 @@ object Leiden {
     while (frontierN > 0 && sweep < cfg.maxSweeps && !bail) {
       val t0 = System.nanoTime()
       gatherNew(frontier.filterNot(adjL.contains))
-      if (!prefetched) {
-        prefetched = true
-        // multi-hop prefetch (r6; was one-shot 1-hop): each sweep's
-        // frontier is neighbors of the previous one, and every gather
-        // costs one fixed-latency Spark action no matter how few rows it
-        // returns. After each gather every loaded vertex's EXACT degree
-        // is known driver-side, so keep expanding hop by hop while the
-        // spend cap holds (up to 4 hops): later sweeps then find adjL
-        // populated and pay zero Spark jobs. A frontier that still
-        // escapes gathers lazily above — purely an optimization,
-        // adjacency loads carry no state. Spend cap: the byte budget
-        // AND a 32x multiple of the entry frontier's degree sum — hop
-        // growth in a well-connected graph would otherwise balloon to
-        // the whole graph within the absolute budget (~64 B per
-        // gathered adjacency row: ids + weight + attrs).
-        val capRows = math.min(
-          graft.util.Bcast.budgetBytes / 64,
-          (32.0 * math.max(frontierDegSum, 1.0)).toLong)
-        var spentRows = 0L
-        var hop = 0
-        var continueHops = true
-        while (hop < 4 && continueHops) {
-          val cand = degM.keysIterator.filterNot(adjL.contains).toArray
-          var pSum = 0.0
-          cand.foreach(pSum += degM(_))
-          if (cand.nonEmpty && spentRows + pSum.toLong <= capRows) {
-            gatherNew(cand)
-            spentRows += pSum.toLong
-            hop += 1
-          } else continueHops = false
-        }
-      }
       // top up community stats for this sweep's gain candidates (own +
       // neighbor communities); one bounded job when anything is missing.
-      // The first sweep bulk-fetches the communities of EVERY vertex the
-      // entry+prefetch gathers loaded (a superset of this sweep's needs),
-      // so later sweeps — whose frontiers live inside the prefetched
-      // neighborhood — almost never fetch again.
-      if (sweep == sweep0)
+      // The first sweep, and the one after the prefetch, bulk-fetch the
+      // communities of EVERY loaded vertex (a superset of this sweep's
+      // needs), so later sweeps — whose frontiers live inside the
+      // prefetched neighborhood — almost never fetch again.
+      if (fetchAll) {
+        fetchAll = false
         ensureStats(comm.valuesIterator)
+      }
       ensureStats(frontier.iterator.flatMap(v =>
         Iterator.single(comm(v)) ++ adjL(v).iterator.map(e => comm(e._1))))
 
@@ -1083,6 +1142,11 @@ object Leiden {
           if (!graft.util.Bcast.fits(frontierDegSum.toLong,
               bytesPerRow = 32))
             bail = true // outgrew the budget: distributed sweeps resume
+          else if (!prefetched && frontierN > 0 && sweep + 1 < cfg.maxSweeps) {
+            prefetched = true
+            prefetchHops = prefetch(frontier, frontierDegSum)
+            fetchAll = true
+          }
         }
       }
       sweep += 1
@@ -1115,11 +1179,14 @@ object Leiden {
     val activeOut =
       if (bailFull) aOut.select("v")
       else frontier.toSeq.toDF("v")
+    val affectedScs = mutable.LongMap.empty[Unit]
+    affectedSet.keysIterator.foreach(v => affectedScs(sc(v)) = ())
     LocalPhaseOut(aOut, aPrevOut, activeOut,
       changedSet.keysIterator.toArray, affectedSet.keysIterator.toArray,
+      affectedScs.keysIterator.toArray,
       if (bailFull) nVerts else frontierN,
       if (bailFull) m2 else frontierDegSum,
-      sweep, movesApplied, bail)
+      sweep, movesApplied, bail, prefetchHops)
   }
 
   // ---------------------------------------------------------------------
@@ -1134,19 +1201,29 @@ object Leiden {
     *   get freshIdBase+1, freshIdBase+2, ... — the reference's counter
     *   allocation, hit_leiden.rs:352-370). Callers track the watermark in
     *   their state; ids are allocated densely above it.
+    * @param affectedScs the subcommunities of `affected`, when the caller
+    *   holds them on the driver; otherwise one job derives them
+    *
+    * Steps that cannot change anything are skipped: a split that splits
+    * nothing returns `assign` itself (no relabel), with an empty, counted
+    * `refined`; without a refined vertex no phase-2 round runs, since
+    * phase 2 only merges refined singletons.
     */
   def refinement(adj: DataFrame, deg: DataFrame, m2: Double,
       assign: DataFrame, affected: DataFrame, cfg: Config, sink: MetricsSink,
       level: Int, isInitial: Boolean,
       nodeSize: Option[DataFrame] = None,
-      freshIdBase: Long = 0L): RefinementOut = {
+      freshIdBase: Long = 0L,
+      affectedScs: Option[Array[Long]] = None): RefinementOut = {
 
     val spark = adj.sparkSession
+    import spark.implicits._
     val unitSize = nodeSize.isEmpty
     val sz = nodeSize.getOrElse(
       assign.select(col("v"), lit(1L).as("size"))).select("v", "size")
     var a = assign
     var freshUsed = 0L
+    def noneRefined = Ckpt.local(spark, Array.empty[Long])
 
     val refined: DataFrame =
       if (isInitial) {
@@ -1159,11 +1236,15 @@ object Leiden {
         // to intra-subcommunity edges). The affected set is delta-bound on
         // warm updates: broadcast it into the semi-joins so the V-sized
         // assignment streams map-side instead of being exchanged.
-        val nAffected = affected.rows
-        val affScs = a.join(
-            graft.util.Bcast.ifFits(affected.select("v"), nAffected, 16),
-            Seq("v"), "left_semi")
-          .select(col("subcomm")).distinct().ckpt
+        val (affScs, nAffected) = affectedScs match {
+          case Some(scs) =>
+            (scs.toSeq.toDF("subcomm"), scs.length.toLong)
+          case None =>
+            val n = affected.rows
+            (a.join(graft.util.Bcast.ifFits(affected.select("v"), n, 16),
+              Seq("v"), "left_semi")
+              .select(col("subcomm")).distinct().ckpt, n)
+        }
         // members of affected subcommunities: delta-bound on warm updates.
         // When the set is small, its label projections broadcast into the
         // intra-edge extraction so the big adjacency streams map-side —
@@ -1232,31 +1313,23 @@ object Leiden {
             val freshFrags = fragN.keysIterator
               .filter { case (sc, c) => keeperOf(sc) != c }.toSeq.sorted
             freshUsed = freshFrags.length.toLong
-            val newScOf: Map[(Long, Long), Long] =
-              keeperOf.map { case (sc, c) => (sc, c) -> sc } ++
-                freshFrags.zipWithIndex.map { case (k, i) =>
-                  k -> (freshIdBase + i + 1)
-                }
-            // per-vertex relabel map, applied to the V-sized assignment as
-            // one broadcast overlay join
-            val relabRows = memRows.iterator.map { r =>
-              val v = r.getLong(vIdx)
-              org.apache.spark.sql.Row(v, newScOf((scOf(v), comp(v))))
-            }.toSeq
-            import org.apache.spark.sql.types._
-            val relabDf = spark.createDataFrame(
-              new java.util.ArrayList(relabRows.asJava),
-              StructType(Seq(StructField("v", LongType, nullable = false),
-                StructField("newSc", LongType, nullable = false))))
-            a = a.join(broadcast(relabDf), Seq("v"), "left")
-              .select(col("v"), col("community"),
-                coalesce(col("newSc"), col("subcomm")).as("subcomm")).ckpt
-            spark.createDataFrame(
-              new java.util.ArrayList(relabRows.collect {
-                case r if r.getLong(1) != scOf(r.getLong(0)) =>
-                  org.apache.spark.sql.Row(r.getLong(0))
-              }.asJava),
-              StructType(Seq(StructField("v", LongType, nullable = false))))
+            // only the vertices of non-keeper fragments change subcomm:
+            // a split that splits nothing leaves `a` as it came
+            val freshOf = freshFrags.zipWithIndex.map { case (k, i) =>
+              k -> (freshIdBase + i + 1)
+            }.toMap
+            val relab = vs.flatMap { v =>
+              freshOf.get((scOf(v), comp(v))).map(v -> _)
+            }
+            if (relab.nonEmpty) {
+              // per-vertex relabel map, applied to the V-sized assignment
+              // as one broadcast overlay join
+              a = a.join(broadcast(relab.toSeq.toDF("v", "newSc")),
+                  Seq("v"), "left")
+                .select(col("v"), col("community"),
+                  coalesce(col("newSc"), col("subcomm")).as("subcomm")).ckpt
+            }
+            Ckpt.local(spark, relab.map(_._1))
           case None =>
             val comps = ConnectedComponents.run(intra,
               vertices = Some(membersV), sink = MetricsSink.discard).components
@@ -1276,9 +1349,6 @@ object Leiden {
             val wKeep = Window.partitionBy("subcomm")
               .orderBy(desc("n"), asc("component"))
             val ranked = compSizes.withColumn("rn", row_number().over(wKeep))
-            val keepers = ranked.where(col("rn") === 1)
-              .select(col("subcomm"), col("component"),
-                col("subcomm").as("newSc"))
             // Enforce (not just document) the delta-bound of the global
             // fresh-id window: it is a single-partition sort over the batch's
             // SPLIT fragments only. One cheap agg over the checkpointed
@@ -1293,26 +1363,33 @@ object Leiden {
               s"refinement split produced $nSplitFrags fresh fragments — " +
                 "exceeds the single-partition fresh-id window bound; " +
                 "batch is not delta-sized")
-            val wFresh = Window.orderBy("subcomm", "component")
-            val freshComps = ranked.where(col("rn") > 1)
-              .select(col("subcomm"), col("component"),
-                (lit(freshIdBase) + row_number().over(wFresh)).as("newSc"))
-              .ckpt
-            // rn > 1 rows are exactly the non-keeper fragments counted above
-            freshUsed = nSplitFrags
-            val scMap = keepers.unionAll(freshComps)
-            val relabeled = a
-              .join(mb(withSc.select(col("v"), col("component"))), Seq("v"),
-                "left")
-              .join(mb(scMap), Seq("subcomm", "component"), "left")
-              .select(col("v"), col("community"),
-                coalesce(col("newSc"), col("subcomm")).as("newSc"),
-                col("subcomm"))
-            val refinedD = relabeled.where(col("newSc") =!= col("subcomm"))
-              .select("v").ckpt
-            a = relabeled.select(col("v"), col("community"),
-              col("newSc").as("subcomm")).ckpt
-            refinedD
+            // nothing split: `a` stays as it came
+            if (nSplitFrags == 0) noneRefined
+            else {
+              val keepers = ranked.where(col("rn") === 1)
+                .select(col("subcomm"), col("component"),
+                  col("subcomm").as("newSc"))
+              val wFresh = Window.orderBy("subcomm", "component")
+              val freshComps = ranked.where(col("rn") > 1)
+                .select(col("subcomm"), col("component"),
+                  (lit(freshIdBase) + row_number().over(wFresh)).as("newSc"))
+                .ckpt
+              // rn > 1 rows are exactly the non-keeper fragments counted above
+              freshUsed = nSplitFrags
+              val scMap = keepers.unionAll(freshComps)
+              val relabeled = a
+                .join(mb(withSc.select(col("v"), col("component"))), Seq("v"),
+                  "left")
+                .join(mb(scMap), Seq("subcomm", "component"), "left")
+                .select(col("v"), col("community"),
+                  coalesce(col("newSc"), col("subcomm")).as("newSc"),
+                  col("subcomm"))
+              val refinedD = relabeled.where(col("newSc") =!= col("subcomm"))
+                .select("v").ckpt
+              a = relabeled.select(col("v"), col("community"),
+                col("newSc").as("subcomm")).ckpt
+              refinedD
+            }
         }
       }
 
@@ -1324,12 +1401,14 @@ object Leiden {
     // singletons and their intra-community neighbors, so subcommunity
     // stats outside those communities are dead weight (delta-bound, not
     // O(V), per batch).
+    // no refined vertex, no merge candidate: no round
+    val anyRefined = isInitial || refined.rows > 0
     val affComms =
-      if (isInitial) None
+      if (isInitial || !anyRefined) None
       else Some(a.join(refined, Seq("v"), "left_semi")
         .select("community").distinct().ckpt)
     var round = 0
-    var moved = 1L
+    var moved = if (anyRefined) 1L else 0L
 
     // --- delta-bound phase 2, driver-local (the warm-update hot path):
     // the scope (members of refined-touched communities) and the refined
@@ -1342,7 +1421,6 @@ object Leiden {
     var localRounds = false
     for (ac <- affComms if ac.rows > 0 &&
         graft.util.Bcast.fits(ac.rows, bytesPerRow = 16)) {
-      import spark.implicits._
       val scopeAttrs0 = a
         .join(broadcast(ac), Seq("community"), "left_semi")
         .join(deg, Seq("v"))

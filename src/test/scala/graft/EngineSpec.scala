@@ -142,24 +142,42 @@ class EngineSpec extends SparkSpecBase {
     import graft.algo.Incremental
     import graft.source.CodeTableSynth
     // the warm batch's time is set by its job count (tens of ms of fixed
-    // cost each on small tables), so the count is the regression gate.
+    // cost each on small tables), so the count is the regression gate,
+    // per phase so that a regression names its phase. Engine.update
+    // reaches Leiden only through level-0 movement (movement,
+    // localMovePhase and its gathers) and refinement.
     // Fixture: a 600-vertex SBM graph, 80 % cold, one 100-edge insert.
     // Jobs for this update (local[4], 4 shuffle partitions): 151 before
     // counted checkpoints, 97 before the driver-side delta prologue and
-    // the manifest's m2 and watermark; the bound is 80 % of the latter.
+    // the manifest's m2 and watermark, 70 before the prologue-fed
+    // movement entry, the deferred prefetch and the skipped no-op
+    // refinement and aggregation steps; the bound is 80 % of the latter.
     val ParentJobs = 151
     val PrologueJobs = 97
+    val EntryJobs = 70
     val root = Files.createTempDirectory("graft-jobs").toString
     val g = CodeTableSynth.sbmEdges(spark, 600, 12, seed = 42L)
     val (init, batches) = Incremental.paperSplit(g, 0.8, 100, 1, 42L)
     val cfg = Engine.Config(checkpointRoot = Some(root), runId = "jobs",
       leiden = Leiden.Config(localSolveLevel0Verts = 600))
     Engine.run(init, cfg)
-    val (o, jobs) = withJobs(Engine.update(spark, batches.head, cfg))
+    val (o, bySite) = withJobsBySite(Engine.update(spark, batches.head, cfg))
     assert(o.batch == 1 && o.quality > 0.3)
-    info(s"$jobs jobs (before: $ParentJobs, then $PrologueJobs)")
-    assert(jobs <= PrologueJobs * 4 / 5,
-      s"$jobs jobs for one warm update (before: $PrologueJobs)")
+    val jobs = bySite.values.sum
+    def phase(site: String) =
+      if (site == "Leiden.refinement") "refinement"
+      else if (site.startsWith("Leiden.")) "movement"
+      else "rest"
+    val byPhase = bySite.groupMapReduce(kv => phase(kv._1))(_._2)(_ + _)
+      .withDefaultValue(0)
+    info(s"$jobs jobs (before: $ParentJobs, then $PrologueJobs, then " +
+      s"$EntryJobs); by phase $byPhase; by call site $bySite")
+    assert(byPhase("movement") >= 1 && byPhase("movement") <= 10,
+      s"movement ran ${byPhase("movement")} jobs: $bySite")
+    assert(byPhase("refinement") >= 1 && byPhase("refinement") <= 7,
+      s"refinement ran ${byPhase("refinement")} jobs: $bySite")
+    assert(jobs <= EntryJobs * 4 / 5,
+      s"$jobs jobs for one warm update (before: $EntryJobs): $bySite")
   }
 
   test("manifest: m2 and max_id are the committed 2m and watermark; a " +

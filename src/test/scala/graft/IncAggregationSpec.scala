@@ -89,6 +89,22 @@ class IncAggregationSpec extends SparkSpecBase {
     val dh = deltaH.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(dh == Map((10L, 11L) -> 2.5))
+
+    // rows that merge, land inside one subcommunity or cancel: the plan
+    // for a counted empty R, and the driver form, give the same deltaH
+    val sPre2 = mapping(0L -> 10L, 1L -> 11L, 2L -> 10L, 3L -> 12L)
+    val rows = Array((0L, 1L, 2.0), (1L, 2L, 1.0), (0L, 2L, 3.0),
+      (1L, 3L, -1.0), (2L, 3L, 1.0), (0L, 3L, -1.0))
+    val want = Map((10L, 11L) -> 3.0, (10L, 10L) -> 3.0, (11L, 12L) -> -1.0)
+    for (r <- Seq(refined, graft.util.Ckpt.local(spark, Array.empty[Long]))) {
+      val (dh2, _) = IncAggregation(adj, edges(rows.toSeq: _*), sPre2,
+        sPre2, r)
+      assert(dh2.collect().map(x => (x.getLong(0), x.getLong(1)) ->
+        x.getDouble(2)).toMap == want)
+    }
+    val pre = toMapLL(sPre2)
+    assert(IncAggregation.deltaOnly(rows, pre, 1e-9).toSeq ==
+      want.toSeq.map { case ((a, b), w) => (a, b, w) }.sorted)
   }
 
   test("composite: delta edges AND refinement re-seating in one batch") {

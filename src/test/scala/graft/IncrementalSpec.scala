@@ -242,16 +242,28 @@ class IncrementalSpec extends SparkSpecBase {
     assert(byV(drv.degNew) == byV(dist.degNew))
     assert(ids(drv.activated).nonEmpty &&
       ids(drv.activated) == ids(dist.activated))
-    assert(ids(drv.k0) == ids(dist.k0) &&
-      drv.k0Ids.map(_.toSeq).contains(ids(dist.k0)))
-    // the frontier's post-delta degree sum, as movement would probe it
+    val held = drv.held.get
+    assert(ids(drv.k0) == ids(dist.k0) && held.k0.toSeq == ids(dist.k0))
+    // the endpoints' assignment rows; a new id is its own singleton
+    def rowsOf(vs: org.apache.spark.sql.DataFrame) = vs
+      .join(st.assign, Seq("v"), "left")
+      .select(col("v"), coalesce(col("community"), col("v")),
+        coalesce(col("subcomm"), col("v")))
+    assert(held.k0Scs.toSet == rowsOf(dist.k0).collect()
+      .map(_.getLong(2)).toSet)
+    // the frontier's rows, as movement would collect them: community,
+    // subcomm and post-delta degree
     val deg0 = st.deg.get.join(dist.deltaDeg, Seq("v"), "left")
       .select(col("v"), (col("deg") + coalesce(col("dd"), lit(0.0)))
         .as("deg"))
       .unionAll(dist.degNew)
-    val degSum = deg0.join(dist.activated, "v").agg(sum("deg")).head()
-      .getDouble(0)
-    assert(drv.activeDegSum.contains(degSum), (drv.activeDegSum, degSum))
+    val want = rowsOf(dist.activated).join(deg0, "v").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
+        r.getDouble(3)))).toMap
+    val fr = held.frontier
+    assert(fr.ids.toSeq == fr.ids.sorted.toSeq)
+    assert(fr.ids.indices.map(i =>
+      fr.ids(i) -> ((fr.comm(i), fr.subcomm(i), fr.deg(i)))).toMap == want)
   }
 
   test("resume: a vertex whose edges were all deleted gets its degree row " +

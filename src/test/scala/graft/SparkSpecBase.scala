@@ -36,19 +36,47 @@ abstract class SparkSpecBase extends AnyFunSuite {
     ts.toDF("src", "dst", "weight")
   }
 
-  /** `f`'s value and the number of Spark jobs it started. The listener
-    * bus is asynchronous: a tagged sentinel job runs after `f`, and its
-    * start event marks the point where every job of `f` was counted. */
+  /** `f`'s value and the number of Spark jobs it started. */
   def withJobs[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (out, bySite) = withJobsBySite(f)
+    (out, bySite.values.sum)
+  }
+
+  /** `f`'s value and its Spark jobs by engine call site: `Class.method`
+    * of the first `graft.` frame outside `graft.util` (whose `.ckpt`
+    * wrapper files its jobs under its caller), nested defs and lambdas
+    * under their enclosing method, e.g. `Leiden.gatherNew`; "other" when
+    * no engine frame shows. A job of a SQL execution is filed under the
+    * execution's call site: adaptive query stages and broadcasts run
+    * their jobs from Spark's thread pools, whose own stacks name no
+    * engine frame. The listener bus is asynchronous: a tagged sentinel
+    * job runs after `f`, and its start event marks the point where every
+    * job of `f` was seen. */
+  def withJobsBySite[T](f: => T): (T, Map[String, Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val jobs = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String])
     val seen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.sentinel") ==
-          "1")) seen.countDown()
-        else jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execSite.put(s.executionId, SparkSpecBase.siteOf(s.details))
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("graft.sentinel") == "1"))
+          seen.countDown()
+        else jobs.add(props
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSite.get(id.toLong)))
+          .getOrElse(SparkSpecBase.siteOf(
+            e.stageInfos.headOption.fold("")(_.details))))
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -57,18 +85,25 @@ abstract class SparkSpecBase extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty("graft.sentinel", null)
       assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
+      val sites = jobs.toArray(Array.empty[String])
+      (out, sites.groupBy(identity).view.mapValues(_.length).toMap)
     } finally sc.removeSparkListener(listener)
   }
 
   /** `f` under a driver byte budget of `bytes` (the
     * `graft.bcast.budgetBytes` hook): every byte-gated driver path
-    * ([[graft.util.Bcast]]) refuses what does not fit it. */
-  def withByteBudget[T](bytes: Long)(f: => T): T =
-    try {
-      sys.props("graft.bcast.budgetBytes") = bytes.toString
-      f
-    } finally sys.props -= "graft.bcast.budgetBytes"
+    * ([[graft.util.Bcast]]) refuses what does not fit it. The enclosing
+    * budget, or its absence, is restored afterwards, so a nested call
+    * leaves the outer budget in force. */
+  def withByteBudget[T](bytes: Long)(f: => T): T = {
+    val outer = sys.props.get("graft.bcast.budgetBytes")
+    sys.props("graft.bcast.budgetBytes") = bytes.toString
+    try f
+    finally outer match {
+      case Some(b) => sys.props("graft.bcast.budgetBytes") = b
+      case None => sys.props -= "graft.bcast.budgetBytes"
+    }
+  }
 
   /** (v -> value) map from a two-column DataFrame. */
   def toMapLL(df: DataFrame): Map[Long, Long] =
@@ -85,4 +120,22 @@ abstract class SparkSpecBase extends AnyFunSuite {
     val minOf = assign.groupBy(_._2).map { case (c, kv) => c -> kv.keys.min }
     assign.map { case (v, c) => v -> minOf(c) }
   }
+}
+
+object SparkSpecBase {
+  /** The engine call site of a Spark call-site stack (see
+    * [[SparkSpecBase.withJobsBySite]]): a frame such as
+    * `graft.algo.Leiden$.$anonfun$refinement$3(Leiden.scala:1)` gives
+    * `Leiden.refinement`. */
+  def siteOf(stack: String): String =
+    stack.linesIterator.map(_.trim)
+      .find(f => f.startsWith("graft.") && !f.startsWith("graft.util."))
+      .map { f =>
+        val qualified = f.takeWhile(_ != '(')
+        val cls = qualified.substring(0, qualified.lastIndexOf('.'))
+          .split('.').last.takeWhile(_ != '$')
+        val method = qualified.substring(qualified.lastIndexOf('.') + 1)
+          .stripPrefix("$anonfun$").takeWhile(_ != '$')
+        s"$cls.$method"
+      }.getOrElse("other")
 }
