@@ -1,6 +1,5 @@
 package graft.algo
 
-import graft.util.Ckpt
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -37,11 +36,10 @@ object IncAggregation {
     *   its own collect — instead of ckpt + collect.
     * @return (deltaH canonical signed edges, sPre' updated mapping)
     *
-    * A `refined` set known to be empty (a counted frame, [[Ckpt.known]])
-    * re-seats nothing: deltaH is the delta branch alone, and the four
-    * re-seat and self-loop branches are left out of the plan. A caller
-    * that holds the delta and the previous subcommunities on the driver
-    * builds that branch with [[deltaOnly]] instead, with no job.
+    * An empty R re-seats nothing, so deltaH is the delta branch alone. A
+    * caller that knows R is empty and holds the delta and the previous
+    * subcommunities on the driver builds it with [[deltaOnly]] instead,
+    * with no job.
     */
   def apply(adj: DataFrame, delta: DataFrame, sPre: DataFrame,
       sCur: DataFrame, refined: DataFrame,
@@ -61,47 +59,6 @@ object IncAggregation {
       .select(col("preU").as("src"), col("preN").as("dst"),
         coalesce(col("weight"), lit(1.0)).as("weight"))
 
-    // 3. compress (lines 533-546) — EdgeOps.compress is exactly it; the
-    // re-seat rows of step 2 ([[reseated]]) join unless R is known empty
-    val deltaH0 =
-      if (Ckpt.known(refined).contains(0L)) EdgeOps.compress(deltaMapped, eps)
-      else EdgeOps.compress(deltaMapped.unionAll(reseated(adj, refined,
-        preSrc, preDst, curSrc, curDst)), eps)
-    val deltaH = if (materialize) deltaH0.ckpt else deltaH0
-
-    // 4. sPre' = sPre overridden by sCur on R (lines 527-531). Returned
-    // LAZY: when R = {v: sCur != sPre} (the live-path contract) this
-    // equals sCur and callers use that directly.
-    val nextPre = sPre
-      .join(broadcast(refined.withColumn("_r", lit(1))), Seq("v"), "left")
-      .join(sCur.select(col("v"), col("sc").as("scCur")), "v")
-      .select(col("v"),
-        when(col("_r").isNotNull, col("scCur")).otherwise(col("sc")).as("sc"))
-    (deltaH, nextPre)
-  }
-
-  /** Step 1 and the compress of step 3 on the driver, for an empty R:
-    * each delta row (u, v, w) becomes (pre(u), pre(v), w), and the rows
-    * merge as [[EdgeOps.compress]] merges them (canonical endpoint order,
-    * weights summed, |w| <= eps dropped; the sums equal the distributed
-    * ones exactly for integer-valued weights). Sorted by (src, dst). */
-  def deltaOnly(delta: Array[(Long, Long, Double)], pre: Long => Long,
-      eps: Double): Array[(Long, Long, Double)] = {
-    val sums = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
-    delta.foreach { case (u, v, w) =>
-      val (pu, pv) = (pre(u), pre(v))
-      val k = (math.min(pu, pv), math.max(pu, pv))
-      sums(k) = sums.getOrElse(k, 0.0) + w
-    }
-    sums.iterator.collect { case ((s, d), w) if math.abs(w) > eps =>
-      (s, d, w)
-    }.toArray.sortBy(e => (e._1, e._2))
-  }
-
-  /** Step 2: the signed re-seat rows of the refined vertices' edges. */
-  private def reseated(adj: DataFrame, refined: DataFrame,
-      preSrc: DataFrame, preDst: DataFrame, curSrc: DataFrame,
-      curDst: DataFrame): DataFrame = {
     // 2. refined vertices re-seat their incident edges (lines 507-525).
     // Self-loops are handled in a separate branch: the symmetrized
     // adjacency stores a self-loop as two identical rows, and the
@@ -133,6 +90,39 @@ object IncAggregation {
       negate(col("weight")).as("weight"))
     val posLoops = rLoop.select(col("curU").as("src"), col("curU").as("dst"),
       col("weight"))
-    negEdges.unionAll(posEdges).unionAll(negLoops).unionAll(posLoops)
+
+    // 3. compress (lines 533-546) — EdgeOps.compress is exactly it
+    val deltaH0 = EdgeOps.compress(
+      deltaMapped.unionAll(negEdges).unionAll(posEdges)
+        .unionAll(negLoops).unionAll(posLoops), eps)
+    val deltaH = if (materialize) deltaH0.ckpt else deltaH0
+
+    // 4. sPre' = sPre overridden by sCur on R (lines 527-531). Returned
+    // LAZY: when R = {v: sCur != sPre} (the live-path contract) this
+    // equals sCur and callers use that directly.
+    val nextPre = sPre
+      .join(broadcast(refined.withColumn("_r", lit(1))), Seq("v"), "left")
+      .join(sCur.select(col("v"), col("sc").as("scCur")), "v")
+      .select(col("v"),
+        when(col("_r").isNotNull, col("scCur")).otherwise(col("sc")).as("sc"))
+    (deltaH, nextPre)
+  }
+
+  /** Step 1 and the compress of step 3 on the driver, for an empty R:
+    * each delta row (u, v, w) becomes (pre(u), pre(v), w), and the rows
+    * merge as [[EdgeOps.compress]] merges them (canonical endpoint order,
+    * weights summed, |w| <= eps dropped; the sums equal the distributed
+    * ones exactly for integer-valued weights). Sorted by (src, dst). */
+  def deltaOnly(delta: Array[(Long, Long, Double)], pre: Long => Long,
+      eps: Double): Array[(Long, Long, Double)] = {
+    val sums = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
+    delta.foreach { case (u, v, w) =>
+      val (pu, pv) = (pre(u), pre(v))
+      val k = (math.min(pu, pv), math.max(pu, pv))
+      sums(k) = sums.getOrElse(k, 0.0) + w
+    }
+    sums.iterator.collect { case ((s, d), w) if math.abs(w) > eps =>
+      (s, d, w)
+    }.toArray.sortBy(e => (e._1, e._2))
   }
 }

@@ -912,9 +912,9 @@ object Incremental {
     // --- supergraph maintenance via the reference's delta machinery.
     // R must contain EXACTLY the changed vertices (hit_leiden.rs:509-511
     // dedup guard assumes it); refinement's refined set is a superset
-    // when a phase-2 merge lands a vertex back on its old id. A counted
-    // empty refined set re-seats nothing: deltaH is the mapped delta,
-    // built on the driver when the prologue holds it there.
+    // when a phase-2 merge lands a vertex back on its old id. A refined
+    // set counted empty re-seats nothing: when the prologue holds the
+    // delta on the driver, deltaH is the mapped delta built there.
     val noReseat = Ckpt.known(ref.refined).contains(0L)
     val (deltaH, dRows) = pro.held.filter(_ => noReseat) match {
       case Some(h) =>

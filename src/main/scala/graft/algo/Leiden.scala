@@ -324,13 +324,11 @@ object Leiden {
     * @param affectedIds K on the driver, when every sweep that added to
     *   it ran driver-local
     * @param affectedScs the distinct subcommunities of `affectedIds`
-    * @param prefetchHops adjacency hops the driver-local phase prefetched
-    *   (0 when no local sweep applied a move)
     */
   final case class MovementOut(assign: DataFrame, changed: DataFrame,
       affected: DataFrame, sweeps: Int, moves: Long,
       affectedIds: Option[Array[Long]] = None,
-      affectedScs: Option[Array[Long]] = None, prefetchHops: Int = 0)
+      affectedScs: Option[Array[Long]] = None)
 
   /** A level-0 frontier's rows as a caller already holds them on the
     * driver: id (ascending), community, subcommunity and weighted degree
@@ -391,7 +389,6 @@ object Leiden {
     val affectedScL = mutable.LongMap.empty[Unit]
     var sweep = 0
     var totalMoves = 0L
-    var prefetchHops = 0
     var frontierN = knownN.getOrElse(active.rows)
     // exact weighted-degree sum over the current frontier, or -1 when
     // unknown (lazy large-frontier path). Weighted degree >= adjacency
@@ -469,7 +466,6 @@ object Leiden {
           affected = affected.unionAll(lp.affected.toSeq.toDF("v"))
         affectedL.foreach(k => lp.affected.foreach(k(_) = ()))
         lp.affectedScs.foreach(affectedScL(_) = ())
-        prefetchHops += lp.prefetchHops
         // resumed distributed sweeps rebuild community stats from the
         // post-local-phase assignment (exact for integer weights)
         if (lp.bail) commDeg = None
@@ -743,7 +739,7 @@ object Leiden {
     MovementOut(if (totalMoves == 0) assign else a.ckpt, changed.distinct(),
       affected.distinct(), sweep, totalMoves,
       affectedL.map(_.keysIterator.toArray),
-      affectedL.map(_ => affectedScL.keysIterator.toArray), prefetchHops)
+      affectedL.map(_ => affectedScL.keysIterator.toArray))
   }
 
   /** xxHash64 of one long / one int — bit-identical to Spark's
@@ -786,7 +782,7 @@ object Leiden {
       aPrev: Option[DataFrame], active: DataFrame,
       changed: Array[Long], affected: Array[Long], affectedScs: Array[Long],
       frontierN: Long, frontierDegSum: Double, sweep: Int,
-      movesApplied: Long, bail: Boolean, prefetchHops: Int)
+      movesApplied: Long, bail: Boolean)
 
   /** Driver-local movement sweeps — the warm-update hot path.
     *
@@ -959,7 +955,7 @@ object Leiden {
     // frontier's degree sum — hop growth in a well-connected graph would
     // otherwise balloon to the whole graph within the absolute budget
     // (~64 B per gathered adjacency row: ids + weight + attrs).
-    def prefetch(from: Array[Long], fromDegSum: Double): Int = {
+    def prefetch(from: Array[Long], fromDegSum: Double): Unit = {
       val capRows = math.min(graft.util.Bcast.budgetBytes / 64,
         (32.0 * math.max(fromDegSum, 1.0)).toLong)
       var spentRows = 0L
@@ -979,7 +975,6 @@ object Leiden {
         pSum = 0.0
         cand.foreach(pSum += degM(_))
       }
-      hops
     }
 
     // --- the sweep loop (exact mirror of the distributed body)
@@ -994,7 +989,6 @@ object Leiden {
     var frontierN = frontier.length.toLong
     var bail = false
     var bailFull = false
-    var prefetchHops = 0
     var prefetched = false
     // the next sweep fetches stats for every loaded vertex's community:
     // the first sweep (frontier + 1-hop neighbors), and the one after the
@@ -1144,7 +1138,7 @@ object Leiden {
             bail = true // outgrew the budget: distributed sweeps resume
           else if (!prefetched && frontierN > 0 && sweep + 1 < cfg.maxSweeps) {
             prefetched = true
-            prefetchHops = prefetch(frontier, frontierDegSum)
+            prefetch(frontier, frontierDegSum)
             fetchAll = true
           }
         }
@@ -1186,7 +1180,7 @@ object Leiden {
       affectedScs.keysIterator.toArray,
       if (bailFull) nVerts else frontierN,
       if (bailFull) m2 else frontierDegSum,
-      sweep, movesApplied, bail, prefetchHops)
+      sweep, movesApplied, bail)
   }
 
   // ---------------------------------------------------------------------

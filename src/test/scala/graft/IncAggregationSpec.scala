@@ -91,7 +91,8 @@ class IncAggregationSpec extends SparkSpecBase {
     assert(dh == Map((10L, 11L) -> 2.5))
 
     // rows that merge, land inside one subcommunity or cancel: the plan
-    // for a counted empty R, and the driver form, give the same deltaH
+    // with an empty R (lazy, and counted) and the driver form give the
+    // same deltaH
     val sPre2 = mapping(0L -> 10L, 1L -> 11L, 2L -> 10L, 3L -> 12L)
     val rows = Array((0L, 1L, 2.0), (1L, 2L, 1.0), (0L, 2L, 3.0),
       (1L, 3L, -1.0), (2L, 3L, 1.0), (0L, 3L, -1.0))

@@ -136,11 +136,13 @@ class LocalSweepSpec extends SparkSpecBase {
       // an edge inside the largest subcommunity (K0) and one between the
       // best-attached members of two communities (the frontier)
       val ins = edges((a(0), a(1), 1.0), (a(0), b(0), 1.0))
-      val l0 = level0(st0, ins)
+      val (l0, bySite) = withJobsBySite(level0(st0, ins))
       assert(l0.mv.sweeps == 1 && l0.mv.moves == 0,
         s"$tag: the insert moved (${l0.mv.moves} moves)")
-      assert(l0.mv.prefetchHops == 0, s"$tag: a sweep that moved nothing " +
-        s"prefetched ${l0.mv.prefetchHops} hops")
+      // the frontier's one adjacency gather (its collect and the
+      // broadcasts it builds); a prefetch would add gathers
+      assert(bySite.getOrElse("Leiden.gatherNew", 0) == 3, s"$tag: a sweep " +
+        s"that moved nothing gathered more than its frontier: $bySite")
       assert(l0.mv.assign eq l0.assign0)
       assert(l0.ref.assign eq l0.mv.assign, s"$tag: an unsplit refinement " +
         "relabelled its input")

@@ -44,9 +44,11 @@ abstract class SparkSpecBase extends AnyFunSuite {
 
   /** `f`'s value and its Spark jobs by engine call site: `Class.method`
     * of the first `graft.` frame outside `graft.util` (whose `.ckpt`
-    * wrapper files its jobs under its caller), nested defs and lambdas
-    * under their enclosing method, e.g. `Leiden.gatherNew`; "other" when
-    * no engine frame shows. A job of a SQL execution is filed under the
+    * wrapper files its jobs under its caller); "other" when no engine
+    * frame shows. A lambda is filed under its enclosing method
+    * (`$anonfun$refinement$3` gives `Leiden.refinement`), a local def
+    * under its own name (scalac's `gatherNew$1` gives
+    * `Leiden.gatherNew`). A job of a SQL execution is filed under the
     * execution's call site: adaptive query stages and broadcasts run
     * their jobs from Spark's thread pools, whose own stacks name no
     * engine frame. The listener bus is asynchronous: a tagged sentinel
