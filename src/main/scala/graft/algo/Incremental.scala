@@ -4,7 +4,7 @@ import graft.util.Ckpt
 import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, LocalGraph}
 import graft.run.MetricsSink
 
 import scala.collection.mutable
@@ -37,7 +37,8 @@ import scala.collection.mutable
   *    smaller) supergraph: a warm solve over its driver-side mirror once
   *    it fits ([[Leiden.Config.localSolveEdges]]), the delta-scoped
   *    distributed branch above that bound, and a full re-solve only
-  *    when no maintained state exists (after a cold run or a resume).
+  *    when no maintained state exists (after a distributed cold run,
+  *    or for a caller that clears it).
   *
   * The remaining per-batch O(V) work (assignment carry, the supernode
   * community seed aggregation) is over the VERTEX table, which at link-
@@ -47,11 +48,14 @@ import scala.collection.mutable
   * [[graft.graph.BucketedEdges]].
   *
   * Across batches the bound does not hold yet. [[graft.run.Engine.update]]
-  * starts every batch from the checkpoint, which holds neither degrees
-  * nor the supergraph, so [[hydrate]] rebuilds both from the whole edge
-  * table on every resume: two O(E) passes per batch. Without the
+  * starts every batch from the checkpoint. It carries the level-1 state
+  * (the supergraph, the composition or, past the driver bound, the
+  * level-1 assignment), so a batch reads what the previous one
+  * committed; the cold checkpoint of a driver-local solve carries it
+  * too. It holds no degrees, so [[hydrate]] rebuilds them from the whole
+  * edge table on every resume: one O(E) pass per batch. Without the
   * durable-edge option the checkpoint also rewrites the whole edge table
-  * every batch. Carrying both with the checkpointed state is direction 1
+  * every batch. Carrying the degrees with the assignment is direction 1
   * of ROADMAP.md.
   */
 object Incremental {
@@ -130,7 +134,8 @@ object Incremental {
     * @param m2     cached 2 * total weight
     * @param deg    (v, deg) weighted degrees (absent: derived on demand)
     * @param superCanon live level-1 supergraph = contract(canon, subcomm)
-    *   (absent: derived on demand — e.g. after resume from checkpoint)
+    *   (absent: derived on demand — after a distributed cold run, or
+    *   from a checkpoint that predates the committed supergraph)
     * @param maxId  id watermark for fresh subcommunity allocation
     *   (largest-component-keeps-id splits allocate above it)
     * @param durable when set, `canon` is backed by (and [[update]] merges
@@ -148,12 +153,14 @@ object Incremental {
       durable: Option[DurableCanon] = None,
       /** driver-side sorted-array mirror of superCanon, present only
         * while the supergraph is local-solve-sized (see [[SuperEdges]]);
-        * purely an optimization — absent after resume, rebuilt on the
-        * next batch's collect */
+        * purely an optimization — absent after resume, rebuilt by one
+        * collect of the committed supergraph */
       superCache: Option[SuperEdges] = None,
       /** maintained composed (subcomm -> community) map for the DEFAULT
-        * live path (see [[UpperComm]]); absent after resume — rebuilt by
-        * the next batch's re-solve fallback. */
+        * live path (see [[UpperComm]]); committed with every checkpoint
+        * that holds it, the identity after a driver-local cold solve.
+        * Absent after a distributed cold run, or past the driver bound:
+        * the next batch then takes the re-solve fallback. */
       upper: Option[UpperComm] = None,
       /** maintained DISTRIBUTED level-1 assignment
         * (v = supernode, community, subcomm), present only while the
@@ -177,7 +184,8 @@ object Incremental {
       m2Committed: Boolean = false)
 
   /** Fill derivable fields absent after a resume or an old-format call:
-    * degrees, the live supergraph (contract by subcomm — the invariant
+    * degrees, the live supergraph when the checkpoint carries none
+    * (contract by subcomm — the invariant
     * superCanon == contract(canon, assign.subcomm) holds at every batch
     * boundary) and the id watermark, which clears every label of the
     * assignment and of the maintained upper assignment. */
@@ -259,6 +267,33 @@ object Incremental {
       .sortBy(i => (rows(i).getLong(0), rows(i).getLong(1)))
     SuperEdges(sorted.map(rows(_).getLong(0)), sorted.map(rows(_).getLong(1)),
       sorted.map(rows(_).getDouble(2)))
+  }
+
+  /** The level-1 state of a cold partition solved on the driver, whose
+    * checkpoint sets subcomm = community: the identity composition over
+    * its communities and the supergraph, `es` contracted by `comm`
+    * (canonical, summed, |w| > eps), sorted by (src, dst) as the mirror
+    * [[update]] maintains. Driver arithmetic over the solve's own arrays,
+    * no Spark job. */
+  private[graft] def coldLevel1(es: Array[(Long, Long, Double)],
+      comm: Map[Long, Long], eps: Double): (UpperComm, SuperEdges) = {
+    val cs = LocalGraph.sortedDistinct(comm.valuesIterator.toArray)
+    val nC = cs.length.toLong
+    def ix(v: Long) = java.util.Arrays.binarySearch(cs, comm(v)).toLong
+    // (src, dst) as one key in community-id order: src index * C + dst
+    val keys = es.map { case (u, v, _) =>
+      val (a, b) = (ix(u), ix(v))
+      math.min(a, b) * nC + math.max(a, b)
+    }
+    val uk = LocalGraph.sortedDistinct(keys.clone())
+    val w = new Array[Double](uk.length)
+    for (i <- es.indices)
+      w(java.util.Arrays.binarySearch(uk, keys(i))) += es(i)._3
+    val keep = uk.indices.filter(i => math.abs(w(i)) > eps).toArray
+    val upper = mutable.LongMap.empty[Long]
+    cs.foreach(c => upper(c) = c)
+    (UpperComm(upper), SuperEdges(keep.map(i => cs((uk(i) / nC).toInt)),
+      keep.map(i => cs((uk(i) % nC).toInt)), keep.map(w)))
   }
 
   /** Compose a (subcomm, newComm) upper-level result onto the base
@@ -807,8 +842,8 @@ object Incremental {
     * paths: the warm solve over the maintained mirror (the live path),
     * the delta-scoped distributed branch above `localSolveEdges`, or the
     * re-solve over the maintained supergraph (the fallback when no upper
-    * state is maintained, as after a resume; a caller that clears
-    * `upper` gets it as the oracle for the warm solve).
+    * state is maintained, as after a distributed cold run; a caller that
+    * clears `upper` gets it as the oracle for the warm solve).
     *
     * The prologue (new ids, delta degrees, activation, K0) is gated on the
     * compressed delta's driver bytes ([[DeltaRowBytes]] per row against
@@ -956,11 +991,12 @@ object Incremental {
     // fallback re-solve then skips its multi-million-row re-collect.
     // First batch after resume (VERDICT r5 #7): the persisted upper
     // composition survives the checkpoint but the mirror does not —
-    // rebuild it from the hydrated pre-delta supergraph (one gated
-    // collect; the same sort resolveSuper's local init applies) so the
-    // warm mirror solve engages instead of a full re-solve. Exactness
-    // note: the hydrated supergraph re-aggregates weights in a fresh
-    // order, exact for the integer-valued weights every ingest produces.
+    // rebuild it from the pre-delta supergraph (one collect, gated on the
+    // manifest's row count; the same sort resolveSuper's local init
+    // applies) so the warm mirror solve engages instead of a full
+    // re-solve. The committed supergraph is the mirror's own rows; one
+    // hydrate derived re-aggregates weights in a fresh order, exact for
+    // the integer-valued weights every ingest produces.
     val rebuiltCache: Option[SuperEdges] =
       if (state.superCache.isEmpty && state.upper.isDefined &&
           cfg.localSolveEdges > 0 &&
@@ -976,8 +1012,9 @@ object Incremental {
     // hierarchy solve (dense repair + pre-densified solve, all primitive
     // arrays) — no carried aggregation, no collect, no per-batch
     // sort/pack. Otherwise resolveSuper: the delta-scoped branch past the
-    // driver bound, or the re-solve (no maintained state after resume),
-    // which REBUILDS the maintained state when it lands local.
+    // driver bound, or the re-solve (no maintained state, as after a
+    // distributed cold run), which REBUILDS the maintained state when it
+    // lands local.
     val useMirror = state.upper.isDefined &&
       cfg.localSolveEdges > 0 &&
       mergedCache.exists(_.src.length <= cfg.localSolveEdges)

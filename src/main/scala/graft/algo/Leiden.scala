@@ -126,9 +126,8 @@ object Leiden {
     *   None otherwise — callers fall back to
     *   Quality.singletonModularity(canon)
     * @param m total edge weight of `canon`
-    * @param maxLabel the largest vertex or community id of `assignment`
-    *   when the driver holds the partition (the level-0 local solve);
-    *   None otherwise
+    * @param level0 the collected level-0 graph and its solved partition
+    *   (v -> community) when the level-0 local solve ran; None otherwise
     */
   final case class Result(
       assignment: DataFrame,
@@ -139,7 +138,7 @@ object Leiden {
       canon: DataFrame,
       m: Double,
       singletonQ: Option[Double] = None,
-      maxLabel: Option[Long] = None)
+      level0: Option[(LocalGraph, Map[Long, Long])] = None)
 
   // ---------------------------------------------------------------------
   // cold start: full Leiden on an edge table
@@ -305,10 +304,8 @@ object Leiden {
           if (cfg.useCpm) None
           else Some(Quality.modularityFromArrays(g.es,
             solved.transform((v, _) => v), cfg.gamma))
-        val maxLabel = solved.iterator
-          .map { case (v, c) => math.max(v, c) }.maxOption
         Result(finalAssign, level + 1, q, solved.valuesIterator.toSet.size,
-          sweeps, canon0, m, singletonQ, maxLabel)
+          sweeps, canon0, m, singletonQ, level0)
       case None =>
         val (q, nComm) = Quality.score(canon0, finalAssign, cfg.gamma,
           cfg.useCpm)

@@ -86,7 +86,7 @@ object LocalGraph {
   }
 
   /** Sorts `a` in place and returns its distinct values. */
-  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+  private[graft] def sortedDistinct(a: Array[Long]): Array[Long] = {
     java.util.Arrays.sort(a)
     var n = 0
     var i = 0

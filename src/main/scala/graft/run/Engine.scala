@@ -2,7 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import java.nio.file.{Files, Paths}
 import graft.algo.{Incremental, Leiden, Quality}
 import graft.graph.{EdgeOps, LocalGraph}
 import graft.state.Checkpointer
@@ -174,13 +174,23 @@ object Engine {
       // cold-path Leiden result has no subcommunity column; re-derive a
       // valid state: subcomm = community (a coarser-but-consistent warm
       // start; the first delta's refinement re-splits as needed). The
-      // run already holds m and, after a driver-local solve, the largest
-      // label — the watermark hydrate would otherwise scan for
+      // run already holds m and, after a driver-local solve, the graph
+      // and partition on the driver: from those come the largest label
+      // (the watermark hydrate would otherwise scan for) and the level-1
+      // state, the identity composition and the supergraph mirror, so
+      // the first update takes the warm mirror solve. After a
+      // distributed solve the first update re-solves the upper levels
+      val level1 = r.level0.map { case (g, solved) =>
+        Incremental.coldLevel1(g.es, solved, cfg.leiden.eps)
+      }
+      val maxLabel = r.level0.flatMap(_._2.iterator
+        .map { case (v, c) => math.max(v, c) }.maxOption)
       val st = Incremental.State(r.canon,
         out.assignment.select(col("v"), col("community"),
           col("community").as("subcomm")), 2.0 * r.m,
-        maxId = r.maxLabel.getOrElse(Long.MinValue),
-        durable = cfg.durableEdges)
+        maxId = maxLabel.getOrElse(Long.MinValue),
+        durable = cfg.durableEdges, upper = level1.map(_._1),
+        superCache = level1.map(_._2))
       writeState(cfg, st, out)
     }
 
@@ -226,20 +236,19 @@ object Engine {
               a.nBuckets, out.batch.toLong)
         }
       }
-      // persist the maintained upper composition (O(supernodes) rows;
-      // VERDICT r5 #7): with it, the first post-resume batch re-enters
-      // the warm mirror solve instead of paying a full re-solve spike.
-      // Written BEFORE the manifest/LATEST rename below — the commit
-      // point — like every other durable piece of the batch. Absent
-      // (e.g. the supergraph exceeded the driver bound), resume falls
-      // back to the re-solve init exactly as before.
+      // persist the maintained upper composition (O(supernodes) rows,
+      // written on the driver; VERDICT r5 #7): with it, the first
+      // post-resume batch re-enters the warm mirror solve instead of
+      // paying a full re-solve spike. Written BEFORE the manifest/LATEST
+      // rename below — the commit point — like every other durable piece
+      // of the batch. Absent (e.g. the supergraph exceeded the driver
+      // bound), resume falls back to the re-solve init exactly as before.
+      val conf = st.assign.sparkSession.sparkContext.hadoopConfiguration
       st.upper.foreach { u =>
-        val spark = st.assign.sparkSession
-        import spark.implicits._
-        u.composed.toSeq
-          .toDF("subcomm", "community")
-          .write.mode("overwrite")
-          .parquet(s"$root/${cfg.runId}/iter=${out.batch}/upper")
+        val (subcomm, community) = u.composed.toArray.unzip
+        graft.state.DriverParquet.write(conf,
+          s"$root/${cfg.runId}/iter=${out.batch}/upper",
+          "subcomm" -> subcomm, "community" -> community)
       }
       // likewise the maintained distributed level-1 assignment (present
       // only past the driver bound, O(supernodes) rows): with it the
@@ -247,11 +256,28 @@ object Engine {
       // a full supergraph re-solve
       st.upperAssign.foreach(_.write.mode("overwrite")
         .parquet(s"$root/${cfg.runId}/iter=${out.batch}/upperAssign"))
+      // and the level-1 supergraph, so a resume contracts nothing: from
+      // the driver mirror when there is one (written on the driver, like
+      // the composition), else from the maintained table. Its row count
+      // goes into the manifest for the next batch's mirror-rebuild gate
+      val superPath = s"$root/${cfg.runId}/iter=${out.batch}/super"
+      val superRows = st.superCache match {
+        case Some(se) =>
+          graft.state.DriverParquet.write(conf, superPath,
+            EdgeOps.SRC -> se.src, EdgeOps.DST -> se.dst, EdgeOps.W -> se.w)
+          Some(se.src.length.toLong)
+        case None => st.superCanon.map { sc =>
+          val t = if (Ckpt.known(sc).isDefined) sc else sc.ckpt
+          t.write.mode("overwrite").parquet(superPath)
+          t.rows
+        }
+      }
       val cp = new Checkpointer(root, cfg.runId)
       cp.write(out.batch, st.assign, out.metrics, frontier = 0,
         quality = out.quality, edgeRows = edgeRows,
         assignmentData = cfg.durableAssign.isEmpty, m2 = Some(st.m2),
-        maxId = Some(st.maxId).filter(_ != Long.MinValue))
+        maxId = Some(st.maxId).filter(_ != Long.MinValue),
+        superRows = superRows)
     }
 
   private[graft] def readState(spark: SparkSession, root: String,
@@ -276,23 +302,30 @@ object Engine {
     // of the canon (a durable store one batch ahead is Incremental.update's
     // replay to detect, and it keeps a committed m2 as the pre-delta one)
     val m2 = man.m2.getOrElse(2.0 * EdgeOps.totalWeight(canon))
-    // maintained upper composition, if the committing batch persisted it
-    val upper = scala.util.Try {
-      val rows = spark.read.schema(UpperSchema)
-        .parquet(s"$root/$runId/iter=$batch/upper").collect()
+    // the level-1 state the committing batch persisted: the composition,
+    // the supergraph and, past the driver bound, the level-1 assignment.
+    // A table is read when its directory exists; reading one that is
+    // there but unreadable fails the batch rather than re-solving
+    def committed(name: String): Option[String] =
+      Some(s"$root/$runId/iter=$batch/$name")
+        .filter(p => Files.exists(Paths.get(p)))
+    val upper = committed("upper").map { p =>
       val m = scala.collection.mutable.LongMap.empty[Long]
-      rows.foreach(r => m(r.getLong(0)) = r.getLong(1))
+      graft.state.DriverParquet.foreach(
+        spark.sparkContext.hadoopConfiguration, p) { g =>
+        m(g.getLong("subcomm", 0)) = g.getLong("community", 0)
+      }
       Incremental.UpperComm(m)
-    }.toOption
-    val upperAssign = scala.util.Try(spark.read
-      .schema(Checkpointer.AssignSchema)
-      .parquet(s"$root/$runId/iter=$batch/upperAssign")).toOption
-    Incremental.State(canon, assign, m2,
+    }
+    val superCanon = committed("super").map { p =>
+      val t = spark.read.schema(EdgeOps.Schema).parquet(p)
+      man.superRows.fold(t)(Ckpt.withRows(t, _))
+    }
+    val upperAssign = committed("upperAssign")
+      .map(spark.read.schema(Checkpointer.AssignSchema).parquet(_))
+    Incremental.State(canon, assign, m2, superCanon = superCanon,
       maxId = man.maxId.getOrElse(Long.MinValue), durable = durable,
       upper = upper, upperAssign = upperAssign,
       m2Committed = man.m2.isDefined)
   }
-
-  private val UpperSchema = StructType(Seq(
-    StructField("subcomm", LongType), StructField("community", LongType)))
 }

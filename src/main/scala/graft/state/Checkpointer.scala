@@ -16,11 +16,15 @@ import scala.util.Try
   *   <root>/<runId>/iter=<k>/MANIFEST.json (atomic: tmp + rename)
   *   <root>/<runId>/LATEST                 (atomic pointer to last iter)
   *
+  * The engine writes the rest of a batch's state beside them, before the
+  * manifest: edges/, upper/, super/ and upperAssign/.
+  *
   * The manifest embeds the iteration number, row count, frontier size and
   * quality so a resume is reproducible (SURVEY.md section 7.4: atomic,
   * _SUCCESS-gated writes; Spark writes _SUCCESS, the manifest rename is the
-  * commit point). The engine adds 2m (`m2`) and the fresh-id watermark
-  * (`max_id`) when it holds them, so a resume reads them instead of
+  * commit point). The engine adds 2m (`m2`), the fresh-id watermark
+  * (`max_id`) and the row count of the level-1 supergraph it committed
+  * (`super_rows`) when it holds them, so a resume reads them instead of
   * re-deriving them with scans.
   */
 final class Checkpointer(root: String, runId: String) {
@@ -34,7 +38,7 @@ final class Checkpointer(root: String, runId: String) {
       metrics: Seq[graft.run.IterMetric], frontier: Long,
       quality: Double, edgeRows: Long = -1L,
       assignmentData: Boolean = true, m2: Option[Double] = None,
-      maxId: Option[Long] = None): Unit = {
+      maxId: Option[Long] = None, superRows: Option[Long] = None): Unit = {
     val spark = assignment.sparkSession
     import spark.implicits._
     val dir = iterDir(iter)
@@ -49,7 +53,8 @@ final class Checkpointer(root: String, runId: String) {
       s"""{"run_id":"$runId","iter":$iter,"rows":$rows,""" +
         s""""edge_rows":$edgeRows,"frontier":$frontier,"quality":$quality""" +
         m2.fold("")(m => s""","m2":$m""") +
-        maxId.fold("")(m => s""","max_id":$m""") + "}"
+        maxId.fold("")(m => s""","max_id":$m""") +
+        superRows.fold("")(n => s""","super_rows":$n""") + "}"
     atomicWrite(s"$dir/MANIFEST.json", manifest)
     atomicWrite(s"$root/$runId/LATEST", iter.toString)
   }
@@ -73,7 +78,8 @@ final class Checkpointer(root: String, runId: String) {
       .readTree(readManifest(iter))
     Checkpointer.Manifest(j.get("rows").asLong,
       Option(j.get("m2")).map(_.asDouble),
-      Option(j.get("max_id")).map(_.asLong))
+      Option(j.get("max_id")).map(_.asLong),
+      Option(j.get("super_rows")).map(_.asLong))
   }
 
   private def atomicWrite(path: String, content: String): Unit = {
@@ -95,7 +101,9 @@ object Checkpointer {
   /** @param rows assignment row count
     * @param m2 2 x total edge weight, absent in manifests that predate it
     * @param maxId fresh-id watermark, absent when the committing run did
-    *   not hold it (or the manifest predates it) */
+    *   not hold it (or the manifest predates it)
+    * @param superRows row count of the committed level-1 supergraph,
+    *   absent when the iteration committed none */
   final case class Manifest(rows: Long, m2: Option[Double],
-      maxId: Option[Long])
+      maxId: Option[Long], superRows: Option[Long])
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.run.Engine
 import graft.algo.Leiden
@@ -36,7 +37,9 @@ class EngineSpec extends SparkSpecBase {
       "chain equals the in-memory continuation (r6, VERDICT r5 #7)") {
     import graft.algo.Incremental
     val root = Files.createTempDirectory("graft-upper").toString
-    val cfg = Engine.Config(checkpointRoot = Some(root), runId = "ru")
+    // a driver-local cold solve, whose checkpoint carries the level-1 state
+    val cfg = Engine.Config(checkpointRoot = Some(root), runId = "ru",
+      leiden = Leiden.Config(localSolveLevel0Verts = 100))
     // integer weights only: both chains' float sums are then exact in
     // any aggregation order, so exact partition equality is a fair ask
     val g = edges(
@@ -48,17 +51,19 @@ class EngineSpec extends SparkSpecBase {
     // engine chain: every update RE-READS state from the checkpoint, so
     // batch 2 exercises the resume path with the persisted composition
     val _ = Engine.run(g, cfg)
-    assert(!Files.exists(java.nio.file.Paths.get(s"$root/ru/iter=0/upper")),
-      "cold run has no maintained composition to persist")
+    assert(Files.exists(java.nio.file.Paths.get(s"$root/ru/iter=0/upper")),
+      "a driver-local cold run must persist its identity composition")
     val e1 = Engine.update(spark, b1, cfg)
     assert(e1.batch == 1)
     assert(Files.exists(java.nio.file.Paths.get(s"$root/ru/iter=1/upper")),
       "warm update must persist the maintained upper composition")
     val e2 = Engine.update(spark, b2, cfg)
-    // in-memory chain seeded EXACTLY like the engine's cold checkpoint
-    // (subcomm = community, state otherwise re-derived) but keeping the
-    // maintained upper/mirror alive in memory — the resume-driven chain
-    // must agree with it exactly
+    // in-memory chain seeded like the engine's cold checkpoint
+    // (subcomm = community) but without its level-1 state, so its first
+    // batch re-solves the upper levels and later ones keep the maintained
+    // upper/mirror alive in memory — the resume-driven chain, whose first
+    // batch takes the warm solve from the committed state, must agree
+    // with it exactly
     val r = Leiden.run(g, cfg.leiden)
     var st = Incremental.State(
       graft.graph.EdgeOps.compress(g),
@@ -152,10 +157,13 @@ class EngineSpec extends SparkSpecBase {
     // counted checkpoints, 97 before the driver-side delta prologue and
     // the manifest's m2 and watermark, 70 before the prologue-fed
     // movement entry, the deferred prefetch and the skipped no-op
-    // refinement and aggregation steps; the bound is 80 % of the latter.
+    // refinement and aggregation steps, 45 before the checkpoint carried
+    // the level-1 state (the cold run's identity composition and every
+    // batch's supergraph) that the upper levels and hydrate re-derived.
     val ParentJobs = 151
     val PrologueJobs = 97
     val EntryJobs = 70
+    val Level1Jobs = 45
     val root = Files.createTempDirectory("graft-jobs").toString
     val g = CodeTableSynth.sbmEdges(spark, 600, 12, seed = 42L)
     val (init, batches) = Incremental.paperSplit(g, 0.8, 100, 1, 42L)
@@ -167,9 +175,14 @@ class EngineSpec extends SparkSpecBase {
     val jobs = bySite.values.sum
     val movementSites = Set("Leiden.movement", "Leiden.localMovePhase",
       "Leiden.gatherNew", "Leiden.ensureStats", "Leiden.prefetch")
+    val upperSites = Set("Incremental.resolveSuper",
+      "Incremental.composeOnto", "Incremental.collectSuperEdges",
+      "Incremental.warmSolveSuper")
     def phase(site: String) =
       if (movementSites(site)) "movement"
       else if (site == "Leiden.refinement") "refinement"
+      else if (upperSites(site)) "upper"
+      else if (site == "Incremental.hydrate") "hydrate"
       else {
         assert(!site.startsWith("Leiden."), s"unfiled Leiden call site " +
           s"$site: $bySite")
@@ -178,13 +191,138 @@ class EngineSpec extends SparkSpecBase {
     val byPhase = bySite.groupMapReduce(kv => phase(kv._1))(_._2)(_ + _)
       .withDefaultValue(0)
     info(s"$jobs jobs (before: $ParentJobs, then $PrologueJobs, then " +
-      s"$EntryJobs); by phase $byPhase; by call site $bySite")
+      s"$EntryJobs, then $Level1Jobs); by phase $byPhase; by call site " +
+      s"$bySite")
     assert(byPhase("movement") >= 1 && byPhase("movement") <= 10,
       s"movement ran ${byPhase("movement")} jobs: $bySite")
     assert(byPhase("refinement") >= 1 && byPhase("refinement") <= 7,
       s"refinement ran ${byPhase("refinement")} jobs: $bySite")
-    assert(jobs <= EntryJobs * 4 / 5,
-      s"$jobs jobs for one warm update (before: $EntryJobs): $bySite")
+    assert(byPhase("upper") >= 1 && byPhase("upper") <= 4,
+      s"upper levels ran ${byPhase("upper")} jobs: $bySite")
+    assert(byPhase("hydrate") <= 2,
+      s"hydrate ran ${byPhase("hydrate")} jobs: $bySite")
+    assert(jobs <= 41,
+      s"$jobs jobs for one warm update (before: $Level1Jobs): $bySite")
+  }
+
+  test("job sites: a local lazy val's jobs are filed under the method " +
+      "that reads it") {
+    val frames = Seq(
+      "org.apache.spark.sql.classic.Dataset.localCheckpoint(Dataset.scala:1)",
+      "graft.util.Ckpt$.observed(Ckpt.scala:1)",
+      "graft.algo.Incremental$.x$5$lzycompute$1(Incremental.scala:1)",
+      "graft.algo.Incremental$.x$5$1(Incremental.scala:1)",
+      "graft.algo.Incremental$.superM$lzycompute$1(Incremental.scala:1)",
+      "graft.algo.Incremental$.superM$1(Incremental.scala:1)",
+      "graft.algo.Incremental$.$anonfun$resolveSuper$1(Incremental.scala:1)",
+      "scala.Option.fold(Option.scala:1)",
+      "graft.algo.Incremental$.resolveSuper(Incremental.scala:1)")
+    assert(SparkSpecBase.siteOf(frames.mkString("\n")) ==
+      "Incremental.resolveSuper")
+    // lambdas and local defs keep their filing
+    assert(SparkSpecBase.siteOf(
+      "graft.algo.Leiden$.$anonfun$refinement$3(Leiden.scala:1)") ==
+      "Leiden.refinement")
+    assert(SparkSpecBase.siteOf(
+      "graft.algo.Leiden$.gatherNew$1(Leiden.scala:1)\n" +
+        "graft.algo.Leiden$.localMovePhase(Leiden.scala:1)") ==
+      "Leiden.gatherNew")
+    assert(SparkSpecBase.siteOf("scala.Option.fold(Option.scala:1)") ==
+      "other")
+  }
+
+  test("committed level-1 state: a driver-local cold run commits the " +
+      "identity composition and the contracted supergraph, and a batch " +
+      "resumed from them re-solves nothing") {
+    import graft.algo.Incremental
+    import graft.graph.EdgeOps
+    import graft.source.CodeTableSynth
+    import graft.state.Checkpointer
+    val g = CodeTableSynth.sbmEdges(spark, 400, 8, seed = 7L)
+    val (init, Seq(b1, ins2)) = Incremental.paperSplit(g, 0.8, 60, 2, 7L)
+    // the second batch also deletes 20 edges of the cold graph
+    val b2 = ins2.select("src", "dst", "weight").unionAll(
+      init.orderBy("src", "dst").limit(20)
+        .select(col("src"), col("dst"), negate(col("weight"))))
+    for (leiden <- Seq(Leiden.Config(localSolveLevel0Verts = 400),
+        Leiden.Config(localSolveLevel0Verts = 400, useCpm = true))) {
+      val tag = if (leiden.useCpm) "cpm" else "modularity"
+      val root = Files.createTempDirectory("graft-level1").toString
+      val cfg = Engine.Config(leiden = leiden, checkpointRoot = Some(root),
+        runId = "l1")
+      def table(k: Int, name: String) = s"$root/l1/iter=$k/$name"
+      // what iteration k committed: the composition sends every
+      // subcommunity to its community, and the supergraph is the edge
+      // table contracted by subcommunity, row for row
+      def checkCommitted(k: Int): Map[Long, Long] = {
+        val assign = spark.read.schema(Checkpointer.AssignSchema)
+          .parquet(table(k, "assignment")).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        val upper = toMapLL(spark.read.parquet(table(k, "upper")))
+        val commOf = assign.map(a => a._3 -> a._2).toMap
+        assert(assign.forall(a => upper.get(a._3).contains(a._2)),
+          s"$tag iter=$k: composition disagrees with the assignment")
+        val sc = spark.read.schema(Checkpointer.AssignSchema)
+          .parquet(table(k, "assignment")).select("v", "subcomm")
+        val contracted = EdgeOps.compress(spark.read.schema(EdgeOps.Schema)
+          .parquet(table(k, "edges"))
+          .join(sc.select(col("v").as("src"), col("subcomm").as("su")), "src")
+          .join(sc.select(col("v").as("dst"), col("subcomm").as("sv")), "dst")
+          .select(col("su").as("src"), col("sv").as("dst"), col("weight")),
+          leiden.eps)
+        def rows(df: DataFrame) = df.select("src", "dst", "weight")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .sorted.toSeq
+        val committed = rows(spark.read.parquet(table(k, "super")))
+        assert(committed == rows(contracted),
+          s"$tag iter=$k: committed supergraph != contraction")
+        assert(new Checkpointer(root, "l1").manifest(k).superRows
+          .contains(committed.length.toLong))
+        commOf.map { case (scId, _) => scId -> upper(scId) }
+      }
+      Engine.run(init, cfg)
+      val cold = checkCommitted(0)
+      assert(cold.forall { case (scId, c) => scId == c },
+        s"$tag: the cold composition is not the identity")
+      assert(toMapLL(spark.read.parquet(table(0, "upper"))).keySet ==
+        cold.keySet, s"$tag: the cold composition holds extra entries")
+      val (e1, bySite) = withJobsBySite(Engine.update(spark, b1, cfg))
+      assert(!bySite.contains("Incremental.resolveSuper"),
+        s"$tag: the first update re-solved the upper levels: $bySite")
+      checkCommitted(1)
+      val e2 = Engine.update(spark, b2, cfg)
+      checkCommitted(2)
+      // the same two batches in memory from the committed cold state
+      var st = Engine.readState(spark, root, "l1", 0)
+      st = Incremental.update(st, b1, leiden)
+      assert(toMapLL(st.assign.select(col("v"), col("community"))) ==
+        toMapLL(e1.assignment), s"$tag: batch 1 diverged")
+      st = Incremental.update(st, b2, leiden)
+      assert(canonicalPartition(toMapLL(st.assign.select(col("v"),
+        col("community")))) == canonicalPartition(toMapLL(e2.assignment)),
+        s"$tag: resumed chain diverged from the in-memory chain")
+    }
+  }
+
+  test("a committed level-1 table that cannot be read fails the batch") {
+    val root = Files.createTempDirectory("graft-corrupt").toString
+    val cfg = Engine.Config(checkpointRoot = Some(root), runId = "c",
+      leiden = Leiden.Config(localSolveLevel0Verts = 100))
+    val g = edges(
+      (0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 0L, 1.0),
+      (3L, 4L, 1.0), (4L, 5L, 1.0), (5L, 3L, 1.0), (2L, 3L, 1.0))
+    Engine.run(g, cfg)
+    Engine.update(spark, edges((6L, 3L, 1.0), (6L, 4L, 1.0)), cfg)
+    val part = Files.list(java.nio.file.Paths.get(s"$root/c/iter=1/upper"))
+      .filter(_.getFileName.toString.matches("part-.*\\.parquet"))
+      .findFirst().get
+    val bytes = Files.readAllBytes(part)
+    Files.write(part, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    val e = intercept[Exception] {
+      Engine.update(spark, edges((7L, 0L, 1.0), (7L, 1L, 1.0)), cfg)
+    }
+    assert(e.getMessage.contains("iter=1/upper"), e.getMessage)
+    assert(new graft.state.Checkpointer(root, "c").latest().contains(1))
   }
 
   test("manifest: m2 and max_id are the committed 2m and watermark; a " +

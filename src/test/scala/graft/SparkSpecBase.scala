@@ -128,16 +128,33 @@ object SparkSpecBase {
   /** The engine call site of a Spark call-site stack (see
     * [[SparkSpecBase.withJobsBySite]]): a frame such as
     * `graft.algo.Leiden$.$anonfun$refinement$3(Leiden.scala:1)` gives
-    * `Leiden.refinement`. */
-  def siteOf(stack: String): String =
-    stack.linesIterator.map(_.trim)
-      .find(f => f.startsWith("graft.") && !f.startsWith("graft.util."))
+    * `Leiden.refinement`. The frames of a local lazy val are filed under
+    * the method that reads it, the next `graft.` frame: its initializer
+    * (`superM$lzycompute$1`), the accessor that calls it (`superM$1`) and,
+    * for a lazy pattern such as `lazy val (superM, superW) = ...`,
+    * scalac's synthetic `x$5` that holds the matched tuple. */
+  def siteOf(stack: String): String = {
+    val frames = stack.linesIterator.map(_.trim)
+      .filter(f => f.startsWith("graft.") && !f.startsWith("graft.util."))
       .map { f =>
         val qualified = f.takeWhile(_ != '(')
         val cls = qualified.substring(0, qualified.lastIndexOf('.'))
           .split('.').last.takeWhile(_ != '$')
         val method = qualified.substring(qualified.lastIndexOf('.') + 1)
-          .stripPrefix("$anonfun$").takeWhile(_ != '$')
-        s"$cls.$method"
-      }.getOrElse("other")
+          .stripPrefix("$anonfun$")
+        (cls, method)
+      }
+    // the name whose initializer the previous frame ran: its accessor
+    // is the next frame
+    var initialized: Option[String] = None
+    frames.find { case (_, method) =>
+      val name = method.takeWhile(_ != '$')
+      val init = method.contains("$lzycompute$")
+      val lazyVal = init || initialized.contains(name) ||
+        method.matches("x\\$\\d+(\\$.*)?")
+      initialized = Option.when(init)(name)
+      !lazyVal
+    }.map { case (cls, method) => s"$cls.${method.takeWhile(_ != '$')}" }
+      .getOrElse("other")
+  }
 }
