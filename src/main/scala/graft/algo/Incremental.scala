@@ -5,7 +5,7 @@ import graft.util.Ckpt.DFCkpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.{EdgeOps, LocalGraph}
-import graft.run.MetricsSink
+import graft.run.{IterMetric, MetricsSink}
 
 import scala.collection.mutable
 
@@ -181,7 +181,13 @@ object Incremental {
         * ran one batch ahead of that checkpoint (crash between its merge
         * and the commit); [[update]]'s replay then keeps this m2 as the
         * pre-delta value instead of un-merging it. */
-      m2Committed: Boolean = false)
+      m2Committed: Boolean = false,
+      /** the quality (modularity, or CPM when the config selects it) and
+        * community count of `assign`, when the batch that produced this
+        * state scored it on the driver from the level-1 mirror and the
+        * composition ([[mirrorScore]]); absent otherwise. Not committed:
+        * a checkpoint's manifest carries the quality. */
+      score: Option[(Double, Long)] = None)
 
   /** Fill derivable fields absent after a resume or an old-format call:
     * degrees, the live supergraph when the checkpoint carries none
@@ -252,11 +258,14 @@ object Incremental {
   }
 
   /** resolveSuper result: the composed base assignment plus whichever
-    * maintained upper-state form the taken path produces, and the count
-    * of fresh ids it allocated above the caller's watermark. */
+    * maintained upper-state form the taken path produces, the count
+    * of fresh ids it allocated above the caller's watermark, and the
+    * driver score ([[mirrorScore]]) when the path ends holding the mirror
+    * and the composition. */
   private final case class SuperOut(out: DataFrame,
       cache: Option[SuperEdges], upper: Option[UpperComm],
-      upperAssign: Option[DataFrame], freshUsed: Long)
+      upperAssign: Option[DataFrame], freshUsed: Long,
+      score: Option[(Double, Long)] = None)
 
   /** Collect a local-solve-sized supergraph into the driver-side mirror,
     * sorted by (src, dst) so per-batch delta merges are a linear
@@ -269,31 +278,78 @@ object Incremental {
       sorted.map(rows(_).getDouble(2)))
   }
 
-  /** The level-1 state of a cold partition solved on the driver, whose
-    * checkpoint sets subcomm = community: the identity composition over
-    * its communities and the supergraph, `es` contracted by `comm`
-    * (canonical, summed, |w| > eps), sorted by (src, dst) as the mirror
-    * [[update]] maintains. Driver arithmetic over the solve's own arrays,
-    * no Spark job. */
-  private[graft] def coldLevel1(es: Array[(Long, Long, Double)],
-      comm: Map[Long, Long], eps: Double): (UpperComm, SuperEdges) = {
-    val cs = LocalGraph.sortedDistinct(comm.valuesIterator.toArray)
-    val nC = cs.length.toLong
-    def ix(v: Long) = java.util.Arrays.binarySearch(cs, comm(v)).toLong
-    // (src, dst) as one key in community-id order: src index * C + dst
-    val keys = es.map { case (u, v, _) =>
-      val (a, b) = (ix(u), ix(v))
-      math.min(a, b) * nC + math.max(a, b)
+  /** The state a cold checkpoint commits for the partition `r` solved.
+    * Its subcommunities are the connected components of the communities
+    * along intra-community edges: the largest keeps the community id, the
+    * others take fresh ids above the largest label, as refinement's
+    * phase 1 allocates them. Every committed subcommunity is then
+    * connected, the start condition of [[level0]]'s refinement skip; on
+    * connected communities subcomm = community.
+    *
+    * After a level-0 driver-local solve, the split, the composition
+    * (subcomm -> community) and the supergraph (`es` contracted by
+    * subcommunity, canonical, summed, |w| > eps, sorted by (src, dst) as
+    * the mirror [[update]] maintains) are driver arithmetic over the
+    * solve's own arrays ([[Leiden.splitLocal]]), no Spark job; the first
+    * update takes the warm mirror solve. After a distributed solve,
+    * refinement's phase 1 ([[Leiden.split]]) splits the whole assignment,
+    * and the first update re-solves the upper levels. The assignment's
+    * row count and the watermark are recorded either way. */
+  private[graft] def coldState(r: Leiden.Result, cfg: Leiden.Config,
+      durable: Option[DurableCanon]): State = {
+    val spark = r.canon.sparkSession
+    import spark.implicits._
+    val assign0 = r.assignment.select(col("v"), col("community"),
+      col("community").as("subcomm"))
+    r.level0 match {
+      case Some((g, comm)) =>
+        val maxLabel = comm.iterator.map { case (v, c) => math.max(v, c) }
+          .maxOption.getOrElse(Long.MinValue)
+        val intra = g.es.collect {
+          case (u, v, _) if u != v && comm(u) == comm(v) => (u, v)
+        }
+        val (relab, fresh) = Leiden.splitLocal(comm.keysIterator.toArray,
+          comm, intra, maxLabel)
+        val sub = mutable.LongMap.empty[Long]
+        relab.foreach { case (v, s) => sub(v) = s }
+        def subOf(v: Long) = sub.getOrElse(v, comm(v))
+        val assign =
+          if (relab.isEmpty) assign0
+          else assign0.join(broadcast(relab.toSeq.toDF("v", "newSc")),
+              Seq("v"), "left")
+            .select(col("v"), col("community"),
+              coalesce(col("newSc"), col("subcomm")).as("subcomm"))
+        val upper = mutable.LongMap.empty[Long]
+        comm.foreach { case (v, c) => upper(subOf(v)) = c }
+        val ss = LocalGraph.sortedDistinct(upper.keysIterator.toArray)
+        val nS = ss.length.toLong
+        def ix(v: Long) = java.util.Arrays.binarySearch(ss, subOf(v)).toLong
+        // (src, dst) as one key in subcommunity-id order: src index * S + dst
+        val keys = g.es.map { case (u, v, _) =>
+          val (a, b) = (ix(u), ix(v))
+          math.min(a, b) * nS + math.max(a, b)
+        }
+        val uk = LocalGraph.sortedDistinct(keys.clone())
+        val w = new Array[Double](uk.length)
+        for (i <- g.es.indices)
+          w(java.util.Arrays.binarySearch(uk, keys(i))) += g.es(i)._3
+        val keep = uk.indices.filter(i => math.abs(w(i)) > cfg.eps).toArray
+        State(r.canon, Ckpt.withRows(assign, comm.size.toLong), 2.0 * r.m,
+          maxId = if (maxLabel == Long.MinValue) maxLabel else maxLabel + fresh,
+          durable = durable, upper = Some(UpperComm(upper)),
+          superCache = Some(SuperEdges(keep.map(i => ss((uk(i) / nS).toInt)),
+            keep.map(i => ss((uk(i) % nS).toInt)), keep.map(w))))
+      case None =>
+        // the largest label rides on the assignment's counted checkpoint
+        val (assign, lab) = Ckpt.observed(assign0,
+          "max" -> greatest(max("v"), max("community")))
+        val maxLabel = if (lab.isNullAt(lab.fieldIndex("max"))) 0L
+          else lab.getAs[Long]("max")
+        val sp = Leiden.split(EdgeOps.symmetrize(r.canon), assign, assign,
+          cfg, maxLabel)
+        State(r.canon, sp.assign, 2.0 * r.m, maxId = maxLabel + sp.freshUsed,
+          durable = durable)
     }
-    val uk = LocalGraph.sortedDistinct(keys.clone())
-    val w = new Array[Double](uk.length)
-    for (i <- es.indices)
-      w(java.util.Arrays.binarySearch(uk, keys(i))) += es(i)._3
-    val keep = uk.indices.filter(i => math.abs(w(i)) > eps).toArray
-    val upper = mutable.LongMap.empty[Long]
-    cs.foreach(c => upper(c) = c)
-    (UpperComm(upper), SuperEdges(keep.map(i => cs((uk(i) / nC).toInt)),
-      keep.map(i => cs((uk(i) % nC).toInt)), keep.map(w)))
   }
 
   /** Compose a (subcomm, newComm) upper-level result onto the base
@@ -305,13 +361,59 @@ object Incremental {
     * community (they have no neighbors to merge with, so that IS the
     * solve result). */
   private def composeOnto(assign: DataFrame, superRes: DataFrame)
-      : DataFrame =
-    assign.select(col("v"), col("subcomm"), col("community").as("oldComm"))
+      : Composed = {
+    val (cp, obs) = Ckpt.observed(assign
+      .select(col("v"), col("subcomm"), col("community").as("oldComm"))
       .join(superRes, Seq("subcomm"), "left")
       .select(col("v"),
         coalesce(col("newComm"), col("oldComm")).as("community"),
-        col("subcomm"))
-      .ckpt
+        col("subcomm"), col("newComm").isNull.as("unseen")),
+      "unseen" -> sum(when(col("unseen"), 1L).otherwise(0L)))
+    val unseen = if (obs.isNullAt(obs.fieldIndex("unseen"))) 0L
+      else obs.getAs[Long]("unseen")
+    Composed(Ckpt.withRows(cp.select("v", "community", "subcomm"), cp.rows),
+      () =>
+        if (unseen == 0) Array.empty
+        else cp.where(col("unseen")).select("subcomm", "community")
+          .distinct().collect().map(r => (r.getLong(0), r.getLong(1))))
+  }
+
+  /** [[composeOnto]]'s result: the composed (v, community, subcomm)
+    * assignment, counted, and the distinct (subcomm, community) pairs of
+    * its rows whose subcommunity the solve did not see (it has no
+    * supergraph edge), collected on call; no job when there are none. */
+  private final case class Composed(out: DataFrame,
+      unseen: () => Array[(Long, Long)])
+
+  /** Quality and community count of a batch that ends holding the level-1
+    * mirror `ce` and the composition `composed` of its vertices, on the
+    * driver: the supergraph scores as the base graph
+    * ([[Quality.modularityFromArrays]]/[[Quality.cpmFromArrays]]; m, W_in
+    * and Σ d_C² are exact sums for integer weights, so the value equals
+    * [[Quality.score]] over the composed assignment bit for bit). The
+    * subcommunities the mirror cannot see are `unseen` (see [[Composed]])
+    * and count with their communities; CPM takes subcommunity sizes from
+    * `szM`. None when one unseen subcommunity spans two communities: a
+    * supernode then has no single community. */
+  private def mirrorScore(ce: SuperEdges,
+      composed: scala.collection.Map[Long, Long],
+      unseen: Array[(Long, Long)], szM: Map[Long, Long],
+      cfg: Leiden.Config): Option[(Double, Long)] = {
+    if (unseen.map(_._1).distinct.length != unseen.length) return None
+    val live = mutable.LongMap.empty[Long]
+    var i = 0
+    while (i < ce.src.length) {
+      live(ce.src(i)) = composed(ce.src(i))
+      live(ce.dst(i)) = composed(ce.dst(i))
+      i += 1
+    }
+    unseen.foreach { case (sc, c) => live(sc) = c }
+    val q =
+      if (cfg.useCpm) Quality.cpmFromArrays(ce.src, ce.dst, ce.w, live,
+        cfg.gamma, szM.getOrElse(_, 1L))
+      else Quality.modularityFromArrays(ce.src, ce.dst, ce.w, live, cfg.gamma)
+    Some((q, live.valuesIterator.toSet.size.toLong))
+  }
 
   /** Solve the (small) supergraph with the carried communities as the
     * seed and compose the result back onto the base assignment. A batch
@@ -345,6 +447,7 @@ object Incremental {
     var upperOut: Option[UpperComm] = None
     var upperAssignOut: Option[DataFrame] = None
     var freshUsed = 0L
+    var sizesOut = Map.empty[Long, Long]
     val superRes =
       if (cfg.localSolveEdges > 0 && nSuper <= cfg.localSolveEdges) {
         // supergraph fits: connectivity repair (union-find) AND the full
@@ -360,6 +463,7 @@ object Incremental {
             .agg(count(lit(1)).as("size")).collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap
           else Map.empty[Long, Long]
+        sizesOut = szM
         val repaired = LocalLeiden.repairConnectivity(ce.src, ce.dst, cmM)
         val solved = LocalLeiden.solve(ce.src, ce.dst, ce.w, szM, repaired,
           cfg, canonicalSorted = true)
@@ -497,9 +601,11 @@ object Incremental {
         solved
       }
 
-    val out = composeOnto(assign, superRes.select(col("v").as("subcomm"),
+    val c = composeOnto(assign, superRes.select(col("v").as("subcomm"),
       col("community").as("newComm")))
-    SuperOut(out, cacheOut, upperOut, upperAssignOut, freshUsed)
+    SuperOut(c.out, cacheOut, upperOut, upperAssignOut, freshUsed,
+      for (ce <- cacheOut; up <- upperOut; q <- mirrorScore(ce, up.composed,
+        c.unseen(), sizesOut, cfg)) yield q)
   }
 
   /** Warm upper-level solve over the maintained mirror — the DEFAULT
@@ -787,7 +893,17 @@ object Incremental {
     * compressed delta, the merged edge table and the post-delta 2m
     * (non-zero). With the driver prologue, movement enters from the
     * frontier's rows and refinement from K's subcommunities, both held
-    * on the driver. */
+    * on the driver.
+    *
+    * Refinement runs only when it can change something. Every committed
+    * subcommunity is connected along its intra-subcommunity edges (the
+    * cold checkpoint commits components, [[Leiden.refinement]] keeps them
+    * connected), its phase 1 splits along those edges only, and movement
+    * changes communities, never subcommunities. So when the driver
+    * prologue's delta deletes no edge inside a subcommunity, phase 1
+    * splits nothing and phase 2 has no refined vertex: the result is
+    * movement's assignment with an empty, counted refined set, and a
+    * zero-round `leiden.refinement` metric records the decision. */
   private[graft] def level0(state: State, deltaC: DataFrame,
       newCanon: DataFrame, m2: Double, cfg: Leiden.Config,
       sink: MetricsSink): Level0 = {
@@ -813,22 +929,38 @@ object Incremental {
 
     val mv = Leiden.movement(adj, deg, m2, assign0, pro.activated, cfg, sink,
       0, entry = pro.held.map(_.frontier))
-    // K = K0 + movement's K; on the driver when both are
-    val (affected, affectedScs) = (pro.held, mv.affectedIds) match {
-      case (Some(h), Some(k)) =>
-        (Ckpt.local(spark, (h.k0 ++ k).distinct),
-          Some((h.k0Scs ++ mv.affectedScs.get).distinct))
-      case _ => (pro.k0.unionAll(mv.affected).distinct().ckpt, None)
-    }
     // the watermark must clear every vertex id seen so far INCLUDING the
     // ones this batch introduced (they arrive as their own singleton
     // subcomm/community ids): allocating fresh split ids from the stale
     // state.maxId could alias a new vertex's id and silently contract two
     // unrelated subcommunities together in the supergraph
     val freshIdBase = math.max(state.maxId, pro.dMax)
-    val ref = Leiden.refinement(adj, deg, m2, mv.assign, affected, cfg, sink,
-      0, isInitial = false, freshIdBase = freshIdBase,
-      affectedScs = affectedScs)
+    // every committed subcommunity is connected, and phase 1 splits only
+    // along intra-subcommunity edges: with none deleted it splits nothing,
+    // and phase 2 has no refined vertex to merge. Decided from the delta
+    // the driver prologue holds; after the distributed one it refines
+    val splitsNothing = pro.held.exists(h => h.delta.forall {
+      case (u, v, w) => w >= 0 || u == v || h.subcomm(u) != h.subcomm(v)
+    })
+    val ref =
+      if (splitsNothing) {
+        sink.add(IterMetric("leiden.refinement", 0, 0, messages = -1,
+          movesAccepted = 0, frontier = -1, qualityDelta = 0.0,
+          seconds = 0.0))
+        Leiden.RefinementOut(mv.assign,
+          Ckpt.local(spark, Array.empty[Long]), 0)
+      } else {
+        // K = K0 + movement's K; on the driver when both are
+        val (affected, affectedScs) = (pro.held, mv.affectedIds) match {
+          case (Some(h), Some(k)) =>
+            (Ckpt.local(spark, (h.k0 ++ k).distinct),
+              Some((h.k0Scs ++ mv.affectedScs.get).distinct))
+          case _ => (pro.k0.unionAll(mv.affected).distinct().ckpt, None)
+        }
+        Leiden.refinement(adj, deg, m2, mv.assign, affected, cfg, sink, 0,
+          isInitial = false, freshIdBase = freshIdBase,
+          affectedScs = affectedScs)
+      }
     Level0(pro, assign0, deg, adj, mv, ref, freshIdBase)
   }
 
@@ -1040,16 +1172,17 @@ object Incremental {
           else Map.empty[Long, Long]
         val (rows, upperNew) = warmSolveSuper(mc, composedOld, seed, szM,
           cfg)
-        val out = composeOnto(assign1,
+        val c = composeOnto(assign1,
           broadcast(rows.toSeq.toDF("subcomm", "newComm")))
-        SuperOut(out, mergedCache, Some(upperNew), None, 0L)
+        SuperOut(c.out, mergedCache, Some(upperNew), None, 0L,
+          mirrorScore(mc, upperNew.composed, c.unseen(), szM, cfg))
       } else resolveSuper(newSuper, assign1, cfg, sink, mergedCache,
         deltaH = Some(deltaH), upperPrev = state.upperAssign,
         freshIdBase = maxId)
     State(newCanon, so.out, m2, deg = Some(deg), superCanon = Some(newSuper),
       maxId = maxId + so.freshUsed, epoch = state.epoch + 1,
       durable = state.durable, superCache = so.cache, upper = so.upper,
-      upperAssign = so.upperAssign)
+      upperAssign = so.upperAssign, score = so.score)
   }
 
   /** Deterministic cumulative delta batches replicating the reference's

@@ -44,7 +44,12 @@ import scala.collection.mutable
   *   - singleton merges run as BSP rounds to a fixpoint instead of one
   *     stale pass; a merge into another *singleton* is only allowed toward
   *     the smaller subcommunity id, which breaks A<->B swap cycles that the
-  *     reference's stale pass can produce, and guarantees progress.
+  *     reference's stale pass can produce, and guarantees progress. A
+  *     merge into a singleton whose member moves away in the same round
+  *     is dropped and retried next round, so every merge lands next to a
+  *     member that stays: each subcommunity stays connected along its
+  *     intra-subcommunity edges (the guarantee of Leiden's refinement,
+  *     Traag, Waltman & van Eck 2019), which warm batches rely on.
   *   - movement supersteps are capped (cfg.maxSweeps); the reference's
   *     `while any active` loop (hit_leiden.rs:202) has no cap and can
   *     oscillate under stale snapshots.
@@ -154,8 +159,11 @@ object Leiden {
       initial: Option[DataFrame] = None,
       initialSizes: Option[DataFrame] = None): Result = {
 
-    val canon0 = EdgeOps.compress(edges, cfg.eps).ckpt
-    val m = EdgeOps.totalWeight(canon0)
+    // m rides on the canon's own checkpoint job
+    val (canon0, mRow) = Ckpt.observed(EdgeOps.compress(edges, cfg.eps),
+      "m" -> sum("weight"))
+    val m = if (mRow.isNullAt(mRow.fieldIndex("m"))) 0.0
+      else mRow.getAs[Double]("m")
     val m2 = 2.0 * m
     // the all-singleton partition: the result of an edgeless graph, and
     // the top assignment until a level solves one
@@ -202,8 +210,7 @@ object Leiden {
           .map(r => r.getLong(0) -> r.getLong(1)).toMap).getOrElse(Map.empty)
         val cmM = carriedComm.map(_.collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap).getOrElse(Map.empty)
-        val solved = LocalLeiden.solve(g.es.map(_._1), g.es.map(_._2),
-          g.es.map(_._3), szM, cmM, cfg)
+        val solved = LocalLeiden.solve(g.src, g.dst, g.w, szM, cmM, cfg)
         val spark = canon.sparkSession
         import spark.implicits._
         topAssign = solved.toSeq.toDF("v", "community")
@@ -298,11 +305,13 @@ object Leiden {
         // extra Spark jobs. The sums are exact for the integer-valued
         // multiplicity weights these graphs carry (order-independent).
         val q =
-          if (cfg.useCpm) Quality.cpmFromArrays(g.es, solved, cfg.gamma)
-          else Quality.modularityFromArrays(g.es, solved, cfg.gamma)
+          if (cfg.useCpm)
+            Quality.cpmFromArrays(g.src, g.dst, g.w, solved, cfg.gamma)
+          else Quality.modularityFromArrays(g.src, g.dst, g.w, solved,
+            cfg.gamma)
         val singletonQ =
           if (cfg.useCpm) None
-          else Some(Quality.modularityFromArrays(g.es,
+          else Some(Quality.modularityFromArrays(g.src, g.dst, g.w,
             solved.transform((v, _) => v), cfg.gamma))
         Result(finalAssign, level + 1, q, solved.valuesIterator.toSet.size,
           sweeps, canon0, m, singletonQ, level0)
@@ -1187,6 +1196,168 @@ object Leiden {
   final case class RefinementOut(assign: DataFrame, refined: DataFrame,
       rounds: Int, freshUsed: Long = 0L)
 
+  /** [[split]]'s result: the assignment after the split, the vertices
+    * that changed subcommunity and the number of fresh ids used. */
+  final case class SplitOut(assign: DataFrame, refined: DataFrame,
+      freshUsed: Long)
+
+  /** Phase 1 of [[refinement]]: replaces each subcommunity of `members`
+    * (counted (v, community, subcomm) rows of `assign`, every member of
+    * each subcommunity they name) with its connected components along
+    * intra-subcommunity edges (hit_leiden.rs:296-371, BFS -> distributed
+    * hash-min CC). Largest component keeps the id, the others get fresh
+    * ids above `freshIdBase`. A split that splits nothing returns
+    * `assign` itself with an empty, counted `refined`. */
+  private[graft] def split(adj: DataFrame, assign: DataFrame,
+      members: DataFrame, cfg: Config, freshIdBase: Long): SplitOut = {
+    val spark = adj.sparkSession
+    import spark.implicits._
+    val membersV = members.select("v")
+    val nMembers = members.rows
+    def mb(df: DataFrame): DataFrame =
+      graft.util.Bcast.ifFits(df, nMembers, bytesPerRow = 32)
+    val intra = adj
+      .join(mb(members.select(col("v").as("src"),
+        col("subcomm").as("scu"))), "src")
+      .join(mb(members.select(col("v").as("dst"),
+        col("subcomm").as("scv"))), "dst")
+      .where(col("scu") === col("scv"))
+      .where(col("src") < col("dst")) // canonical, drop self-loops
+      .select("src", "dst")
+    // batch-sized affected subgraphs resolve their components in a
+    // driver-side union-find — distributed hash-min CC on a few
+    // thousand rows is several fixed-cost jobs for nothing. The local
+    // path is gated on BOTH members and intra-EDGES (a dense affected
+    // subcommunity can carry orders of magnitude more edges than
+    // members; collecting those would land on the driver heap) —
+    // mirrors ConnectedComponents.run's two-sided guard.
+    //
+    // On the local path the ENTIRE largest-keeps-id bookkeeping runs on
+    // the driver over the already-collected members ([[splitLocal]]):
+    // what used to be ~6 fixed-cost jobs (ckpts, windows, counts)
+    // becomes pure JVM work, and only the final V-sized relabel touches
+    // the cluster. The distributed path keeps the window machinery.
+    val localIntra =
+      if (cfg.localSolveEdges > 0 && nMembers <= cfg.localSolveEdges)
+        Some(intra.ckpt).filter(_.rows <= cfg.localSolveEdges)
+      else None
+    localIntra match {
+      case Some(intraC) =>
+        // a USING semi-join moves the key column first — resolve field
+        // positions by name, never by ordinal
+        val vIdx = members.schema.fieldIndex("v")
+        val scIdx = members.schema.fieldIndex("subcomm")
+        val memRows = members.collect()
+        val scOf = memRows.iterator
+          .map(r => r.getLong(vIdx) -> r.getLong(scIdx)).toMap
+        val (relab, freshUsed) = splitLocal(memRows.map(_.getLong(vIdx)),
+          scOf, intraC.collect().map(r => (r.getLong(0), r.getLong(1))),
+          freshIdBase)
+        // only the vertices of non-keeper fragments change subcomm: a
+        // split that splits nothing leaves `assign` as it came
+        val a =
+          if (relab.isEmpty) assign
+          else
+            // per-vertex relabel map, applied to the V-sized assignment
+            // as one broadcast overlay join
+            assign.join(broadcast(relab.toSeq.toDF("v", "newSc")),
+                Seq("v"), "left")
+              .select(col("v"), col("community"),
+                coalesce(col("newSc"), col("subcomm")).as("subcomm")).ckpt
+        SplitOut(a, Ckpt.local(spark, relab.map(_._1)), freshUsed)
+      case None =>
+        val comps = ConnectedComponents.run(intra,
+          vertices = Some(membersV), sink = MetricsSink.discard).components
+
+        // largest-component-keeps-id (hit_leiden.rs:352-370, paper
+        // section 5.1): the biggest fragment of a split keeps the old
+        // subcommunity id — community-id stability a GraphRAG user
+        // diffing batch N vs N+1 observes — and the rest get fresh
+        // counter ids above the caller's watermark. The fresh-rank
+        // window is global but bounded by the SPLIT fragments this batch.
+        import org.apache.spark.sql.expressions.Window
+        // comps vertices are exactly the members set — join the small one
+        val withSc = comps.join(members.select(col("v"), col("subcomm")),
+          "v")
+        val compSizes = withSc.groupBy("subcomm", "component")
+          .agg(count(lit(1)).as("n")).ckpt
+        val wKeep = Window.partitionBy("subcomm")
+          .orderBy(desc("n"), asc("component"))
+        val ranked = compSizes.withColumn("rn", row_number().over(wKeep))
+        // Enforce (not just document) the delta-bound of the global
+        // fresh-id window: it is a single-partition sort over the batch's
+        // SPLIT fragments only. One cheap agg over the checkpointed
+        // compSizes turns the assumption into a guard that fails loudly
+        // before a pathological batch funnels millions of rows through
+        // one task.
+        val Array(nFragRow) = compSizes
+          .agg(count(lit(1)).as("frags"),
+            count_distinct(col("subcomm")).as("scs")).collect()
+        val nSplitFrags = nFragRow.getLong(0) - nFragRow.getLong(1)
+        require(nSplitFrags <= 50_000_000L,
+          s"refinement split produced $nSplitFrags fresh fragments — " +
+            "exceeds the single-partition fresh-id window bound; " +
+            "batch is not delta-sized")
+        // nothing split: `assign` stays as it came
+        if (nSplitFrags == 0)
+          SplitOut(assign, Ckpt.local(spark, Array.empty[Long]), 0L)
+        else {
+          val keepers = ranked.where(col("rn") === 1)
+            .select(col("subcomm"), col("component"),
+              col("subcomm").as("newSc"))
+          val wFresh = Window.orderBy("subcomm", "component")
+          val freshComps = ranked.where(col("rn") > 1)
+            .select(col("subcomm"), col("component"),
+              (lit(freshIdBase) + row_number().over(wFresh)).as("newSc"))
+            .ckpt
+          val scMap = keepers.unionAll(freshComps)
+          val relabeled = assign
+            .join(mb(withSc.select(col("v"), col("component"))), Seq("v"),
+              "left")
+            .join(mb(scMap), Seq("subcomm", "component"), "left")
+            .select(col("v"), col("community"),
+              coalesce(col("newSc"), col("subcomm")).as("newSc"),
+              col("subcomm"))
+          val refinedD = relabeled.where(col("newSc") =!= col("subcomm"))
+            .select("v").ckpt
+          // rn > 1 rows are exactly the non-keeper fragments counted above
+          SplitOut(relabeled.select(col("v"), col("community"),
+            col("newSc").as("subcomm")).ckpt, refinedD, nSplitFrags)
+        }
+    }
+  }
+
+  /** [[split]]'s bookkeeping on the driver: the components of each
+    * subcommunity (`scOf`) of the vertices `vs` along the
+    * intra-subcommunity edges `es`; per subcommunity the largest
+    * fragment keeps the id (ties to the smallest component id) and the
+    * others get freshIdBase+1, +2, ... in ascending (subcomm, component)
+    * order, the order of the distributed path's windows
+    * (hit_leiden.rs:352-370).
+    * @return the (v, new subcommunity) rows of the vertices that change,
+    *   and the number of fresh ids used */
+  private[graft] def splitLocal(vs: Array[Long], scOf: Long => Long,
+      es: Array[(Long, Long)], freshIdBase: Long)
+      : (Array[(Long, Long)], Long) = {
+    val comp = LocalLeiden.localComponents(vs, es)
+    // fragment sizes per (subcomm, component)
+    val fragN = mutable.HashMap.empty[(Long, Long), Long]
+    vs.foreach { v =>
+      val k = (scOf(v), comp(v))
+      fragN(k) = fragN.getOrElse(k, 0L) + 1L
+    }
+    val keeperOf = fragN.toSeq.groupBy(_._1._1).map { case (sc, fs) =>
+      sc -> fs.maxBy { case ((_, c), n) => (n, -c) }._1._2
+    }
+    val freshFrags = fragN.keysIterator
+      .filter { case (sc, c) => keeperOf(sc) != c }.toSeq.sorted
+    val freshOf = freshFrags.zipWithIndex.map { case (k, i) =>
+      k -> (freshIdBase + i + 1)
+    }.toMap
+    (vs.flatMap(v => freshOf.get((scOf(v), comp(v))).map(v -> _)),
+      freshFrags.length.toLong)
+  }
+
   /** @param freshIdBase non-colliding id space start for subcommunities
     *   born from CC splits (largest fragment keeps the old id, the rest
     *   get freshIdBase+1, freshIdBase+2, ... — the reference's counter
@@ -1199,6 +1370,16 @@ object Leiden {
     * nothing returns `assign` itself (no relabel), with an empty, counted
     * `refined`; without a refined vertex no phase-2 round runs, since
     * phase 2 only merges refined singletons.
+    *
+    * Every subcommunity the refinement leaves is connected along its
+    * intra-subcommunity edges: phase 1 splits along them ([[split]]), and
+    * a phase-2 merge lands only next to a member that stays in its target
+    * for the round. Given connected subcommunities, a caller can tell
+    * that a refinement would change nothing without running it: phase 1
+    * finds a split only in a subcommunity that lost an internal edge
+    * (movement changes communities, never subcommunities), so a batch
+    * that deletes no intra-subcommunity edge refines no vertex
+    * ([[Incremental.level0]] skips it).
     */
   def refinement(adj: DataFrame, deg: DataFrame, m2: Double,
       assign: DataFrame, affected: DataFrame, cfg: Config, sink: MetricsSink,
@@ -1214,7 +1395,6 @@ object Leiden {
       assign.select(col("v"), lit(1L).as("size"))).select("v", "size")
     var a = assign
     var freshUsed = 0L
-    def noneRefined = Ckpt.local(spark, Array.empty[Long])
 
     val refined: DataFrame =
       if (isInitial) {
@@ -1246,142 +1426,10 @@ object Leiden {
         // extra count action
         val members = a.join(graft.util.Bcast.ifFits(affScs, nAffected, 16),
           Seq("subcomm"), "left_semi").ckpt
-        val membersV = members.select("v")
-        val nMembers = members.rows
-        def mb(df: DataFrame): DataFrame =
-          graft.util.Bcast.ifFits(df, nMembers, bytesPerRow = 32)
-        val intra = adj
-          .join(mb(members.select(col("v").as("src"),
-            col("subcomm").as("scu"))), "src")
-          .join(mb(members.select(col("v").as("dst"),
-            col("subcomm").as("scv"))), "dst")
-          .where(col("scu") === col("scv"))
-          .where(col("src") < col("dst")) // canonical, drop self-loops
-          .select("src", "dst")
-        // batch-sized affected subgraphs resolve their components in a
-        // driver-side union-find — distributed hash-min CC on a few
-        // thousand rows is several fixed-cost jobs for nothing. The local
-        // path is gated on BOTH members and intra-EDGES (a dense affected
-        // subcommunity can carry orders of magnitude more edges than
-        // members; collecting those would land on the driver heap) —
-        // mirrors ConnectedComponents.run's two-sided guard.
-        //
-        // On the local path the ENTIRE largest-keeps-id bookkeeping
-        // (fragment sizes, keeper choice, fresh-id ranks — hit_leiden.rs:
-        // 352-370) runs on the driver over the already-collected members:
-        // what used to be ~6 fixed-cost jobs (ckpts, windows, counts)
-        // becomes pure JVM work, and only the final V-sized relabel touches
-        // the cluster. The distributed path keeps the window machinery.
-        val localIntra =
-          if (cfg.localSolveEdges > 0 && nMembers <= cfg.localSolveEdges)
-            Some(intra.ckpt).filter(_.rows <= cfg.localSolveEdges)
-          else None
-        localIntra match {
-          case Some(intraC) =>
-            // a USING semi-join moves the key column first — resolve field
-            // positions by name, never by ordinal
-            val vIdx = members.schema.fieldIndex("v")
-            val scIdx = members.schema.fieldIndex("subcomm")
-            val memRows = members.collect()
-            val vs = memRows.map(_.getLong(vIdx))
-            val es = intraC.collect().map(r => (r.getLong(0), r.getLong(1)))
-            val comp = LocalLeiden.localComponents(vs, es)
-            val scOf = memRows.iterator
-              .map(r => r.getLong(vIdx) -> r.getLong(scIdx)).toMap
-            // fragment sizes per (subcomm, component)
-            val fragN = mutable.HashMap.empty[(Long, Long), Long]
-            vs.foreach { v =>
-              val k = (scOf(v), comp(v))
-              fragN(k) = fragN.getOrElse(k, 0L) + 1L
-            }
-            // keeper per subcomm: largest fragment, ties to the smallest
-            // component id (same order as the distributed wKeep window)
-            val keeperOf = fragN.toSeq.groupBy(_._1._1).map { case (sc, fs) =>
-              sc -> fs.maxBy { case ((_, c), n) => (n, -c) }._1._2
-            }
-            // fresh ids in ascending (subcomm, component) order — identical
-            // to the distributed wFresh global window
-            val freshFrags = fragN.keysIterator
-              .filter { case (sc, c) => keeperOf(sc) != c }.toSeq.sorted
-            freshUsed = freshFrags.length.toLong
-            // only the vertices of non-keeper fragments change subcomm:
-            // a split that splits nothing leaves `a` as it came
-            val freshOf = freshFrags.zipWithIndex.map { case (k, i) =>
-              k -> (freshIdBase + i + 1)
-            }.toMap
-            val relab = vs.flatMap { v =>
-              freshOf.get((scOf(v), comp(v))).map(v -> _)
-            }
-            if (relab.nonEmpty) {
-              // per-vertex relabel map, applied to the V-sized assignment
-              // as one broadcast overlay join
-              a = a.join(broadcast(relab.toSeq.toDF("v", "newSc")),
-                  Seq("v"), "left")
-                .select(col("v"), col("community"),
-                  coalesce(col("newSc"), col("subcomm")).as("subcomm")).ckpt
-            }
-            Ckpt.local(spark, relab.map(_._1))
-          case None =>
-            val comps = ConnectedComponents.run(intra,
-              vertices = Some(membersV), sink = MetricsSink.discard).components
-
-            // largest-component-keeps-id (hit_leiden.rs:352-370, paper
-            // section 5.1): the biggest fragment of a split keeps the old
-            // subcommunity id — community-id stability a GraphRAG user
-            // diffing batch N vs N+1 observes — and the rest get fresh
-            // counter ids above the caller's watermark. The fresh-rank
-            // window is global but bounded by the SPLIT fragments this batch.
-            import org.apache.spark.sql.expressions.Window
-            // comps vertices are exactly the members set — join the small one
-            val withSc = comps.join(members.select(col("v"), col("subcomm")),
-              "v")
-            val compSizes = withSc.groupBy("subcomm", "component")
-              .agg(count(lit(1)).as("n")).ckpt
-            val wKeep = Window.partitionBy("subcomm")
-              .orderBy(desc("n"), asc("component"))
-            val ranked = compSizes.withColumn("rn", row_number().over(wKeep))
-            // Enforce (not just document) the delta-bound of the global
-            // fresh-id window: it is a single-partition sort over the batch's
-            // SPLIT fragments only. One cheap agg over the checkpointed
-            // compSizes turns the assumption into a guard that fails loudly
-            // before a pathological batch funnels millions of rows through
-            // one task.
-            val Array(nFragRow) = compSizes
-              .agg(count(lit(1)).as("frags"),
-                count_distinct(col("subcomm")).as("scs")).collect()
-            val nSplitFrags = nFragRow.getLong(0) - nFragRow.getLong(1)
-            require(nSplitFrags <= 50_000_000L,
-              s"refinement split produced $nSplitFrags fresh fragments — " +
-                "exceeds the single-partition fresh-id window bound; " +
-                "batch is not delta-sized")
-            // nothing split: `a` stays as it came
-            if (nSplitFrags == 0) noneRefined
-            else {
-              val keepers = ranked.where(col("rn") === 1)
-                .select(col("subcomm"), col("component"),
-                  col("subcomm").as("newSc"))
-              val wFresh = Window.orderBy("subcomm", "component")
-              val freshComps = ranked.where(col("rn") > 1)
-                .select(col("subcomm"), col("component"),
-                  (lit(freshIdBase) + row_number().over(wFresh)).as("newSc"))
-                .ckpt
-              // rn > 1 rows are exactly the non-keeper fragments counted above
-              freshUsed = nSplitFrags
-              val scMap = keepers.unionAll(freshComps)
-              val relabeled = a
-                .join(mb(withSc.select(col("v"), col("component"))), Seq("v"),
-                  "left")
-                .join(mb(scMap), Seq("subcomm", "component"), "left")
-                .select(col("v"), col("community"),
-                  coalesce(col("newSc"), col("subcomm")).as("newSc"),
-                  col("subcomm"))
-              val refinedD = relabeled.where(col("newSc") =!= col("subcomm"))
-                .select("v").ckpt
-              a = relabeled.select(col("v"), col("community"),
-                col("newSc").as("subcomm")).ckpt
-              refinedD
-            }
-        }
+        val sp = split(adj, a, members, cfg, freshIdBase)
+        a = sp.assign
+        freshUsed = sp.freshUsed
+        sp.refined
       }
 
     // --- phase 2: merge singleton subcommunities within their community
@@ -1477,7 +1525,9 @@ object Leiden {
             // BSP barrier: all merge decisions from the round snapshot
             val mvV = mutable.ArrayBuffer.empty[Long]
             val mvSc = mutable.ArrayBuffer.empty[Long]
+            val mvG = mutable.ArrayBuffer.empty[Double]
             var gSum = 0.0
+            moved = 0
             refIds.foreach { v =>
               val mySc = scOf(v)
               if (scn.getOrElse(mySc, 0L) == 1L) {
@@ -1513,14 +1563,21 @@ object Leiden {
                   }
                 }
                 if (found) {
-                  mvV += v; mvSc += bestS; gSum += bestG
+                  mvV += v; mvSc += bestS; mvG += bestG
                 }
               }
             }
-            moved = mvV.length.toLong
+            // a merge into a subcommunity a mover vacates this round is
+            // dropped (its mover retries next round): it could leave the
+            // joiners of that singleton unconnected
+            val vacated = mutable.LongMap.empty[Unit]
+            mvV.foreach(v => vacated(scOf(v)) = ())
             var j = 0
             while (j < mvV.length) {
-              scOf(mvV(j)) = mvSc(j); changedSc(mvV(j)) = mvSc(j)
+              if (!vacated.contains(mvSc(j))) {
+                scOf(mvV(j)) = mvSc(j); changedSc(mvV(j)) = mvSc(j)
+                moved += 1; gSum += mvG(j)
+              }
               j += 1
             }
             sink.add(IterMetric("leiden.refinement", level, round,
@@ -1643,24 +1700,33 @@ object Leiden {
         // toward the smaller subcommunity id
         .where(col("scn") > 1 || col("nSc") < col("mySc"))
 
-      val moves0 = cand.groupBy(col("src").as("v"))
+      val moves0 = cand.groupBy(col("src").as("v"), col("mySc"))
         .agg(max_by(struct(col("nSc").as("newSc"), col("gain")),
           struct(col("gain"), negate(col("nSc")))).as("m"))
-        .select(col("v"), col("m.newSc").as("newSc"), col("m.gain").as("gain"))
-      // delta-bound rounds: ONE action — collect the merge table and turn
-      // it into a local relation (stats come off the rows, the overlay
-      // join broadcasts it for free); V-sized rounds keep ckpt + agg
+        .select(col("v"), col("m.newSc").as("newSc"), col("m.gain").as("gain"),
+          col("mySc"))
+      // a merge into a subcommunity a mover vacates this round is dropped
+      // (its mover retries next round): it could leave the joiners of
+      // that singleton unconnected. Delta-bound rounds: ONE action —
+      // collect the merge table, drop those merges and turn the rest into
+      // a local relation (stats come off the rows, the overlay join
+      // broadcasts it for free); V-sized rounds checkpoint the table and
+      // take the stats on the checkpoint of the kept merges
       val (moves, nMoved, gSum) =
         if (scopeSmall) {
-          val mRows = moves0.collect()
+          val mRows0 = moves0.collect()
+          val vacated = mRows0.iterator.map(_.getLong(3)).toSet
+          val mRows = mRows0.filterNot(r => vacated(r.getLong(1)))
           (spark.createDataFrame(java.util.Arrays.asList(mRows: _*),
             moves0.schema), mRows.length.toLong,
             mRows.iterator.map(_.getDouble(2)).sum)
         } else {
           val ck = moves0.ckpt
-          val mstats = ck.agg(count(lit(1)), sum("gain")).collect()(0)
-          (ck, mstats.getLong(0),
-            if (mstats.isNullAt(1)) 0.0 else mstats.getDouble(1))
+          val (kept, st) = Ckpt.observed(ck.join(
+            ck.select(col("mySc").as("newSc")), Seq("newSc"), "left_anti"),
+            "g" -> sum("gain"))
+          (kept, kept.rows,
+            if (st.isNullAt(st.fieldIndex("g"))) 0.0 else st.getAs[Double]("g"))
         }
       moved = nMoved
       if (moved > 0) {

@@ -39,7 +39,8 @@ object Quality {
   def modularity(canonical: DataFrame, assign: DataFrame,
       gamma: Double = 1.0, localSolveEdges: Long = 0): Double = {
     localParts(canonical, assign, localSolveEdges) match {
-      case Some((es, commOf)) => modularityFromArrays(es, commOf, gamma)
+      case Some((g, commOf)) =>
+        modularityFromArrays(g.src, g.dst, g.w, commOf, gamma)
       case None => score(canonical, assign, gamma)._1
     }
   }
@@ -117,30 +118,36 @@ object Quality {
   def cpm(canonical: DataFrame, assign: DataFrame,
       gamma: Double = 1.0, localSolveEdges: Long = 0): Double = {
     localParts(canonical, assign, localSolveEdges) match {
-      case Some((es, commOf)) => cpmFromArrays(es, commOf, gamma)
+      case Some((g, commOf)) => cpmFromArrays(g.src, g.dst, g.w, commOf, gamma)
       case None => score(canonical, assign, gamma, useCpm = true)._1
     }
   }
 
-  /** Driver-side modularity over collected canonical edges + an
-    * assignment map — the same sums as the distributed path, exact for
-    * integer-valued weights. Mirrors the inner-join semantics: edges
-    * with an unassigned endpoint don't count in wIn; unassigned
-    * vertices carry no degree. Callers that already hold the collected
-    * graph (driver queries, Leiden's level-0 local solve) score for
-    * free through this. */
-  private[graft] def modularityFromArrays(es: Array[(Long, Long, Double)],
-      commOf: scala.collection.Map[Long, Long], gamma: Double): Double = {
+  /** Driver-side modularity over canonical edges held as primitive
+    * arrays + an assignment map — the same sums as the distributed path,
+    * exact for integer-valued weights. Mirrors the inner-join semantics:
+    * edges with an unassigned endpoint don't count in wIn; unassigned
+    * vertices carry no degree. Callers that already hold the graph on the
+    * driver (driver queries, Leiden's level-0 local solve, the warm
+    * batch's level-1 mirror with its composition) score for free through
+    * this. A supergraph scores as its base graph: contraction keeps m,
+    * intra-community weight and community degrees. */
+  private[graft] def modularityFromArrays(src: Array[Long], dst: Array[Long],
+      w: Array[Double], commOf: scala.collection.Map[Long, Long],
+      gamma: Double): Double = {
     var m = 0.0
     var wIn = 0.0
     val degOf = scala.collection.mutable.HashMap.empty[Long, Double]
-    es.foreach { case (s, d, w) =>
-      m += w
+    var i = 0
+    while (i < src.length) {
+      val (s, d) = (src(i), dst(i))
+      m += w(i)
       val cs = commOf.get(s); val cd = commOf.get(d)
-      if (cs.isDefined && cd.isDefined && cs.get == cd.get) wIn += w
+      if (cs.isDefined && cd.isDefined && cs.get == cd.get) wIn += w(i)
       // symmetrized degree: w at each endpoint (self-loop twice)
-      if (cs.isDefined) degOf(s) = degOf.getOrElse(s, 0.0) + w
-      if (cd.isDefined) degOf(d) = degOf.getOrElse(d, 0.0) + w
+      if (cs.isDefined) degOf(s) = degOf.getOrElse(s, 0.0) + w(i)
+      if (cd.isDefined) degOf(d) = degOf.getOrElse(d, 0.0) + w(i)
+      i += 1
     }
     if (m == 0.0) return 0.0
     val cdeg = scala.collection.mutable.HashMap.empty[Long, Double]
@@ -153,16 +160,23 @@ object Quality {
     wIn / m - gamma * sumSq / (4.0 * m * m)
   }
 
-  /** Driver-side CPM — see [[modularityFromArrays]]. */
-  private[graft] def cpmFromArrays(es: Array[(Long, Long, Double)],
-      commOf: scala.collection.Map[Long, Long], gamma: Double): Double = {
+  /** Driver-side CPM — see [[modularityFromArrays]]. Every key of
+    * `commOf` adds `sizeOf(key)` members to its community: 1 for a vertex,
+    * the member count for a supernode. */
+  private[graft] def cpmFromArrays(src: Array[Long], dst: Array[Long],
+      w: Array[Double], commOf: scala.collection.Map[Long, Long],
+      gamma: Double, sizeOf: Long => Long = _ => 1L): Double = {
     var wIn = 0.0
-    es.foreach { case (s, d, w) =>
-      val cs = commOf.get(s); val cd = commOf.get(d)
-      if (cs.isDefined && cd.isDefined && cs.get == cd.get) wIn += w
+    var i = 0
+    while (i < src.length) {
+      val cs = commOf.get(src(i)); val cd = commOf.get(dst(i))
+      if (cs.isDefined && cd.isDefined && cs.get == cd.get) wIn += w(i)
+      i += 1
     }
     val csize = scala.collection.mutable.HashMap.empty[Long, Long]
-    commOf.valuesIterator.foreach(c => csize(c) = csize.getOrElse(c, 0L) + 1L)
+    commOf.foreach { case (k, c) =>
+      csize(c) = csize.getOrElse(c, 0L) + sizeOf(k)
+    }
     var pairs = 0.0
     // n*(n-1)/2 over longs: n(n-1) is even, so the integer division is
     // the exact binomial (matches the SQL BIGINT arithmetic)
@@ -173,7 +187,7 @@ object Quality {
   /** Collect gate for the local paths: [[LocalGraph.collect]] with the
     * caller's edge cap and no vertex cap, then the assignment. */
   private def localParts(canonical: DataFrame, assign: DataFrame,
-      localSolveEdges: Long): Option[(Array[(Long, Long, Double)],
+      localSolveEdges: Long): Option[(LocalGraph,
       scala.collection.mutable.HashMap[Long, Long])] = {
     if (localSolveEdges <= 0) return None
     LocalGraph.collect(canonical, Long.MaxValue, maxEdges = localSolveEdges)
@@ -181,7 +195,7 @@ object Quality {
         val commOf = scala.collection.mutable.HashMap.empty[Long, Long]
         assign.select(col("v"), col("community")).collect()
           .foreach(r => commOf.put(r.getLong(0), r.getLong(1)))
-        (g.es, commOf)
+        (g, commOf)
       }
   }
 }

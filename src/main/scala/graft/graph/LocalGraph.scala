@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions.{col, lit}
 final class LocalGraph(val es: Array[(Long, Long, Double)],
     universe: => Array[Long]) {
   lazy val vs: Array[Long] = universe
+  /** The edges' columns as primitive arrays, built on first use. */
+  lazy val src: Array[Long] = es.map(_._1)
+  lazy val dst: Array[Long] = es.map(_._2)
+  lazy val w: Array[Double] = es.map(_._3)
 }
 
 /** The one driver-local gate: every fast path that collects a graph and

@@ -141,8 +141,8 @@ object Queries {
       case Some(lg) =>
         val comp = LocalLeiden.localComponents(lg.vs,
           lg.es.map(e => (e._1, e._2)))
-        if (useCpm) Quality.cpmFromArrays(lg.es, comp, 1.0)
-        else Quality.modularityFromArrays(lg.es, comp, 1.0)
+        if (useCpm) Quality.cpmFromArrays(lg.src, lg.dst, lg.w, comp, 1.0)
+        else Quality.modularityFromArrays(lg.src, lg.dst, lg.w, comp, 1.0)
       case None =>
         val assign = ConnectedComponents.run(canon).components
           .select(col("v"), col("component").as("community"))

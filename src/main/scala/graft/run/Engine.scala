@@ -103,7 +103,15 @@ object Engine {
   }
 
   /** Warm start: apply one signed delta batch to the state checkpointed
-    * at `fromBatch` (or the latest), checkpoint as the next batch. */
+    * at the latest batch, checkpoint as the next batch.
+    *
+    * The tail of a batch runs on the driver when it can: a batch that
+    * ends holding the level-1 mirror and the composition (the warm mirror
+    * solve, or a re-solve that lands local) is scored from them
+    * ([[Incremental.State.score]]), bit for bit the value of
+    * [[Quality.score]] for integer weights; past the driver bound
+    * [[Quality.score]] runs. A batch whose delta deletes no edge inside a
+    * subcommunity runs no refinement ([[Incremental.level0]]). */
   def update(spark: SparkSession, delta: DataFrame, cfg: Config): Outcome = {
     cfg.validate()
     val root = cfg.checkpointRoot.getOrElse(
@@ -126,10 +134,11 @@ object Engine {
         next.assign.select(col("v"), col("community")), next.maxId)
       require(v.ok, s"partition invariants violated: ${v.reason}")
     }
-    // score the objective actually being optimized (cfg may select CPM);
-    // the community count comes out of the same pass
-    val (q, nComm) = Quality.score(next.canon, next.assign,
-      cfg.leiden.gamma, cfg.leiden.useCpm)
+    // score the objective actually being optimized (cfg may select CPM),
+    // with the community count: on the driver when the batch ended holding
+    // the level-1 mirror and the composition, else in one distributed pass
+    val (q, nComm) = next.score.getOrElse(Quality.score(next.canon,
+      next.assign, cfg.leiden.gamma, cfg.leiden.useCpm))
     val out = Outcome(next.assign.select(col("v"), col("community")), q,
       nComm, sink.totalIterations("leiden.movement"), sink.all,
       batch = last + 1)
@@ -168,30 +177,21 @@ object Engine {
 
   // --- internal: durable state = assignment(+subcomm) and edge table ----
 
+  /** Commits the cold run as batch 0. The Leiden result has no
+    * subcommunity column: the committed subcommunities are the connected
+    * components of the communities ([[Incremental.coldState]]; subcomm =
+    * community on connected communities), so every one is connected, as
+    * the warm batch's refinement skip needs. The run already holds m and,
+    * after a driver-local solve, the graph and partition on the driver:
+    * from those come the watermark and the level-1 state (the composition
+    * and the supergraph mirror), so the first update takes the warm
+    * mirror solve. After a distributed solve the first update re-solves
+    * the upper levels. */
   private def checkpoint(cfg: Config, out: Outcome, r: Leiden.Result)
       : Unit =
-    cfg.checkpointRoot.foreach { root =>
-      // cold-path Leiden result has no subcommunity column; re-derive a
-      // valid state: subcomm = community (a coarser-but-consistent warm
-      // start; the first delta's refinement re-splits as needed). The
-      // run already holds m and, after a driver-local solve, the graph
-      // and partition on the driver: from those come the largest label
-      // (the watermark hydrate would otherwise scan for) and the level-1
-      // state, the identity composition and the supergraph mirror, so
-      // the first update takes the warm mirror solve. After a
-      // distributed solve the first update re-solves the upper levels
-      val level1 = r.level0.map { case (g, solved) =>
-        Incremental.coldLevel1(g.es, solved, cfg.leiden.eps)
-      }
-      val maxLabel = r.level0.flatMap(_._2.iterator
-        .map { case (v, c) => math.max(v, c) }.maxOption)
-      val st = Incremental.State(r.canon,
-        out.assignment.select(col("v"), col("community"),
-          col("community").as("subcomm")), 2.0 * r.m,
-        maxId = maxLabel.getOrElse(Long.MinValue),
-        durable = cfg.durableEdges, upper = level1.map(_._1),
-        superCache = level1.map(_._2))
-      writeState(cfg, st, out)
+    cfg.checkpointRoot.foreach { _ =>
+      writeState(cfg, Incremental.coldState(r, cfg.leiden, cfg.durableEdges),
+        out)
     }
 
   private def writeState(cfg: Config, st: Incremental.State,

@@ -1,7 +1,6 @@
 package graft.state
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.util.Ckpt.DFCkpt
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -39,15 +38,24 @@ final class Checkpointer(root: String, runId: String) {
       quality: Double, edgeRows: Long = -1L,
       assignmentData: Boolean = true, m2: Option[Double] = None,
       maxId: Option[Long] = None, superRows: Option[Long] = None): Unit = {
-    val spark = assignment.sparkSession
-    import spark.implicits._
     val dir = iterDir(iter)
     if (assignmentData)
       assignment.write.mode("overwrite").parquet(s"$dir/assignment")
-    // per-partition lineage: which checkpoint produced each row
-    metrics.toDF().withColumn("run_id", lit(runId))
-      .withColumn("iter", lit(iter))
-      .write.mode("overwrite").parquet(s"$dir/metrics")
+    // per-partition lineage: which checkpoint produced each row. The rows
+    // are driver values: written on the driver, no Spark job
+    DriverParquet.write(
+      assignment.sparkSession.sparkContext.hadoopConfiguration,
+      s"$dir/metrics",
+      "algo" -> metrics.map(_.algo).toArray,
+      "level" -> metrics.map(_.level).toArray,
+      "iteration" -> metrics.map(_.iteration).toArray,
+      "messages" -> metrics.map(_.messages).toArray,
+      "movesAccepted" -> metrics.map(_.movesAccepted).toArray,
+      "frontier" -> metrics.map(_.frontier).toArray,
+      "qualityDelta" -> metrics.map(_.qualityDelta).toArray,
+      "seconds" -> metrics.map(_.seconds).toArray,
+      "run_id" -> Array.fill(metrics.size)(runId),
+      "iter" -> Array.fill(metrics.size)(iter))
     val rows = assignment.rows
     val manifest =
       s"""{"run_id":"$runId","iter":$iter,"rows":$rows,""" +

@@ -8,22 +8,24 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
   GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.schema.{MessageType, Types}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
+  Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 /** Parquet tables the driver already holds, written and read on the
   * driver without a Spark job. The level-1 state a checkpoint carries
   * (the upper composition and the supergraph mirror) lives in driver
-  * arrays; for a few thousand rows, a Spark write or collect is almost
-  * all fixed cost (planning, scheduling, the commit protocol). The files
+  * arrays, and so do a batch's metrics rows; for a few thousand rows, a
+  * Spark write or collect is almost all fixed cost (planning,
+  * scheduling, the commit protocol). The files
   * are ordinary parquet, one file per table, that `spark.read` reads
   * like the ones Spark writes, and [[foreach]] reads those too.
   */
 object DriverParquet {
 
   /** Replaces the table at `dir` with one file holding the given int64
-    * (`Array[Long]`) or double (`Array[Double]`) columns, all of one
-    * length. */
+    * (`Array[Long]`), int32 (`Array[Int]`), double (`Array[Double]`) or
+    * UTF-8 string (`Array[String]`) columns, all of one length. */
   def write(conf: Configuration, dir: String,
       cols: (String, Array[_])*): Unit = {
     val path = new Path(dir)
@@ -31,8 +33,13 @@ object DriverParquet {
     val schema = new MessageType("spark_schema", cols.map {
       case (name, _: Array[Long]) =>
         Types.required(PrimitiveTypeName.INT64).named(name)
+      case (name, _: Array[Int]) =>
+        Types.required(PrimitiveTypeName.INT32).named(name)
       case (name, _: Array[Double]) =>
         Types.required(PrimitiveTypeName.DOUBLE).named(name)
+      case (name, _: Array[String]) =>
+        Types.required(PrimitiveTypeName.BINARY)
+          .as(LogicalTypeAnnotation.stringType()).named(name)
       case (name, a) =>
         throw new IllegalArgumentException(s"column $name: $a")
     }: _*)
@@ -46,7 +53,9 @@ object DriverParquet {
         val g = rows.newGroup()
         cols.foreach {
           case (name, a: Array[Long]) => g.add(name, a(i))
+          case (name, a: Array[Int]) => g.add(name, a(i))
           case (name, a: Array[Double]) => g.add(name, a(i))
+          case (name, a: Array[String]) => g.add(name, a(i))
         }
         w.write(g)
       }

@@ -159,11 +159,15 @@ class EngineSpec extends SparkSpecBase {
     // movement entry, the deferred prefetch and the skipped no-op
     // refinement and aggregation steps, 45 before the checkpoint carried
     // the level-1 state (the cold run's identity composition and every
-    // batch's supergraph) that the upper levels and hydrate re-derived.
+    // batch's supergraph) that the upper levels and hydrate re-derived,
+    // 41 before the batch was scored from the level-1 mirror and an
+    // insert skipped the refinement that cannot split a connected
+    // subcommunity.
     val ParentJobs = 151
     val PrologueJobs = 97
     val EntryJobs = 70
     val Level1Jobs = 45
+    val MirrorJobs = 41
     val root = Files.createTempDirectory("graft-jobs").toString
     val g = CodeTableSynth.sbmEdges(spark, 600, 12, seed = 42L)
     val (init, batches) = Incremental.paperSplit(g, 0.8, 100, 1, 42L)
@@ -183,6 +187,7 @@ class EngineSpec extends SparkSpecBase {
       else if (site == "Leiden.refinement") "refinement"
       else if (upperSites(site)) "upper"
       else if (site == "Incremental.hydrate") "hydrate"
+      else if (site.startsWith("Quality.")) "quality"
       else {
         assert(!site.startsWith("Leiden."), s"unfiled Leiden call site " +
           s"$site: $bySite")
@@ -191,18 +196,68 @@ class EngineSpec extends SparkSpecBase {
     val byPhase = bySite.groupMapReduce(kv => phase(kv._1))(_._2)(_ + _)
       .withDefaultValue(0)
     info(s"$jobs jobs (before: $ParentJobs, then $PrologueJobs, then " +
-      s"$EntryJobs, then $Level1Jobs); by phase $byPhase; by call site " +
-      s"$bySite")
+      s"$EntryJobs, then $Level1Jobs, then $MirrorJobs); by phase " +
+      s"$byPhase; by call site $bySite")
     assert(byPhase("movement") >= 1 && byPhase("movement") <= 10,
       s"movement ran ${byPhase("movement")} jobs: $bySite")
-    assert(byPhase("refinement") >= 1 && byPhase("refinement") <= 7,
+    assert(byPhase("refinement") == 0,
       s"refinement ran ${byPhase("refinement")} jobs: $bySite")
+    assert(byPhase("quality") == 0,
+      s"quality scoring ran ${byPhase("quality")} jobs: $bySite")
     assert(byPhase("upper") >= 1 && byPhase("upper") <= 4,
       s"upper levels ran ${byPhase("upper")} jobs: $bySite")
     assert(byPhase("hydrate") <= 2,
       s"hydrate ran ${byPhase("hydrate")} jobs: $bySite")
-    assert(jobs <= 41,
-      s"$jobs jobs for one warm update (before: $Level1Jobs): $bySite")
+    assert(jobs <= 25,
+      s"$jobs jobs for one warm update (before: $MirrorJobs): $bySite")
+  }
+
+  test("mirror score: a batch that ends holding the level-1 mirror " +
+      "scores on the driver, bit for bit Quality.score") {
+    import graft.algo.{Incremental, Quality}
+    import graft.graph.EdgeOps
+    import graft.source.CodeTableSynth
+    import graft.state.Checkpointer
+    val g = CodeTableSynth.sbmEdges(spark, 300, 6, seed = 5L)
+    val (init, Seq(ins, _)) = Incremental.paperSplit(g, 0.8, 40, 2, 5L)
+    val canon0 = EdgeOps.compress(init)
+    // the churn batch deletes every edge of one vertex, so its
+    // subcommunity leaves the mirror; the last batch re-attaches it
+    val x = canon0.groupBy("src").count().orderBy(desc("count"), asc("src"))
+      .head().getLong(0)
+    val churn = canon0.where(col("src") === x || col("dst") === x)
+      .select(col("src"), col("dst"), negate(col("weight")).as("weight"))
+    val back = edges((x, 0L, 1.0), (x, 1L, 1.0), (x, 2L, 1.0))
+    for (leiden <- Seq(Leiden.Config(localSolveLevel0Verts = 300),
+        Leiden.Config(localSolveLevel0Verts = 300, useCpm = true))) {
+      val tag = if (leiden.useCpm) "cpm" else "modularity"
+      val root = Files.createTempDirectory("graft-score").toString
+      val cfg = Engine.Config(leiden = leiden, checkpointRoot = Some(root),
+        runId = "q")
+      Engine.run(init, cfg)
+      for ((delta, k) <- Seq(ins, churn, back).zipWithIndex) {
+        val (o, bySite) = withJobsBySite(Engine.update(spark, delta, cfg))
+        val committed = spark.read.schema(EdgeOps.Schema)
+          .parquet(s"$root/q/iter=${o.batch}/edges")
+        val assign = spark.read.schema(Checkpointer.AssignSchema)
+          .parquet(s"$root/q/iter=${o.batch}/assignment")
+        val (q, n) = Quality.score(committed, assign, leiden.gamma,
+          leiden.useCpm)
+        assert(o.quality == q && o.communityCount == n,
+          s"$tag batch $k: (${o.quality}, ${o.communityCount}) from the " +
+            s"mirror, ($q, $n) from Quality.score")
+        if (k == 0)
+          assert(!bySite.keys.exists(_.startsWith("Quality.")),
+            s"$tag: the insert batch ran Quality jobs: $bySite")
+        if (k == 1) {
+          val sup = spark.read.parquet(s"$root/q/iter=${o.batch}/super")
+          val seen = EdgeOps.vertices(sup).select(col("v").as("subcomm"))
+          assert(assign.where(col("v") === x)
+            .join(seen, Seq("subcomm"), "left_anti").count() == 1,
+            s"$tag: the isolated vertex's subcommunity is still in the mirror")
+        }
+      }
+    }
   }
 
   test("job sites: a local lazy val's jobs are filed under the method " +

@@ -198,20 +198,21 @@ class FastPathEquivalenceSpec extends SparkSpecBase {
     val canon = EdgeOps.compress(randGraph(60, 300)
       .union(Seq((5L, 5L, 2.0), (3L, 999L, 3.0)).toDF("src", "dst",
         "weight"))).ckpt
-    val es = canon.select("src", "dst", "weight").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val rows = canon.select("src", "dst", "weight").collect()
+    val (src, dst, w) = (rows.map(_.getLong(0)), rows.map(_.getLong(1)),
+      rows.map(_.getDouble(2)))
     val commOf = (0L until 60L).map(v => v -> v / 7).toMap + (777L -> 50L)
     val counted = commOf.toSeq.toDF("v", "community").ckpt
     // a lazy frame takes the shuffled joins, a counted one the broadcast
     for (assign <- Seq(counted, commOf.toSeq.toDF("v", "community"))) {
       val nComm = assign.select("community").distinct().count()
       val (q, n) = Quality.score(canon, assign)
-      assert(q == Quality.modularityFromArrays(es, commOf, 1.0))
+      assert(q == Quality.modularityFromArrays(src, dst, w, commOf, 1.0))
       assert(Quality.modularity(canon, assign) == q)
       assert(n == nComm && n == 10L)
       for (g <- Seq(1.0, 0.05)) {
         val (c, nc) = Quality.score(canon, assign, g, useCpm = true)
-        assert(c == Quality.cpmFromArrays(es, commOf, g))
+        assert(c == Quality.cpmFromArrays(src, dst, w, commOf, g))
         assert(Quality.cpm(canon, assign, g) == c)
         assert(nc == nComm)
       }
